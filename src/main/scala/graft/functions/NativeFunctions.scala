@@ -887,26 +887,37 @@ case class NearestCentroid(first: Expression, second: Expression,
 
 object NativeFunctions {
 
-  /** Idempotent session registration; exposes `dot_product` to SQL too.
-    * Skips only when the registered `dot_product` already RESOLVES TO OURS
+  /** Idempotent session registration of `dot_product` and
+    * `word_shingles` (both exposed to SQL too) in one atomic step: the
+    * checks and the registrations run under the registry's own lock, so
+    * concurrent first-use threads cannot interleave them. Skips a
+    * function only when its registered name already RESOLVES TO OURS
     * (avoids the re-registration WARN every operator call would otherwise
-    * log) — a same-named foreign function gets replaced, so the similarity
-    * operators can never silently compute through someone else's
-    * implementation. [[graft.GraftExtensions]] is the config-time
-    * alternative.
+    * log) — a same-named foreign function gets replaced, so the operators
+    * can never silently compute through someone else's implementation.
+    * [[graft.GraftExtensions]] is the config-time alternative.
     */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val probe = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array(0.0), ArrayType(DoubleType, containsNull = false))
-        registry.lookupFunction(ident, Seq(probe, probe)).isInstanceOf[DotProduct]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction(
-        "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+    def ours(name: String, probe: Seq[Expression], is: Expression => Boolean): Boolean = {
+      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+      registry.functionExists(ident) &&
+        (try is(registry.lookupFunction(ident, probe)) catch { case _: Throwable => false })
+    }
+    val vec = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      Array(0.0), ArrayType(DoubleType, containsNull = false))
+    val words = org.apache.spark.sql.catalyst.expressions.Literal.create(
+      Array("a"), ArrayType(org.apache.spark.sql.types.StringType))
+    val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
+    registry.synchronized {
+      if (!ours("dot_product", Seq(vec, vec), _.isInstanceOf[DotProduct]))
+        registry.createOrReplaceTempFunction(
+          "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
+      if (!ours("word_shingles", Seq(words, one), _.isInstanceOf[WordShingles]))
+        registry.createOrReplaceTempFunction("word_shingles", { exprs =>
+          requireArity("word_shingles", Seq(2), exprs.length)
+          WordShingles(exprs(0), intConstArg("word_shingles", "k", exprs(1)))
+        }, "built-in")
     }
   }
 
@@ -915,36 +926,17 @@ object NativeFunctions {
     call_function("dot_product", a, b)
   }
 
-  /** k-word shingles via the fused native loop (registers on first use;
-    * see [[WordShingles]]) — drop-in for
+  /** k-word shingles via the fused native loop (registered by
+    * [[register]]; see [[WordShingles]]) — drop-in for
     * [[graft.functions.TextFunctions.wordShingles]] including the
     * null-text edge: the expression null-propagates, so the helper
     * coalesces a null input to the HOF form's empty array.
     */
   def wordShinglesFused(spark: SparkSession, toks: Column, k: Int): Column = {
-    registerWordShingles(spark)
+    register(spark)
     org.apache.spark.sql.functions.coalesce(
       call_function("word_shingles", toks, lit(k)),
       typedlit(Array.empty[String]))
-  }
-
-  private def registerWordShingles(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("word_shingles")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array("a"), ArrayType(org.apache.spark.sql.types.StringType))
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(arr, one))
-          .isInstanceOf[WordShingles]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("word_shingles", { exprs =>
-        requireArity("word_shingles", Seq(2), exprs.length)
-        WordShingles(exprs(0), intConstArg("word_shingles", "k", exprs(1)))
-      }, "built-in")
-    }
   }
 
   /** Character q-grams via the fused native loop (registers on first use;

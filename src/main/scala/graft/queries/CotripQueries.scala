@@ -79,11 +79,10 @@ object CotripQueries {
     // oracle: the scheduled-snapshot and streaming forms must agree
     // feature for feature.
     "c05_cotrip_stream" -> of(goldenPipelineSql) { (s, _) =>
-      val pages = s.readStream.format("cotrip-pages")
+      val features = s.readStream.format("cotrip-pages")
         .option("mode", "fixture").option("path", fixtureDir.toString)
         .load()
-      val out = CotripOps.pipeline(
-        CotripSource.fromPageRows(pages), TaskConfig("t"))
+      val out = CotripOps.pipeline(features, TaskConfig("t"))
         .select(col("id"), col("geometry.type").as("geom_type"),
           col("geometry.coordinates").as("coordinates"))
       val sink = s"cotrip_stream_${sinkCounter.incrementAndGet()}"

@@ -51,14 +51,8 @@ object FeatureCollectionSink {
              poster: (String, String) => Unit = httpPost): Unit =
     poster(endpoint, toFeatureCollectionJson(df))
 
-  private def httpPost(endpoint: String, body: String): Unit = {
-    val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
-      .header("Content-Type", "application/json")
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      .build()
-    val res = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    if (res.statusCode() / 100 != 2)
-      throw new RuntimeException(s"submit failed: HTTP ${res.statusCode()}")
-  }
+  private def httpPost(endpoint: String, body: String): Unit =
+    graft.SharedHttp.post(endpoint,
+      java.net.http.HttpRequest.BodyPublishers.ofString(body), "submit",
+      "Content-Type" -> "application/json")
 }

@@ -1,8 +1,9 @@
 package graft.sinks
 
-import scala.collection.mutable
+import java.net.http.HttpRequest
 
 import org.apache.spark.sql.{Dataset, ForeachWriter}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Executor-side HTTP sink (SURVEY §2.1-S3 / §4.2 graduation): POSTs
   * newline-delimited JSON in bounded batches from the task that produced it —
@@ -22,25 +23,6 @@ import org.apache.spark.sql.{Dataset, ForeachWriter}
   */
 object HttpJsonLinesSink {
 
-  /** POST `body` to `endpoint`; throws on non-2xx (fail the task → Spark
-    * retries → at-least-once). A fresh JDK client per call keeps the helper
-    * dependency-free and serializable-safe; connection reuse, if it matters,
-    * belongs in a pooled client behind the same signature.
-    */
-  private[sinks] def post(endpoint: String, body: String,
-                          partitionId: Long, epochId: Long): Unit = {
-    val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
-      .header("Content-Type", "application/x-ndjson")
-      .header("X-Graft-Epoch", epochId.toString)
-      .header("X-Graft-Partition", partitionId.toString)
-      .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body))
-      .build()
-    val res = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    if (res.statusCode() / 100 != 2)
-      throw new RuntimeException(s"jsonl sink POST failed: HTTP ${res.statusCode()}")
-  }
-
   /** Streaming writer: buffers up to `batchSize` rows per POST. Rows arrive
     * per (partition, epoch); `close` flushes the tail batch only on success —
     * on task failure nothing partial is finalized and Spark replays the
@@ -48,26 +30,17 @@ object HttpJsonLinesSink {
     */
   def foreachWriter(endpoint: String, batchSize: Int = 500): ForeachWriter[String] =
     new ForeachWriter[String] {
-      @transient private var buf: mutable.ArrayBuffer[String] = _
-      @transient private var partitionId: Long = _
-      @transient private var epochId: Long = _
+      @transient private var batch: JsonLinesBatch = _
       override def open(partitionId: Long, epochId: Long): Boolean = {
-        this.partitionId = partitionId
-        this.epochId = epochId
-        buf = new mutable.ArrayBuffer[String]
+        batch = new JsonLinesBatch(endpoint, batchSize, partitionId, epochId)
         true
       }
       override def process(value: String): Unit = {
         require(value != null, "jsonl sink: null row (one non-null JSON document per row)")
-        buf += value
-        if (buf.size >= batchSize) flush()
+        batch.add(value)
       }
       override def close(errorOrNull: Throwable): Unit =
-        if (errorOrNull == null && buf != null && buf.nonEmpty) flush()
-      private def flush(): Unit = {
-        post(endpoint, buf.mkString("\n"), partitionId, epochId)
-        buf.clear()
-      }
+        if (errorOrNull == null && batch != null) batch.send()
     }
 
   /** Batch path: each partition POSTs its rows in `batchSize` groups from
@@ -76,11 +49,41 @@ object HttpJsonLinesSink {
   def postJsonLines(ds: Dataset[String], endpoint: String,
                     batchSize: Int = 500): Unit =
     ds.foreachPartition { it: Iterator[String] =>
-      val pid = org.apache.spark.TaskContext.getPartitionId().toLong
-      it.grouped(batchSize).foreach { batch =>
-        require(!batch.contains(null),
-          "jsonl sink: null row (one non-null JSON document per row)")
-        post(endpoint, batch.mkString("\n"), pid, -1L)
+      val batch = new JsonLinesBatch(endpoint, batchSize,
+        org.apache.spark.TaskContext.getPartitionId().toLong, epochId = -1L)
+      it.foreach { row =>
+        require(row != null, "jsonl sink: null row (one non-null JSON document per row)")
+        batch.add(row)
       }
+      batch.send()
     }
+}
+
+/** One task's pending rows for `endpoint`, newline-delimited UTF-8 bytes.
+  * Adding the `batchSize`-th row POSTs the batch; [[send]] POSTs the rest.
+  * A POST goes out on the JVM-wide [[graft.SharedHttp]] client straight
+  * from the buffer (no joined `String`, no second encoding pass) and
+  * throws on non-2xx (fail the task → Spark retries → at-least-once).
+  */
+private[sinks] final class JsonLinesBatch(endpoint: String, batchSize: Int,
+                                          partitionId: Long, epochId: Long)
+    extends java.io.ByteArrayOutputStream {
+  private var rows = 0
+  def add(row: UTF8String): Unit = { newline(); row.writeTo(this); rowAdded() }
+  def add(row: String): Unit = add(UTF8String.fromString(row))
+  private def newline(): Unit = if (rows > 0) write('\n')
+  private def rowAdded(): Unit = { rows += 1; if (rows >= batchSize) send() }
+
+  /** POST the pending rows, if any. */
+  def send(): Unit = if (rows > 0) {
+    graft.SharedHttp.post(endpoint, HttpRequest.BodyPublishers.ofByteArray(buf, 0, count),
+      "jsonl sink POST",
+      "Content-Type" -> "application/x-ndjson",
+      "X-Graft-Epoch" -> epochId.toString,
+      "X-Graft-Partition" -> partitionId.toString)
+    discard()
+  }
+
+  /** Drop the pending rows unsent. */
+  def discard(): Unit = { reset(); rows = 0 }
 }

@@ -2,8 +2,6 @@ package graft.sinks
 
 import java.util
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -96,24 +94,19 @@ private final class JsonLinesWriterFactory(endpoint: String, batchSize: Int)
 private final class JsonLinesDataWriter(endpoint: String, batchSize: Int,
                                         partitionId: Int, epochId: Long)
     extends DataWriter[InternalRow] {
-  private val buf = new mutable.ArrayBuffer[String]
+  private val batch = new JsonLinesBatch(endpoint, batchSize, partitionId.toLong, epochId)
   private var written = 0L
   override def write(row: InternalRow): Unit = {
     val u = row.getUTF8String(0)
     require(u != null,
       "jsonl-http: null in the json column (one non-null JSON document per row)")
-    buf += u.toString
+    batch.add(u)
     written += 1
-    if (buf.size >= batchSize) flush()
   }
   override def commit(): WriterCommitMessage = {
-    if (buf.nonEmpty) flush()
+    batch.send()
     JsonLinesCommit(written)
   }
-  override def abort(): Unit = buf.clear()
+  override def abort(): Unit = batch.discard()
   override def close(): Unit = ()
-  private def flush(): Unit = {
-    HttpJsonLinesSink.post(endpoint, buf.mkString("\n"), partitionId.toLong, epochId)
-    buf.clear()
-  }
 }

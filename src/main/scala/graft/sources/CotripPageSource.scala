@@ -4,14 +4,21 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
+import com.fasterxml.jackson.core.util.JsonParserDelegate
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.util.{ArrayData, BadRecordException, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.model.GeoSchemas
 
 /** DataSourceV2 `TableProvider` for paginated sign pages (SURVEY §4.2: "the
   * one piece of real engine infrastructure"). One InputPartition per page, so
@@ -30,9 +37,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (task.ts:64-67), partition i+1 with offset oᵢ; each fetch happens on
   *     its executor.
   *
-  * Schema is `(page_index INT, body STRING)`: the raw page envelope travels
-  * as one row, and feature parsing stays in `from_json`+`explode` expressions
-  * (codegen'd, same stage as the scan) via [[CotripSource.fromPageRows]].
+  * Rows are features ([[GeoSchemas.feature]]), parsed in the scan: each
+  * reader streams its page's bytes through Spark's own `JacksonParser`, with
+  * the options `from_json` uses, into the page envelope and emits one row
+  * per element of `features`. The scan prunes nested columns
+  * (`SupportsPushDownRequiredColumns`): the parser reads only the fields the
+  * plan pushes down, e.g. `properties.id` and `geometry` for the default
+  * property-strip pipeline, and skips the other sign properties unparsed.
+  *
+  * A page that is not a well-formed JSON object (truncated, not JSON,
+  * empty) fails the task with an error naming the page: its index plus its
+  * file or offset. A field of the wrong type (`"marker":"mile 3"`) keeps its
+  * feature with that field null, exactly as `from_json` does; see
+  * [[PageParser]].
   *
   * Registered as `cotrip-pages` (META-INF/services DataSourceRegister).
   */
@@ -41,7 +58,7 @@ class CotripPageSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "cotrip-pages"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    CotripPageSource.schema
+    GeoSchemas.feature
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
@@ -50,10 +67,6 @@ class CotripPageSource extends TableProvider with DataSourceRegister {
 }
 
 object CotripPageSource {
-  val schema: StructType = StructType(Seq(
-    StructField("page_index", IntegerType, nullable = false),
-    StructField("body", StringType)))
-
   /** Fixture-mode page listing in page order, shared by the batch scan
     * and the micro-batch stream: `page-1000` must follow `page-999`, not
     * precede it lexicographically.
@@ -72,36 +85,45 @@ object CotripPageSource {
 
 final class CotripPageTable(options: Map[String, String]) extends Table with SupportsRead {
   override def name(): String = "cotrip_pages"
-  override def schema(): StructType = CotripPageSource.schema
+  override def schema(): StructType = GeoSchemas.feature
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = CotripPageSource.schema
-      override def toBatch: Batch = this
-      override def toMicroBatchStream(checkpointLocation: String)
-          : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new CotripPageMicroBatchStream(options)
-      override def planInputPartitions(): Array[InputPartition] = {
-        options.getOrElse("mode", "fixture") match {
-          case "fixture" =>
-            CotripPageSource.fixtureFiles(options("path")).zipWithIndex.map {
-              case (f, i) =>
-                FixturePagePartition(i, f.getAbsolutePath): InputPartition
-            }
-          case "http" =>
-            val offsets: Seq[Option[String]] =
-              None +: options.get("offsets").toSeq
-                .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(Some(_)))
-            offsets.zipWithIndex.map { case (off, i) =>
-              HttpPagePartition(i, options("baseurl"), options("apikey"), off): InputPartition
-            }.toArray
-          case other => throw new IllegalArgumentException(s"unknown mode: $other")
-        }
-      }
-      override def createReaderFactory(): PartitionReaderFactory = new PagePartitionReaderFactory
+    new ScanBuilder with SupportsPushDownRequiredColumns {
+      private var required = GeoSchemas.feature
+      override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
+      override def build(): Scan = new CotripPageScan(options, required)
     }
+}
+
+/** The batch scan (and the micro-batch stream's factory) over `readSchema`,
+  * the feature columns the plan reads.
+  */
+final class CotripPageScan(options: Map[String, String], override val readSchema: StructType)
+    extends Scan with Batch {
+  override def toBatch: Batch = this
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+    new CotripPageMicroBatchStream(options, readSchema)
+  override def planInputPartitions(): Array[InputPartition] = {
+    options.getOrElse("mode", "fixture") match {
+      case "fixture" =>
+        CotripPageSource.fixtureFiles(options("path")).zipWithIndex.map {
+          case (f, i) =>
+            FixturePagePartition(i, f.getAbsolutePath): InputPartition
+        }
+      case "http" =>
+        val offsets: Seq[Option[String]] =
+          None +: options.get("offsets").toSeq
+            .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map(Some(_)))
+        offsets.zipWithIndex.map { case (off, i) =>
+          HttpPagePartition(i, options("baseurl"), options("apikey"), off): InputPartition
+        }.toArray
+      case other => throw new IllegalArgumentException(s"unknown mode: $other")
+    }
+  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    PagePartitionReaderFactory(readSchema)
 }
 
 /** Offset = number of pages fully processed (pages are the unit of
@@ -144,7 +166,8 @@ final case class CotripPageOffset(n: Long)
   *     restart reflect the chain as re-walked (the reference re-fetches
   *     everything on every schedule tick; this is strictly stronger).
   */
-final class CotripPageMicroBatchStream(options: Map[String, String])
+final class CotripPageMicroBatchStream(options: Map[String, String],
+                                       readSchema: StructType = GeoSchemas.feature)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxRows}
@@ -303,7 +326,7 @@ final class CotripPageMicroBatchStream(options: Map[String, String])
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new PagePartitionReaderFactory
+    PagePartitionReaderFactory(readSchema)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
@@ -312,23 +335,106 @@ final case class FixturePagePartition(index: Int, file: String) extends InputPar
 final case class HttpPagePartition(index: Int, baseUrl: String, apiKey: String,
                                    offset: Option[String]) extends InputPartition
 
-final class PagePartitionReaderFactory extends PartitionReaderFactory {
+/** Fetches and parses one page per partition on the executor. The session
+  * settings `from_json` would read (time zone, corrupt-record column name)
+  * are captured on the driver, where the factory is built.
+  */
+final case class PagePartitionReaderFactory(
+    featureSchema: StructType,
+    timeZone: String = SQLConf.get.sessionLocalTimeZone,
+    corruptRecordColumn: String = SQLConf.get.columnNameOfCorruptRecord)
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val (idx, body) = partition match {
+    val (page, open) = partition match {
       case FixturePagePartition(i, file) =>
-        (i, new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)),
-          java.nio.charset.StandardCharsets.UTF_8))
+        (s"page $i (file $file)",
+          () => java.nio.file.Files.newInputStream(java.nio.file.Paths.get(file)))
       case HttpPagePartition(i, baseUrl, apiKey, offset) =>
         // executor-side fetch: this is the distributed half of S1
-        (i, new HttpPageClient(baseUrl, apiKey).fetch(offset).body)
+        (s"page $i (offset ${offset.getOrElse("none: first page")})",
+          () => new HttpPageClient(baseUrl, apiKey).open(offset))
       case other => throw new IllegalArgumentException(other.toString)
     }
+    val features = new PageParser(featureSchema, timeZone, corruptRecordColumn)
+      .features(open, page)
     new PartitionReader[InternalRow] {
-      private var consumed = false
-      override def next(): Boolean = !consumed && { consumed = true; true }
-      override def get(): InternalRow =
-        InternalRow(idx, UTF8String.fromString(body))
+      private var i = -1
+      override def next(): Boolean = { i += 1; i < features.numElements() }
+      override def get(): InternalRow = features.getStruct(i, featureSchema.length)
       override def close(): Unit = ()
     }
   }
+}
+
+/** Parses one page envelope `{"features":[…]}` into its feature array with
+  * Spark's `JacksonParser` under the options `from_json` uses, so a page
+  * parses here as `from_json(body, GeoSchemas.page)` parses it in
+  * [[CotripSource.fromPages]] (the scan's feature schema may be pruned):
+  *
+  *   - a well-formed page with a field of the wrong type (e.g.
+  *     `"marker":"mile 3"`) keeps every feature, that field null —
+  *     `from_json`'s PERMISSIVE partial result;
+  *   - a page that is not a well-formed JSON object (truncated or
+  *     non-JSON text, a non-object root, an empty body) throws, naming
+  *     `page`. `from_json` would return a partial envelope with `features`
+  *     null here, and the page's features would vanish at the explode.
+  */
+private[sources] final class PageParser(featureSchema: StructType, timeZone: String,
+                                        corruptRecordColumn: String) {
+  private val parser = new JacksonParser(
+    StructType(Seq(StructField("features", ArrayType(featureSchema)))),
+    new JSONOptions(Map.empty[String, String], timeZone, corruptRecordColumn),
+    allowArrayAsStructs = false)
+
+  def features(open: () => java.io.InputStream, page: String): ArrayData = {
+    var watch: ReadWatch = null
+    def readError: Option[Throwable] = Option(watch).flatMap(w => Option(w.error))
+    val envelope =
+      try parser.parse[java.io.InputStream](new DrainOnClose(open()), { (factory, in) =>
+        watch = new ReadWatch(CreateJacksonParser.inputStream(factory, in)); watch
+      }, _ => UTF8String.EMPTY_UTF8)
+      catch {
+        case e: BadRecordException if readError.isEmpty && e.partialResults().nonEmpty =>
+          e.partialResults().toSeq
+        case e: BadRecordException => throw malformed(page, readError.getOrElse(e.getCause))
+        case e: java.io.IOException =>
+          throw new java.io.IOException(s"cotrip-pages: reading $page failed: ${e.getMessage}", e)
+      }
+    envelope.headOption match {
+      case None => throw malformed(page, null)
+      case Some(r) if r.isNullAt(0) => new GenericArrayData(Array.empty[Any])
+      case Some(r) => r.getArray(0)
+    }
+  }
+
+  private def malformed(page: String, cause: Throwable): Throwable =
+    new IllegalStateException(s"cotrip-pages: malformed $page: " +
+      Option(cause).map(_.getMessage).getOrElse("empty body") +
+      """ (expected a {"features":[...]} envelope)""", cause)
+}
+
+/** A Jackson parser that remembers the first syntax or I/O error it
+  * raised. `JacksonParser` catches an error inside a field to keep a
+  * partial result, so a syntax error deep in a page cannot be told from a
+  * wrong-typed field by the exception it finally throws.
+  */
+private final class ReadWatch(p: JsonParser) extends JsonParserDelegate(p) {
+  var error: java.io.IOException = _
+  private def watch[T](f: => T): T =
+    try f catch { case e: java.io.IOException => if (error == null) error = e; throw e }
+  override def nextToken(): JsonToken = watch(super.nextToken())
+  override def nextValue(): JsonToken = watch(super.nextValue())
+  override def skipChildren(): JsonParser = watch(super.skipChildren())
+  override def getText(): String = watch(super.getText())
+}
+
+/** Reads the rest of a response before closing it, so the parser closing
+  * its source at the end of the JSON value hands the connection back to
+  * the pool instead of cancelling the exchange.
+  */
+private final class DrainOnClose(in: java.io.InputStream) extends java.io.FilterInputStream(in) {
+  override def close(): Unit =
+    try in.transferTo(java.io.OutputStream.nullOutputStream())
+    catch { case _: java.io.IOException => () } // the parse already has its answer
+    finally in.close()
 }

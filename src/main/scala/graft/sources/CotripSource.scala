@@ -45,32 +45,42 @@ final class PagedFetcher(client: PageClient, maxPages: Int = 10000) {
   *
   * The offset chain is inherently sequential (each page's offset comes from the
   * previous response), so page *discovery* stays on the driver; page *parsing*
-  * is distributed — each page body is a row and `from_json` + `explode` run on
-  * executors. At 100 TB scale the same shape holds: the driver walks the chain
-  * collecting (cheap) page tokens, executors fetch/parse in parallel per page
-  * range (SURVEY §2.1-S1); for file-backed inputs use `fromJsonFiles` which is
-  * fully distributed end to end.
+  * is distributed. On the driver path ([[fromPages]]) each page body is a row
+  * and `from_json` + `explode` run on executors; on the DSv2 path
+  * ([[fromDsv2]]) executors fetch and parse each page in the scan itself,
+  * reading only the feature fields the plan needs. At 100 TB scale the same
+  * shape holds: the driver walks the chain collecting (cheap) page tokens,
+  * executors fetch/parse in parallel per page range (SURVEY §2.1-S1); for
+  * file-backed inputs use `fromJsonFiles` which is fully distributed end to end.
   */
 object CotripSource {
 
-  /** `(…, body)` page rows → one row per feature (codegen'd parse in the scan
-    * stage — shared by the Seq, DSv2, and file paths).
+  /** Parse page bodies (each `{"features":[...]}`) into one row per feature.
+    * A body that is not a well-formed JSON object (truncated or non-JSON
+    * text, an empty body) fails the job naming its page index; `from_json`
+    * alone would return it as a partial envelope with `features` null, and
+    * its features would vanish at the explode. A well-formed page with a
+    * field of the wrong type keeps its feature with that field null
+    * (`from_json`'s PERMISSIVE partial result), as in the `cotrip-pages` scan.
     */
-  def fromPageRows(pages: DataFrame): DataFrame =
-    pages
-      .select(from_json(col("body"), GeoSchemas.page).as("page"))
+  def fromPages(spark: SparkSession, bodies: Seq[String]): DataFrame = {
+    val body = col("body")
+    spark.createDataset(bodies.zipWithIndex)(Encoders.tuple(Encoders.STRING, Encoders.scalaInt))
+      .toDF("body", "page_index")
+      // json_object_keys is null exactly when the body is not a well-formed object
+      .select(when(body.isNotNull && json_object_keys(body).isNull,
+        raise_error(concat(lit("malformed page "), col("page_index"),
+          lit(""": the body is not a well-formed {"features":[...]} JSON object"""))))
+        .otherwise(from_json(body, GeoSchemas.page)).as("page"))
       .select(explode(col("page.features")).as("feature"))
       .select(col("feature.*"))
-
-  /** Parse page bodies (each `{"features":[...]}`) into one row per feature. */
-  def fromPages(spark: SparkSession, bodies: Seq[String]): DataFrame =
-    fromPageRows(spark.createDataset(bodies)(Encoders.STRING).toDF("body"))
+  }
 
   /** DSv2 scale path: executor-parallel page fetch+parse via the
     * `cotrip-pages` source (see [[CotripPageSource]] for modes/options).
     */
   def fromDsv2(spark: SparkSession, options: Map[String, String]): DataFrame =
-    fromPageRows(spark.read.format("cotrip-pages").options(options).load())
+    spark.read.format("cotrip-pages").options(options).load()
 
   /** Fetch the full chain with `client`, then parse distributed. */
   def fetch(spark: SparkSession, client: PageClient, maxPages: Int = 10000): DataFrame =

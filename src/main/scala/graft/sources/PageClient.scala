@@ -38,25 +38,41 @@ object FixturePageClient {
 /** HTTP client for the real endpoint shape: `GET {base}/api/v1/signs?apiKey=…
   * [&offset=…]`, next page offset read from the `next-offset` response header
   * (task.ts:62-69). Fail-fast on non-2xx, mirroring the reference's lack of
-  * retry handling (SURVEY §1.5-6).
+  * retry handling (SURVEY §1.5-6). Requests go through the JVM-wide
+  * [[graft.SharedHttp]] client, so the discovery walk and the executor
+  * page scans reuse keep-alive connections.
   */
 final class HttpPageClient(baseUrl: String, apiKey: String,
-                           connectTimeout: java.time.Duration = java.time.Duration.ofSeconds(30),
                            requestTimeout: java.time.Duration = java.time.Duration.ofSeconds(120)) extends PageClient {
-  // explicit timeouts: a stalled server must fail the fetch (and let the
-  // schedule/task retry), not hang the driver loop or an executor forever
-  private val client = java.net.http.HttpClient.newBuilder()
-    .connectTimeout(connectTimeout).build()
 
-  override def fetch(offset: Option[String]): Page = {
+  // explicit timeout: a stalled server must fail the fetch (and let the
+  // schedule/task retry), not hang the driver loop or an executor forever
+  private def request(offset: Option[String]): java.net.http.HttpRequest = {
     val params = s"apiKey=${java.net.URLEncoder.encode(apiKey, "UTF-8")}" +
       offset.map(o => s"&offset=${java.net.URLEncoder.encode(o, "UTF-8")}").getOrElse("")
-    val uri = java.net.URI.create(s"$baseUrl/api/v1/signs?$params")
-    val req = java.net.http.HttpRequest.newBuilder(uri)
+    java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"$baseUrl/api/v1/signs?$params"))
       .timeout(requestTimeout).GET().build()
-    val res = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+  }
+
+  private def checked[T](res: java.net.http.HttpResponse[T]): java.net.http.HttpResponse[T] = {
     if (res.statusCode() / 100 != 2)
-      throw new RuntimeException(s"fetch failed: HTTP ${res.statusCode()} for $uri")
+      throw new RuntimeException(s"fetch failed: HTTP ${res.statusCode()} for ${res.uri()}")
+    res
+  }
+
+  override def fetch(offset: Option[String]): Page = {
+    val res = checked(graft.SharedHttp.send(request(offset),
+      java.net.http.HttpResponse.BodyHandlers.ofString()))
     Page(res.body(), Option(res.headers().firstValue("next-offset").orElse(null)))
+  }
+
+  /** The page body as a byte stream, for a parser that reads the bytes as
+    * they arrive (the `cotrip-pages` scan). The caller closes it.
+    */
+  def open(offset: Option[String]): java.io.InputStream = {
+    val res = graft.SharedHttp.send(request(offset),
+      java.net.http.HttpResponse.BodyHandlers.ofInputStream())
+    if (res.statusCode() / 100 != 2) res.body().close()
+    checked(res).body()
   }
 }

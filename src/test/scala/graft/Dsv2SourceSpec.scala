@@ -2,13 +2,18 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import graft.model.TaskConfig
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.model.{GeoSchemas, TaskConfig}
 import graft.operators.CotripOps
 import graft.queries.CotripQueries
 import graft.sources.CotripSource
 
-/** The DSv2 `cotrip-pages` source: fixture-mode partition planning, schema,
-  * and end-to-end equality with the driver-side fetch path.
+/** The DSv2 `cotrip-pages` source: fixture-mode partition planning, the
+  * feature schema and its nested pruning, malformed-page failures, and
+  * end-to-end equality with the driver-side fetch path.
   */
 class Dsv2SourceSpec extends SparkSpec {
 
@@ -22,35 +27,140 @@ class Dsv2SourceSpec extends SparkSpec {
     dir
   }
 
-  test("fixture mode: one partition per page file, bodies byte-identical") {
+  test("fixture mode: one partition per page file, features parsed in the scan") {
     val dir = writeFixtures()
-    val pages = spark.read.format("cotrip-pages")
+    val features = spark.read.format("cotrip-pages")
       .option("mode", "fixture").option("path", dir.toString).load()
-    assert(pages.schema.fieldNames.toSeq === Seq("page_index", "body"))
-    assert(pages.rdd.getNumPartitions === 3)
-    val rows = pages.orderBy("page_index").collect()
-    assert(rows.map(_.getString(1)).toSeq === CotripQueries.fixturePages)
+    assert(features.schema === GeoSchemas.feature)
+    assert(features.rdd.getNumPartitions === 3)
+    val viaSeq = CotripSource.fromPages(spark, CotripQueries.fixturePages)
+    assert(features.collect().toSeq.sortBy(_.toString)
+      === viaSeq.collect().toSeq.sortBy(_.toString))
   }
 
   test("DSv2 path produces the same pipeline output as the driver-side path") {
     val dir = writeFixtures()
-    val viaDsv2 = CotripOps.pipeline(
-      CotripSource.fromDsv2(spark,
-        Map("mode" -> "fixture", "path" -> dir.toString)), TaskConfig("t"))
-    val viaSeq = CotripOps.pipeline(
-      CotripSource.fromPages(spark, CotripQueries.fixturePages), TaskConfig("t"))
-    assert(viaDsv2.except(viaSeq).count() === 0)
-    assert(viaSeq.except(viaDsv2).count() === 0)
-    assert(viaDsv2.count() === 7)
+    val viaDsv2 = CotripSource.fromDsv2(spark,
+      Map("mode" -> "fixture", "path" -> dir.toString))
+    val viaSeq = CotripSource.fromPages(spark, CotripQueries.fixturePages)
+    // all 8 geometry-toggle combinations x property strip / carry
+    for (point <- Seq(true, false); line <- Seq(true, false);
+         polygon <- Seq(true, false); strip <- Seq(true, false)) {
+      val cfg = TaskConfig("t", pointGeometries = point, lineStringGeometries = line,
+        polygonGeometries = polygon, stripProperties = strip)
+      val a = CotripOps.pipeline(viaDsv2, cfg)
+      val b = CotripOps.pipeline(viaSeq, cfg)
+      assert(a.collect().toSeq.sortBy(_.toString) === b.collect().toSeq.sortBy(_.toString),
+        s"config $cfg")
+      if (point && line && polygon) assert(a.count() === 7)
+    }
+  }
+
+  /** The `cotrip-pages` scans in `df`'s executed plan. */
+  private def pageScans(df: org.apache.spark.sql.DataFrame): Seq[BatchScanExec] = {
+    df.collect()
+    df.queryExecution.executedPlan.collect {
+      case a: AdaptiveSparkPlanExec => a.executedPlan.collect { case b: BatchScanExec => b }
+      case b: BatchScanExec => Seq(b)
+    }.flatten
+  }
+
+  test("the scan parses only the fields the pipeline reads: properties.id + geometry when stripping, all 16 properties when carrying") {
+    val dir = writeFixtures()
+    def readSchema(strip: Boolean): StructType = {
+      val out = CotripOps.pipeline(
+        CotripSource.fromDsv2(spark, Map("mode" -> "fixture", "path" -> dir.toString)),
+        TaskConfig("t", stripProperties = strip))
+      val scans = pageScans(out)
+      assert(scans.size === 1)
+      scans.head.scan.readSchema()
+    }
+    assert(readSchema(strip = true) === StructType(Seq(
+      StructField("properties", StructType(Seq(StructField("id", StringType)))),
+      StructField("geometry", GeoSchemas.geometry))))
+    assert(readSchema(strip = false) === StructType(Seq(
+      StructField("properties", GeoSchemas.signProperties),
+      StructField("geometry", GeoSchemas.geometry))))
+  }
+
+  /** Every message in `e`'s cause chain. */
+  private def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+
+  private def assertNamesPage(e: Throwable, page: String, where: String): Unit =
+    assert(messages(e).exists(m => m.contains(s"malformed $page") && m.contains(where)),
+      messages(e).mkString("\n"))
+
+  test("a page that does not parse fails loudly and names the page: fromPages, DSv2 batch (fixture, http) and stream") {
+    val good = CotripQueries.fixturePages(0)
+    val truncated = CotripQueries.fixturePages(2).dropRight(20)
+    // driver path: today's from_json nulled the page and its features vanished
+    val seqErr = intercept[Exception] {
+      CotripSource.fromPages(spark, Seq(good, truncated)).select("properties.id").collect()
+    }
+    assertNamesPage(seqErr, "page 1", "not a well-formed")
+
+    val dir = Files.createTempDirectory("cotrip-pages-bad")
+    Files.writeString(dir.resolve("page-000.json"), good)
+    Files.writeString(dir.resolve("page-001.json"), truncated)
+    val fixture = Map("mode" -> "fixture", "path" -> dir.toString)
+    val batchErr = intercept[Exception] {
+      CotripOps.pipeline(CotripSource.fromDsv2(spark, fixture), TaskConfig("t")).collect()
+    }
+    assertNamesPage(batchErr, "page 1", "page-001.json")
+
+    val streamErr = intercept[Exception] {
+      val features = spark.readStream.format("cotrip-pages").options(fixture).load()
+      graft.streaming.EventsStream.runAvailableNow(
+        CotripOps.pipeline(features, TaskConfig("t")), "c05_bad_page_sink")
+    }
+    assertNamesPage(streamErr, "page 1", "page-001.json")
+
+    // a syntax error Spark's parser recovers from as a partial result (a
+    // missing colon) must fail the page too, not yield zero features
+    val noColon = good.replaceFirst("\"type\":", "\"type\" ")
+    Files.writeString(dir.resolve("page-001.json"), noColon)
+    val noColonErr = intercept[Exception](CotripSource.fromDsv2(spark, fixture).collect())
+    assertNamesPage(noColonErr, "page 1", "page-001.json")
+    val noColonSeqErr = intercept[Exception] {
+      CotripSource.fromPages(spark, Seq(good, noColon)).collect()
+    }
+    assertNamesPage(noColonSeqErr, "page 1", "not a well-formed")
+
+    withChainServer(Map(None -> (good, "100"), Some("100") -> (truncated, "None"))) { (base, _, _) =>
+      val httpErr = intercept[Exception] {
+        CotripSource.fromDsv2(spark, Map("mode" -> "http", "baseUrl" -> base,
+          "apiKey" -> "tok", "offsets" -> "100")).collect()
+      }
+      assertNamesPage(httpErr, "page 1", "offset 100")
+    }
+  }
+
+  test("a wrong-typed property keeps its feature with that field null: fromPages and the DSv2 scan agree") {
+    val page = """{"features":[""" +
+      """{"type":"Feature","properties":{"id":"w1","marker":"mile 3","name":"n-w1"},""" +
+      """"geometry":{"type":"Point","coordinates":[1.0,2.0]}},""" +
+      feat("w2", "Point", "[3.0,4.0]") + "]}"
+    val dir = Files.createTempDirectory("cotrip-pages-typed")
+    Files.writeString(dir.resolve("page-000.json"), page)
+    val viaDsv2 = CotripSource.fromDsv2(spark, Map("mode" -> "fixture", "path" -> dir.toString))
+    val viaSeq = CotripSource.fromPages(spark, Seq(page))
+    for (df <- Seq(viaDsv2, viaSeq)) {
+      val rows = df.select("properties.id", "properties.marker", "properties.name")
+        .collect().map(r => (r.getString(0), Option(r.get(1)), r.getString(2))).toSet
+      assert(rows === Set(("w1", None, "n-w1"), ("w2", None, null)))
+      assert(CotripOps.pipeline(df, TaskConfig("t")).select("id").collect()
+        .map(_.getString(0)).toSet === Set("w1", "w2"))
+    }
   }
 
   test("micro-batch stream: one page per trigger by default; pagespertrigger batches wider") {
     val dir = writeFixtures()
     def drain(opts: Map[String, String], sink: String): Long = {
-      val pages = spark.readStream.format("cotrip-pages")
+      val features = spark.readStream.format("cotrip-pages")
         .option("mode", "fixture").option("path", dir.toString)
         .options(opts).load()
-      val out = CotripOps.pipeline(CotripSource.fromPageRows(pages), TaskConfig("t"))
+      val out = CotripOps.pipeline(features, TaskConfig("t"))
       val before = graft.streaming.StreamTelemetry.microBatchesCompleted.get()
       graft.streaming.EventsStream.runAvailableNow(out, sink)
       graft.streaming.StreamTelemetry.microBatchesCompleted.get() - before
@@ -115,10 +225,10 @@ class Dsv2SourceSpec extends SparkSpec {
 
   test("micro-batch stream http mode: AvailableNow drains the live chain, one page per trigger, 'None' sentinel honored") {
     withChainServer(threePages) { (base, _, _) =>
-      val pages = spark.readStream.format("cotrip-pages")
+      val features = spark.readStream.format("cotrip-pages")
         .option("mode", "http").option("baseurl", base)
         .option("apikey", "tok").load()
-      val out = CotripOps.pipeline(CotripSource.fromPageRows(pages), TaskConfig("tok"))
+      val out = CotripOps.pipeline(features, TaskConfig("tok"))
       val before = graft.streaming.StreamTelemetry.microBatchesCompleted.get()
       graft.streaming.EventsStream.runAvailableNow(out, "c05_http_sink1")
       assert(graft.streaming.StreamTelemetry.microBatchesCompleted.get() - before === 3L,
