@@ -7,8 +7,8 @@ import java.time.Duration
 
 /** The one JVM-wide HTTP client behind the page source
   * ([[graft.sources.HttpPageClient]], driver discovery and executor page
-  * scans) and the HTTP sinks ([[graft.sinks.HttpJsonLinesSink]], the
-  * `jsonl-http` writer, [[graft.sinks.FeatureCollectionSink.submit]]).
+  * scans) and the HTTP sinks (the `jsonl-http` writer,
+  * [[graft.sinks.FeatureCollectionSink.submit]]).
   *
   * One client means one connection pool: every task in the JVM reuses the
   * open keep-alive connections instead of paying a new client (selector

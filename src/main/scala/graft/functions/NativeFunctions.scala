@@ -887,37 +887,43 @@ case class NearestCentroid(first: Expression, second: Expression,
 
 object NativeFunctions {
 
-  /** Idempotent session registration of `dot_product` and
-    * `word_shingles` (both exposed to SQL too) in one atomic step: the
-    * checks and the registrations run under the registry's own lock, so
-    * concurrent first-use threads cannot interleave them. Skips a
-    * function only when its registered name already RESOLVES TO OURS
-    * (avoids the re-registration WARN every operator call would otherwise
-    * log) — a same-named foreign function gets replaced, so the operators
-    * can never silently compute through someone else's implementation.
+  /** Idempotent, atomic session registration of one native function: the
+    * check and the registration run under the registry's own lock, so
+    * concurrent first-use threads cannot interleave them. Skips only when
+    * `name` already RESOLVES TO OURS — `ours` holds for the expression the
+    * registered builder makes from the `probe` arguments (this avoids the
+    * re-registration WARN every operator call would otherwise log). A
+    * same-named foreign function gets replaced, so the operators can never
+    * silently compute through someone else's implementation.
     * [[graft.GraftExtensions]] is the config-time alternative.
     */
-  def register(spark: SparkSession): Unit = {
+  private def ensure(spark: SparkSession, name: String, probe: Expression*)(
+      ours: Expression => Boolean)(builder: Seq[Expression] => Expression): Unit = {
     val registry = spark.sessionState.functionRegistry
-    def ours(name: String, probe: Seq[Expression], is: Expression => Boolean): Boolean = {
-      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      registry.functionExists(ident) &&
-        (try is(registry.lookupFunction(ident, probe)) catch { case _: Throwable => false })
-    }
-    val vec = org.apache.spark.sql.catalyst.expressions.Literal.create(
-      Array(0.0), ArrayType(DoubleType, containsNull = false))
-    val words = org.apache.spark.sql.catalyst.expressions.Literal.create(
-      Array("a"), ArrayType(org.apache.spark.sql.types.StringType))
-    val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
+    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
     registry.synchronized {
-      if (!ours("dot_product", Seq(vec, vec), _.isInstanceOf[DotProduct]))
-        registry.createOrReplaceTempFunction(
-          "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-      if (!ours("word_shingles", Seq(words, one), _.isInstanceOf[WordShingles]))
-        registry.createOrReplaceTempFunction("word_shingles", { exprs =>
-          requireArity("word_shingles", Seq(2), exprs.length)
-          WordShingles(exprs(0), intConstArg("word_shingles", "k", exprs(1)))
-        }, "built-in")
+      val isOurs = registry.functionExists(ident) &&
+        (try ours(registry.lookupFunction(ident, probe)) catch { case _: Throwable => false })
+      if (!isOurs) registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+  }
+
+  // probe arguments for [[ensure]]
+  private val vecProbe = org.apache.spark.sql.catalyst.expressions.Literal.create(
+    Array(0.0), ArrayType(DoubleType, containsNull = false))
+  private val intProbe = org.apache.spark.sql.catalyst.expressions.Literal(1)
+
+  /** Registration of `dot_product` and `word_shingles` (both exposed to
+    * SQL too) — see [[ensure]].
+    */
+  def register(spark: SparkSession): Unit = {
+    ensure(spark, "dot_product", vecProbe, vecProbe)(_.isInstanceOf[DotProduct])(
+      exprs => DotProduct(exprs(0), exprs(1)))
+    ensure(spark, "word_shingles", org.apache.spark.sql.catalyst.expressions
+      .Literal.create(Array("a"), ArrayType(org.apache.spark.sql.types.StringType)),
+      intProbe)(_.isInstanceOf[WordShingles]) { exprs =>
+      requireArity("word_shingles", Seq(2), exprs.length)
+      WordShingles(exprs(0), intConstArg("word_shingles", "k", exprs(1)))
     }
   }
 
@@ -953,24 +959,13 @@ object NativeFunctions {
       .otherwise(call_function("char_qgrams", s, lit(q)))
   }
 
-  private def registerCharQgrams(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("char_qgrams")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val str = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          "a", org.apache.spark.sql.types.StringType)
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(str, one))
-          .isInstanceOf[CharQgrams]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("char_qgrams", { exprs =>
-        requireArity("char_qgrams", Seq(2), exprs.length)
-        CharQgrams(exprs(0), intConstArg("char_qgrams", "q", exprs(1)))
-      }, "built-in")
+  private def registerCharQgrams(spark: SparkSession): Unit =
+    ensure(spark, "char_qgrams", org.apache.spark.sql.catalyst.expressions
+      .Literal.create("a", org.apache.spark.sql.types.StringType),
+      intProbe)(_.isInstanceOf[CharQgrams]) { exprs =>
+      requireArity("char_qgrams", Seq(2), exprs.length)
+      CharQgrams(exprs(0), intConstArg("char_qgrams", "q", exprs(1)))
     }
-  }
 
   /** Log-linear sketch code via the native expression (registers on first
     * use; see [[LogLinCode]] — the hot-path form of
@@ -981,20 +976,10 @@ object NativeFunctions {
     call_function("log_lin_code", v)
   }
 
-  private def registerLogLin(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("log_lin_code")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        registry.lookupFunction(ident, Seq(
-          org.apache.spark.sql.catalyst.expressions.Literal(1.0)))
-          .isInstanceOf[LogLinCode]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction(
-        "log_lin_code", exprs => LogLinCode(exprs(0)), "built-in")
-    }
-  }
+  private def registerLogLin(spark: SparkSession): Unit =
+    ensure(spark, "log_lin_code",
+      org.apache.spark.sql.catalyst.expressions.Literal(1.0))(
+      _.isInstanceOf[LogLinCode])(exprs => LogLinCode(exprs(0)))
 
   /** All `tables` LSH signatures of `vec` against the flattened row-major
     * plane matrix, as one fused-loop column (see [[HyperplaneSignatures]]).
@@ -1023,26 +1008,14 @@ object NativeFunctions {
       typedlit(Array.fill(cbs.length)(0L)))
   }
 
-  private def registerPqCodes(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("pq_codes")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array(0.0), ArrayType(DoubleType, containsNull = false))
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(arr, arr, one, one))
-          .isInstanceOf[PqCodes]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("pq_codes", { exprs =>
-        requireArity("pq_codes", Seq(4), exprs.length)
-        PqCodes(exprs(0), exprs(1),
-          intConstArg("pq_codes", "subspaces", exprs(2)),
-          intConstArg("pq_codes", "k", exprs(3)))
-      }, "built-in")
+  private def registerPqCodes(spark: SparkSession): Unit =
+    ensure(spark, "pq_codes", vecProbe, vecProbe, intProbe, intProbe)(
+      _.isInstanceOf[PqCodes]) { exprs =>
+      requireArity("pq_codes", Seq(4), exprs.length)
+      PqCodes(exprs(0), exprs(1),
+        intConstArg("pq_codes", "subspaces", exprs(2)),
+        intConstArg("pq_codes", "k", exprs(3)))
     }
-  }
 
   /** Nearest-centroid id by the fused argmax loop (see [[NearestCentroid]]).
     * `useVnorm = true` is the cosine-assignment form; `false` the k-means
@@ -1059,26 +1032,14 @@ object NativeFunctions {
       vec, typedlit(flatCents), typedlit(norms))
   }
 
-  private def registerNearest(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
+  private def registerNearest(spark: SparkSession): Unit =
     Seq(("nearest_centroid_cos", true), ("nearest_centroid_dot", false)).foreach {
       case (name, useVnorm) =>
-        val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-        val alreadyOurs = registry.functionExists(ident) &&
-          (try {
-            val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-              Array(0.0), ArrayType(DoubleType, containsNull = false))
-            registry.lookupFunction(ident, Seq(arr, arr, arr)) match {
-              case NearestCentroid(_, _, _, u) => u == useVnorm
-              case _ => false
-            }
-          } catch { case _: Throwable => false })
-        if (!alreadyOurs) {
-          registry.createOrReplaceTempFunction(name, exprs =>
-            NearestCentroid(exprs(0), exprs(1), exprs(2), useVnorm), "built-in")
-        }
+        ensure(spark, name, vecProbe, vecProbe, vecProbe) {
+          case NearestCentroid(_, _, _, u) => u == useVnorm
+          case _ => false
+        }(exprs => NearestCentroid(exprs(0), exprs(1), exprs(2), useVnorm))
     }
-  }
 
   /** Resolve a knob argument of `hyperplane_signatures` to its Int value at
     * function-build time (the knobs shape the expression, so they must be
@@ -1124,50 +1085,26 @@ object NativeFunctions {
     }
   }
 
-  private def registerSignatures(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("hyperplane_signatures")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val arr = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array(0.0), ArrayType(DoubleType, containsNull = false))
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1)
-        registry.lookupFunction(ident, Seq(arr, arr, one, one))
-          .isInstanceOf[HyperplaneSignatures]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("hyperplane_signatures", exprs =>
-        HyperplaneSignatures(exprs(0), exprs(1),
-          intConstArg("hyperplane_signatures", "planesPerTable", exprs(2)),
-          intConstArg("hyperplane_signatures", "tables", exprs(3))),
-        "built-in")
-    }
-  }
+  private def registerSignatures(spark: SparkSession): Unit =
+    ensure(spark, "hyperplane_signatures", vecProbe, vecProbe, intProbe,
+      intProbe)(_.isInstanceOf[HyperplaneSignatures])(exprs =>
+      HyperplaneSignatures(exprs(0), exprs(1),
+        intConstArg("hyperplane_signatures", "planesPerTable", exprs(2)),
+        intConstArg("hyperplane_signatures", "tables", exprs(3))))
 
-  private def registerGear(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("gear_chunk_ends")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val blob = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          Array.empty[Byte], org.apache.spark.sql.types.BinaryType)
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(6)
-        registry.lookupFunction(ident, Seq(blob, one))
-          .isInstanceOf[GearChunkEnds]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("gear_chunk_ends", { exprs =>
-        requireArity("gear_chunk_ends", Seq(2, 4), exprs.length)
-        if (exprs.length == 4)
-          GearChunkEnds(exprs(0),
-            intConstArg("gear_chunk_ends", "maskBits", exprs(1)),
-            intConstArg("gear_chunk_ends", "minSize", exprs(2)),
-            intConstArg("gear_chunk_ends", "maxSize", exprs(3)))
-        else GearChunkEnds(exprs(0),
-          intConstArg("gear_chunk_ends", "maskBits", exprs(1)))
-      }, "built-in")
+  private def registerGear(spark: SparkSession): Unit =
+    ensure(spark, "gear_chunk_ends", org.apache.spark.sql.catalyst.expressions
+      .Literal.create(Array.empty[Byte], org.apache.spark.sql.types.BinaryType),
+      intProbe)(_.isInstanceOf[GearChunkEnds]) { exprs =>
+      requireArity("gear_chunk_ends", Seq(2, 4), exprs.length)
+      if (exprs.length == 4)
+        GearChunkEnds(exprs(0),
+          intConstArg("gear_chunk_ends", "maskBits", exprs(1)),
+          intConstArg("gear_chunk_ends", "minSize", exprs(2)),
+          intConstArg("gear_chunk_ends", "maxSize", exprs(3)))
+      else GearChunkEnds(exprs(0),
+        intConstArg("gear_chunk_ends", "maskBits", exprs(1)))
     }
-  }
 
   /** Gear content-defined chunk end positions of a BINARY payload (see
     * [[GearChunkEnds]]); `minSize`/`maxSize` bound chunk lengths (the
@@ -1196,26 +1133,16 @@ object NativeFunctions {
     * ships to executors once with the task closure.
     */
   private def registerBloom(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val bloomProbe = org.apache.spark.sql.catalyst.expressions.Literal.create(
-          null, org.apache.spark.sql.types.BinaryType)
-        val valueProbe = org.apache.spark.sql.catalyst.expressions.Literal(0L)
-        registry.lookupFunction(ident, Seq(bloomProbe, valueProbe))
-          .isInstanceOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("graft_bloom_agg",
-        exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-        "built-in")
-      registry.createOrReplaceTempFunction("graft_might_contain",
-        exprs => org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1)),
-        "built-in")
-    }
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val long = Literal(0L)
+    ensure(spark, "graft_bloom_agg", long, long, long)(
+      _.isInstanceOf[BloomFilterAggregate])(
+      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
+    ensure(spark, "graft_might_contain",
+      Literal.create(null, org.apache.spark.sql.types.BinaryType), long)(
+      _.isInstanceOf[BloomFilterMightContain])(
+      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
   }
 
   /** Build a bloom filter over `hash` (a LONG column, conventionally

@@ -102,19 +102,8 @@ object Dedup {
         sh.join(hot, Seq("shingle"), "left_anti")
       case None => sh
     }
-    val sizes = filtered.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
-    val a = filtered.select(col(idCol).as("id_a"), col("shingle"))
-    val b = filtered.select(col(idCol).as("id_b"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-    // NB: sizes/shingle-set tables are O(corpus) — no broadcast hints; these
-    // stay shuffle joins (AQE may still choose broadcast at small scale).
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("set_size").as("size_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("set_size").as("size_b")), Seq("id_b"))
-      .withColumn("jaccard", col("inter") / (col("size_a") + col("size_b") - col("inter")))
+    SetOverlap.selfPairs(filtered, idCol, "shingle")
+      .withColumn("jaccard", SetOverlap.jaccard("inter", "sz_a", "sz_b"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -137,22 +126,13 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        k: Int = 4, threshold: Double = 0.8,
                        persistShingles: Boolean = true): DataFrame = {
-    val sh = shingleSet(docs, idCol, textCol, k, persistShingles)
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
-    val a = sh.select(col(idCol).as("id_a"), col("shingle"))
-    val b = sh.select(col(idCol).as("id_b"), col("shingle"))
-    val inter = a.join(b, Seq("shingle"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-    val both = inter
-      .join(sizes.select(col(idCol).as("id_a"), col("set_size").as("size_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("set_size").as("size_b")), Seq("id_b"))
+    val both = SetOverlap.selfPairs(
+      shingleSet(docs, idCol, textCol, k, persistShingles), idCol, "shingle")
     both.select(col("id_a").as("contained_id"), col("id_b").as("container_id"),
-        (col("inter") / col("size_a")).as("containment"))
+        (col("inter") / col("sz_a")).as("containment"))
       .union(both.select(col("id_b").as("contained_id"),
         col("id_a").as("container_id"),
-        (col("inter") / col("size_b")).as("containment")))
+        (col("inter") / col("sz_b")).as("containment")))
       .filter(col("containment") >= threshold)
   }
 
@@ -171,30 +151,21 @@ object Dedup {
                               k: Int = 4, threshold: Double = 0.5,
                               persistShingles: Boolean = true): DataFrame = {
     val shC = shingleSet(corpus, idCol, textCol, k, persistShingles)
-    screenAgainst(shingleSet(fresh, idCol, textCol, k, persistShingles),
-      shC, shC.groupBy(col(idCol)).agg(count(lit(1)).as("set_size")),
-      idCol, threshold)
+    screenShingles(shingleSet(fresh, idCol, textCol, k, persistShingles),
+      shC, SetOverlap.sizes(shC, idCol, "set_size"), idCol, threshold)
   }
 
-  /** The shared fresh-vs-corpus screen: intersect counts from the shingle
-    * join, Jaccard from the per-side set sizes. `shC`/`sizeC` carry
-    * (`idCol`, shingle) and (`idCol`, set_size).
+  /** [[SetOverlap.screen]] over shingle sets: `shF`/`shC` carry
+    * (`idCol`, shingle), `sizeC` (`idCol`, set_size) — the standing index
+    * layout. Returns (fresh_id, corpus_id, jaccard).
     */
-  private def screenAgainst(shF: DataFrame, shC: DataFrame, sizeC: DataFrame,
-                            idCol: String, threshold: Double): DataFrame = {
-    val sizeF = shF.groupBy(col(idCol)).agg(count(lit(1)).as("size_f"))
-    shF.select(col(idCol).as("fresh_id"), col("shingle"))
-      .join(shC.select(col(idCol).as("corpus_id"), col("shingle")), Seq("shingle"))
-      .groupBy("fresh_id", "corpus_id")
-      .agg(count(lit(1)).as("inter"))
-      .join(sizeF.select(col(idCol).as("fresh_id"), col("size_f")), Seq("fresh_id"))
-      .join(sizeC.select(col(idCol).as("corpus_id"),
-        col("set_size").as("size_c")), Seq("corpus_id"))
-      .withColumn("jaccard",
-        col("inter") / (col("size_f") + col("size_c") - col("inter")))
-      .filter(col("jaccard") >= threshold)
+  private def screenShingles(shF: DataFrame, shC: DataFrame, sizeC: DataFrame,
+                             idCol: String, threshold: Double): DataFrame =
+    SetOverlap.screen(shF.select(col(idCol).as("fresh_id"), col("shingle")),
+      shC.select(col(idCol).as("corpus_id"), col("shingle")),
+      sizeC.select(col(idCol).as("corpus_id"), col("set_size").as("sz_c")),
+      "shingle", threshold)
       .select("fresh_id", "corpus_id", "jaccard")
-  }
 
   /** Names of the two warehouse tables that make up a standing shingle
     * index: the (id, shingle) set bucketed+sorted by `shingle` (the probe
@@ -218,56 +189,26 @@ object Dedup {
   def writeShingleIndex(corpus: DataFrame, idCol: String, textCol: String,
                         index: ShingleIndex, k: Int = 4,
                         buckets: Int = 16): ShingleIndex = {
-    val spark = corpus.sparkSession
-    // spread = false: a bucketed write emits one file per (task, bucket),
-    // so the width pin would multiply bucket files — the layout contract
-    // (one file per bucket per fold) wins here
-    val sh = shingleSet(corpus, idCol, textCol, k, persist = true,
-      spread = false)
-    graft.sources.BucketedLake.writeBucketedTableLedgered(spark, index.shingles,
-      sh, "shingle", buckets)
-    graft.sources.BucketedLake.writeBucketedTableLedgered(spark, index.sizes,
-      sh.groupBy(col(idCol)).agg(count(lit(1)).as("set_size")), idCol, buckets)
-    sh.unpersist()
+    SetOverlap.writeIndex(corpus.sparkSession, index.shingles, index.sizes,
+      "set_size", buckets)(shingleSet(corpus, idCol, textCol, k,
+        persist = false, spread = false))
     index
   }
 
   /** Fold an ACCEPTED ingest batch into a standing [[ShingleIndex]] — the
-    * Jaccard-family compaction step (the d17 pattern for shingles): batch
-    * shingle set and per-doc sizes append into both tables under the
-    * catalog-validated bucket spec, so tomorrow's
+    * Jaccard-family compaction step (the d17 pattern for shingles),
+    * exactly-once per `epoch` ([[SetOverlap.appendIndex]]), so tomorrow's
     * [[incrementalJaccardPairsIndexed]] screens against today's survivors
     * without a rebuild. `k` and `buckets` MUST be the index's own (they are
-    * part of the layout contract, baked into the caller's table naming);
-    * batch ids must be disjoint from the indexed corpus — the screen that
-    * precedes this call establishes exactly that, and id-disjointness is
-    * what makes the per-doc sizes append pure addition.
-    *
-    * Exactly-once (VERDICT r19 #1): pass the caller's fold `epoch` and a
-    * crash-then-retry of the same fold is a no-op instead of a silent
-    * double-insert — duplicated shingle/size rows would inflate every
-    * later screen's intersection counts and fan out its size join. The
-    * two tables share one epoch; per-table frontier gating heals a crash
-    * that landed between the two appends. The epoch is REQUIRED — fold
-    * identity must come from the caller (its scheduler/ledger), because
-    * an auto-assigned epoch would make every retry a new fold and a
-    * crash-retry would double-insert, exactly the hole this closes.
+    * part of the layout contract, baked into the caller's table naming).
     */
   def appendShingleIndex(batch: DataFrame, index: ShingleIndex,
                          idCol: String, textCol: String,
                          k: Int = 4, buckets: Int = 16,
                          epoch: Long): ShingleIndex = {
-    val spark = batch.sparkSession
-    // spread = false: same bucketed-write file-per-(task, bucket) contract
-    // as the base build — an append fold must stay one file per bucket
-    val sh = shingleSet(batch, idCol, textCol, k, persist = true,
-      spread = false)
-    graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.shingles,
-      sh, epoch, "shingle", buckets)
-    graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.sizes,
-      sh.groupBy(col(idCol)).agg(count(lit(1)).as("set_size")),
-      epoch, idCol, buckets)
-    sh.unpersist()
+    SetOverlap.appendIndex(shingleSet(batch, idCol, textCol, k,
+      persist = false, spread = false), index.shingles, index.sizes,
+      "set_size", buckets, epoch)
     index
   }
 
@@ -279,14 +220,13 @@ object Dedup {
   def incrementalJaccardPairsIndexed(fresh: DataFrame, index: ShingleIndex,
                                      idCol: String, textCol: String,
                                      k: Int = 4,
-                                     threshold: Double = 0.5): DataFrame = {
-    val spark = fresh.sparkSession
+                                     threshold: Double = 0.5): DataFrame =
     // spread = false: the fresh side is batch-sized by contract and the
     // probe plan is pinned broadcast-only on this side (d12/d28) — an
     // exchange here buys nothing and breaks the serving shape
-    screenAgainst(shingleSet(fresh, idCol, textCol, k, spread = false),
-      spark.table(index.shingles), spark.table(index.sizes), idCol, threshold)
-  }
+    screenShingles(shingleSet(fresh, idCol, textCol, k, spread = false),
+      fresh.sparkSession.table(index.shingles),
+      fresh.sparkSession.table(index.sizes), idCol, threshold)
 
   /** [[incrementalJaccardPairs]] with a bloom semi-join reduction on the
     * corpus side — the third point in the ingest-screen design space
@@ -334,12 +274,12 @@ object Dedup {
       else math.min(math.max(expectedFreshShingles * 8, 1L << 16), 1L << 26)
     val shF = shingleSet(fresh, idCol, textCol, k, persistShingles)
     val shC = shingleSet(corpus, idCol, textCol, k, persistShingles)
-    val sizeC = shC.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
+    val sizeC = SetOverlap.sizes(shC, idCol, "set_size")
     val bloom = graft.functions.NativeFunctions.bloomAggBytes(
       shF, xxhash64(col("shingle")), expectedFreshShingles, bits)
     val pruned = shC.filter(graft.functions.NativeFunctions.mightContain(
       shC.sparkSession, bloom, xxhash64(col("shingle"))))
-    screenAgainst(shF, pruned, sizeC, idCol, threshold)
+    screenShingles(shF, pruned, sizeC, idCol, threshold)
   }
 
   /** MinHash + LSH near-dup pairs: signature → band keys → bucket self-join
@@ -383,16 +323,13 @@ object Dedup {
     // joining each candidate pair's rows on equal shingle hash (a 64-bit
     // collision inside one pair is ~|A||B|/2^64 — negligible). Candidate-
     // bounded work; nothing here is O(n²) or broadcast-sized.
-    val sizes = hashed.groupBy(col(idCol)).agg(count(lit(1)).as("set_size"))
     val inter = candidates
       .join(hashed.select(col(idCol).as("id_a"), col("h")), Seq("id_a"))
       .join(hashed.select(col(idCol).as("id_b"), col("h")), Seq("id_b", "h"))
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("set_size").as("size_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("set_size").as("size_b")), Seq("id_b"))
-      .withColumn("jaccard", col("inter") / (col("size_a") + col("size_b") - col("inter")))
+    SetOverlap.withSizes(inter, hashed, idCol)
+      .withColumn("jaccard", SetOverlap.jaccard("inter", "sz_a", "sz_b"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -1718,6 +1655,35 @@ object Dedup {
                           c: String, q: Int) =
     graft.functions.NativeFunctions.charQgramsFused(spark, col(c), q)
 
+  /** The edit family's corpus-side probe structures from (corpus_id, s_c)
+    * strings — the standing [[EditIndex]] tables and the live screen's
+    * static side alike: the q-gram set `cg` (persisted, for the caller to
+    * release), the gram df table, each doc's rarity prefix — its rarest
+    * `q·maxDist + 1` distinct grams by (df, g), carrying the string — and
+    * the gram-poor short pool keyed by length.
+    * Returns (cg, dfq, (g, corpus_id, s_c), (len_b, corpus_id, s_c)).
+    */
+  private[graft] def editCorpusSide(cs: DataFrame, q: Int, maxDist: Int)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val prefixLen = q * maxDist + 1
+    val cg = Caching.persisted(cs.select(col("corpus_id"),
+      explode(array_distinct(editGramsOf(cs.sparkSession, "s_c", q))).as("g")))
+    val dfq = Caching.persisted(cg.groupBy("g").agg(count(lit(1)).as("df")))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("corpus_id")).orderBy(col("df"), col("g"))
+    val cpref = cg.join(dfq, "g")
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= prefixLen)
+      .select(col("corpus_id"), col("g"))
+      .join(cs, Seq("corpus_id"))
+      .select(col("g"), col("corpus_id"), col("s_c"))
+    val cshort = cs
+      .join(cg.groupBy("corpus_id").agg(count(lit(1)).as("ng")), Seq("corpus_id"))
+      .filter(col("ng") < prefixLen)
+      .select(length(col("s_c")).as("len_b"), col("corpus_id"), col("s_c"))
+    (cg, dfq, cpref, cshort)
+  }
+
   /** The index's frozen pairing window applied to a string column:
     * identity when `sliceChars = 0` (caller-sliced contract).
     */
@@ -1778,25 +1744,9 @@ object Dedup {
     val idx = EditIndex(s"${nm}_dfq", s"${nm}_pref",
       s"${nm}_short", s"${nm}_str", maxDist, q, buckets, sliceFrom, sliceChars)
     if (!spark.catalog.tableExists(idx.dfq)) {
-      val prefixLen = q * maxDist + 1
       val cs = corpus.select(col(idCol).cast("long").as("corpus_id"),
         slicedStr(col(strCol), idx).as("s_c")).filter(col("s_c").isNotNull)
-      val cg = Caching.persisted(cs.select(col("corpus_id"),
-        explode(array_distinct(editGramsOf(spark, "s_c", q))).as("g")))
-      val dfq = Caching.persisted(
-        cg.groupBy("g").agg(count(lit(1)).as("df")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("corpus_id")).orderBy(col("df"), col("g"))
-      val cpref = cg.join(dfq, "g")
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= prefixLen)
-        .select(col("corpus_id"), col("g"))
-        .join(cs, Seq("corpus_id"))
-        .select(col("g"), col("corpus_id"), col("s_c"))
-      val cshort = cs
-        .join(cg.groupBy("corpus_id").agg(count(lit(1)).as("ng")), Seq("corpus_id"))
-        .filter(col("ng") < prefixLen)
-        .select(length(col("s_c")).as("len_b"), col("corpus_id"), col("s_c"))
+      val (_, dfq, cpref, cshort) = editCorpusSide(cs, q, maxDist)
       // the three APPENDED tables carry the exactly-once epoch ledger;
       // dfq is frozen at build time (the honest asymmetry) and stays plain
       graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.prefix,

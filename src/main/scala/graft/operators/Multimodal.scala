@@ -142,30 +142,18 @@ object Multimodal {
     */
   def chunkJaccardPairs(media: DataFrame, threshold: Double = 0.5,
                         chunkBytes: Int = 64): DataFrame =
-    jaccardFromChunks(hexChunks(media, chunkBytes), threshold)
+    jaccardFromDigests(chunkDigestSet(media, "doc_id", chunkBytes), threshold)
 
-  /** The digest→bucket-join→Jaccard tail shared by the fixed-size (m07)
-    * and content-defined (m12) pair surfaces — the chunker is the only
-    * difference between them, so the pairing semantics cannot drift.
+  /** The [[SetOverlap.selfPairs]] → Jaccard tail shared by the fixed-size
+    * (m07) and content-defined (m12) pair surfaces — the chunker is the
+    * only difference between them, so the pairing semantics cannot drift.
     */
-  private def jaccardFromChunks(chunks: DataFrame,
-                                threshold: Double): DataFrame = {
-    val d = chunks
-      .select(col("doc_id"), sha2(unhex(col("chunk_hex")), 256).as("digest"))
-      .distinct()
-    val sizes = d.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val shared = d.select(col("doc_id").as("id_a"), col("digest"))
-      .join(d.select(col("doc_id").as("id_b"), col("digest")), "digest")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    shared
-      .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
-      .join(sizes.select(col("doc_id").as("id_b"), col("sz").as("sz_b")), "id_b")
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
+  private def jaccardFromDigests(digests: DataFrame,
+                                 threshold: Double): DataFrame =
+    SetOverlap.selfPairs(digests, "doc_id", "digest")
+      .withColumn("jaccard", SetOverlap.jaccard("inter", "sz_a", "sz_b"))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "inter", "sz_a", "sz_b", "jaccard")
-  }
 
   /** Content-defined (gear rolling-hash) chunk layout — the
     * [[hexChunks]] contract with data-dependent boundaries
@@ -181,8 +169,6 @@ object Multimodal {
     */
   def gearChunks(media: DataFrame, maskBits: Int = 6, minSize: Int = 1,
                  maxSize: Int = Int.MaxValue): DataFrame = {
-    val ends = graft.functions.NativeFunctions.gearChunkEnds(
-      media.sparkSession, col("payload"), maskBits, minSize, maxSize)
     // Shape adjudicated by measurement (round 12, 10× smoke): slice per
     // chunk in CODEGEN after the explode — posexplode(ends) then
     // substring+hex in the same whole-stage-codegen stage, 0.8 s at 10× —
@@ -200,13 +186,7 @@ object Multimodal {
     // SLOWER with the pin than at scan width. The width-pin pattern pays
     // on narrow rows reused across iterations (Similarity.trainWidth);
     // payload scans parallelize by split size instead.
-    media.filter(octet_length(col("payload")) > 0)
-      .select(col("doc_id"), col("payload"), ends.as("ends"))
-      .select(col("doc_id"), col("payload"), col("ends"),
-        posexplode(col("ends")).as(Seq("chunk_no", "en")))
-      .withColumn("st",
-        when(col("chunk_no") === 0, lit(1L))
-          .otherwise(element_at(col("ends"), col("chunk_no")) + 1))
+    gearSpans(media, maskBits, minSize, maxSize, Seq("payload"))
       .select(col("doc_id"), col("chunk_no").cast("long").as("chunk_no"),
         hex(substring(col("payload"), col("st").cast("int"),
           (col("en") - col("st") + 1).cast("int"))).as("chunk_hex"))
@@ -222,24 +202,27 @@ object Multimodal {
     */
   def gearChunkSpans(media: DataFrame, maskBits: Int = 6, minSize: Int = 1,
                      maxSize: Int = Int.MaxValue): DataFrame =
-    gearSpans(media, maskBits, minSize, maxSize)
-      .select(col("doc_id"), col("chunk_no"), col("st"), col("en"))
+    gearSpans(media, maskBits, minSize, maxSize, Nil)
+      .select(col("doc_id"), col("chunk_no").cast("long").as("chunk_no"),
+        col("st"), col("en"))
 
+  /** Gear boundaries exploded to one row per chunk — (doc_id, `carry`...,
+    * ends, chunk_no, en, st) with 1-based inclusive byte bounds. `carry`
+    * names the input columns that ride the explode; the payload is
+    * consumed by the boundary scan and dropped before it unless carried.
+    */
   private def gearSpans(media: DataFrame, maskBits: Int, minSize: Int,
-                        maxSize: Int): DataFrame = {
+                        maxSize: Int, carry: Seq[String]): DataFrame = {
     val ends = graft.functions.NativeFunctions.gearChunkEnds(
       media.sparkSession, col("payload"), maskBits, minSize, maxSize)
-    // payload is consumed by the boundary scan and DROPPED before the
-    // explode — only the small ends array rides the generate
+    val keep = ("doc_id" +: carry).map(col)
     media.filter(octet_length(col("payload")) > 0)
-      .select(col("doc_id"), ends.as("ends"))
-      .select(col("doc_id"), col("ends"),
-        posexplode(col("ends")).as(Seq("chunk_no", "en")))
+      .select(keep :+ ends.as("ends"): _*)
+      .select(keep ++ Seq(col("ends"),
+        posexplode(col("ends")).as(Seq("chunk_no", "en"))): _*)
       .withColumn("st",
         when(col("chunk_no") === 0, lit(1L))
           .otherwise(element_at(col("ends"), col("chunk_no")) + 1))
-      .select(col("doc_id"),
-        col("chunk_no").cast("long").as("chunk_no"), col("st"), col("en"))
   }
 
   /** Blob near-dup pairs over the content-defined chunk layout — the m07
@@ -252,12 +235,24 @@ object Multimodal {
   def gearChunkJaccardPairs(media: DataFrame, threshold: Double = 0.5,
                             maskBits: Int = 6, minSize: Int = 1,
                             maxSize: Int = Int.MaxValue): DataFrame =
-    jaccardFromChunks(gearChunks(media, maskBits, minSize, maxSize), threshold)
+    jaccardFromDigests(gearDigestSet(media, "doc_id", maskBits, minSize,
+      maxSize), threshold)
+
+  /** Per-blob DISTINCT fixed-size chunk digest rows (`idAs`, digest) — the
+    * media family's key set for [[SetOverlap]]: SHA-256 over each
+    * [[hexChunks]] slice's bytes.
+    */
+  def chunkDigestSet(media: DataFrame, idAs: String,
+                     chunkBytes: Int = 64): DataFrame =
+    hexChunks(media, chunkBytes)
+      .select(col("doc_id").as(idAs),
+        sha2(unhex(col("chunk_hex")), 256).as("digest"))
+      .distinct()
 
   /** Per-blob DISTINCT gear-chunk digest rows (id, digest) — the CDC
-    * counterpart of [[freshDigestSet]]'s fixed-size layout; the digest is
-    * sha2 over the chunk BYTES (hex round-tripped through [[gearChunks]],
-    * so it is bit-identical to digesting the slice directly).
+    * counterpart of [[chunkDigestSet]]; the digest is sha2 over the chunk
+    * BYTES (hex round-tripped through [[gearChunks]], so it is
+    * bit-identical to digesting the slice directly).
     */
   def gearDigestSet(media: DataFrame, idAs: String, maskBits: Int = 6,
                     minSize: Int = 1, maxSize: Int = Int.MaxValue): DataFrame =
@@ -272,7 +267,7 @@ object Multimodal {
     * batch's digest hits. Content-defined boundaries re-synchronize after
     * an edit, so a byte-shifted ingest copy still pairs with its standing
     * original — the live dedup case fixed-size chunk screens (m09)
-    * provably miss. Same chunkScreen tail as m09: digest-bucketed
+    * provably miss. Same [[SetOverlap.screen]] as m09: digest-bucketed
     * candidates, exact Jaccard over distinct chunk sets, O(chunks) wire.
     */
   def incrementalGearChunkPairs(fresh: DataFrame, corpus: DataFrame,
@@ -281,9 +276,8 @@ object Multimodal {
                                 maxSize: Int = Int.MaxValue): DataFrame = {
     val corpusD = Caching.persisted(
       gearDigestSet(corpus, "corpus_id", maskBits, minSize, maxSize))
-    val sizes = corpusD.groupBy("corpus_id").agg(count(lit(1)).as("sz_c"))
-    chunkScreen(gearDigestSet(fresh, "fresh_id", maskBits, minSize, maxSize),
-      corpusD, sizes, threshold)
+    SetOverlap.screen(gearDigestSet(fresh, "fresh_id", maskBits, minSize, maxSize),
+      corpusD, SetOverlap.sizes(corpusD, "corpus_id", "sz_c"), "digest", threshold)
   }
 
   /** Build (idempotently, catalog-checked) a standing GEAR digest index —
@@ -295,44 +289,23 @@ object Multimodal {
                           maskBits: Int = 6, minSize: Int = 1,
                           maxSize: Int = Int.MaxValue,
                           buckets: Int = 16): ChunkIndex = {
-    val spark = corpus.sparkSession
-    if (!(spark.catalog.tableExists(index.digests) &&
-        spark.catalog.tableExists(index.sizes))) {
-      val d = gearDigestSet(corpus, "doc_id", maskBits, minSize, maxSize)
-        .persist()
-      graft.sources.BucketedLake.writeBucketedTableLedgered(spark, index.digests,
-        d, "digest", buckets)
-      graft.sources.BucketedLake.writeBucketedTableLedgered(spark, index.sizes,
-        d.groupBy("doc_id").agg(count(lit(1)).as("sz_c")), "doc_id", buckets)
-      d.unpersist(blocking = false)
-    }
+    SetOverlap.writeIndex(corpus.sparkSession, index.digests, index.sizes,
+      "sz_c", buckets)(gearDigestSet(corpus, "doc_id", maskBits, minSize, maxSize))
     index
   }
 
   /** Fold an ACCEPTED ingest batch into a standing GEAR digest index —
-    * [[appendChunkIndex]]'s CDC counterpart (the d17/d18 compaction
-    * pattern): the batch's distinct gear digests and per-doc counts
-    * append under the catalog-validated bucket spec, so tomorrow's
+    * [[appendChunkIndex]]'s CDC counterpart, exactly-once per `epoch`
+    * ([[SetOverlap.appendIndex]]), so tomorrow's
     * [[incrementalGearChunkPairsIndexed]] screens against today's
-    * survivors without a rebuild. Batch ids must be disjoint from the
-    * indexed corpus (the screen that precedes this call establishes it).
-    * Exactly-once (VERDICT r19 #1): the caller's fold `epoch` (REQUIRED —
-    * the appendShingleIndex contract) makes a crash-then-retry a no-op
-    * (one epoch across both tables, per-table frontier gate +
-    * row-presence repair).
+    * survivors without a rebuild.
     */
   def appendGearChunkIndex(batch: DataFrame, index: ChunkIndex,
                            maskBits: Int = 6, minSize: Int = 1,
                            maxSize: Int = Int.MaxValue,
                            buckets: Int = 16, epoch: Long): ChunkIndex = {
-    val spark = batch.sparkSession
-    val d = gearDigestSet(batch, "doc_id", maskBits, minSize, maxSize)
-      .persist()
-    graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.digests,
-      d, epoch, "digest", buckets)
-    graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.sizes,
-      d.groupBy("doc_id").agg(count(lit(1)).as("sz_c")), epoch, "doc_id", buckets)
-    d.unpersist(blocking = false)
+    SetOverlap.appendIndex(gearDigestSet(batch, "doc_id", maskBits, minSize,
+      maxSize), index.digests, index.sizes, "sz_c", buckets, epoch)
     index
   }
 
@@ -347,15 +320,9 @@ object Multimodal {
   def incrementalGearChunkPairsIndexed(fresh: DataFrame, index: ChunkIndex,
                                        threshold: Double = 0.5,
                                        maskBits: Int = 6, minSize: Int = 1,
-                                       maxSize: Int = Int.MaxValue): DataFrame = {
-    val spark = fresh.sparkSession
-    chunkScreen(gearDigestSet(fresh, "fresh_id", maskBits, minSize, maxSize),
-      spark.table(index.digests)
-        .select(col("doc_id").as("corpus_id"), col("digest")),
-      spark.table(index.sizes)
-        .select(col("doc_id").as("corpus_id"), col("sz_c")),
-      threshold)
-  }
+                                       maxSize: Int = Int.MaxValue): DataFrame =
+    indexedScreen(gearDigestSet(fresh, "fresh_id", maskBits, minSize, maxSize),
+      index, threshold)
 
   /** Per-blob DISTINCT gear-chunk digest ARRAY in one in-row projection —
     * [[inRowChunkDigests]]'s CDC counterpart, for the STREAMING fresh side
@@ -364,7 +331,7 @@ object Multimodal {
     * aggregate. The transform lambda is interpreted — acceptable on the
     * fresh side, which is micro-batch-sized; the CORPUS side must use the
     * codegen [[gearChunks]] path (see that method's shape adjudication).
-    * Returns (doc_id, sz_f, digests).
+    * Returns (doc_id, digests).
     */
   def inRowGearChunkDigests(media: DataFrame, maskBits: Int = 6,
                             minSize: Int = 1,
@@ -378,8 +345,7 @@ object Multimodal {
           "THEN substring(payload, 1, cast(e AS INT)) " +
           "ELSE substring(payload, cast(ends[i - 1] + 1 AS INT), " +
           "cast(e - ends[i - 1] AS INT)) END, 256))")))
-      .select(col("doc_id"), size(col("digests")).cast("long").as("sz_f"),
-        col("digests"))
+      .select(col("doc_id"), col("digests"))
   }
 
   /** The 256-entry gear table as (b, g) rows — the hash primitive the m12
@@ -408,12 +374,9 @@ object Multimodal {
   def incrementalChunkPairs(fresh: DataFrame, corpus: DataFrame,
                             threshold: Double = 0.5,
                             chunkBytes: Int = 64): DataFrame = {
-    val dc = hexChunks(corpus, chunkBytes)
-      .select(col("doc_id").as("corpus_id"),
-        sha2(unhex(col("chunk_hex")), 256).as("digest"))
-      .distinct()
-    chunkScreen(freshDigestSet(fresh, chunkBytes), dc,
-      dc.groupBy("corpus_id").agg(count(lit(1)).as("sz_c")), threshold)
+    val dc = chunkDigestSet(corpus, "corpus_id", chunkBytes)
+    SetOverlap.screen(chunkDigestSet(fresh, "fresh_id", chunkBytes), dc,
+      SetOverlap.sizes(dc, "corpus_id", "sz_c"), "digest", threshold)
   }
 
   /** Standing chunk-digest index handle: corpus (digest, doc_id) rows
@@ -422,7 +385,12 @@ object Multimodal {
     * family. Chunk size and bucket count are part of the layout contract
     * (bake them into the caller's table naming).
     */
-  final case class ChunkIndex(digests: String, sizes: String)
+  final case class ChunkIndex(digests: String, sizes: String) {
+    /** The tables as screen inputs: (corpus_id, digest), (corpus_id, sz_c). */
+    def corpus(spark: org.apache.spark.sql.SparkSession): (DataFrame, DataFrame) =
+      (spark.table(digests).select(col("doc_id").as("corpus_id"), col("digest")),
+        spark.table(sizes).select(col("doc_id").as("corpus_id"), col("sz_c")))
+  }
 
   /** Materialize the standing chunk-digest index for `corpus` — write
     * ONCE, screen every later ingest against the tables
@@ -432,71 +400,33 @@ object Multimodal {
     */
   def writeChunkIndex(corpus: DataFrame, index: ChunkIndex,
                       chunkBytes: Int = 64, buckets: Int = 16): ChunkIndex = {
-    val spark = corpus.sparkSession
-    if (!(spark.catalog.tableExists(index.digests) &&
-        spark.catalog.tableExists(index.sizes))) {
-      val d = hexChunks(corpus, chunkBytes)
-        .select(col("doc_id"), sha2(unhex(col("chunk_hex")), 256).as("digest"))
-        .distinct().persist()
-      graft.sources.BucketedLake.writeBucketedTableLedgered(spark, index.digests,
-        d, "digest", buckets)
-      graft.sources.BucketedLake.writeBucketedTableLedgered(spark, index.sizes,
-        d.groupBy("doc_id").agg(count(lit(1)).as("sz_c")), "doc_id", buckets)
-      d.unpersist(blocking = false)
-    }
+    SetOverlap.writeIndex(corpus.sparkSession, index.digests, index.sizes,
+      "sz_c", buckets)(chunkDigestSet(corpus, "doc_id", chunkBytes))
     index
   }
 
   /** Fold an ACCEPTED ingest batch into a standing [[ChunkIndex]] — the
-    * media-family compaction step (the d17/d18 pattern): the batch's
-    * distinct digests and per-doc counts append into both tables under
-    * the catalog-validated bucket spec, so tomorrow's
+    * media-family compaction step, exactly-once per `epoch`
+    * ([[SetOverlap.appendIndex]]), so tomorrow's
     * [[incrementalChunkPairsIndexed]] screens against today's survivors
-    * without a rebuild. Batch ids must be disjoint from the indexed
-    * corpus (the screen that precedes this call establishes it — that is
-    * what makes the sizes append pure addition). Exactly-once (VERDICT
-    * r19 #1): the caller's fold `epoch` (REQUIRED — the
-    * appendShingleIndex contract) makes a crash-then-retry a no-op (one
-    * epoch across both tables).
+    * without a rebuild.
     */
   def appendChunkIndex(batch: DataFrame, index: ChunkIndex,
                        chunkBytes: Int = 64, buckets: Int = 16,
                        epoch: Long): ChunkIndex = {
-    val spark = batch.sparkSession
-    val d = hexChunks(batch, chunkBytes)
-      .select(col("doc_id"), sha2(unhex(col("chunk_hex")), 256).as("digest"))
-      .distinct().persist()
-    graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.digests,
-      d, epoch, "digest", buckets)
-    graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.sizes,
-      d.groupBy("doc_id").agg(count(lit(1)).as("sz_c")), epoch, "doc_id", buckets)
-    d.unpersist(blocking = false)
+    SetOverlap.appendIndex(chunkDigestSet(batch, "doc_id", chunkBytes),
+      index.digests, index.sizes, "sz_c", buckets, epoch)
     index
   }
 
-  /** Shared screen tail: fresh digest set vs a corpus digest/size pair of
-    * frames (live or table-backed) — probe join on the digest, pair
-    * counts, Jaccard cut. Fresh-vs-corpus only by construction.
+  /** Fresh digest set (fresh_id, digest) against a standing [[ChunkIndex]]
+    * — the indexed screen shared by the fixed-size and gear families.
     */
-  private def chunkScreen(freshDigests: DataFrame, corpusDigests: DataFrame,
-                          corpusSizes: DataFrame,
-                          threshold: Double): DataFrame = {
-    val szF = freshDigests.groupBy("fresh_id").agg(count(lit(1)).as("sz_f"))
-    freshDigests.join(corpusDigests, Seq("digest"))
-      .groupBy("fresh_id", "corpus_id").agg(count(lit(1)).as("inter"))
-      .join(szF, Seq("fresh_id"))
-      .join(corpusSizes, Seq("corpus_id"))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("sz_f") + col("sz_c") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("fresh_id", "corpus_id", "inter", "sz_f", "sz_c", "jaccard")
+  private def indexedScreen(fresh: DataFrame, index: ChunkIndex,
+                            threshold: Double): DataFrame = {
+    val (digests, sizes) = index.corpus(fresh.sparkSession)
+    SetOverlap.screen(fresh, digests, sizes, "digest", threshold)
   }
-
-  private def freshDigestSet(fresh: DataFrame, chunkBytes: Int): DataFrame =
-    hexChunks(fresh, chunkBytes)
-      .select(col("doc_id").as("fresh_id"),
-        sha2(unhex(col("chunk_hex")), 256).as("digest"))
-      .distinct()
 
   /** Per-blob DISTINCT chunk-digest ARRAY as one in-row projection — every
     * chunk of a blob lives in the blob's own row, so the distinct that the
@@ -506,7 +436,7 @@ object Multimodal {
     * aggregate: fresh-side digesting, sizing (`size(digests)`) and
     * dedup all ride the scan. Digests are bit-identical to
     * [[hexChunks]]+sha2 (same byte slices, hex round-trip elided).
-    * Returns (doc_id, sz_f, digests).
+    * Returns (doc_id, digests).
     */
   def inRowChunkDigests(media: DataFrame, chunkBytes: Int = 64): DataFrame =
     media
@@ -517,8 +447,7 @@ object Multimodal {
         sequence(lit(0L), col("n_chunks") - 1),
         i => sha2(col("payload").substr(
           (i * chunkBytes + 1).cast("int"), lit(chunkBytes)), 256))))
-      .select(col("doc_id"), size(col("digests")).cast("long").as("sz_f"),
-        col("digests"))
+      .select(col("doc_id"), col("digests"))
 
   /** [[incrementalChunkPairs]] against a standing [[ChunkIndex]] —
     * identical results when the index was built from the same corpus
@@ -530,13 +459,8 @@ object Multimodal {
     */
   def incrementalChunkPairsIndexed(fresh: DataFrame, index: ChunkIndex,
                                    threshold: Double = 0.5,
-                                   chunkBytes: Int = 64): DataFrame = {
-    val spark = fresh.sparkSession
-    chunkScreen(freshDigestSet(fresh, chunkBytes),
-      spark.table(index.digests).select(col("doc_id").as("corpus_id"), col("digest")),
-      spark.table(index.sizes).select(col("doc_id").as("corpus_id"), col("sz_c")),
-      threshold)
-  }
+                                   chunkBytes: Int = 64): DataFrame =
+    indexedScreen(chunkDigestSet(fresh, "fresh_id", chunkBytes), index, threshold)
 
   /** Partition-batched feature extraction over the payload column. Runs as a
     * single narrow `mapPartitions` stage — no shuffle; the iterator shape is

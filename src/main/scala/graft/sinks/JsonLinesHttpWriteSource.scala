@@ -1,5 +1,6 @@
 package graft.sinks
 
+import java.net.http.HttpRequest
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,9 +11,12 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSourceV2 WRITE for the JSONL HTTP sink (SURVEY §2.1-S3 / §4.2
-  * graduation): the declarative counterpart of [[HttpJsonLinesSink]] —
+/** DataSourceV2 WRITE for the executor-side JSONL HTTP sink (SURVEY
+  * §2.1-S3 / §4.2 graduation): newline-delimited JSON POSTed in bounded
+  * batches from the task that produced it — no driver collect, no
+  * single-writer bottleneck, batch and Structured Streaming alike —
   *
   * {{{
   *   df.write.format("jsonl-http").option("endpoint", url)
@@ -23,11 +27,18 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Input contract: exactly one STRING column (one JSON document per row —
   * [[FeatureCollectionSink.featureJson]] produces exactly this shape).
-  * Each task POSTs its rows in `batchSize` groups with the same
-  * at-least-once + idempotency-header contract as [[HttpJsonLinesSink]]:
-  * `X-Graft-Epoch` (the streaming epoch, −1 for batch) and
-  * `X-Graft-Partition`. Tail rows flush in `commit()` — an aborted task
-  * never finalizes its last partial batch, replays re-send whole epochs.
+  * Each task POSTs its rows in `batchSize` groups. Delivery is
+  * at-least-once (a retried task or micro-batch re-POSTs its rows — the
+  * Spark sink contract); every request carries `X-Graft-Epoch` (the
+  * streaming epoch, −1 for batch) and `X-Graft-Partition`, so an
+  * idempotent receiver can deduplicate replays — the standard recipe for
+  * exactly-once effects over an at-least-once channel. Tail rows flush in
+  * `commit()` — an aborted task never finalizes its last partial batch,
+  * replays re-send whole epochs.
+  *
+  * The conformance-scale FeatureCollection POST (one collected document
+  * per run, exactly the reference's submit) stays in
+  * [[FeatureCollectionSink.submit]]; this sink is the 100 TB path.
   */
 class JsonLinesHttpWriteSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "jsonl-http"
@@ -109,4 +120,35 @@ private final class JsonLinesDataWriter(endpoint: String, batchSize: Int,
   }
   override def abort(): Unit = batch.discard()
   override def close(): Unit = ()
+}
+
+/** One task's pending rows for `endpoint`, newline-delimited UTF-8 bytes.
+  * Adding the `batchSize`-th row POSTs the batch; [[send]] POSTs the rest.
+  * A POST goes out on the JVM-wide [[graft.SharedHttp]] client straight
+  * from the buffer (no joined `String`, no second encoding pass) and
+  * throws on non-2xx (fail the task → Spark retries → at-least-once).
+  */
+private final class JsonLinesBatch(endpoint: String, batchSize: Int,
+                                   partitionId: Long, epochId: Long)
+    extends java.io.ByteArrayOutputStream {
+  private var rows = 0
+  def add(row: UTF8String): Unit = {
+    if (rows > 0) write('\n')
+    row.writeTo(this)
+    rows += 1
+    if (rows >= batchSize) send()
+  }
+
+  /** POST the pending rows, if any. */
+  def send(): Unit = if (rows > 0) {
+    graft.SharedHttp.post(endpoint, HttpRequest.BodyPublishers.ofByteArray(buf, 0, count),
+      "jsonl sink POST",
+      "Content-Type" -> "application/x-ndjson",
+      "X-Graft-Epoch" -> epochId.toString,
+      "X-Graft-Partition" -> partitionId.toString)
+    discard()
+  }
+
+  /** Drop the pending rows unsent. */
+  def discard(): Unit = { reset(); rows = 0 }
 }

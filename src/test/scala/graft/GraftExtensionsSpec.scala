@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{GraftExtensionsProbe, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.functions.NativeFunctions
 
@@ -97,14 +98,82 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(row.getDouble(0) === 11.0)
   }
 
+  /** Every lazily registered native function: (name, a first use through
+    * its public helper, probe arguments, is-ours check on what the name
+    * resolves to for those arguments).
+    */
+  private def natives(s: org.apache.spark.sql.SparkSession): Seq[(String,
+      () => Unit, Seq[Expression], Expression => Boolean)] = {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types._
+    import graft.functions._
+    val vec = Literal.create(Array(1.0, 2.0), ArrayType(DoubleType, containsNull = false))
+    val one = Literal(1)
+    val long = Literal(0L)
+    val shared = () => NativeFunctions.register(s)
+    val bloom = () => { NativeFunctions.mightContain(s, Array[Byte](0), col("h")); () }
+    def nearest(cos: Boolean) = () => {
+      NativeFunctions.nearestCentroid(s, col("v"), Array(0.0), Array(1.0), cos); ()
+    }
+    Seq(
+      ("dot_product", shared, Seq(vec, vec), _.isInstanceOf[DotProduct]),
+      ("word_shingles", shared, Seq(Literal.create(Array("a"), ArrayType(StringType)), one),
+        _.isInstanceOf[WordShingles]),
+      ("char_qgrams", () => { NativeFunctions.charQgramsFused(s, lit("ab"), 2); () },
+        Seq(Literal("ab"), one), _.isInstanceOf[CharQgrams]),
+      ("log_lin_code", () => { NativeFunctions.logLinCode(s, lit(1.0)); () },
+        Seq(Literal(1.0)), _.isInstanceOf[LogLinCode]),
+      ("pq_codes", () => { NativeFunctions.pqCodes(s, col("v"), Seq(Array(Array(0.0)))); () },
+        Seq(vec, vec, one, one), _.isInstanceOf[PqCodes]),
+      ("nearest_centroid_cos", nearest(true), Seq(vec, vec, vec),
+        { case NearestCentroid(_, _, _, u) => u; case _ => false }),
+      ("nearest_centroid_dot", nearest(false), Seq(vec, vec, vec),
+        { case NearestCentroid(_, _, _, u) => !u; case _ => false }),
+      ("hyperplane_signatures",
+        () => { NativeFunctions.hyperplaneSignatures(s, col("v"), Array(0.0), 1, 1); () },
+        Seq(vec, vec, one, one), _.isInstanceOf[HyperplaneSignatures]),
+      ("gear_chunk_ends", () => { NativeFunctions.gearChunkEnds(s, col("p"), 6); () },
+        Seq(Literal.create(Array.empty[Byte], BinaryType), one),
+        _.isInstanceOf[GearChunkEnds]),
+      ("graft_bloom_agg", bloom, Seq(long, long, long),
+        _.isInstanceOf[BloomFilterAggregate]),
+      ("graft_might_contain", bloom, Seq(Literal.create(null, BinaryType), long),
+        _.isInstanceOf[BloomFilterMightContain]))
+  }
+
+  private def resolves(s: org.apache.spark.sql.SparkSession, name: String,
+                       probe: Seq[Expression]): Expression =
+    s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name), probe)
+
   test("registration replaces a same-named foreign function (never computes through it)") {
-    spark.udf.register("dot_product",
-      (a: Seq[Double], b: Seq[Double]) => -1.0) // an impostor
+    natives(spark).foreach { case (name, use, probe, ours) =>
+      spark.udf.register(name,
+        (a: Seq[Double], b: Seq[Double]) => -1.0) // an impostor
+      use()
+      assert(ours(resolves(spark, name, probe)), s"$name: graft's implementation must win")
+    }
+    val row = spark.sql(
+      "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
+    assert(row.getDouble(0) === 11.0, "graft's implementation must win")
+  }
+
+  test("native registration: 8 threads' concurrent first use on a new session") {
+    val s = spark.newSession()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
-      NativeFunctions.register(spark)
-      val row = spark.sql(
-        "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
-      assert(row.getDouble(0) === 11.0, "graft's implementation must win")
-    } finally NativeFunctions.register(spark) // leave ours installed
+      val uses = (1 to 8).map(_ => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = { start.await(); natives(s).foreach(_._2()) }
+      }))
+      start.countDown()
+      uses.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    natives(s).foreach { case (name, _, probe, ours) =>
+      assert(ours(resolves(s, name, probe)), s"$name must resolve to graft's")
+    }
+    assert(s.sql("SELECT dot_product(array(1.0d), array(2.0d))").head()
+      .getDouble(0) === 2.0)
   }
 }

@@ -6,11 +6,9 @@ import scala.collection.mutable
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
-import graft.sinks.HttpJsonLinesSink
-
-/** Executor-side JSONL HTTP sink against a loopback server: batch
-  * (`foreachPartition`) and streaming (`writeStream.foreach`) delivery,
-  * batch-size splitting, and the epoch/partition idempotency headers.
+/** Executor-side JSONL HTTP sink (`jsonl-http`) against a loopback
+  * server: batch and streaming delivery, batch-size splitting, and the
+  * epoch/partition idempotency headers.
   */
 class HttpSinkSpec extends SparkSpec {
 
@@ -36,23 +34,6 @@ class HttpSinkSpec extends SparkSpec {
     finally server.stop(0)
   }
 
-  test("batch postJsonLines delivers every row once, split by batchSize") {
-    withServer { (endpoint, recorded) =>
-      import spark.implicits._
-      val rows = (0 until 100).map(i => s"""{"n":$i}""")
-      HttpJsonLinesSink.postJsonLines(
-        rows.toDS().repartition(4), endpoint, batchSize = 10)
-      val lines = recorded.synchronized(recorded.flatMap(_.body.split("\n")).toVector)
-      assert(lines.sorted === rows.sorted)
-      // 100 rows over 4 partitions at batchSize 10 → every POST ≤ 10 lines
-      recorded.synchronized(recorded.foreach { r =>
-        assert(r.body.split("\n").length <= 10)
-        assert(r.epoch === "-1") // batch marker
-        assert(r.partition.toInt >= 0)
-      })
-    }
-  }
-
   test("DSv2 batch write: format(jsonl-http).save() posts every row") {
     withServer { (endpoint, recorded) =>
       import spark.implicits._
@@ -65,7 +46,8 @@ class HttpSinkSpec extends SparkSpec {
       assert(lines.sorted === rows.sorted)
       recorded.synchronized(recorded.foreach { r =>
         assert(r.body.split("\n").length <= 7)
-        assert(r.epoch === "-1")
+        assert(r.epoch === "-1") // batch marker
+        assert(r.partition.toInt >= 0)
       })
     }
   }
@@ -92,32 +74,8 @@ class HttpSinkSpec extends SparkSpec {
       val ckpt = java.nio.file.Files.createTempDirectory("graft-dsv2-ckpt").toString
       val q = ms.toDS().toDF("json").writeStream
         .format("jsonl-http")
-        .option("endpoint", endpoint)
+        .option("endpoint", endpoint).option("batchSize", "3")
         .option("checkpointLocation", ckpt)
-        .start()
-      try {
-        ms.addData("a", "b")
-        q.processAllAvailable()
-        ms.addData("c")
-        q.processAllAvailable()
-      } finally q.stop()
-      val byEpoch = recorded.synchronized(recorded.groupBy(_.epoch).view
-        .mapValues(_.flatMap(_.body.split("\n")).toSet).toMap)
-      assert(byEpoch.size === 2)
-      assert(byEpoch.values.reduce(_ ++ _) === Set("a", "b", "c"))
-    }
-  }
-
-  test("streaming foreach sink posts each micro-batch with epoch headers") {
-    withServer { (endpoint, recorded) =>
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      implicit val ctx = spark.sqlContext
-      import spark.implicits._
-      val ms = MemoryStream[String]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-sink-ckpt").toString
-      val q = ms.toDS().writeStream
-        .option("checkpointLocation", ckpt)
-        .foreach(HttpJsonLinesSink.foreachWriter(endpoint, batchSize = 3))
         .start()
       try {
         ms.addData("a", "b", "c", "d")
@@ -129,7 +87,10 @@ class HttpSinkSpec extends SparkSpec {
         .mapValues(_.flatMap(_.body.split("\n")).toSet).toMap)
       assert(byEpoch.size === 2) // two micro-batches → two distinct epochs
       assert(byEpoch.values.reduce(_ ++ _) === Set("a", "b", "c", "d", "e"))
-      recorded.synchronized(recorded.foreach(r => assert(r.epoch.toLong >= 0)))
+      recorded.synchronized(recorded.foreach { r =>
+        assert(r.epoch.toLong >= 0)
+        assert(r.body.split("\n").length <= 3)
+      })
     }
   }
 }

@@ -1506,6 +1506,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("screen folds: per-doc aggregation + enforced whole-doc delivery") {
+    import graft.operators.SetOverlap
     import graft.streaming.ScreenStream
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
@@ -1515,22 +1516,22 @@ class StreamingSpec extends SparkSpec {
       GroupStateTimeout.NoTimeout, 0L,
       Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]],
       hasTimedOut = false)
-    // chunkCountFold: shared-digest counts per corpus doc, sizes carried
+    // SetOverlap.fold: shared-key counts per corpus doc, sizes carried
     val rows = Iterator(
-      ScreenStream.ChunkCollisionRow(1L, 4L, 10L, 5L),
-      ScreenStream.ChunkCollisionRow(1L, 4L, 10L, 5L),
-      ScreenStream.ChunkCollisionRow(1L, 4L, 11L, 6L))
-    val out = ScreenStream.chunkCountFold("t", 0.0)(1L, rows, st(None)).toList
+      SetOverlap.CollisionRow(1L, 4L, 10L, 5L),
+      SetOverlap.CollisionRow(1L, 4L, 10L, 5L),
+      SetOverlap.CollisionRow(1L, 4L, 11L, 6L))
+    val out = SetOverlap.fold("t", 0.0)(1L, rows, st(None)).toList
     assert(out.toSet === Set(
-      ScreenStream.ChunkPairOut(1L, 10L, 4L, 5L, 2L),
-      ScreenStream.ChunkPairOut(1L, 11L, 4L, 6L, 1L)))
+      SetOverlap.PairOut(1L, 10L, 4L, 5L, 2L, 2.0 / 7),
+      SetOverlap.PairOut(1L, 11L, 4L, 6L, 1L, 1.0 / 9)))
     // fold-side Jaccard cut: 2/(4+5-2)=0.286 ≥ 0.25 kept, 1/9=0.11 dropped
     // — the emission (and so the in-memory sink) stays verdict-sized
-    val cut = ScreenStream.chunkCountFold("t", 0.25)(1L, Iterator(
-      ScreenStream.ChunkCollisionRow(1L, 4L, 10L, 5L),
-      ScreenStream.ChunkCollisionRow(1L, 4L, 10L, 5L),
-      ScreenStream.ChunkCollisionRow(1L, 4L, 11L, 6L)), st(None)).toList
-    assert(cut === List(ScreenStream.ChunkPairOut(1L, 10L, 4L, 5L, 2L)))
+    val cut = SetOverlap.fold("t", 0.25)(1L, Iterator(
+      SetOverlap.CollisionRow(1L, 4L, 10L, 5L),
+      SetOverlap.CollisionRow(1L, 4L, 10L, 5L),
+      SetOverlap.CollisionRow(1L, 4L, 11L, 6L)), st(None)).toList
+    assert(cut === List(SetOverlap.PairOut(1L, 10L, 4L, 5L, 2L, 2.0 / 7)))
     // distinctPairFold: first-seen metric per corpus doc, one row each
     val vrows = Iterator(
       ScreenStream.VerifiedRow(2L, 20L, 0.9),
@@ -1548,8 +1549,8 @@ class StreamingSpec extends SparkSpec {
     // the whole-doc-delivery contract is ENFORCED: a doc whose rows span a
     // second micro-batch fails loudly instead of silently undercounting
     val e = intercept[IllegalStateException] {
-      ScreenStream.chunkCountFold("t", 0.0)(1L,
-        Iterator(ScreenStream.ChunkCollisionRow(1L, 4L, 10L, 5L)),
+      SetOverlap.fold("t", 0.0)(1L,
+        Iterator(SetOverlap.CollisionRow(1L, 4L, 10L, 5L)),
         st(Some(true))).toList
     }
     assert(e.getMessage.contains("second micro-batch"))
@@ -1562,6 +1563,7 @@ class StreamingSpec extends SparkSpec {
     // idleTtlMillis > 0 arms ProcessingTimeTimeout (the KnScoreStream
     // escape hatch): a timed-out invocation must drop state and emit
     // nothing, and a doc re-arriving after the drop must fold cleanly.
+    import graft.operators.SetOverlap
     import graft.streaming.ScreenStream
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
@@ -1570,25 +1572,25 @@ class StreamingSpec extends SparkSpec {
       GroupStateTimeout.ProcessingTimeTimeout, 1000L,
       Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]],
       hasTimedOut = true)
-    assert(ScreenStream.screenFold(0.5, ttl)(9L, Iterator.empty, sT).isEmpty)
+    assert(SetOverlap.fold("t", 0.5, ttl)(9L, Iterator.empty, sT).isEmpty)
     assert(sT.isRemoved, "timed-out screen state must be dropped")
     // re-arrival after the drop screens from scratch and re-arms the TTL
     val s2 = TestGroupState.create[Boolean](Optional.empty[Boolean](),
       GroupStateTimeout.ProcessingTimeTimeout, 1000L,
       Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]],
       hasTimedOut = false)
-    val out = ScreenStream.screenFold(0.5, ttl)(9L,
-      Iterator(ScreenStream.CollisionRow(9L, 3L, 20L, 3L),
-        ScreenStream.CollisionRow(9L, 3L, 20L, 3L),
-        ScreenStream.CollisionRow(9L, 3L, 20L, 3L)), s2).toList
-    assert(out === List(ScreenStream.PairOut(9L, 20L, 1.0)))
+    val out = SetOverlap.fold("t", 0.5, ttl)(9L,
+      Iterator(SetOverlap.CollisionRow(9L, 3L, 20L, 3L),
+        SetOverlap.CollisionRow(9L, 3L, 20L, 3L),
+        SetOverlap.CollisionRow(9L, 3L, 20L, 3L)), s2).toList
+    assert(out === List(SetOverlap.PairOut(9L, 20L, 3L, 3L, 3L, 1.0)))
     assert(s2.exists, "seen flag must be re-set on post-drop arrival")
     // the other fold families share the same contract
     val sT2 = TestGroupState.create[Boolean](Optional.of(true),
       GroupStateTimeout.ProcessingTimeTimeout, 1000L,
       Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]],
       hasTimedOut = true)
-    assert(ScreenStream.chunkCountFold("t", 0.0, ttl)(9L, Iterator.empty, sT2).isEmpty)
+    assert(SetOverlap.fold("t", 0.0, ttl)(9L, Iterator.empty, sT2).isEmpty)
     assert(sT2.isRemoved)
     val sT3 = TestGroupState.create[Boolean](Optional.of(true),
       GroupStateTimeout.ProcessingTimeTimeout, 1000L,
