@@ -500,60 +500,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // dispute-resolution filter: comma-list of query names; empty = all
     val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .map(SparkEntry.selectQueries(_, "[bench] SPARK_GRAFT_BENCH_ONLY"))
       .getOrElse(Set.empty)
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    if (unknown.nonEmpty) {
-      // a typo'd filter must not yield a well-formed-looking partial run
-      System.err.println("[bench] SPARK_GRAFT_BENCH_ONLY names match no query: " +
-        unknown.toSeq.sorted.mkString(", "))
-      sys.exit(2)
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Scan-split sizing experiment knob (SCALE.md "scan-stage
-      // parallelism"): heavy per-row text work (shingling, tokenizing)
-      // runs IN the scan stage, so wall scales with splits, not cores,
-      // once a corpus outgrows cores × maxPartitionBytes. Default is
-      // Spark's 128 MB; the smoke uses this to measure the effect.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728"))
-      // Companion knob for compute-dense-per-byte stages: AQE's
-      // bytes-based coalescing shrinks a 5 MB shuffle to ~5 partitions
-      // even when each byte drives ~µs of verification CPU. Default is
-      // Spark's 1 MB.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1048576"))
-      // Optimization r20 (guide §2.2/§2.4): let AQE re-plan INSIDE cached
-      // plans. Spark's default (false) pins every `Dataset.persist`
-      // materialization to the full static shuffle width so downstream
-      // stages over the cache pay that many map tasks per pass — the
-      // operator-internal persists (dedup edge sets, graph peels, trained
-      // centroid frames) all hit this. `true` lets the cached plan keep
-      // AQE's coalesced output partitioning; results are partitioning-
-      // independent by library contract (exact-integer/decimal sums
-      // everywhere a double would be order-sensitive).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_IN_CACHE", "true"))
-      // Size-based coalescing even when the cluster has idle slots
-      // (Spark's parallelismFirst=true keeps ~defaultParallelism
-      // partitions however tiny the shuffle, maximizing per-stage task
-      // overhead on latency-bound stages). At scale the advisory size
-      // governs either way; locally this collapses KB-scale shuffles to
-      // one task. minPartitionSize above still floors the compute-dense
-      // stages.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .getOrCreate()
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.posture(cpus)
     spark.sparkContext.setLogLevel("WARN")
     val work = new WorkMetricsListener
     spark.sparkContext.addSparkListener(work)
@@ -570,7 +523,7 @@ object Bench {
     // ADVICE r6: threshold on the CPUs the host actually has, not the
     // configured thread count — local[32] on an 8-core box saturates at
     // loadavg ~32 while the work still contends 4× per core.
-    val effThreads = math.min(cpus.toInt,
+    val effThreads = math.min(cpus,
       Runtime.getRuntime.availableProcessors).toDouble
     val loadThreshold = 1.5 * effThreads
     // Quiet-host gate (VERDICT r10 #4): two rounds shipped a contended

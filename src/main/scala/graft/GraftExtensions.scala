@@ -12,8 +12,6 @@ import graft.functions.DotProduct
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
   * Operators also self-register lazily ([[graft.functions.NativeFunctions

@@ -59,12 +59,7 @@ object GraphSkewSmoke {
 
   def main(args: Array[String]): Unit = {
     val degrees = if (args.isEmpty) Seq(10000L, 100000L) else args.toSeq.map(_.toLong)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

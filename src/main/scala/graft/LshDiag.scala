@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Bucket-occupancy diagnostic for the d06 hyperplane-LSH family: prints,
@@ -16,12 +15,7 @@ object LshDiag {
     val dir = args.headOption.getOrElse("target/scale10")
     val planesPerTable = args.lift(1).map(_.toInt).getOrElse(8)
     val tables = args.lift(2).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.NativeFunctions.register(spark)
 

@@ -472,13 +472,7 @@ object ScaleSmoke {
       // qsweep's args(2) is a query-name list, not a knob — don't parse it
       else if (qsweepMode) 8
       else args.lift(2).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     val work = new WorkMetricsListener
     spark.sparkContext.addSparkListener(work)

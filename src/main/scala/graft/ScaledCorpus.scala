@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-smoke corpus builder (VERDICT r7 #5): derive an N×-scaled
@@ -339,12 +339,7 @@ object ScaledCorpus {
     // "bytes": documents through the byte-length-preserving rotation
     // alphabet (the media-family instrument) instead of the CJK bijection
     val bytesMode = args.lift(3).contains("bytes")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val docScaler: (DataFrame, Int) => DataFrame =

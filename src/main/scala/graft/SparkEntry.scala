@@ -17,6 +17,21 @@ object SparkEntry {
     RelationalQueries.defs ++ ExtensionQueries.defs ++ SketchQueries.defs ++
       CotripQueries.defs
 
+  /** Parse a comma-list query filter; exit 2 naming every name that is not
+    * a declared query, so a typo'd filter cannot yield a well-formed-looking
+    * partial run. `source` prefixes the message.
+    */
+  def selectQueries(csv: String, source: String): Set[String] = {
+    val only = csv.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = only.diff(registry.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(s"$source names match no query: " +
+        unknown.toSeq.sorted.mkString(", "))
+      sys.exit(2)
+    }
+    only
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     registry("q03_join_agg_nation").fn(spark, "/root/testdata/sf0.001")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,25 +7,9 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (dev iteration
     // only — the driver always passes two args, running everything)
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val only = args.lift(2).map(SparkEntry.selectQueries(_, "[verify] filter"))
     def selected(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same AQE posture as Bench (optimization r20), so the graded plans
-      // are the benched plans: AQE may re-plan inside cached frames and
-      // coalesces by size even when idle slots exist. Both are
-      // partitioning-only knobs; the library's aggregation trees are
-      // partitioning-independent by contract (exact integer/decimal sums).
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_IN_CACHE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => selected(e._1)).foreach { case (name, fn) =>

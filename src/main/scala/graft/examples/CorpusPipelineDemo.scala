@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{CorpusOps, Dedup}
 import graft.functions.TextFunctions.winnowFingerprint
 
@@ -20,12 +20,7 @@ import graft.functions.TextFunctions.winnowFingerprint
 object CorpusPipelineDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("corpus-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -1,8 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
-import graft.CotripPipeline
+import graft.{CotripPipeline, GraftSession}
 import graft.model.TaskConfig
 import graft.sources.FixturePageClient
 
@@ -12,12 +10,7 @@ import graft.sources.FixturePageClient
   */
 object CotripDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("cotrip-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     def feat(id: String, t: String, coords: String) =

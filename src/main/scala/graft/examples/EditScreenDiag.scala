@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.GraftSession
 
 /** Phase decomposition of the e43 live edit screen (optimization r21,
   * guide §1: measure before touching): plan-build (static-side
@@ -17,16 +18,7 @@ object EditScreenDiag {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
 
@@ -67,35 +59,36 @@ object EditScreenDiag {
       graft.SessionSweep.sweep(spark, blocking = true)
 
       // --- streaming screen, phase-timed ---
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
       val parts = spark.sparkContext.defaultParallelism
       val ckpt = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get("/dev/shm"), "edit-diag-")
-      spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-      val tPlan = System.nanoTime()
-      val screened = graft.streaming.ScreenStream.screenEditDistance(
-        freshStream(), corpus, "doc_id", "title", maxDist = 4, q = 4)
-      val planMs = ms(tPlan)
-      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      val tStart = System.nanoTime()
-      val q = screened.writeStream.format("memory")
-        .queryName(s"edit_diag_$i")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      val startMs = ms(tStart)
-      val tAwait = System.nanoTime()
-      q.awaitTermination()
-      val awaitMs = ms(tAwait)
-      val durs = q.recentProgress.toSeq.map(p =>
-        s"${p.batchId}:${p.durationMs.getOrDefault("triggerExecution", -1L)}" +
-          s"(addBatch=${p.durationMs.getOrDefault("addBatch", -1L)}," +
-          s"queryPlanning=${p.durationMs.getOrDefault("queryPlanning", -1L)})")
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+      val (planMs, startMs, awaitMs, durs) = GraftSession.withConf(spark,
+          "spark.sql.streaming.checkpointFileManagerClass" ->
+            "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager") {
+        val tPlan = System.nanoTime()
+        val screened = graft.streaming.ScreenStream.screenEditDistance(
+          freshStream(), corpus, "doc_id", "title", maxDist = 4, q = 4)
+        val planMs = ms(tPlan)
+        GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString) {
+          val tStart = System.nanoTime()
+          val q = screened.writeStream.format("memory")
+            .queryName(s"edit_diag_$i")
+            .option("checkpointLocation", ckpt.toString)
+            .outputMode("append")
+            .trigger(Trigger.AvailableNow())
+            .start()
+          val startMs = ms(tStart)
+          val tAwait = System.nanoTime()
+          q.awaitTermination()
+          val awaitMs = ms(tAwait)
+          val durs = q.recentProgress.toSeq.map(p =>
+            s"${p.batchId}:${p.durationMs.getOrDefault("triggerExecution", -1L)}" +
+              s"(addBatch=${p.durationMs.getOrDefault("addBatch", -1L)}," +
+              s"queryPlanning=${p.durationMs.getOrDefault("queryPlanning", -1L)})")
+          q.stop()
+          (planMs, startMs, awaitMs, durs)
+        }
+      }
       val n = spark.table(s"edit_diag_$i").count()
       println(f"[edit-diag] rep=$i parts=$parts batch_twin=$batchMs%7.1f " +
         f"plan+statics=$planMs%7.1f start=$startMs%6.1f await=$awaitMs%7.1f " +

@@ -1,8 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Dump `explain("formatted")` for selected queries — the plan-review loop
   * (pushed filters, broadcast joins, whole-stage codegen spans).
@@ -10,18 +8,7 @@ import graft.SparkEntry
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      // same AQE posture as Bench/Verify (optimization r20) so committed
-      // plan dumps reflect the configuration the bench actually runs
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_IN_CACHE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .getOrCreate()
+    val spark = GraftSession.posture(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted

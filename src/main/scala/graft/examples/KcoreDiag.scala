@@ -1,17 +1,11 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Throwaway diagnostic for the g07 plan cost (round 12). */
 object KcoreDiag {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     var t0 = System.nanoTime()

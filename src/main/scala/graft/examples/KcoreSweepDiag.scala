@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Diagnostic for the g09 sweep schedule (optimization r20): times the
   * SEQUENTIAL per-k kCore sweep (the pre-r20 kCoreProfile shape) against
@@ -11,15 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object KcoreSweepDiag {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$sf/documents.parquet")

@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Phase timer for the MIH screen family (s23/s26/e37, optimization r20):
   * splits a screen run into its sequential pieces — dim probe, plane
@@ -10,15 +11,7 @@ import org.apache.spark.sql.functions._
   */
 object MihScreenDiag {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val e = spark.read.parquet(s"$sf/embeddings.parquet")

@@ -1,7 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Phase decomposition of the PQ/IVF family (optimization r21, guide §1):
   * coarse k-means training, residual PQ codebook training, the search
@@ -15,16 +16,7 @@ object PqDiag {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
     import graft.operators.Similarity

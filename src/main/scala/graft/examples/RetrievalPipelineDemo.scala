@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.Similarity
 
 /** Runnable end-to-end retrieval-index lifecycle: the ANN operators
@@ -19,12 +19,7 @@ import graft.operators.Similarity
 object RetrievalPipelineDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("retrieval-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val embs = spark.read.parquet(s"$dir/embeddings.parquet")

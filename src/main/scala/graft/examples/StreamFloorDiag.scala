@@ -1,8 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.GraftSession
 
 /** Phase breakdown of the AvailableNow streaming floor (optimization r20,
   * guide §1: measure first). Every e-query pays runAvailableNow at least
@@ -17,13 +18,7 @@ object StreamFloorDiag {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def ms(t0: Long): Double = (System.nanoTime() - t0) / 1e6
@@ -32,38 +27,37 @@ object StreamFloorDiag {
     def run(label: String, mkDf: () => org.apache.spark.sql.DataFrame,
             outputMode: String, parts: Int): Unit = {
       (1 to reps).foreach { i =>
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         val ckpt = java.nio.file.Files.createTempDirectory(
           java.nio.file.Paths.get("/dev/shm"), "floor-diag-")
-        val tPlan = System.nanoTime()
-        val df = mkDf()
-        val planMs = ms(tPlan)
-        val tStart = System.nanoTime()
-        val q = df.writeStream.format("memory")
-          .queryName(s"floor_${label}_$i")
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode(outputMode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        val startMs = ms(tStart)
-        val tAwait = System.nanoTime()
-        q.awaitTermination()
-        val awaitMs = ms(tAwait)
-        val batches = Option(q.lastProgress).map(_.batchId + 1L).getOrElse(0L)
-        // per-batch durations from progress history
-        val durs = q.recentProgress.toSeq.map(p =>
-          s"${p.batchId}:${p.durationMs.getOrDefault("triggerExecution", -1L)}" +
-            s"(addBatch=${p.durationMs.getOrDefault("addBatch", -1L)}," +
-            s"queryPlanning=${p.durationMs.getOrDefault("queryPlanning", -1L)}," +
-            s"walCommit=${p.durationMs.getOrDefault("walCommit", -1L)}," +
-            s"latestOffset=${p.durationMs.getOrDefault("latestOffset", -1L)}," +
-            s"commitOffsets=${p.durationMs.getOrDefault("commitOffsets", -1L)})")
-        val tStop = System.nanoTime()
-        q.stop()
-        val stopMs = ms(tStop)
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        println(f"[floor] $label%-28s parts=$parts%-2d rep=$i plan=$planMs%7.1f start=$startMs%7.1f await=$awaitMs%7.1f stop=$stopMs%6.1f batches=$batches ${durs.mkString(" ")}")
+        GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString) {
+          val tPlan = System.nanoTime()
+          val df = mkDf()
+          val planMs = ms(tPlan)
+          val tStart = System.nanoTime()
+          val q = df.writeStream.format("memory")
+            .queryName(s"floor_${label}_$i")
+            .option("checkpointLocation", ckpt.toString)
+            .outputMode(outputMode)
+            .trigger(Trigger.AvailableNow())
+            .start()
+          val startMs = ms(tStart)
+          val tAwait = System.nanoTime()
+          q.awaitTermination()
+          val awaitMs = ms(tAwait)
+          val batches = Option(q.lastProgress).map(_.batchId + 1L).getOrElse(0L)
+          // per-batch durations from progress history
+          val durs = q.recentProgress.toSeq.map(p =>
+            s"${p.batchId}:${p.durationMs.getOrDefault("triggerExecution", -1L)}" +
+              s"(addBatch=${p.durationMs.getOrDefault("addBatch", -1L)}," +
+              s"queryPlanning=${p.durationMs.getOrDefault("queryPlanning", -1L)}," +
+              s"walCommit=${p.durationMs.getOrDefault("walCommit", -1L)}," +
+              s"latestOffset=${p.durationMs.getOrDefault("latestOffset", -1L)}," +
+              s"commitOffsets=${p.durationMs.getOrDefault("commitOffsets", -1L)})")
+          val tStop = System.nanoTime()
+          q.stop()
+          val stopMs = ms(tStop)
+          println(f"[floor] $label%-28s parts=$parts%-2d rep=$i plan=$planMs%7.1f start=$startMs%7.1f await=$awaitMs%7.1f stop=$stopMs%6.1f batches=$batches ${durs.mkString(" ")}")
+        }
         // drop the sink table + checkpoint
         spark.sql(s"DROP TABLE IF EXISTS floor_${label}_$i")
         import java.nio.file.{Files, Path}
@@ -145,13 +139,12 @@ object StreamFloorDiag {
     // checkpoint manager spends ~30 ms per metadata write even on tmpfs;
     // the FileSystem-based one (rename-based atomicity, same guarantee on
     // local FS) may be cheaper. Measured here before touching any default.
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-    try {
+    val fsMgr = "spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+    try GraftSession.withConf(spark, fsMgr) {
       run("passthrough_fsmgr", () => passthrough(), "append", 8)
       run("stateful_count_fsmgr", () => statefulCount(), "complete", 8)
     } catch { case e: Throwable => println(s"[floor] fsmgr failed: $e") }
-    finally spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
 
     // 7. RocksDB state-store experiment (VERDICT r20 #1 asked): measure
     // whether the native store's spin-up beats HDFSBackedStateStore for
@@ -159,21 +152,16 @@ object StreamFloorDiag {
     // default. (Expectation: native column-family init per store per run
     // costs MORE than the in-memory map it replaces at this state size —
     // the measurement decides.)
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
-    try {
+    try GraftSession.withConf(spark, fsMgr) {
       // fsmgr + default provider control for the join shape (section 5 ran
       // the join under the FileContext manager — not the production pair)
       run("interval_join_fsmgr", () => e09ish(), "append", 8)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      run("stateful_count_rocks", () => statefulCount(), "complete", 8)
-      run("interval_join_rocks", () => e09ish(), "append", 8)
+      GraftSession.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
+        run("stateful_count_rocks", () => statefulCount(), "complete", 8)
+        run("interval_join_rocks", () => e09ish(), "append", 8)
+      }
     } catch { case e: Throwable => println(s"[floor] rocksdb failed: $e") }
-    finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
-    }
 
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
-
+import graft.GraftSession
 import graft.streaming.EventsStream
 
 /** Runnable end-to-end streaming example: AvailableNow micro-batch over the
@@ -11,13 +10,7 @@ import graft.streaming.EventsStream
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val windowed = EventsStream.windowedCounts(EventsStream.readEvents(spark, dir))

@@ -1,8 +1,8 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{Dedup, Merges, Multimodal, Similarity, Sketches}
 import graft.sources.BucketedLake
 
@@ -21,12 +21,7 @@ import graft.sources.BucketedLake
 object WarehouseMaintenanceDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("warehouse-maintenance-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val orders = spark.read.parquet(s"$dir/orders.parquet")

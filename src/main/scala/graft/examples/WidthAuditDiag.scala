@@ -3,8 +3,10 @@ package graft.examples
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Width-pin audit under size-based AQE coalescing (VERDICT r20 #3,
   * guide §2.5): for every post-candidate verify/transform stage whose
@@ -30,18 +32,7 @@ object WidthAuditDiag {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the bench posture (optimization r20): AQE inside cached plans,
-      // size-based coalescing — exactly the flags that can collapse widths
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.posture(GraftSession.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     val listener = new StageWidths
     spark.sparkContext.addSparkListener(listener)

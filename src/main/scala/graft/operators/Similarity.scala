@@ -1074,17 +1074,25 @@ object Similarity {
     * §HyperplaneSignatures — Janino method budget) and ran every plane
     * interpreted: measured 1.1 s single-task for a 1.7k-row corpus side
     * where the fused loop is milliseconds. Packing is spec-pinned
-    * bit-identical (MSB-first per band, row-major plane order). Null edge,
-    * as in d06: a null/ragged vector now yields a NULL code array (its
-    * band rows drop at the posexplode) instead of all-zero codes — vectors
-    * are non-null by the embeddings contract, and a null vector has no
-    * meaningful code either way.
+    * bit-identical (MSB-first per band, row-major plane order).
+    *
+    * Embedding contract, enforced: the fused loop returns NULL for a null
+    * vector, a null element or a vector of the wrong dimension, and such a
+    * row would silently vanish at the band posexplode (batch and stream
+    * screens alike). The NULL code instead fails the query naming
+    * `vecCol`; valid rows never evaluate the error branch.
     */
   private[graft] def mihCodeArray(spark: org.apache.spark.sql.SparkSession,
-                                  v: Column, signs: Array[Array[Double]],
-                                  bands: Int, bandBits: Int): Column =
-    graft.functions.NativeFunctions.hyperplaneSignatures(
-      spark, v, signs.flatten, bandBits, bands)
+                                  vecCol: String, signs: Array[Array[Double]],
+                                  bands: Int, bandBits: Int): Column = {
+    val dim = signs.headOption.fold(0)(_.length)
+    coalesce(
+      graft.functions.NativeFunctions.hyperplaneSignatures(
+        spark, col(vecCol).cast("array<double>"), signs.flatten, bandBits, bands),
+      raise_error(lit(s"MIH band codes: embedding column '$vecCol' holds a " +
+        s"null vector, a null element or a vector whose dimension is not " +
+        s"$dim; embeddings must be non-null with one fixed dimension")))
+  }
 
   /** Full-code Hamming distance between two band-code arrays: Σ over bands
     * of bit_count(xor) — pure integer arithmetic, one codegen projection.
@@ -1109,7 +1117,7 @@ object Similarity {
     def coded(df: DataFrame, id: String, vec: String, norm: String) = {
       val v = col(vecCol).cast("array<double>")
       df.select(col(idCol).as(id), v.as(vec),
-        mihCodeArray(df.sparkSession, v, signs, bands, bandBits).as("code"))
+        mihCodeArray(df.sparkSession, vecCol, signs, bands, bandBits).as("code"))
         .withColumn(norm, l2norm(col(vec)))
     }
     val q = Caching.persisted(coded(queries, "query_id", "qv", "q_norm"))
@@ -1153,8 +1161,7 @@ object Similarity {
                    bands: Int, bandBits: Int): DataFrame = {
     graft.functions.NativeFunctions.register(df.sparkSession)
     df.select(col(idCol).as(idAs),
-        mihCodeArray(df.sparkSession, col(vecCol).cast("array<double>"),
-          signs, bands, bandBits).as(codeAs))
+        mihCodeArray(df.sparkSession, vecCol, signs, bands, bandBits).as(codeAs))
       .select(col(idAs), col(codeAs),
         posexplode(col(codeAs)).as(Seq("band", "band_val")))
   }

@@ -1003,10 +1003,7 @@ object ExtensionQueries {
   private[queries] def cadenceServedHead(
       s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val key = "spark.graft.lm.headRefreshEpochs"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "3")
-    try {
+    graft.GraftSession.withConf(s, "spark.graft.lm.headRefreshEpochs" -> "3") {
       val docs = t(s, d, "documents")
       def fold(epoch: Long, pred: org.apache.spark.sql.Column) =
         StandingLm.maintainedHeadImpl(s, d, order = 2, discount = 0.75,
@@ -1017,9 +1014,6 @@ object ExtensionQueries {
       fold(1L, pmod(col("doc_id"), lit(10)) === 8)
       fold(2L, pmod(col("doc_id"), lit(20)) === 9)
       fold(3L, pmod(col("doc_id"), lit(20)) === 19)
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 

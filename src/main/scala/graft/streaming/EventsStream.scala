@@ -152,7 +152,6 @@ object EventsStream {
     try {
       val ckpt = java.nio.file.Files
         .createTempDirectory(ephemeralCheckpointRoot, "graft-ckpt-")
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
       // Checkpoint-manager choice (optimization r20, measured in
       // StreamFloorDiag): Spark's default FileContext-based manager costs
       // ~30 ms PER metadata write even on tmpfs — offsets WAL, commit log,
@@ -164,17 +163,16 @@ object EventsStream {
       // deleted on completion), so the local-FS guarantee is the relevant
       // one; a durable deployment on a store whose rename is not atomic
       // should override SPARK_GRAFT_STREAM_CKPT_MANAGER (empty = keep
-      // Spark's default). Save/set/restore rides the same single-runner
-      // lock as the shuffle-width override.
-      val CkptMgrKey = "spark.sql.streaming.checkpointFileManagerClass"
+      // Spark's default). Both overrides ride the single-runner lock.
       val ckptMgr = sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT_MANAGER",
         "org.apache.spark.sql.execution.streaming.checkpointing." +
           "FileSystemBasedCheckpointFileManager")
-      val prevMgr = spark.conf.getOption(CkptMgrKey)
-      try {
-        if (ckptMgr.nonEmpty) spark.conf.set(CkptMgrKey, ckptMgr)
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.min(statePartitions, prevShuffle.toInt).max(1).toString)
+      val shuffle = "spark.sql.shuffle.partitions"
+      val width = math.min(statePartitions, spark.conf.get(shuffle).toInt).max(1)
+      val overrides = Seq(shuffle -> width.toString) ++
+        Option.when(ckptMgr.nonEmpty)(
+          "spark.sql.streaming.checkpointFileManagerClass" -> ckptMgr)
+      try graft.GraftSession.withConf(spark, overrides: _*) {
         val q = df.writeStream
           .format("memory")
           .queryName(queryName)
@@ -195,11 +193,6 @@ object EventsStream {
         StreamTelemetry.microBatchesCompleted.addAndGet(batches)
         ()
       } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevMgr match {
-          case Some(v) => spark.conf.set(CkptMgrKey, v)
-          case None => spark.conf.unset(CkptMgrKey)
-        }
         // best-effort cleanup that must never mask the query's own failure:
         // walk streams throw UncheckedIOException (a RuntimeException) from
         // iteration, not just IOException, and the stream holds a directory

@@ -397,8 +397,7 @@ object ScreenStream {
     graft.functions.NativeFunctions.register(spark)
     val banded = freshVecs
       .select(col(idCol).as("fresh_id"),
-        Similarity.mihCodeArray(spark, col(vecCol).cast("array<double>"),
-          signs, bands, bandBits).as("f_code"))
+        Similarity.mihCodeArray(spark, vecCol, signs, bands, bandBits).as("f_code"))
       .select(col("fresh_id"), col("f_code"),
         posexplode(col("f_code")).as(Seq("band", "band_val")))
     foldPerDoc(banded

@@ -246,6 +246,25 @@ class ExtensionSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
+  test("MIH screen: a null vector, a null element or a 63-dim vector fails naming the column") {
+    val good = embs.filter(col("vec_id") % 8 === 0).select("vec_id", "embedding")
+    val one = good.limit(1)
+    val bad = Seq(
+      "null vector" -> lit(null).cast("array<float>"),
+      "null element" -> transform(col("embedding"),
+        (x, i) => when(i === 0, lit(null).cast("float")).otherwise(x)),
+      "63-dim vector" -> slice(col("embedding"), 1, 63))
+    bad.foreach { case (what, vec) =>
+      val fresh = good.unionByName(
+        one.select(lit(900001L).as("vec_id"), vec.as("embedding")))
+      val e = intercept[Exception](Similarity.mihHammingScreen(fresh,
+        embs.filter(col("vec_id") % 8 =!= 0), "vec_id", "embedding",
+        radius = 6).collect())
+      assert(causeMentions(e, "embedding column 'embedding'",
+        "non-null with one fixed dimension"), s"$what: $e")
+    }
+  }
+
   test("MIH band-ball screen: complete at 2·bands−1; exact-band provably misses spread pairs") {
     val codes = mihCodes
     val fresh = codes.keySet.filter(_ % 8 == 0)
@@ -909,12 +928,11 @@ class ExtensionSpec extends SparkSpec {
     // lower it; 0 disables the local solve): with it off, the public API
     // takes the distributed loop and lands on the same labels
     val knobPairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
-    spark.conf.set("spark.graft.dedup.localSolveEdgeCap", "0")
-    try {
+    GraftSession.withConf(spark, "spark.graft.dedup.localSolveEdgeCap" -> "0") {
       val viaDistributed = Dedup.dupClusters(knobPairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaDistributed === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
-    } finally spark.conf.unset("spark.graft.dedup.localSolveEdgeCap")
+    }
   }
 
   test("dup clusters: self-pairs yield singleton rows; empty input yields empty") {

@@ -170,12 +170,13 @@ class FrontierSpec extends SparkSpec {
   }
 
   test("localSolveEdgeCap: malformed conf fails naming the key; negative = 0") {
-    spark.conf.set("spark.graft.dedup.localSolveEdgeCap", "not-a-number")
-    val e = intercept[IllegalArgumentException](Dedup.localSolveEdgeCap(spark))
-    assert(e.getMessage.contains("spark.graft.dedup.localSolveEdgeCap"))
-    assert(e.getMessage.contains("not-a-number"))
-    spark.conf.set("spark.graft.dedup.localSolveEdgeCap", "-5")
-    assert(Dedup.localSolveEdgeCap(spark) === 0L)
-    spark.conf.unset("spark.graft.dedup.localSolveEdgeCap")
+    GraftSession.withConf(spark, "spark.graft.dedup.localSolveEdgeCap" -> "not-a-number") {
+      val e = intercept[IllegalArgumentException](Dedup.localSolveEdgeCap(spark))
+      assert(e.getMessage.contains("spark.graft.dedup.localSolveEdgeCap"))
+      assert(e.getMessage.contains("not-a-number"))
+    }
+    GraftSession.withConf(spark, "spark.graft.dedup.localSolveEdgeCap" -> "-5") {
+      assert(Dedup.localSolveEdgeCap(spark) === 0L)
+    }
   }
 }

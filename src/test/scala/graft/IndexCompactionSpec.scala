@@ -64,21 +64,13 @@ class IndexCompactionSpec extends SparkSpec {
     // small-input choice, not the layout under test — the claim being
     // pinned is that at scale (join planned as SMJ/shuffled-hash) the
     // bucketed layout feeds the join with NO exchange of the index side.
-    val autoBcast = "spark.sql.autoBroadcastJoinThreshold"
-    val aqeBcast = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    val saved = Seq(autoBcast, aqeBcast)
-      .map(k => k -> spark.conf.getOption(k))
-    val plan =
-      try {
-        spark.conf.set(autoBcast, "-1")
-        spark.conf.set(aqeBcast, "-1")
-        val df = probe()
-        df.count() // materialize AQE's final stages before printing
-        df.queryExecution.executedPlan.toString
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    val plan = GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
+      val df = probe()
+      df.count() // materialize AQE's final stages before printing
+      df.queryExecution.executedPlan.toString
+    }
     assert(plan.contains("Bucketed: true"), plan.take(1200))
     val lines = plan.linesIterator.toVector
     def indent(l: String): Int = l.indexWhere(c => !" :+-".contains(c))

@@ -24,13 +24,14 @@ class LmCadenceSpec extends SparkSpec {
 
   test("headRefreshEpochs: default 1; malformed/non-positive rejected naming the key") {
     assert(StandingLm.headRefreshEpochs(spark) === 1)
-    spark.conf.set("spark.graft.lm.headRefreshEpochs", "abc")
-    val e = intercept[IllegalArgumentException](
-      StandingLm.headRefreshEpochs(spark))
-    assert(e.getMessage.contains("spark.graft.lm.headRefreshEpochs"))
-    spark.conf.set("spark.graft.lm.headRefreshEpochs", "0")
-    intercept[IllegalArgumentException](StandingLm.headRefreshEpochs(spark))
-    spark.conf.unset("spark.graft.lm.headRefreshEpochs")
+    GraftSession.withConf(spark, "spark.graft.lm.headRefreshEpochs" -> "abc") {
+      val e = intercept[IllegalArgumentException](
+        StandingLm.headRefreshEpochs(spark))
+      assert(e.getMessage.contains("spark.graft.lm.headRefreshEpochs"))
+    }
+    GraftSession.withConf(spark, "spark.graft.lm.headRefreshEpochs" -> "0") {
+      intercept[IllegalArgumentException](StandingLm.headRefreshEpochs(spark))
+    }
   }
 
   test("cadence 3: four folds → two head derivations, in-between serves read the persisted head") {
@@ -51,8 +52,7 @@ class LmCadenceSpec extends SparkSpec {
       .map(_.name).filter(_.startsWith(prefix)).toSeq
       .flatMap(n => n.split("_e").last.toLongOption).sorted
 
-    spark.conf.set("spark.graft.lm.headRefreshEpochs", "3")
-    try {
+    GraftSession.withConf(spark, "spark.graft.lm.headRefreshEpochs" -> "3") {
       fold(1L) // no head persisted yet → derives at frontier 1
       assert(headEpochs === Seq(1L))
       fold(2L) // lag 1 < 3 → serves the e1 head, derives nothing
@@ -75,6 +75,6 @@ class LmCadenceSpec extends SparkSpec {
       val headAt4 = spark.catalog.listTables().collect().map(_.name)
         .filter(_.startsWith(prefix)).find(_.endsWith("_e4")).get
       assert(rows(spark.table(headAt4)) === rows(fresh))
-    } finally spark.conf.unset("spark.graft.lm.headRefreshEpochs")
+    }
   }
 }

@@ -264,9 +264,7 @@ class PlanSpec extends SparkSpec {
 
   test("q33: bucketed join and key-agg plan with ZERO exchanges") {
     // disable broadcast so the co-location (not a broadcast) must carry it
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val plan = physicalPlan("q33_bucketed_join")
       // the final ORDER BY legitimately range-exchanges; nothing else may
       val exchanges = "Exchange".r.findAllIn(plan).size
@@ -275,7 +273,7 @@ class PlanSpec extends SparkSpec {
         s"join/agg must be exchange-free on bucketed tables:\n${plan.take(1200)}")
       assert(plan.contains("SortMergeJoin"), "expected a shuffle-free SMJ")
       assert(plan.contains("Bucketed: true"), plan.take(600))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    }
   }
 
   test("e08: bucketized range join is an equi-join, not a nested loop") {

@@ -49,16 +49,14 @@ class SetOverlapSpec extends SparkSpec {
         Multimodal.incrementalGearChunkPairsIndexed(shifted, gIdx, 0.4)))
     def rows(df: DataFrame): Seq[String] =
       df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
     try {
-      val runs = for (parts <- Seq(1, 7, 64); aqe <- Seq(true, false)) yield {
-        spark.conf.set(keys(0), parts.toString)
-        spark.conf.set(keys(1), aqe.toString)
-        // drop cached intermediates so each posture recomputes them
-        spark.catalog.clearCache()
-        s"partitions=$parts aqe=$aqe" -> entries.map { case (n, f) => n -> rows(f()) }
-      }
+      val runs = for (parts <- Seq(1, 7, 64); aqe <- Seq(true, false)) yield
+        GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString,
+            "spark.sql.adaptive.enabled" -> aqe.toString) {
+          // drop cached intermediates so each posture recomputes them
+          spark.catalog.clearCache()
+          s"partitions=$parts aqe=$aqe" -> entries.map { case (n, f) => n -> rows(f()) }
+        }
       val (_, base) = runs.head
       base.foreach { case (n, r) => assert(r.nonEmpty, s"$n: empty fixture result") }
       runs.tail.foreach { case (posture, got) =>
@@ -66,9 +64,6 @@ class SetOverlapSpec extends SparkSpec {
           assert(r === b, s"$n differs under $posture")
         }
       }
-    } finally {
-      saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      spark.catalog.clearCache()
-    }
+    } finally spark.catalog.clearCache()
   }
 }

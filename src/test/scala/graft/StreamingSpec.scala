@@ -71,15 +71,17 @@ class StreamingSpec extends SparkSpec {
     assert(batch.except(streamed).count() === 0)
   }
 
+  // the MIH stream screens' static side: corpus codes at 4 x 8-bit bands
+  private lazy val embs = spark.read.parquet(s"$dir/embeddings.parquet")
+  private lazy val signs = graft.operators.Similarity.hyperplaneSigns(spark, 32,
+    100, graft.operators.Similarity.vectorDim(embs, "embedding"))
+  private lazy val corpusCodes = graft.operators.Similarity.mihCodeBands(
+    embs.filter(col("vec_id") % 8 =!= 0), "vec_id", "embedding",
+    "corpus_id", "c_code", signs, 4, 8)
+
   test("streaming MIH hamming screen == batch screen on the same split") {
     import graft.streaming.ScreenStream
     import graft.operators.Similarity
-    val embs = spark.read.parquet(s"$dir/embeddings.parquet")
-    val dim = Similarity.vectorDim(embs, "embedding")
-    val signs = Similarity.hyperplaneSigns(spark, 32, 100, dim)
-    val corpusCodes = Similarity.mihCodeBands(
-      embs.filter(col("vec_id") % 8 =!= 0), "vec_id", "embedding",
-      "corpus_id", "c_code", signs, 4, 8)
     val fresh = ScreenStream.readEmbeddings(spark, dir)
       .filter(col("vec_id") % 8 === 0)
     assert(fresh.isStreaming)
@@ -97,6 +99,25 @@ class StreamingSpec extends SparkSpec {
     assert(batch.except(streamed).count() === 0)
     // every emitted pair is within radius and hamming is an exact integer
     assert(streamed.filter(col("hamming") > 8).count() === 0)
+  }
+
+  test("streaming MIH screen: a null or 63-dim fresh vector fails naming the column") {
+    import graft.streaming.ScreenStream
+    val good = embs.filter(col("vec_id") % 8 === 0).select("vec_id", "embedding")
+    Seq("null vector" -> lit(null).cast("array<float>"),
+      "63-dim vector" -> slice(col("embedding"), 1, 63)).zipWithIndex.foreach {
+      case ((what, vec), i) =>
+        val fresh = java.nio.file.Files.createTempDirectory("mih_contract").toString
+        good.unionByName(good.limit(1)
+            .select(lit(900001L).as("vec_id"), vec.as("embedding")))
+          .write.parquet(s"$fresh/embeddings.parquet")
+        val e = intercept[Exception](EventsStream.runAvailableNow(
+          ScreenStream.screenMih(ScreenStream.readEmbeddings(spark, fresh),
+            corpusCodes, "vec_id", "embedding", signs, 4, 8, radius = 8),
+          s"stream_mih_contract_$i", outputMode = "append"))
+        assert(causeMentions(e, "embedding column 'embedding'",
+          "non-null with one fixed dimension"), s"$what: $e")
+    }
   }
 
   test("streaming gear-CDC screen == batch gear screen; shifted copies pair live") {

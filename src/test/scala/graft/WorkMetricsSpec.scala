@@ -21,19 +21,16 @@ class WorkMetricsSpec extends SparkSpec {
         .select(($"id" % 1000).as("k"), $"id".as("v"))
       val dim = (0L until 1000L).map(k => (k, s"name-$k")).toDF("k", "name")
 
-      def joinBytes(broadcastOn: Boolean): Long = {
-        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        try {
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-            if (broadcastOn) "10m" else "-1")
+      def joinBytes(broadcastOn: Boolean): Long =
+        GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" ->
+            (if (broadcastOn) "10m" else "-1")) {
           val before = listener.snapshot(sc)
           big.join(dim, "k").agg(count(lit(1))).collect()
           val after = listener.snapshot(sc)
           val d = after - before
           assert(d.tasks > 0, "listener saw no tasks — bus not drained?")
           d.shuffleWriteBytes
-        } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      }
+        }
 
       val withBroadcast = joinBytes(broadcastOn = true)
       val withoutBroadcast = joinBytes(broadcastOn = false)
