@@ -1,12 +1,18 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+
+import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit, typedlit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType,
+  StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the numeric hot path (SURVEY §4.2: custom
   * `Expression` beats UDF). Higher-order-function folds (`aggregate`/
@@ -885,6 +891,237 @@ case class NearestCentroid(first: Expression, second: Expression,
     copy(first = f, second = s, third = t)
 }
 
+/** Jackson over the UTF-8 bytes of a `coordinates` text, shared by
+  * [[JsonArrayElements]] and [[GeoJsonFeature]]: they test and split the
+  * feed's text as it is, never turning a number into a double and back.
+  * Jackson's defaults are strict JSON: no `NaN`, single quotes, leading
+  * zeros, missing values or trailing commas, and no nesting past 1000
+  * levels.
+  */
+private object JsonBytes {
+  private val factory = new com.fasterxml.jackson.core.JsonFactory()
+
+  def isWs(c: Byte): Boolean = c == ' ' || c == '\n' || c == '\r' || c == '\t'
+
+  /** A parser on the opening `[` of `b`, or null when `b` is not
+    * whitespace and then an array. (Jackson also accepts a byte-order mark
+    * and reads text with NUL bytes up front as UTF-16 or UTF-32, without
+    * byte offsets; neither is JSON text here.)
+    */
+  def arrayParser(b: Array[Byte]): JsonParser = {
+    val p = factory.createParser(b)
+    val start =
+      if (p.nextToken() == JsonToken.START_ARRAY) p.currentTokenLocation().getByteOffset.toInt
+      else -1
+    var i = 0
+    while (i < start && isWs(b(i))) i += 1
+    if (start >= 0 && i == start) p else { p.close(); null }
+  }
+
+  /** Is `b` exactly one well-formed JSON array, give or take surrounding
+    * whitespace?
+    */
+  def isArray(b: Array[Byte]): Boolean =
+    try {
+      val p = arrayParser(b)
+      p != null && (try { p.skipChildren(); p.nextToken() == null } finally p.close())
+    } catch { case _: java.io.IOException => false }
+}
+
+/** The top-level elements of a JSON array text in ONE codegen'd pass —
+  * `json_array_elements(text)` → ARRAY<STRING>, the Multi-geometry split
+  * of [[graft.operators.CotripOps.explodeMulti]].
+  *
+  * Why an expression: `from_json(text, 'array<string>')` parses every
+  * coordinate into a double and prints it back, and it falls back to
+  * interpreted evaluation, which keeps the explode's `Generate` out of
+  * whole-stage codegen. This pass only finds element boundaries.
+  *
+  * Semantics contract (spec-pinned): for text that is exactly one
+  * well-formed JSON array (surrounding whitespace allowed), element i is
+  * the exact slice of its JSON text (`[39.50,1e2]` stays `[39.50,1e2]`,
+  * inner whitespace kept, surrounding whitespace dropped), a string
+  * element gives its unescaped text and a JSON `null` gives null — the
+  * elements `from_json` gives, minus its re-printing. Any other text
+  * (another JSON value, malformed JSON, trailing garbage) gives null, as
+  * `from_json` gives for malformed input; so does null.
+  */
+case class JsonArrayElements(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"json_array_elements expects STRING, got ${child.dataType.sql}")
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
+  override def nullable: Boolean = true
+  override def prettyName: String = "json_array_elements"
+
+  override def nullSafeEval(input: Any): Any =
+    JsonArrayElements.compute(input.asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""
+         |${ev.value} = graft.functions.JsonArrayElements.compute($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+
+  override protected def withNewChildInternal(c: Expression): JsonArrayElements =
+    copy(child = c)
+}
+
+object JsonArrayElements {
+  def compute(s: UTF8String): ArrayData = {
+    // a private copy (or the string's own immutable array): the element
+    // slices below are views into it
+    val b = s.getBytes
+    try {
+      val p = JsonBytes.arrayParser(b)
+      if (p == null) return null
+      try {
+        val out = new scala.collection.mutable.ArrayBuffer[Any]
+        var t = p.nextToken()
+        while (t != JsonToken.END_ARRAY) {
+          out += (t match {
+            case JsonToken.VALUE_STRING => UTF8String.fromString(p.getText)
+            case JsonToken.VALUE_NULL => null
+            case _ =>
+              val from = p.currentTokenLocation().getByteOffset.toInt
+              p.skipChildren()
+              UTF8String.fromBytes(b, from, p.currentLocation().getByteOffset.toInt - from)
+          })
+          t = p.nextToken()
+        }
+        if (p.nextToken() == null) new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+        else null
+      } finally p.close()
+    } catch { case _: java.io.IOException => null }
+  }
+}
+
+/** One GeoJSON feature line with its coordinates emitted verbatim —
+  * `geojson_feature(head, geometry)`, where `head` is the JSON object text
+  * of the feature's other members (`to_json` of `id`, `type`,
+  * `properties`) and `geometry` a `STRUCT<type STRING, coordinates
+  * STRING>`. The result is `head` with `"geometry":{"type":…,
+  * "coordinates":…}` appended as its last member; a null geometry or a
+  * null member is written as JSON `null`.
+  *
+  * The coordinates text goes out unquoted only when it is exactly one
+  * well-formed JSON array, with the whitespace outside its strings
+  * dropped, so a feed that pretty-prints its coordinates still gives one
+  * line per feature; any other text (a string the feed sent, malformed
+  * text) goes out as a JSON string, escaped as `to_json` escapes it. So
+  * every line is valid JSON, and the numbers of a well-formed feed are its
+  * own bytes: no number is parsed or re-printed, and nothing is escaped
+  * only to be stripped again.
+  */
+case class GeoJsonFeature(left: Expression, right: Expression) extends BinaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = right.dataType match {
+    case StructType(Array(StructField("type", StringType, _, _),
+        StructField("coordinates", StringType, _, _))) if left.dataType == StringType =>
+      TypeCheckResult.TypeCheckSuccess
+    case _ => TypeCheckResult.TypeCheckFailure(
+      "geojson_feature expects (STRING head, STRUCT<type STRING, coordinates STRING> " +
+        s"geometry), got ${left.dataType.sql} / ${right.dataType.sql}")
+  }
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = left.nullable
+  override def prettyName: String = "geojson_feature"
+
+  // a null geometry is written as `null`, so only a null head nulls the row
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val head = left.eval(input)
+    if (head == null) null
+    else GeoJsonFeature.compute(head.asInstanceOf[UTF8String],
+      right.eval(input).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow])
+  }
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val h = left.genCode(ctx)
+    val g = right.genCode(ctx)
+    ev.copy(code =
+      code"""
+         |${h.code}
+         |${g.code}
+         |boolean ${ev.isNull} = ${h.isNull};
+         |UTF8String ${ev.value} = null;
+         |if (!${ev.isNull}) {
+         |  ${ev.value} = graft.functions.GeoJsonFeature.compute(${h.value},
+         |    ${g.isNull} ? null : ${g.value});
+         |}""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): GeoJsonFeature =
+    copy(left = l, right = r)
+}
+
+object GeoJsonFeature {
+  private def ascii(s: String) = s.getBytes(StandardCharsets.US_ASCII)
+  private val geometryKey = ascii("\"geometry\":")
+  private val typeKey = ascii("{\"type\":")
+  private val coordinatesKey = ascii(",\"coordinates\":")
+  private val nullText = ascii("null")
+
+  /** `s` as a JSON string literal, escaped as `to_json` escapes it. */
+  private def quote(out: java.io.ByteArrayOutputStream, s: UTF8String): Unit = {
+    out.write('"')
+    out.writeBytes(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance()
+      .quoteAsUTF8(s.toString))
+    out.write('"')
+  }
+
+  /** The well-formed JSON text `b` without the whitespace outside its
+    * strings; every other byte is copied as is.
+    */
+  private def writeCompact(out: java.io.ByteArrayOutputStream, b: Array[Byte]): Unit = {
+    var from = 0
+    var inString = false
+    var i = 0
+    while (i < b.length) {
+      val c = b(i)
+      if (inString) { if (c == '\\') i += 1 else if (c == '"') inString = false }
+      else if (c == '"') inString = true
+      else if (JsonBytes.isWs(c)) { out.write(b, from, i - from); from = i + 1 }
+      i += 1
+    }
+    out.write(b, from, b.length - from)
+  }
+
+  def compute(head: UTF8String,
+              geometry: org.apache.spark.sql.catalyst.InternalRow): UTF8String = {
+    val h = head.getBytes
+    var close = h.length - 1
+    while (close >= 0 && h(close) != '}') close -= 1
+    require(close > 0, s"geojson_feature: head is not a JSON object: $head")
+    var last = close - 1
+    while (last > 0 && JsonBytes.isWs(h(last))) last -= 1
+    val out = new java.io.ByteArrayOutputStream(h.length + 64 +
+      (if (geometry == null || geometry.isNullAt(1)) 0 else geometry.getUTF8String(1).numBytes))
+    out.write(h, 0, close)
+    if (h(last) != '{') out.write(',')
+    out.writeBytes(geometryKey)
+    if (geometry == null) out.writeBytes(nullText)
+    else {
+      out.writeBytes(typeKey)
+      if (geometry.isNullAt(0)) out.writeBytes(nullText)
+      else quote(out, geometry.getUTF8String(0))
+      out.writeBytes(coordinatesKey)
+      if (geometry.isNullAt(1)) out.writeBytes(nullText)
+      else {
+        val c = geometry.getUTF8String(1)
+        val b = c.getBytes
+        if (JsonBytes.isArray(b)) writeCompact(out, b)
+        else quote(out, c)
+      }
+      out.write('}')
+    }
+    out.write('}')
+    UTF8String.fromBytes(out.toByteArray)
+  }
+}
+
 object NativeFunctions {
 
   /** Idempotent, atomic session registration of one native function: the
@@ -980,6 +1217,34 @@ object NativeFunctions {
     ensure(spark, "log_lin_code",
       org.apache.spark.sql.catalyst.expressions.Literal(1.0))(
       _.isInstanceOf[LogLinCode])(exprs => LogLinCode(exprs(0)))
+
+  /** The top-level elements of a JSON array text as exact slices (registers
+    * on first use; see [[JsonArrayElements]]).
+    */
+  def jsonArrayElements(spark: SparkSession, text: Column): Column = {
+    ensure(spark, "json_array_elements",
+      org.apache.spark.sql.catalyst.expressions.Literal("[]"))(
+      _.isInstanceOf[JsonArrayElements]) { exprs =>
+      requireArity("json_array_elements", Seq(1), exprs.length)
+      JsonArrayElements(exprs(0))
+    }
+    call_function("json_array_elements", text)
+  }
+
+  /** A GeoJSON feature line with verbatim coordinates (registers on first
+    * use; see [[GeoJsonFeature]]): `head` is the feature's other members
+    * as a JSON object text.
+    */
+  def geoJsonFeature(spark: SparkSession, head: Column, geometry: Column): Column = {
+    ensure(spark, "geojson_feature",
+      org.apache.spark.sql.catalyst.expressions.Literal("{}"),
+      org.apache.spark.sql.catalyst.expressions.Literal.create(null, graft.model.GeoSchemas.geometry))(
+      _.isInstanceOf[GeoJsonFeature]) { exprs =>
+      requireArity("geojson_feature", Seq(2), exprs.length)
+      GeoJsonFeature(exprs(0), exprs(1))
+    }
+    call_function("geojson_feature", head, geometry)
+  }
 
   /** All `tables` LSH signatures of `vec` against the flattened row-major
     * plane matrix, as one fused-loop column (see [[HyperplaneSignatures]]).

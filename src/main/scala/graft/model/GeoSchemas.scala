@@ -8,10 +8,15 @@ import org.apache.spark.sql.types._
   * `{id, type, properties, geometry}` (reference: task.ts:78-84). Geometry is a
   * tagged union `{type, coordinates}` whose coordinate nesting depth depends on
   * `type`; Spark has no union type, so we encode it as
-  * `STRUCT<type: STRING, coordinates: STRING>` where `coordinates` holds the raw
-  * JSON array text (SURVEY.md §1.3). Spark's `JacksonParser` captures any JSON
-  * value verbatim when the target type is `StringType`, which gives us lossless
-  * round-tripping while keeping every column Catalyst-optimizable.
+  * `STRUCT<type: STRING, coordinates: STRING>` where `coordinates` holds the
+  * feed's JSON array text (SURVEY.md §1.3), byte for byte, on every source:
+  * each parses its input from bytes, where Spark's `JacksonParser` slices a
+  * non-string value out of the input for a `StringType` field instead of
+  * re-printing it. So `[39.50,1e2]` stays `[39.50,1e2]` from page to POST
+  * (the sink drops only the whitespace between tokens, so a feature stays
+  * one line) — value-equal to the array the reference carries — while every
+  * column stays Catalyst-optimizable. A JSON string in that position arrives as its
+  * unescaped text.
   */
 object GeoSchemas {
 
@@ -38,9 +43,10 @@ object GeoSchemas {
     StructField("nativeId", StringType),
     StructField("activationTime", StringType)))
 
-  /** Geometry tagged-union encoding: `coordinates` is raw JSON text whose
-    * nesting depth matches `type` (Point → `[x,y]`, LineString → `[[x,y],..]`,
-    * Polygon → one deeper, Multi* → one deeper still; reference task.ts:86-97).
+  /** Geometry tagged-union encoding: `coordinates` is the feed's JSON text
+    * whose nesting depth matches `type` (Point → `[x,y]`, LineString →
+    * `[[x,y],..]`, Polygon → one deeper, Multi* → one deeper still;
+    * reference task.ts:86-97).
     */
   val geometry: StructType = StructType(Seq(
     StructField("type", StringType),
@@ -53,10 +59,6 @@ object GeoSchemas {
     StructField("type", StringType),
     StructField("properties", signProperties),
     StructField("geometry", geometry)))
-
-  /** One API page envelope: `{"features": [...]}` (task.ts:71). */
-  val page: StructType = StructType(Seq(
-    StructField("features", ArrayType(feature))))
 
   /** Output feature schema in property-strip (conformance) mode:
     * `{id, type:'Feature', properties:{}, geometry}` (task.ts:78-84).

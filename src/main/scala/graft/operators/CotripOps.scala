@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType}
 
+import graft.functions.NativeFunctions
 import graft.model.TaskConfig
 
 /** The reference's three dataflow operators (SURVEY §2.2-2.3, task.ts:76-113)
@@ -29,11 +29,14 @@ object CotripOps {
   }
 
   /** E1 — Multi-geometry explode (task.ts:86-101), single-pass form (SURVEY
-    * §2.3): `posexplode` over the top level of the parsed coordinate array for
-    * `Multi*` rows, a 1-element array (pass-through) otherwise. Because
-    * `coordinates` is raw JSON text and the array elements are lifted as
-    * `ARRAY<STRING>`, the inner nesting depth is irrelevant — exactly the
-    * polymorphism the reference gets from JS (SURVEY §7.3-1).
+    * §2.3): `posexplode` over the top-level elements of the coordinate
+    * array for `Multi*` rows, a 1-element array (pass-through) otherwise.
+    * `coordinates` is the feed's JSON text, and the split
+    * ([[graft.functions.JsonArrayElements]], one codegen'd pass) cuts it at
+    * the top-level commas only: each part is the exact slice of its
+    * element's text, whatever its nesting depth — the reference's own
+    * split of the parsed array (SURVEY §7.3-1), with no number parsed or
+    * re-printed, so a part is value-equal to the reference's element.
     *
     * Reference semantics reproduced:
     *   - id becomes `"{id}-{i}"`, i = position in the original array
@@ -45,16 +48,19 @@ object CotripOps {
     *   - non-Multi rows (including GeometryCollection, which has no
     *     `coordinates` at all) pass through 1:1 untouched (task.ts:98-100).
     *
-    * The two branches' concatenation in the reference (features.push from both
-    * paths, task.ts:95,99) is a degenerate UNION ALL (§2.8); the `when()` form
-    * computes it in one pass with no union node and no shuffle.
+    * Multi coordinates that are not one well-formed JSON array yield no
+    * rows, as the `from_json` split did. The two branches' concatenation
+    * in the reference (features.push from both paths, task.ts:95,99) is a
+    * degenerate UNION ALL (§2.8); the `when()` form computes it in one
+    * pass with no union node and no shuffle.
     */
   def explodeMulti(df: DataFrame): DataFrame = {
     val isMulti = col("geometry.type").startsWith("Multi")
     df.select(
         col("id"), col("type"), col("properties"), col("geometry"),
         posexplode(
-          when(isMulti, from_json(col("geometry.coordinates"), ArrayType(StringType)))
+          when(isMulti, NativeFunctions.jsonArrayElements(df.sparkSession,
+              col("geometry.coordinates")))
             .otherwise(array(col("geometry.coordinates"))))
           .as(Seq("pos", "part")))
       .select(

@@ -1005,9 +1005,9 @@ object Dedup {
     val allSigns = Similarity.hyperplaneSigns(vecs.sparkSession,
       tablesAdaptive * planesAdaptive, 0, dim)
     val banded = v.select(col(idCol),
-        posexplode(graft.functions.NativeFunctions.hyperplaneSignatures(
-          vecs.sparkSession, col("v"), allSigns.flatten,
-          planesAdaptive, tablesAdaptive)).as(Seq("tbl", "sig")))
+        posexplode(Similarity.signaturesOrFail(vecs.sparkSession, "LSH signatures",
+          col("v"), vecCol, allSigns, planesAdaptive, tablesAdaptive))
+          .as(Seq("tbl", "sig")))
     // VERIFY-THEN-DISTINCT (r9): candidate occurrences stream straight
     // through the vector join-backs and the exact-cosine filter, and only
     // SURVIVORS reach the dedup exchange. The previous shape
@@ -1104,7 +1104,9 @@ object Dedup {
     val nCorpus = vc.count()
     val (planesAdaptive, tablesAdaptive) =
       resolveLshKnobs(nCorpus, planesPerTable, tables)
-    val dim = Similarity.vectorDim(corpus, vecCol)
+    // an empty corpus has no dimension: band the fresh side at its own, so
+    // its rows meet no candidates instead of failing the signature guard
+    val dim = Similarity.vectorDim(if (nCorpus > 0) corpus else fresh, vecCol)
     // size-aware join-back broadcasts, as in [[embeddingCosinePairsLsh]]:
     // the fresh batch is usually small (always broadcast-able in the d15
     // ingest shape); the standing corpus side falls back to a shuffle join
@@ -1116,9 +1118,9 @@ object Dedup {
       tablesAdaptive * planesAdaptive, 0, dim)
     def banded(v: DataFrame, as: String) =
       v.select(col(idCol).as(as),
-        posexplode(graft.functions.NativeFunctions.hyperplaneSignatures(
-          fresh.sparkSession, col("v"), allSigns.flatten,
-          planesAdaptive, tablesAdaptive)).as(Seq("tbl", "sig")))
+        posexplode(Similarity.signaturesOrFail(fresh.sparkSession, "LSH signatures",
+          col("v"), vecCol, allSigns, planesAdaptive, tablesAdaptive))
+          .as(Seq("tbl", "sig")))
     // verify-then-distinct + parallelism floor (prep widens both cached
     // sides) + size-aware broadcast, same rationale as
     // [[embeddingCosinePairsLsh]]: the corpus side carries the volume;
@@ -1198,8 +1200,8 @@ object Dedup {
     val allSigns = Similarity.hyperplaneSigns(spark, l * b, 0, dim)
     graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.signatures,
       v.select(col(idCol),
-        posexplode(graft.functions.NativeFunctions.hyperplaneSignatures(
-          spark, col("v"), allSigns.flatten, b, l)).as(Seq("tbl", "sig"))),
+        posexplode(Similarity.signaturesOrFail(spark, "LSH signatures",
+          col("v"), vecCol, allSigns, b, l)).as(Seq("tbl", "sig"))),
       "tbl", buckets, "sig")
     graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.vectors,
       v, idCol, buckets)
@@ -1252,9 +1254,9 @@ object Dedup {
       index.tables * index.planesPerTable, 0, index.dim)
     graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.signatures,
       v.select(col(idCol),
-        posexplode(graft.functions.NativeFunctions.hyperplaneSignatures(
-          spark, col("v"), allSigns.flatten,
-          index.planesPerTable, index.tables)).as(Seq("tbl", "sig"))),
+        posexplode(Similarity.signaturesOrFail(spark, "LSH signatures",
+          col("v"), vecCol, allSigns, index.planesPerTable, index.tables))
+          .as(Seq("tbl", "sig"))),
       epoch, "tbl", index.buckets, "sig")
     val appliedVectors = graft.sources.BucketedLake.appendBucketedTableOnce(
       spark, index.vectors, v, epoch, idCol, index.buckets)
@@ -1307,9 +1309,9 @@ object Dedup {
     val allSigns = Similarity.hyperplaneSigns(spark,
       index.tables * index.planesPerTable, 0, index.dim)
     val freshBanded = vf.select(col(idCol).as("fresh_id"),
-      posexplode(graft.functions.NativeFunctions.hyperplaneSignatures(
-        spark, col("v"), allSigns.flatten,
-        index.planesPerTable, index.tables)).as(Seq("tbl", "sig")))
+      posexplode(Similarity.signaturesOrFail(spark, "LSH signatures",
+        col("v"), vecCol, allSigns, index.planesPerTable, index.tables))
+        .as(Seq("tbl", "sig")))
     // the ingest batch is the natural broadcast; past the cap the probe
     // join falls back to the bucket-co-located shuffle join, where ONLY the
     // fresh side exchanges (the index side reads bucketed — PlanSpec)

@@ -1084,15 +1084,36 @@ object Similarity {
     */
   private[graft] def mihCodeArray(spark: org.apache.spark.sql.SparkSession,
                                   vecCol: String, signs: Array[Array[Double]],
-                                  bands: Int, bandBits: Int): Column = {
-    val dim = signs.headOption.fold(0)(_.length)
+                                  bands: Int, bandBits: Int): Column =
+    signaturesOrFail(spark, "MIH band codes", col(vecCol).cast("array<double>"),
+      vecCol, signs, bandBits, bands)
+
+  /** The fused `hyperplane_signatures` of `vec` (the embedding column
+    * `vecCol`, cast to ARRAY<DOUBLE>) against `signs`, `tables` codes of
+    * `planesPerTable` bits each — failing the query, named `what` and
+    * `vecCol`, where the loop returns NULL: a null vector, a null element
+    * or a vector whose dimension is not the signs' own. Every posexplode of
+    * signatures (MIH band codes, the hyperplane-LSH families) goes through
+    * it, so such a row fails loudly instead of vanishing at the explode;
+    * valid rows never evaluate the error branch.
+    */
+  private[graft] def signaturesOrFail(spark: org.apache.spark.sql.SparkSession,
+                                      what: String, vec: Column, vecCol: String,
+                                      signs: Array[Array[Double]],
+                                      planesPerTable: Int, tables: Int): Column = {
     coalesce(
       graft.functions.NativeFunctions.hyperplaneSignatures(
-        spark, col(vecCol).cast("array<double>"), signs.flatten, bandBits, bands),
-      raise_error(lit(s"MIH band codes: embedding column '$vecCol' holds a " +
-        s"null vector, a null element or a vector whose dimension is not " +
-        s"$dim; embeddings must be non-null with one fixed dimension")))
+        spark, vec, signs.flatten, planesPerTable, tables),
+      badVector(what, vecCol, signs.headOption.fold(0)(_.length)))
   }
+
+  /** The error [[signaturesOrFail]] raises, for a guard on a value the
+    * plan derives from the vector before the signature explode.
+    */
+  private[graft] def badVector(what: String, vecCol: String, dim: Int): Column =
+    raise_error(lit(s"$what: embedding column '$vecCol' holds a " +
+      s"null vector, a null element or a vector whose dimension is not " +
+      s"$dim; embeddings must be non-null with one fixed dimension"))
 
   /** Full-code Hamming distance between two band-code arrays: Σ over bands
     * of bit_count(xor) — pure integer arithmetic, one codegen projection.

@@ -3,29 +3,28 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.functions.NativeFunctions
+
 /** FeatureCollection sink (task.ts:108-115 / SURVEY §2.1-S3).
   *
-  * Serialization: `to_json` on the feature struct, then the raw-JSON
-  * `coordinates` text is spliced back unquoted. The coordinates text contains
-  * only `[0-9.eE+-,\[\] ]` (it round-tripped through a JSON array), so the
-  * quoted form has no escapes and a `[^"]*` splice is exact. All distributed,
-  * codegen'd — no driver-side row loop.
+  * Serialization: `to_json` writes the feature's `id`, `type` and
+  * `properties`, and [[graft.functions.GeoJsonFeature]] appends the
+  * geometry with `coordinates` written raw: the feed's JSON text, minus
+  * the whitespace between its tokens, value-equal to the array the
+  * reference submits. The text goes out unquoted only when it is exactly
+  * one well-formed JSON array; anything else (a string the feed sent,
+  * malformed text) goes out as a JSON string, so every line is one valid
+  * JSON text. All distributed, codegen'd — no driver-side row loop, no
+  * regex pass.
   */
 object FeatureCollectionSink {
 
   /** One JSON text per feature, GeoJSON-shaped. */
   def featureJson(df: DataFrame): Dataset[String] = {
-    val j = to_json(
-      struct(df("id"), df("type"), df("properties"), df("geometry")),
+    val head = to_json(struct(df("id"), df("type"), df("properties")),
       java.util.Map.of("ignoreNullFields", "false"))
-    // Unquote the raw coordinates array: "coordinates":"[…]" → "coordinates":[…]
-    // The char class admits exactly numeric-JSON text; anything else (e.g. a
-    // quote smuggled into coordinates by a misbehaving feed) does NOT match
-    // and stays a quoted string — degraded but still valid JSON, never a
-    // structurally corrupted document.
-    val spliced = regexp_replace(j,
-      "\"coordinates\":\"([0-9eE+\\-.,\\[\\] ]*)\"", "\"coordinates\":$1")
-    df.select(spliced.as("json")).as[String](org.apache.spark.sql.Encoders.STRING)
+    df.select(NativeFunctions.geoJsonFeature(df.sparkSession, head, df("geometry")).as("json"))
+      .as[String](org.apache.spark.sql.Encoders.STRING)
   }
 
   /** The reference submits ONE FeatureCollection per run (task.ts:108-115) —

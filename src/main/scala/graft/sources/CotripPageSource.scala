@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptions}
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptions}
 import org.apache.spark.sql.catalyst.util.{ArrayData, BadRecordException, GenericArrayData}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.DataSourceRegister
@@ -38,9 +38,11 @@ import graft.model.GeoSchemas
   *     its executor.
   *
   * Rows are features ([[GeoSchemas.feature]]), parsed in the scan: each
-  * reader streams its page's bytes through Spark's own `JacksonParser`, with
-  * the options `from_json` uses, into the page envelope and emits one row
-  * per element of `features`. The scan prunes nested columns
+  * reader reads its page's bytes once, parses them with Spark's own
+  * `JacksonParser` and the options `from_json` uses into the page envelope
+  * ([[PageParser]]) and emits one row per element of `features`.
+  * `geometry.coordinates` is the feed's JSON text, byte for byte. The scan
+  * prunes nested columns
   * (`SupportsPushDownRequiredColumns`): the parser reads only the fields the
   * plan pushes down, e.g. `properties.id` and `geometry` for the default
   * property-strip pipeline, and skips the other sign properties unparsed.
@@ -355,22 +357,71 @@ final case class PagePartitionReaderFactory(
           () => new HttpPageClient(baseUrl, apiKey).open(offset))
       case other => throw new IllegalArgumentException(other.toString)
     }
-    val features = new PageParser(featureSchema, timeZone, corruptRecordColumn)
-      .features(open, page)
+    val (bytes, length) =
+      try PageBuffers.readAll(open)
+      catch {
+        case e: java.io.IOException =>
+          throw new java.io.IOException(s"cotrip-pages: reading $page failed: ${e.getMessage}", e)
+      }
+    val features =
+      try new PageParser(featureSchema, timeZone, corruptRecordColumn).features(bytes, length, page)
+      catch { case e: Throwable => PageBuffers.give(bytes); throw e }
     new PartitionReader[InternalRow] {
       private var i = -1
+      private var closed = false
       override def next(): Boolean = { i += 1; i < features.numElements() }
       override def get(): InternalRow = features.getStruct(i, featureSchema.length)
-      override def close(): Unit = ()
+      // the rows' strings are views into the buffer; Spark has copied every
+      // row it keeps by the time it closes the reader
+      override def close(): Unit = if (!closed) { closed = true; PageBuffers.give(bytes) }
     }
   }
 }
 
-/** Parses one page envelope `{"features":[…]}` into its feature array with
-  * Spark's `JacksonParser` under the options `from_json` uses, so a page
-  * parses here as `from_json(body, GeoSchemas.page)` parses it in
-  * [[CotripSource.fromPages]] (the scan's feature schema may be pruned):
+/** The page buffers of one JVM, reused across `cotrip-pages` readers and
+  * page fetches. A page is read whole, so the parser can slice string
+  * fields out of it, and a page is usually larger than half a G1 heap
+  * region: a fresh array per page would be a humongous allocation, holding
+  * old-generation regions until the next young collection. A reader takes
+  * a buffer when it opens and gives it back when it closes, so the pool
+  * holds one buffer per reader that ran at once; a buffer over 64 MB is not
+  * kept.
+  */
+private object PageBuffers {
+  private val free = new java.util.concurrent.ConcurrentLinkedDeque[Array[Byte]]()
+
+  /** `open()`'s bytes, read to the end into a pooled buffer, and their count. */
+  def readAll(open: () => java.io.InputStream): (Array[Byte], Int) = {
+    var buf = Option(free.poll()).getOrElse(new Array[Byte](1 << 16))
+    var n = 0
+    try {
+      val in = open()
+      try {
+        var r = 0
+        while (r >= 0) {
+          if (n == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+          r = in.read(buf, n, buf.length - n)
+          if (r > 0) n += r
+        }
+      } finally in.close()
+    } catch { case e: Throwable => give(buf); throw e }
+    (buf, n)
+  }
+
+  def give(buf: Array[Byte]): Unit = if (buf.length <= (64 << 20)) free.push(buf)
+}
+
+/** Parses one page envelope `{"features":[…]}` from its bytes into its
+  * feature array with Spark's `JacksonParser` under the options `from_json`
+  * uses. The one page parser of [[CotripSource.fromPages]], the batch scan
+  * and the micro-batch stream (the scan's feature schema may be pruned):
   *
+  *   - `geometry.coordinates` is the feed's own JSON text, byte for byte:
+  *     on byte-array input Spark's exact-string path
+  *     (`spark.sql.json.enableExactStringParsing`, on by default) slices a
+  *     non-string value out of the page instead of re-printing it, so
+  *     `[39.50,1e2]` stays `[39.50,1e2]`, whitespace included. That text
+  *     is value-equal to the array the reference reads from the same page;
   *   - a well-formed page with a field of the wrong type (e.g.
   *     `"marker":"mile 3"`) keeps every feature, that field null —
   *     `from_json`'s PERMISSIVE partial result;
@@ -386,19 +437,20 @@ private[sources] final class PageParser(featureSchema: StructType, timeZone: Str
     new JSONOptions(Map.empty[String, String], timeZone, corruptRecordColumn),
     allowArrayAsStructs = false)
 
-  def features(open: () => java.io.InputStream, page: String): ArrayData = {
+  /** The features of the page in `bytes[0, length)`. Their string fields
+    * may be views into `bytes`.
+    */
+  def features(bytes: Array[Byte], length: Int, page: String): ArrayData = {
     var watch: ReadWatch = null
     def readError: Option[Throwable] = Option(watch).flatMap(w => Option(w.error))
     val envelope =
-      try parser.parse[java.io.InputStream](new DrainOnClose(open()), { (factory, in) =>
-        watch = new ReadWatch(CreateJacksonParser.inputStream(factory, in)); watch
+      try parser.parse[Array[Byte]](bytes, { (factory, b) =>
+        watch = new ReadWatch(factory.createParser(b, 0, length)); watch
       }, _ => UTF8String.EMPTY_UTF8)
       catch {
         case e: BadRecordException if readError.isEmpty && e.partialResults().nonEmpty =>
           e.partialResults().toSeq
         case e: BadRecordException => throw malformed(page, readError.getOrElse(e.getCause))
-        case e: java.io.IOException =>
-          throw new java.io.IOException(s"cotrip-pages: reading $page failed: ${e.getMessage}", e)
       }
     envelope.headOption match {
       case None => throw malformed(page, null)
@@ -408,9 +460,9 @@ private[sources] final class PageParser(featureSchema: StructType, timeZone: Str
   }
 
   private def malformed(page: String, cause: Throwable): Throwable =
-    new IllegalStateException(s"cotrip-pages: malformed $page: " +
-      Option(cause).map(_.getMessage).getOrElse("empty body") +
-      """ (expected a {"features":[...]} envelope)""", cause)
+    new IllegalStateException(s"malformed $page: the body is not a well-formed " +
+      """{"features":[...]} JSON object (""" +
+      Option(cause).map(_.getMessage).getOrElse("empty body") + ")", cause)
 }
 
 /** A Jackson parser that remembers the first syntax or I/O error it
@@ -426,15 +478,4 @@ private final class ReadWatch(p: JsonParser) extends JsonParserDelegate(p) {
   override def nextValue(): JsonToken = watch(super.nextValue())
   override def skipChildren(): JsonParser = watch(super.skipChildren())
   override def getText(): String = watch(super.getText())
-}
-
-/** Reads the rest of a response before closing it, so the parser closing
-  * its source at the end of the JSON value hands the connection back to
-  * the pool instead of cancelling the exchange.
-  */
-private final class DrainOnClose(in: java.io.InputStream) extends java.io.FilterInputStream(in) {
-  override def close(): Unit =
-    try in.transferTo(java.io.OutputStream.nullOutputStream())
-    catch { case _: java.io.IOException => () } // the parse already has its answer
-    finally in.close()
 }

@@ -1,9 +1,10 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets
+
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.GeoSchemas
 
@@ -46,7 +47,7 @@ final class PagedFetcher(client: PageClient, maxPages: Int = 10000) {
   * The offset chain is inherently sequential (each page's offset comes from the
   * previous response), so page *discovery* stays on the driver; page *parsing*
   * is distributed. On the driver path ([[fromPages]]) each page body is a row
-  * and `from_json` + `explode` run on executors; on the DSv2 path
+  * and executors parse it; on the DSv2 path
   * ([[fromDsv2]]) executors fetch and parse each page in the scan itself,
   * reading only the feature fields the plan needs. At 100 TB scale the same
   * shape holds: the driver walks the chain collecting (cheap) page tokens,
@@ -55,25 +56,32 @@ final class PagedFetcher(client: PageClient, maxPages: Int = 10000) {
   */
 object CotripSource {
 
-  /** Parse page bodies (each `{"features":[...]}`) into one row per feature.
-    * A body that is not a well-formed JSON object (truncated or non-JSON
-    * text, an empty body) fails the job naming its page index; `from_json`
-    * alone would return it as a partial envelope with `features` null, and
-    * its features would vanish at the explode. A well-formed page with a
+  /** Parse page bodies (each `{"features":[...]}`) into one row per feature,
+    * distributed, with the `cotrip-pages` scan's own [[PageParser]]: each
+    * body is parsed from its UTF-8 bytes, so `geometry.coordinates` is the
+    * page's JSON text byte for byte, as on every other source. A body that
+    * is not a well-formed JSON object (truncated or non-JSON text, an empty
+    * body) fails the job naming its page index. A well-formed page with a
     * field of the wrong type keeps its feature with that field null
-    * (`from_json`'s PERMISSIVE partial result), as in the `cotrip-pages` scan.
+    * (`from_json`'s PERMISSIVE partial result). A null body has no features.
     */
   def fromPages(spark: SparkSession, bodies: Seq[String]): DataFrame = {
-    val body = col("body")
-    spark.createDataset(bodies.zipWithIndex)(Encoders.tuple(Encoders.STRING, Encoders.scalaInt))
-      .toDF("body", "page_index")
-      // json_object_keys is null exactly when the body is not a well-formed object
-      .select(when(body.isNotNull && json_object_keys(body).isNull,
-        raise_error(concat(lit("malformed page "), col("page_index"),
-          lit(""": the body is not a well-formed {"features":[...]} JSON object"""))))
-        .otherwise(from_json(body, GeoSchemas.page)).as("page"))
-      .select(explode(col("page.features")).as("feature"))
-      .select(col("feature.*"))
+    val schema = GeoSchemas.feature
+    val conf = spark.sessionState.conf
+    val (timeZone, corruptRecordColumn) =
+      (conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+    val sc = spark.sparkContext
+    val features = sc.parallelize(bodies.zipWithIndex,
+        math.min(math.max(bodies.size, 1), sc.defaultParallelism))
+      .mapPartitions { pages =>
+        val parser = new PageParser(schema, timeZone, corruptRecordColumn)
+        pages.filter(_._1 != null).flatMap { case (body, i) =>
+          val bytes = body.getBytes(StandardCharsets.UTF_8)
+          val page = parser.features(bytes, bytes.length, s"page $i")
+          Iterator.tabulate(page.numElements())(page.getStruct(_, schema.length))
+        }
+      }
+    org.apache.spark.sql.graftshim.InternalRows.toDF(spark, features, schema)
   }
 
   /** DSv2 scale path: executor-parallel page fetch+parse via the

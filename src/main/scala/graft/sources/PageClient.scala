@@ -60,19 +60,27 @@ final class HttpPageClient(baseUrl: String, apiKey: String,
     res
   }
 
+  /** The body is read into a reused page buffer and decoded once: a page is
+    * usually a humongous object for G1, and `ofString` would allocate it
+    * twice (the joined bytes, then the string).
+    */
   override def fetch(offset: Option[String]): Page = {
-    val res = checked(graft.SharedHttp.send(request(offset),
-      java.net.http.HttpResponse.BodyHandlers.ofString()))
-    Page(res.body(), Option(res.headers().firstValue("next-offset").orElse(null)))
+    val res = respond(offset)
+    val (bytes, length) = PageBuffers.readAll(() => res.body())
+    try Page(new String(bytes, 0, length, java.nio.charset.StandardCharsets.UTF_8),
+      Option(res.headers().firstValue("next-offset").orElse(null)))
+    finally PageBuffers.give(bytes)
   }
 
-  /** The page body as a byte stream, for a parser that reads the bytes as
-    * they arrive (the `cotrip-pages` scan). The caller closes it.
+  /** The page body as a byte stream (the `cotrip-pages` scan reads it
+    * whole into a reused buffer). The caller closes it.
     */
-  def open(offset: Option[String]): java.io.InputStream = {
+  def open(offset: Option[String]): java.io.InputStream = respond(offset).body()
+
+  private def respond(offset: Option[String]): java.net.http.HttpResponse[java.io.InputStream] = {
     val res = graft.SharedHttp.send(request(offset),
       java.net.http.HttpResponse.BodyHandlers.ofInputStream())
     if (res.statusCode() / 100 != 2) res.body().close()
-    checked(res).body()
+    checked(res)
   }
 }

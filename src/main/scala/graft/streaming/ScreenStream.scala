@@ -240,10 +240,14 @@ object ScreenStream {
     val banded = freshVecs
       .select(col(idCol).as("fresh_id"),
         col(vecCol).cast("array<double>").as("v_f"))
-      .withColumn("n_f", graft.operators.Similarity.l2norm(col("v_f")))
+      // a null norm raises: the optimizer infers isnotnull(n_f) from the
+      // cosine filter and pushes it below the signature explode, where it
+      // would drop a bad vector before the signature guard sees it
+      .withColumn("n_f", coalesce(graft.operators.Similarity.l2norm(col("v_f")),
+        graft.operators.Similarity.badVector("LSH signatures", vecCol, index.dim)))
       .select(col("fresh_id"), col("v_f"), col("n_f"),
-        posexplode(graft.functions.NativeFunctions.hyperplaneSignatures(
-          spark, col("v_f"), allSigns.flatten,
+        posexplode(graft.operators.Similarity.signaturesOrFail(spark,
+          "LSH signatures", col("v_f"), vecCol, allSigns,
           index.planesPerTable, index.tables)).as(Seq("tbl", "sig")))
     foldPerDoc(banded
       .join(spark.table(index.signatures)

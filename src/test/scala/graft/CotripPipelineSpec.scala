@@ -184,6 +184,32 @@ class CotripPipelineSpec extends SparkSpec {
       """{"type":"FeatureCollection","features":[{"id":"pt1","type":"Feature","properties":{},"geometry":{"type":"Point","coordinates":[-105.52,39.74]}}]}""")
   }
 
+  test("sink: every featureJson line is valid JSON — string-valued, malformed and null coordinates, null geometry") {
+    val pageFeatures = Seq(
+      feature("s1", "Point", "\"[1,,2]\""), feature("s2", "Point", "\"]\""),
+      feature("s3", "Point", "\"1e\""), feature("s4", "Point", "\"a\\\"b\""),
+      feature("n1", "Point", "null"),
+      """{"type":"Feature","properties":{"id":"g1"},"geometry":null}""",
+      feature("ok", "Point", "[1.50,2]"))
+    val lines = FeatureCollectionSink.featureJson(
+      CotripOps.projectIdGeometry(features(pageFeatures))).collect()
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    val parsed = lines.map { l =>
+      val node = scala.util.Try(mapper.readTree(l))
+        .getOrElse(fail(s"featureJson emitted invalid JSON: $l"))
+      node.get("id").asText() -> node.get("geometry")
+    }.toMap
+    assert(parsed.keySet === Set("s1", "s2", "s3", "s4", "n1", "g1", "ok"))
+    Seq("s1" -> "[1,,2]", "s2" -> "]", "s3" -> "1e", "s4" -> "a\"b").foreach { case (id, text) =>
+      assert(parsed(id).get("coordinates").isTextual &&
+        parsed(id).get("coordinates").asText() === text, id)
+    }
+    assert(parsed("n1").get("coordinates").isNull)
+    assert(parsed("g1").isNull)
+    assert(lines.exists(_.endsWith(""""geometry":{"type":"Point","coordinates":[1.50,2]}}""")))
+  }
+
   test("pipeline is idempotent on its own output shape") {
     // Output features re-ingested (as a page) produce themselves again.
     val out = CotripOps.pipeline(features(allFixtures), TaskConfig("t"))

@@ -330,6 +330,47 @@ class Dsv2SourceSpec extends SparkSpec {
     assert(removed.getMessage.contains("files were removed"), removed.getMessage)
   }
 
+  test("one coordinate-text contract: every source carries the feed's coordinate bytes, through explode and sink") {
+    val coords = Seq(
+      "p" -> ("Point", "[39.50,1e2]"),
+      "m" -> ("MultiPoint", "[[39.50,1e2],[-0.0,10000000.0]]"),
+      "w" -> ("Point", "[ 1.0 , 2.0 ]"))
+    val features = coords.map { case (id, (t, c)) => feat(id, t, c) }
+    val page = features.mkString("""{"features":[""", ",", "]}")
+    val expected = coords.map { case (id, (_, c)) => id -> c }.toMap
+    def text(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+      df.select("properties.id", "geometry.coordinates").collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+
+    val dir = Files.createTempDirectory("cotrip-pages-coords")
+    Files.writeString(dir.resolve("page-000.json"), page)
+    val fixture = Map("mode" -> "fixture", "path" -> dir.toString)
+    val lines = Files.createTempDirectory("cotrip-lines").resolve("features.json")
+    Files.writeString(lines, features.mkString("\n"))
+    val stream = spark.readStream.format("cotrip-pages").options(fixture).load()
+    graft.streaming.EventsStream.runAvailableNow(stream, "c05_coords_sink")
+    val sources = Seq(
+      "fromPages" -> CotripSource.fromPages(spark, Seq(page)),
+      "fromDsv2 fixture" -> CotripSource.fromDsv2(spark, fixture),
+      "cotrip-pages stream" -> spark.table("c05_coords_sink"),
+      "fromJsonFiles" -> CotripSource.fromJsonFiles(spark, lines.toString))
+    sources.foreach { case (name, df) => assert(text(df) === expected, name) }
+    withChainServer(Map(None -> (page, "None"))) { (base, _, _) =>
+      assert(text(CotripSource.fromDsv2(spark, Map("mode" -> "http", "baseUrl" -> base,
+        "apiKey" -> "tok"))) === expected, "fromDsv2 http")
+    }
+
+    // the explode slices the Multi parts; the sink prints each array raw,
+    // minus the whitespace outside its strings
+    val out = graft.sinks.FeatureCollectionSink.featureJson(
+      CotripOps.pipeline(CotripSource.fromDsv2(spark, fixture), TaskConfig("t")))
+      .collect().toSet
+    def line(id: String, c: String) =
+      s"""{"id":"$id","type":"Feature","properties":{},"geometry":{"type":"Point","coordinates":$c}}"""
+    assert(out === Set(line("p", "[39.50,1e2]"), line("m-0", "[39.50,1e2]"),
+      line("m-1", "[-0.0,10000000.0]"), line("w", "[1.0,2.0]")))
+  }
+
   test("unknown mode fails with a clear message") {
     val err = intercept[Exception] {
       spark.read.format("cotrip-pages").option("mode", "nope").load().collect()

@@ -265,6 +265,39 @@ class ExtensionSpec extends SparkSpec {
     }
   }
 
+  test("hyperplane LSH: a null vector, a null element or a 63-dim vector fails naming the column") {
+    val good = embs.filter(col("vec_id") % 8 === 0).select("vec_id", "embedding")
+    val corpus = embs.filter(col("vec_id") % 8 =!= 0).select("vec_id", "embedding")
+    val one = good.limit(1)
+    val idx = Dedup.writeEmbeddingSignatureIndex(corpus, "vec_id", "embedding",
+      "emb_idx_contract")
+    val bad = Seq(
+      "null vector" -> lit(null).cast("array<float>"),
+      "null element" -> transform(col("embedding"),
+        (x, i) => when(i === 0, lit(null).cast("float")).otherwise(x)),
+      "63-dim vector" -> slice(col("embedding"), 1, 63))
+    bad.zipWithIndex.foreach { case ((what, vec), i) =>
+      val withBad = good.unionByName(
+        one.select(lit(900001L).as("vec_id"), vec.as("embedding")))
+      Seq[(String, () => Any)](
+        "self-pairs" -> (() => Dedup.embeddingCosinePairsLsh(
+          withBad, "vec_id", "embedding", 0.4).collect()),
+        "fresh-vs-corpus" -> (() => Dedup.incrementalEmbeddingPairsLsh(
+          withBad, corpus, "vec_id", "embedding", 0.4).collect()),
+        "index build" -> (() => Dedup.writeEmbeddingSignatureIndex(
+          withBad, "vec_id", "embedding", s"emb_idx_contract_bad$i")),
+        "index append" -> (() => Dedup.appendEmbeddingSignatureIndex(
+          withBad, idx, "vec_id", "embedding", epoch = 1L + i)),
+        "indexed screen" -> (() => Dedup.incrementalEmbeddingPairsIndexed(
+          withBad, idx, "vec_id", "embedding", 0.4).collect())).foreach {
+        case (path, run) =>
+          val e = intercept[Exception](run())
+          assert(causeMentions(e, "LSH signatures", "embedding column 'embedding'",
+            "non-null with one fixed dimension"), s"$path, $what: $e")
+      }
+    }
+  }
+
   test("MIH band-ball screen: complete at 2·bands−1; exact-band provably misses spread pairs") {
     val codes = mihCodes
     val fresh = codes.keySet.filter(_ % 8 == 0)

@@ -137,6 +137,11 @@ class GraftExtensionsSpec extends SparkSpec {
       ("gear_chunk_ends", () => { NativeFunctions.gearChunkEnds(s, col("p"), 6); () },
         Seq(Literal.create(Array.empty[Byte], BinaryType), one),
         _.isInstanceOf[GearChunkEnds]),
+      ("json_array_elements", () => { NativeFunctions.jsonArrayElements(s, col("c")); () },
+        Seq(Literal("[]")), _.isInstanceOf[JsonArrayElements]),
+      ("geojson_feature", () => { NativeFunctions.geoJsonFeature(s, col("h"), col("g")); () },
+        Seq(Literal("{}"), Literal.create(null, graft.model.GeoSchemas.geometry)),
+        _.isInstanceOf[GeoJsonFeature]),
       ("graft_bloom_agg", bloom, Seq(long, long, long),
         _.isInstanceOf[BloomFilterAggregate]),
       ("graft_might_contain", bloom, Seq(Literal.create(null, BinaryType), long),

@@ -93,4 +93,36 @@ class HttpSinkSpec extends SparkSpec {
       })
     }
   }
+
+  test("pretty-printed coordinates: every writeJsonLines and jsonl-http record is one JSON line, coordinates value-equal") {
+    import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+    val mapper = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+    val point = "[\n  -105.50,\r\n  39.70\n]"
+    val multi = "[\r\n [[1.0, 2e1],\n  [3,4]],\n [[5, 6]]\n]"
+    val page = Seq("p" -> ("Point", point), "m" -> ("MultiLineString", multi)).map {
+      case (id, (t, c)) =>
+        s"""{"type":"Feature","properties":{"id":"$id"},"geometry":{"type":"$t","coordinates":$c}}"""
+    }.mkString("{\"features\":[\n", ",\n", "\n]}")
+    val expected = Map("p" -> mapper.readTree(point),
+      "m-0" -> mapper.readTree(multi).get(0), "m-1" -> mapper.readTree(multi).get(1))
+    val out = graft.operators.CotripOps.pipeline(
+      graft.sources.CotripSource.fromPages(spark, Seq(page)), graft.model.TaskConfig("t"))
+    def check(sink: String, records: Seq[String]): Unit = {
+      assert(records.size === 3, s"$sink: $records")
+      val coords = records.map { r =>
+        assert(!r.contains('\n') && !r.contains('\r'), s"$sink: $r")
+        val node = scala.util.Try(mapper.readTree(r)).getOrElse(fail(s"$sink: not JSON: $r"))
+        node.get("id").asText() -> node.get("geometry").get("coordinates")
+      }.toMap
+      assert(coords === expected, sink)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").resolve("out").toString
+    graft.sinks.FeatureCollectionSink.writeJsonLines(out, dir)
+    check("writeJsonLines", spark.read.text(dir).collect().map(_.getString(0)).toSeq)
+    withServer { (endpoint, recorded) =>
+      graft.sinks.FeatureCollectionSink.featureJson(out).toDF("json")
+        .write.format("jsonl-http").option("endpoint", endpoint).mode("append").save()
+      check("jsonl-http", recorded.synchronized(recorded.flatMap(_.body.split("\n")).toVector))
+    }
+  }
 }

@@ -329,6 +329,61 @@ class NativeFunctionsSpec extends SparkSpec {
     assert(cn === Seq("\u4f60\u597d", "\u597d\u4e16", "\u4e16\u754c"))
   }
 
+  test("json_array_elements: exact top-level slices; strings unescaped, nulls null; non-arrays and malformed text null") {
+    val arrays = Seq(
+      "[[39.50,1e2],[-0.0,10000000.0]]" -> Seq("[39.50,1e2]", "[-0.0,10000000.0]"),
+      "[[[1,2],[3,4]],[[5,6]]]" -> Seq("[[1,2],[3,4]]", "[[5,6]]"),
+      " [ [1, 2] ,\n[3,4]\t] " -> Seq("[1, 2]", "[3,4]"),
+      """["a\"b", "caf\u00e9\n", null, 1, {"k":[1]}, true]""" ->
+        Seq("a\"b", "caf\u00e9\n", null, "1", """{"k":[1]}""", "true"),
+      "[]" -> Seq(), " [ ] " -> Seq(),
+      ("[" * 1000) + ("]" * 1000) -> Seq(("[" * 999) + ("]" * 999)))
+    val notArrays = Seq(null, "", "  ", "null", "1", "\"[1]\"", """{"a":[1]}""",
+      "[1,,2]", "[1,2", "]", "1e", "[1e]", "[01]", "[1,]", "[,1]", "[1 2]", "[1] x", "[1][2]",
+      "[NaN]", "['a']", "[\"a\\x\"]", "[\"a\nb\"]", "[-]", "[1.]", "[tru]",
+      "\uFEFF[1]", "[\u0000]\u0000", "[/*c*/1]",
+      ("[" * 1001) + ("]" * 1001))
+    val cases = arrays.map { case (t, parts) => t -> Some(parts) } ++ notArrays.map(_ -> None)
+    // codegen'd: the projection sits above an exchange, not a foldable literal
+    val viaCodegen = cases.map(_._1).toDF("t").repartition(1)
+      .select(col("t"), NativeFunctions.jsonArrayElements(spark, col("t")).as("parts"))
+      .collect().map(r => Option(r.getString(0)) -> Option(r.getSeq[String](1))).toMap
+    cases.foreach { case (t, want) =>
+      assert(viaCodegen(Option(t)) === want, s"codegen: $t")
+      val interpreted = graft.functions.JsonArrayElements(
+        Literal.create(t, org.apache.spark.sql.types.StringType)).eval(null)
+      assert(Option(interpreted).map(_.asInstanceOf[ArrayData].toSeq[AnyRef](
+        org.apache.spark.sql.types.StringType).map(s => Option(s).map(_.toString).orNull)) === want,
+        s"interpreted: $t")
+    }
+  }
+
+  test("geojson_feature: array coordinates verbatim minus outside whitespace, any other text a to_json-escaped string") {
+    val odd = "q\"b\\s\b\f\n\r\t\u0001\u001f caf\u00e9 \u4f60 \u2028/"
+    val compact = Map("[1.50, 2e1]" -> "[1.50,2e1]",
+      "[\r\n [\"a b\\\" c\" , 1e2],\n\t[]\n]" -> "[[\"a b\\\" c\",1e2],[]]")
+    val df = (compact.keys.toSeq.map(_ -> odd) ++
+        Seq((odd, "Point"), ("[1,,2]", null), (null, "Point")))
+      .toDF("c", "t").repartition(1)
+    val got = df.select(col("c"), col("t"),
+        NativeFunctions.geoJsonFeature(spark, lit("""{"id":"x"}"""),
+          struct(col("t").as("type"), col("c").as("coordinates"))).as("j"),
+        to_json(struct(col("t"), col("c")), java.util.Map.of("ignoreNullFields", "false")).as("quoted"))
+      .collect()
+    got.foreach { r =>
+      val (c, quoted) = (r.getString(0), r.getString(3))
+      // to_json's own escaping of both members, with the array spliced raw
+      val viaToJson = quoted.replace("\"t\":", "\"type\":").replace(",\"c\":", ",\"coordinates\":")
+      val expected = """{"id":"x","geometry":""" + compact.get(c).fold(viaToJson)(raw =>
+        viaToJson.substring(0, viaToJson.indexOf(",\"coordinates\":")) +
+          ",\"coordinates\":" + raw + "}") + "}"
+      assert(r.getString(2) === expected, String.valueOf(c))
+    }
+    val nullGeometry = graft.functions.GeoJsonFeature(Literal("{}"),
+      Literal.create(null, graft.model.GeoSchemas.geometry)).eval(null)
+    assert(nullGeometry.toString === """{"geometry":null}""")
+  }
+
   test("pq_codes: fused loop bit-matches the struct-argmax forest incl. edges") {
     // the forest form pqCodeCols replaced (optimization r21): per subspace
     // argmax of plain dot with ties to the lowest cid, null/short windows

@@ -45,6 +45,30 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("Exchange"), s"conformance path must not shuffle:\n$plan")
   }
 
+  test("cotrip-pages → pipeline → sink: no from_json or regexp_replace; the explode is whole-stage codegen'd") {
+    import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val pages = java.nio.file.Files.createTempDirectory("cotrip-plan")
+    CotripQueries.fixturePages.zipWithIndex.foreach { case (body, i) =>
+      java.nio.file.Files.writeString(pages.resolve(f"page-$i%03d.json"), body)
+    }
+    val json = FeatureCollectionSink.featureJson(CotripOps.pipeline(
+      CotripSource.fromDsv2(spark, Map("mode" -> "fixture", "path" -> pages.toString)),
+      TaskConfig("t")))
+    json.collect()
+    val plan = json.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val text = plan.toString
+    assert(!text.contains("from_json") && !text.contains("regexp_replace"), text)
+    val fused = plan.collect { case w: WholeStageCodegenExec =>
+      w.child.collect { case g: GenerateExec => g } }.flatten
+    assert(fused.size === 1 && plan.collect { case g: GenerateExec => g }.size === 1,
+      s"the explode's Generate must sit inside a codegen stage:\n$text")
+    assert(text.linesIterator.exists(_.matches("""\s*[+:\- ]*\*\(\d+\) Generate .*""")), text)
+  }
+
   test("s01: top-k aggregates partially before the shuffle (ObjectHashAggregate x2)") {
     val plan = physicalPlan("s01_sim_topk_agg")
     val aggs = "ObjectHashAggregate".r.findAllIn(plan).size

@@ -120,6 +120,29 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("streaming embedding screen: a null vector, a null element or a 63-dim fresh vector fails naming the column") {
+    import graft.streaming.ScreenStream
+    val good = embs.filter(col("vec_id") % 8 === 0).select("vec_id", "embedding")
+    val idx = graft.operators.Dedup.writeEmbeddingSignatureIndex(
+      embs.filter(col("vec_id") % 8 =!= 0), "vec_id", "embedding", "emb_idx_stream_contract")
+    Seq("null vector" -> lit(null).cast("array<float>"),
+      "null element" -> transform(col("embedding"),
+        (x, i) => when(i === 0, lit(null).cast("float")).otherwise(x)),
+      "63-dim vector" -> slice(col("embedding"), 1, 63)).zipWithIndex.foreach {
+      case ((what, vec), i) =>
+        val fresh = java.nio.file.Files.createTempDirectory("lsh_contract").toString
+        good.unionByName(good.limit(1)
+            .select(lit(900001L).as("vec_id"), vec.as("embedding")))
+          .write.parquet(s"$fresh/embeddings.parquet")
+        val e = intercept[Exception](EventsStream.runAvailableNow(
+          ScreenStream.screenEmbeddings(ScreenStream.readEmbeddings(spark, fresh),
+            idx, "vec_id", "embedding", 0.4),
+          s"stream_lsh_contract_$i", outputMode = "append"))
+        assert(causeMentions(e, "LSH signatures", "embedding column 'embedding'",
+          "non-null with one fixed dimension"), s"$what: $e")
+    }
+  }
+
   test("streaming gear-CDC screen == batch gear screen; shifted copies pair live") {
     import graft.streaming.ScreenStream
     import graft.operators.Multimodal

@@ -84,13 +84,14 @@ class TestdataCanarySpec extends SparkSpec {
     test(s"canary: $table reads with the expected shape") {
       // the engine's own reader path: events goes through the adaptive
       // helper exactly as every query does
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/$table.parquet")
-      checkSchema(table, raw, cols)
-      // decode a row through EVERY column (schema can be fine while a
-      // page is unreadable; limit(1) keeps it metadata-cheap)
-      val row = raw.limit(1).collect()
-      assert(row.length === 1, s"$table: could not materialize a row")
+      GraftSession.withConf(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+        val raw = spark.read.parquet(s"$dir/$table.parquet")
+        checkSchema(table, raw, cols)
+        // decode a row through EVERY column (schema can be fine while a
+        // page is unreadable; limit(1) keeps it metadata-cheap)
+        val row = raw.limit(1).collect()
+        assert(row.length === 1, s"$table: could not materialize a row")
+      }
       if (table == "events") {
         val adapted = Q.events(spark, dir)
         assert(adapted.schema("ts").dataType === TimestampType,
