@@ -4,14 +4,17 @@ import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.core.{JsonParser, JsonToken}
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain,
+  Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit, typedlit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the numeric hot path (SURVEY §4.2: custom
@@ -1122,51 +1125,125 @@ object GeoJsonFeature {
   }
 }
 
+/** One native SQL function as both registration routes see it: its name,
+  * the argument counts it accepts, probe arguments it builds from, and the
+  * builder. A registered builder gets whatever argument list the query
+  * wrote, and an unchecked `exprs(i)` surfaces as IndexOutOfBoundsException
+  * — or worse, silently ignores an argument (ADVICE r11:
+  * `gear_chunk_ends(payload, maskBits, minSize)` dropped minSize). So the
+  * builder checks the count first and raises the standard WRONG_NUM_ARGS
+  * AnalysisException naming the function, on either route.
+  */
+final class NativeFunction private[functions] (val name: String, arities: Seq[Int],
+    val probe: Seq[Expression], build: Seq[Expression] => Expression) {
+  val builder: Seq[Expression] => Expression = { exprs =>
+    if (!arities.contains(exprs.length))
+      throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+        messageParameters = Map(
+          "functionName" -> s"`$name`",
+          "expectedNum" -> arities.mkString(" or "),
+          "actualNum" -> exprs.length.toString,
+          "docroot" -> "https://spark.apache.org/docs/latest"))
+    build(exprs)
+  }
+}
+
 object NativeFunctions {
+
+  private val vecProbe = Literal.create(Array(0.0), ArrayType(DoubleType, containsNull = false))
+  private val intProbe = Literal(1)
+  private val longProbe = Literal(0L)
+
+  private def fn(name: String, arities: Int*)(probe: Expression*)(
+      build: Seq[Expression] => Expression) = new NativeFunction(name, arities, probe, build)
+
+  private val dotProductFn = fn("dot_product", 2)(vecProbe, vecProbe)(
+    e => DotProduct(e(0), e(1)))
+  private val wordShinglesFn = fn("word_shingles", 2)(
+    Literal.create(Array("a"), ArrayType(StringType)), intProbe)(
+    e => WordShingles(e(0), intConstArg("word_shingles", "k", e(1))))
+  private val charQgramsFn = fn("char_qgrams", 2)(Literal.create("a", StringType), intProbe)(
+    e => CharQgrams(e(0), intConstArg("char_qgrams", "q", e(1))))
+  private val logLinCodeFn = fn("log_lin_code", 1)(Literal(1.0))(e => LogLinCode(e(0)))
+  private val jsonArrayElementsFn = fn("json_array_elements", 1)(Literal("[]"))(
+    e => JsonArrayElements(e(0)))
+  private val geoJsonFeatureFn = fn("geojson_feature", 2)(
+    Literal("{}"), Literal.create(null, graft.model.GeoSchemas.geometry))(
+    e => GeoJsonFeature(e(0), e(1)))
+  private val hyperplaneSignaturesFn = fn("hyperplane_signatures", 4)(
+    vecProbe, vecProbe, intProbe, intProbe)(e => HyperplaneSignatures(e(0), e(1),
+    intConstArg("hyperplane_signatures", "planesPerTable", e(2)),
+    intConstArg("hyperplane_signatures", "tables", e(3))))
+  private val pqCodesFn = fn("pq_codes", 4)(vecProbe, vecProbe, intProbe, intProbe)(
+    e => PqCodes(e(0), e(1), intConstArg("pq_codes", "subspaces", e(2)),
+      intConstArg("pq_codes", "k", e(3))))
+  private val nearestCentroidCosFn = fn("nearest_centroid_cos", 3)(
+    vecProbe, vecProbe, vecProbe)(e => NearestCentroid(e(0), e(1), e(2), useVnorm = true))
+  private val nearestCentroidDotFn = fn("nearest_centroid_dot", 3)(
+    vecProbe, vecProbe, vecProbe)(e => NearestCentroid(e(0), e(1), e(2), useVnorm = false))
+  private val gearChunkEndsFn = fn("gear_chunk_ends", 2, 4)(
+    Literal.create(Array.empty[Byte], BinaryType), intProbe) { e =>
+    val maskBits = intConstArg("gear_chunk_ends", "maskBits", e(1))
+    if (e.length == 4)
+      GearChunkEnds(e(0), maskBits, intConstArg("gear_chunk_ends", "minSize", e(2)),
+        intConstArg("gear_chunk_ends", "maxSize", e(3)))
+    else GearChunkEnds(e(0), maskBits)
+  }
+  // Spark's runtime-filter pair under graft_ names (see [[bloomAggBytes]])
+  private val bloomAggFn = fn("graft_bloom_agg", 3)(longProbe, longProbe, longProbe)(
+    e => new BloomFilterAggregate(e(0), e(1), e(2)))
+  private val mightContainFn = fn("graft_might_contain", 2)(
+    Literal.create(null, BinaryType), longProbe)(e => BloomFilterMightContain(e(0), e(1)))
+  private[functions] val hilbertKeyFn = fn("hilbert_key", 3)(
+    Literal(1L), Literal(1L), Literal(4))(
+    e => HilbertIndex(e(0), e(1), intConstArg("hilbert_key", "bits", e(2))))
+
+  /** Every native SQL function, read by both registration routes: the lazy
+    * [[ensure]] of the Column helpers and [[graft.GraftExtensions]].
+    */
+  private[graft] val table: Seq[NativeFunction] = Seq(dotProductFn, wordShinglesFn,
+    charQgramsFn, logLinCodeFn, jsonArrayElementsFn, geoJsonFeatureFn,
+    hyperplaneSignaturesFn, pqCodesFn, nearestCentroidCosFn, nearestCentroidDotFn,
+    gearChunkEndsFn, bloomAggFn, mightContainFn, hilbertKeyFn)
 
   /** Idempotent, atomic session registration of one native function: the
     * check and the registration run under the registry's own lock, so
     * concurrent first-use threads cannot interleave them. Skips only when
-    * `name` already RESOLVES TO OURS — `ours` holds for the expression the
-    * registered builder makes from the `probe` arguments (this avoids the
+    * the name already RESOLVES TO OURS — what it resolves to for the probe
+    * arguments equals what `f` builds from them (this avoids the
     * re-registration WARN every operator call would otherwise log). A
     * same-named foreign function gets replaced, so the operators can never
     * silently compute through someone else's implementation.
-    * [[graft.GraftExtensions]] is the config-time alternative.
     */
-  private def ensure(spark: SparkSession, name: String, probe: Expression*)(
-      ours: Expression => Boolean)(builder: Seq[Expression] => Expression): Unit = {
+  private[graft] def ensure(spark: SparkSession, f: NativeFunction): Unit = {
     val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
+    val ident = FunctionIdentifier(f.name)
     registry.synchronized {
       val isOurs = registry.functionExists(ident) &&
-        (try ours(registry.lookupFunction(ident, probe)) catch { case _: Throwable => false })
-      if (!isOurs) registry.createOrReplaceTempFunction(name, builder, "built-in")
+        (try registry.lookupFunction(ident, f.probe) == f.builder(f.probe)
+         catch { case _: Throwable => false })
+      if (!isOurs) registry.createOrReplaceTempFunction(f.name, f.builder, "built-in")
     }
   }
 
-  // probe arguments for [[ensure]]
-  private val vecProbe = org.apache.spark.sql.catalyst.expressions.Literal.create(
-    Array(0.0), ArrayType(DoubleType, containsNull = false))
-  private val intProbe = org.apache.spark.sql.catalyst.expressions.Literal(1)
+  /** `f` applied to `args`, registering it first. */
+  private[functions] def call(spark: SparkSession, f: NativeFunction, args: Column*): Column = {
+    ensure(spark, f)
+    call_function(f.name, args: _*)
+  }
 
   /** Registration of `dot_product` and `word_shingles` (both exposed to
     * SQL too) — see [[ensure]].
     */
   def register(spark: SparkSession): Unit = {
-    ensure(spark, "dot_product", vecProbe, vecProbe)(_.isInstanceOf[DotProduct])(
-      exprs => DotProduct(exprs(0), exprs(1)))
-    ensure(spark, "word_shingles", org.apache.spark.sql.catalyst.expressions
-      .Literal.create(Array("a"), ArrayType(org.apache.spark.sql.types.StringType)),
-      intProbe)(_.isInstanceOf[WordShingles]) { exprs =>
-      requireArity("word_shingles", Seq(2), exprs.length)
-      WordShingles(exprs(0), intConstArg("word_shingles", "k", exprs(1)))
-    }
+    ensure(spark, dotProductFn)
+    ensure(spark, wordShinglesFn)
   }
 
   def dotProduct(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)
-    call_function("dot_product", a, b)
+    call_function(dotProductFn.name, a, b)
   }
 
   /** k-word shingles via the fused native loop (registered by
@@ -1178,7 +1255,7 @@ object NativeFunctions {
   def wordShinglesFused(spark: SparkSession, toks: Column, k: Int): Column = {
     register(spark)
     org.apache.spark.sql.functions.coalesce(
-      call_function("word_shingles", toks, lit(k)),
+      call_function(wordShinglesFn.name, toks, lit(k)),
       typedlit(Array.empty[String]))
   }
 
@@ -1189,75 +1266,40 @@ object NativeFunctions {
     * `[null]` for a null input (call sites filter nulls upstream; the
     * edge stays bit-identical anyway).
     */
-  def charQgramsFused(spark: SparkSession, s: Column, q: Int): Column = {
-    registerCharQgrams(spark)
+  def charQgramsFused(spark: SparkSession, s: Column, q: Int): Column =
     org.apache.spark.sql.functions.when(s.isNull,
       org.apache.spark.sql.functions.array(s))
-      .otherwise(call_function("char_qgrams", s, lit(q)))
-  }
-
-  private def registerCharQgrams(spark: SparkSession): Unit =
-    ensure(spark, "char_qgrams", org.apache.spark.sql.catalyst.expressions
-      .Literal.create("a", org.apache.spark.sql.types.StringType),
-      intProbe)(_.isInstanceOf[CharQgrams]) { exprs =>
-      requireArity("char_qgrams", Seq(2), exprs.length)
-      CharQgrams(exprs(0), intConstArg("char_qgrams", "q", exprs(1)))
-    }
+      .otherwise(call(spark, charQgramsFn, s, lit(q)))
 
   /** Log-linear sketch code via the native expression (registers on first
     * use; see [[LogLinCode]] — the hot-path form of
     * [[graft.operators.Sketches.logLinCode]]).
     */
-  def logLinCode(spark: SparkSession, v: Column): Column = {
-    registerLogLin(spark)
-    call_function("log_lin_code", v)
-  }
-
-  private def registerLogLin(spark: SparkSession): Unit =
-    ensure(spark, "log_lin_code",
-      org.apache.spark.sql.catalyst.expressions.Literal(1.0))(
-      _.isInstanceOf[LogLinCode])(exprs => LogLinCode(exprs(0)))
+  def logLinCode(spark: SparkSession, v: Column): Column = call(spark, logLinCodeFn, v)
 
   /** The top-level elements of a JSON array text as exact slices (registers
     * on first use; see [[JsonArrayElements]]).
     */
-  def jsonArrayElements(spark: SparkSession, text: Column): Column = {
-    ensure(spark, "json_array_elements",
-      org.apache.spark.sql.catalyst.expressions.Literal("[]"))(
-      _.isInstanceOf[JsonArrayElements]) { exprs =>
-      requireArity("json_array_elements", Seq(1), exprs.length)
-      JsonArrayElements(exprs(0))
-    }
-    call_function("json_array_elements", text)
-  }
+  def jsonArrayElements(spark: SparkSession, text: Column): Column =
+    call(spark, jsonArrayElementsFn, text)
 
   /** A GeoJSON feature line with verbatim coordinates (registers on first
     * use; see [[GeoJsonFeature]]): `head` is the feature's other members
     * as a JSON object text.
     */
-  def geoJsonFeature(spark: SparkSession, head: Column, geometry: Column): Column = {
-    ensure(spark, "geojson_feature",
-      org.apache.spark.sql.catalyst.expressions.Literal("{}"),
-      org.apache.spark.sql.catalyst.expressions.Literal.create(null, graft.model.GeoSchemas.geometry))(
-      _.isInstanceOf[GeoJsonFeature]) { exprs =>
-      requireArity("geojson_feature", Seq(2), exprs.length)
-      GeoJsonFeature(exprs(0), exprs(1))
-    }
-    call_function("geojson_feature", head, geometry)
-  }
+  def geoJsonFeature(spark: SparkSession, head: Column, geometry: Column): Column =
+    call(spark, geoJsonFeatureFn, head, geometry)
 
   /** All `tables` LSH signatures of `vec` against the flattened row-major
     * plane matrix, as one fused-loop column (see [[HyperplaneSignatures]]).
     */
   def hyperplaneSignatures(spark: SparkSession, vec: Column,
                            flatPlanes: Array[Double],
-                           planesPerTable: Int, tables: Int): Column = {
-    registerSignatures(spark)
+                           planesPerTable: Int, tables: Int): Column =
     // typedlit: containsNull=false element type (lit() declares true), so
     // the fused loop's per-element null branch keys off the vector side only
-    call_function("hyperplane_signatures", vec, typedlit(flatPlanes),
+    call(spark, hyperplaneSignaturesFn, vec, typedlit(flatPlanes),
       lit(planesPerTable), lit(tables))
-  }
 
   /** All product-quantization subspace codes by the fused argmax loop
     * (see [[PqCodes]]): `cbs` is the per-subspace codebook array
@@ -1265,111 +1307,27 @@ object NativeFunctions {
     * struct-argmax form's all-zero codes.
     */
   def pqCodes(spark: SparkSession, vec: Column,
-              cbs: Seq[Array[Array[Double]]]): Column = {
-    registerPqCodes(spark)
+              cbs: Seq[Array[Array[Double]]]): Column =
     org.apache.spark.sql.functions.coalesce(
-      call_function("pq_codes", vec, typedlit(cbs.flatten.flatten.toArray),
+      call(spark, pqCodesFn, vec, typedlit(cbs.flatten.flatten.toArray),
         lit(cbs.length), lit(cbs.head.length)),
       typedlit(Array.fill(cbs.length)(0L)))
-  }
-
-  private def registerPqCodes(spark: SparkSession): Unit =
-    ensure(spark, "pq_codes", vecProbe, vecProbe, intProbe, intProbe)(
-      _.isInstanceOf[PqCodes]) { exprs =>
-      requireArity("pq_codes", Seq(4), exprs.length)
-      PqCodes(exprs(0), exprs(1),
-        intConstArg("pq_codes", "subspaces", exprs(2)),
-        intConstArg("pq_codes", "k", exprs(3)))
-    }
 
   /** Nearest-centroid id by the fused argmax loop (see [[NearestCentroid]]).
     * `useVnorm = true` is the cosine-assignment form; `false` the k-means
     * iteration form (vnorm factored out, zero-norm seeds pinned to -∞).
+    * Registers both forms.
     */
   def nearestCentroid(spark: SparkSession, vec: Column,
                       flatCents: Array[Double], norms: Array[Double],
                       useVnorm: Boolean): Column = {
-    registerNearest(spark)
+    ensure(spark, nearestCentroidCosFn)
+    ensure(spark, nearestCentroidDotFn)
     // typedlit (containsNull=false): keeps the argmax loop branch-free —
     // the null-element guard compiles in only for genuinely nullable args
-    call_function(
-      if (useVnorm) "nearest_centroid_cos" else "nearest_centroid_dot",
+    call_function((if (useVnorm) nearestCentroidCosFn else nearestCentroidDotFn).name,
       vec, typedlit(flatCents), typedlit(norms))
   }
-
-  private def registerNearest(spark: SparkSession): Unit =
-    Seq(("nearest_centroid_cos", true), ("nearest_centroid_dot", false)).foreach {
-      case (name, useVnorm) =>
-        ensure(spark, name, vecProbe, vecProbe, vecProbe) {
-          case NearestCentroid(_, _, _, u) => u == useVnorm
-          case _ => false
-        }(exprs => NearestCentroid(exprs(0), exprs(1), exprs(2), useVnorm))
-    }
-
-  /** Resolve a knob argument of `hyperplane_signatures` to its Int value at
-    * function-build time (the knobs shape the expression, so they must be
-    * plan constants). A bare `exprs(i).eval().asInstanceOf[Int]` threw an
-    * unreadable unbound-attribute UnsupportedOperationException on column
-    * arguments and a ClassCastException on LONG literals (ADVICE r9); this
-    * raises the standard NON_FOLDABLE_ARGUMENT AnalysisException instead.
-    */
-  /** Arity check for SQL-registered builders: `createOrReplaceTempFunction`
-    * hands the builder whatever argument list the query wrote, and an
-    * unchecked `exprs(i)` surfaces as IndexOutOfBoundsException — or worse,
-    * silently ignores an argument when a fallback branch matches (ADVICE
-    * r11: `gear_chunk_ends(payload, maskBits, minSize)` dropped minSize).
-    * Raises the standard WRONG_NUM_ARGS AnalysisException instead.
-    */
-  private[graft] def requireArity(funcName: String, allowed: Seq[Int],
-                                  actual: Int): Unit =
-    if (!allowed.contains(actual))
-      throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        messageParameters = Map(
-          "functionName" -> s"`$funcName`",
-          "expectedNum" -> allowed.mkString(" or "),
-          "actualNum" -> actual.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-
-  private[graft] def intConstArg(funcName: String, paramName: String,
-                                 e: org.apache.spark.sql.catalyst.expressions.Expression): Int = {
-    def fail() = throw new org.apache.spark.sql.AnalysisException(
-      errorClass = "NON_FOLDABLE_ARGUMENT",
-      messageParameters = Map(
-        "funcName" -> s"`$funcName`",
-        "paramName" -> s"`$paramName`",
-        "paramType" -> "\"INT\""))
-    e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(i: Int, IntegerType) => i
-      case other if other.foldable && other.dataType == IntegerType =>
-        other.eval() match {
-          case i: java.lang.Integer => i.intValue
-          case _ => fail()
-        }
-      case _ => fail()
-    }
-  }
-
-  private def registerSignatures(spark: SparkSession): Unit =
-    ensure(spark, "hyperplane_signatures", vecProbe, vecProbe, intProbe,
-      intProbe)(_.isInstanceOf[HyperplaneSignatures])(exprs =>
-      HyperplaneSignatures(exprs(0), exprs(1),
-        intConstArg("hyperplane_signatures", "planesPerTable", exprs(2)),
-        intConstArg("hyperplane_signatures", "tables", exprs(3))))
-
-  private def registerGear(spark: SparkSession): Unit =
-    ensure(spark, "gear_chunk_ends", org.apache.spark.sql.catalyst.expressions
-      .Literal.create(Array.empty[Byte], org.apache.spark.sql.types.BinaryType),
-      intProbe)(_.isInstanceOf[GearChunkEnds]) { exprs =>
-      requireArity("gear_chunk_ends", Seq(2, 4), exprs.length)
-      if (exprs.length == 4)
-        GearChunkEnds(exprs(0),
-          intConstArg("gear_chunk_ends", "maskBits", exprs(1)),
-          intConstArg("gear_chunk_ends", "minSize", exprs(2)),
-          intConstArg("gear_chunk_ends", "maxSize", exprs(3)))
-      else GearChunkEnds(exprs(0),
-        intConstArg("gear_chunk_ends", "maskBits", exprs(1)))
-    }
 
   /** Gear content-defined chunk end positions of a BINARY payload (see
     * [[GearChunkEnds]]); `minSize`/`maxSize` bound chunk lengths (the
@@ -1378,12 +1336,34 @@ object NativeFunctions {
     */
   def gearChunkEnds(spark: SparkSession, payload: Column, maskBits: Int,
                     minSize: Int = 1,
-                    maxSize: Int = Int.MaxValue): Column = {
-    registerGear(spark)
+                    maxSize: Int = Int.MaxValue): Column =
     if (minSize == 1 && maxSize == Int.MaxValue)
-      call_function("gear_chunk_ends", payload, lit(maskBits))
-    else call_function("gear_chunk_ends", payload, lit(maskBits),
-      lit(minSize), lit(maxSize))
+      call(spark, gearChunkEndsFn, payload, lit(maskBits))
+    else call(spark, gearChunkEndsFn, payload, lit(maskBits), lit(minSize), lit(maxSize))
+
+  /** Resolve a knob argument to its Int value at function-build time (the
+    * knobs shape the expression, so they must be plan constants). A bare
+    * `exprs(i).eval().asInstanceOf[Int]` threw an unreadable
+    * unbound-attribute UnsupportedOperationException on column arguments
+    * and a ClassCastException on LONG literals (ADVICE r9); this raises the
+    * standard NON_FOLDABLE_ARGUMENT AnalysisException instead.
+    */
+  private def intConstArg(funcName: String, paramName: String, e: Expression): Int = {
+    def fail() = throw new org.apache.spark.sql.AnalysisException(
+      errorClass = "NON_FOLDABLE_ARGUMENT",
+      messageParameters = Map(
+        "funcName" -> s"`$funcName`",
+        "paramName" -> s"`$paramName`",
+        "paramType" -> "\"INT\""))
+    e match {
+      case Literal(i: Int, IntegerType) => i
+      case other if other.foldable && other.dataType == IntegerType =>
+        other.eval() match {
+          case i: java.lang.Integer => i.intValue
+          case _ => fail()
+        }
+      case _ => fail()
+    }
   }
 
   /** Spark's own runtime-filter primitives — `BloomFilterAggregate` /
@@ -1395,20 +1375,10 @@ object NativeFunctions {
     * thresholds) can never fire: in the dedup screen the "build side" is an
     * entire small table, not a filtered one. Both expressions are
     * codegen-friendly; the sketch rides the plan as a BINARY literal and
-    * ships to executors once with the task closure.
+    * ships to executors once with the task closure. Each of the two
+    * helpers registers the pair.
     */
-  private def registerBloom(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val long = Literal(0L)
-    ensure(spark, "graft_bloom_agg", long, long, long)(
-      _.isInstanceOf[BloomFilterAggregate])(
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)))
-    ensure(spark, "graft_might_contain",
-      Literal.create(null, org.apache.spark.sql.types.BinaryType), long)(
-      _.isInstanceOf[BloomFilterMightContain])(
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)))
-  }
+  private val bloomPair = Seq(bloomAggFn, mightContainFn)
 
   /** Build a bloom filter over `hash` (a LONG column, conventionally
     * `xxhash64(...)`) across all rows of `df`, returning the serialized
@@ -1422,8 +1392,8 @@ object NativeFunctions {
     */
   def bloomAggBytes(df: org.apache.spark.sql.DataFrame, hash: Column,
                     expectedItems: Long, numBits: Long): Array[Byte] = {
-    registerBloom(df.sparkSession)
-    df.select(call_function("graft_bloom_agg", hash,
+    bloomPair.foreach(ensure(df.sparkSession, _))
+    df.select(call_function(bloomAggFn.name, hash,
         lit(expectedItems), lit(numBits)))
       .head().getAs[Array[Byte]](0)
   }
@@ -1437,7 +1407,7 @@ object NativeFunctions {
   def mightContain(spark: SparkSession, bloom: Array[Byte], hash: Column): Column =
     if (bloom == null) lit(false)
     else {
-      registerBloom(spark)
-      call_function("graft_might_contain", lit(bloom), hash)
+      bloomPair.foreach(ensure(spark, _))
+      call_function(mightContainFn.name, lit(bloom), hash)
     }
 }

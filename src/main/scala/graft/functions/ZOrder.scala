@@ -81,30 +81,8 @@ object Hilbert {
     * `pmod(col, lit(1L << bits))` — the z-order contract).
     */
   def hilbertKey(spark: org.apache.spark.sql.SparkSession, x: Column,
-                 y: Column, bits: Int = 16): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.call_function("hilbert_key", x, y,
-      lit(bits))
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier("hilbert_key")
-    val alreadyOurs = registry.functionExists(ident) &&
-      (try {
-        val one = org.apache.spark.sql.catalyst.expressions.Literal(1L)
-        val bit = org.apache.spark.sql.catalyst.expressions.Literal(4)
-        registry.lookupFunction(ident, Seq(one, one, bit))
-          .isInstanceOf[HilbertIndex]
-      } catch { case _: Throwable => false })
-    if (!alreadyOurs) {
-      registry.createOrReplaceTempFunction("hilbert_key", { exprs =>
-        NativeFunctions.requireArity("hilbert_key", Seq(3), exprs.length)
-        HilbertIndex(exprs(0), exprs(1),
-          NativeFunctions.intConstArg("hilbert_key", "bits", exprs(2)))
-      }, "built-in")
-    }
-  }
+                 y: Column, bits: Int = 16): Column =
+    NativeFunctions.call(spark, NativeFunctions.hilbertKeyFn, x, y, lit(bits))
 
   /** The oracle-side rendering: the same recurrence as `bits` chained CTE
     * stages over base relation `base` — stage columns materialize, so the

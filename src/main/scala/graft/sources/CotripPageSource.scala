@@ -195,26 +195,20 @@ final class CotripPageMicroBatchStream(options: Map[String, String],
   private val tokens =
     scala.collection.mutable.ArrayBuffer[Option[String]](None)
   private val seenTokens = scala.collection.mutable.HashSet.empty[String]
-  private var sentinel = false // last discovered page's next-offset was 'None'
+  private var sentinel = false // the last discovered page's header ended the chain
 
   /** Walk the header chain until `target` pages are discovered or the
-    * terminator appears. One GET per NEW page (the newest page's header
-    * yields the next token; its body is discarded — executors fetch it by
-    * token). Synchronized: latestOffset and planInputPartitions both
-    * discover, and the memo is the single source of token truth.
+    * terminator appears. One header-only GET per NEW page (the newest
+    * page's header yields the next token; its body is discarded unread —
+    * executors fetch it by token). Synchronized: latestOffset and
+    * planInputPartitions both discover, and the memo is the single source
+    * of token truth.
     */
   private def discoverTo(target: Long): Unit = synchronized {
     while (!sentinel && tokens.size < target) {
       if (tokens.size >= maxPages)
         throw new IllegalStateException(s"pagination exceeded maxPages=$maxPages")
-      val next = httpClient.fetch(tokens.last).nextOffset
-      next match {
-        case Some(t) if t != "None" =>
-          if (!seenTokens.add(t))
-            throw new IllegalStateException(s"pagination cycle detected at offset $t")
-          tokens += Some(t)
-        case _ => sentinel = true
-      }
+      sentinel = !probeLast()
     }
   }
 
@@ -223,16 +217,20 @@ final class CotripPageMicroBatchStream(options: Map[String, String],
     * sentinel, discovery resumes.
     */
   private def reprobeTail(): Unit = synchronized {
-    if (sentinel) {
-      httpClient.fetch(tokens.last).nextOffset match {
-        case Some(t) if t != "None" =>
-          if (!seenTokens.add(t))
-            throw new IllegalStateException(s"pagination cycle detected at offset $t")
-          tokens += Some(t)
-          sentinel = false
-        case _ => ()
-      }
+    if (sentinel) sentinel = !probeLast()
+  }
+
+  /** Read the last discovered page's header and memoize the token it hands
+    * on; false where the chain ends there ([[Page.nextToken]]).
+    */
+  private def probeLast(): Boolean = {
+    val next = Page.nextToken(httpClient.nextOffset(tokens.last))
+    next.foreach { t =>
+      if (!seenTokens.add(t))
+        throw new IllegalStateException(s"pagination cycle detected at offset $t")
+      tokens += Some(t)
     }
+    next.isDefined
   }
 
   // frozen by prepareForTriggerAvailableNow: AvailableNow must drain to the

@@ -27,9 +27,8 @@ final class PagedFetcher(client: PageClient, maxPages: Int = 10000) {
     while (continue) {
       val page = client.fetch(offset)
       bodies += page.body
-      page.nextOffset match {
-        // `'None'` string sentinel or absent header → stop (task.ts:72).
-        case Some(next) if next.nonEmpty && next != "None" =>
+      Page.nextToken(page.nextOffset) match {
+        case Some(next) =>
           if (bodies.size >= maxPages)
             throw new IllegalStateException(s"pagination exceeded maxPages=$maxPages")
           if (!seen.add(next))

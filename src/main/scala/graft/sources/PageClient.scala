@@ -5,6 +5,17 @@ package graft.sources
   */
 final case class Page(body: String, nextOffset: Option[String])
 
+object Page {
+
+  /** The offset a `next-offset` header value hands on, or None where the
+    * chain ends: an absent or empty header, or the literal `'None'`
+    * sentinel (task.ts:72, where `''` is falsy too). Every walk of the
+    * chain ends on this one rule.
+    */
+  def nextToken(header: Option[String]): Option[String] =
+    header.filter(t => t.nonEmpty && t != "None")
+}
+
 /** Pluggable page fetcher so tests inject fixture pages without HTTP
   * (SURVEY.md §7.1-2). `offset = None` means the first request, which sends no
   * `offset` query param (task.ts:64-67).
@@ -68,9 +79,20 @@ final class HttpPageClient(baseUrl: String, apiKey: String,
     val res = respond(offset)
     val (bytes, length) = PageBuffers.readAll(() => res.body())
     try Page(new String(bytes, 0, length, java.nio.charset.StandardCharsets.UTF_8),
-      Option(res.headers().firstValue("next-offset").orElse(null)))
+      nextOffsetOf(res))
     finally PageBuffers.give(bytes)
   }
+
+  /** The `next-offset` header of the page at `offset`, for a walk of the
+    * chain that needs no body: the body is discarded as it arrives, never
+    * buffered or decoded.
+    */
+  def nextOffset(offset: Option[String]): Option[String] =
+    nextOffsetOf(checked(graft.SharedHttp.send(request(offset),
+      java.net.http.HttpResponse.BodyHandlers.discarding())))
+
+  private def nextOffsetOf(res: java.net.http.HttpResponse[_]): Option[String] =
+    Option(res.headers().firstValue("next-offset").orElse(null))
 
   /** The page body as a byte stream (the `cotrip-pages` scan reads it
     * whole into a reused buffer). The caller closes it.

@@ -239,6 +239,28 @@ class Dsv2SourceSpec extends SparkSpec {
     }
   }
 
+  test("an empty next-offset header ends the chain: the batch walk and an AvailableNow stream read the same pages") {
+    // the last page sends `next-offset:` with no value; the page served at
+    // the empty offset is past the end and must never be read
+    val chain = threePages.updated(Some("200"), (threePages(Some("200"))._1, "")) +
+      (Some("") -> (s"""{"features":[${feat("z", "Point", "[9.0,9.0]")}]}""", "None"))
+    withChainServer(chain) { (base, _, _) =>
+      val cfg = TaskConfig("tok")
+      val batch = CotripOps.pipeline(
+        CotripSource.fetch(spark, new graft.sources.HttpPageClient(base, "tok")), cfg)
+        .select("id").collect().map(_.getString(0)).toSet
+      assert(batch === Set("a", "b-0", "b-1", "c"))
+      val features = spark.readStream.format("cotrip-pages")
+        .option("mode", "http").option("baseurl", base)
+        .option("apikey", "tok").load()
+      graft.streaming.EventsStream.runAvailableNow(
+        CotripOps.pipeline(features, cfg), "c05_http_sink_empty_offset")
+      val streamed = spark.table("c05_http_sink_empty_offset")
+        .select("id").collect().map(_.getString(0)).toSet
+      assert(streamed === batch)
+    }
+  }
+
   test("http stream unit: admission-controlled discovery, tail re-probe after the sentinel, restart re-walk, cycle guard") {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     import graft.sources.{CotripPageMicroBatchStream, CotripPageOffset, HttpPagePartition}

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{GraftExtensionsProbe, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -145,7 +149,9 @@ class GraftExtensionsSpec extends SparkSpec {
       ("graft_bloom_agg", bloom, Seq(long, long, long),
         _.isInstanceOf[BloomFilterAggregate]),
       ("graft_might_contain", bloom, Seq(Literal.create(null, BinaryType), long),
-        _.isInstanceOf[BloomFilterMightContain]))
+        _.isInstanceOf[BloomFilterMightContain]),
+      ("hilbert_key", () => { Hilbert.hilbertKey(s, col("x"), col("y")); () },
+        Seq(Literal(1L), Literal(2L), Literal(4)), _.isInstanceOf[HilbertIndex]))
   }
 
   private def resolves(s: org.apache.spark.sql.SparkSession, name: String,
@@ -180,5 +186,27 @@ class GraftExtensionsSpec extends SparkSpec {
     }
     assert(s.sql("SELECT dot_product(array(1.0d), array(2.0d))").head()
       .getDouble(0) === 2.0)
+  }
+
+  test("one table behind both routes: only NativeFunctions registers lazily, only GraftExtensions injects") {
+    val walk = Files.walk(Paths.get("src", "main", "scala"))
+    val scala =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally walk.close()
+    def calling(method: String): Vector[String] = scala
+      .filter(p => Files.readString(p).contains(method + "("))
+      .map(_.getFileName.toString)
+    assert(calling("createOrReplaceTempFunction") === Vector("NativeFunctions.scala"))
+    assert(calling("injectFunction") === Vector("GraftExtensions.scala"))
+    // the table holds every native function, and a registry built from
+    // GraftExtensions resolves each to graft's expression
+    assert(NativeFunctions.table.map(_.name).sorted === natives(spark).map(_._1).sorted)
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val registry = GraftExtensionsProbe.applyInjections(ext)
+    natives(spark).foreach { case (name, _, probe, ours) =>
+      assert(ours(registry.lookupFunction(FunctionIdentifier(name), probe)),
+        s"$name must resolve to graft's")
+    }
   }
 }

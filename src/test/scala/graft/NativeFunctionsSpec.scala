@@ -214,7 +214,7 @@ class NativeFunctionsSpec extends SparkSpec {
     // accepted arities instead.
     // gearChunkEnds/hilbertKey register on first Column-API use
     graft.functions.NativeFunctions.gearChunkEnds(spark, lit(Array[Byte]()), 6)
-    graft.functions.Hilbert.register(spark)
+    graft.functions.Hilbert.hilbertKey(spark, lit(1L), lit(2L))
     val threeArgGear = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT gear_chunk_ends(CAST('ab' AS BINARY), 6, 64)").collect()
     }
@@ -232,6 +232,31 @@ class NativeFunctionsSpec extends SparkSpec {
       "SELECT size(gear_chunk_ends(CAST('ab' AS BINARY), 6, 1, 64))")
       .head().getInt(0) >= 0)
     assert(spark.sql("SELECT hilbert_key(1L, 2L, 4)").head().getLong(0) >= 0L)
+    // every function in the table, on both routes: each arity from 0 to
+    // three past the probe's is either accepted or WRONG_NUM_ARGS naming the
+    // function (dot_product(array(1d)) used to be an index error on the
+    // lazy route, and dot_product(a, b, c) silently ignored c)
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val injected = org.apache.spark.sql.GraftExtensionsProbe.applyInjections(ext)
+    NativeFunctions.table.foreach(NativeFunctions.ensure(spark, _))
+    val routes = Seq("extension" -> injected, "lazy" -> spark.sessionState.functionRegistry)
+    for ((route, registry) <- routes; f <- NativeFunctions.table) {
+      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(f.name)
+      assert(registry.lookupFunction(ident, f.probe) === f.builder(f.probe), s"$route ${f.name}")
+      val accepted = (0 to f.probe.length + 3).filter { n =>
+        val args = Seq.tabulate(n)(i => f.probe(math.min(i, f.probe.length - 1)))
+        try { registry.lookupFunction(ident, args); true }
+        catch {
+          case e: org.apache.spark.sql.AnalysisException
+              if e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION" =>
+            assert(e.getMessage.contains(s"`${f.name}`"), s"$route: ${e.getMessage}")
+            false
+        }
+      }
+      val expected = if (f.name == "gear_chunk_ends") Seq(2, 4) else Seq(f.probe.length)
+      assert(accepted === expected, s"$route ${f.name}")
+    }
   }
 
   test("word_shingles: fused loop bit-matches the HOF form incl. edges") {

@@ -8,7 +8,7 @@ Files pair up by query name (the file name without its `_<suffix>.txt`).
 Before comparing, both sides mask what differs between any two runs of the
 same code: expression ids (`#123L`), whole-stage codegen ids, exchange
 `plan_id`s, adaptive query stage ids, RDD ids with their source call
-sites, and file locations.
+sites, file locations and object identity hashes.
 Prints each differing query (with its first N changed lines) and exits 1
 if any query differs or is missing on one side.
 """
@@ -26,6 +26,10 @@ MASKS = [
     # bounded: a plan can carry a huge literal (a bloom sketch) as one word
     (r"\b([A-Za-z]{1,40}RDD)\[\d+\] at (\w+) at \w+\.scala:\d+", r"\1[N] at \2 at SRC"),
     (r"file:[^\s,\]]+", "FILE"),
+    # object identity hashes: a lambda's generated class, then any instance
+    # printed by its default toString (an aggregator object in a plan)
+    (r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+", "$Lambda$N@HASH"),
+    (r"(\.[A-Za-z_$][\w$]{0,80})@[0-9a-f]{1,8}\b", r"\1@HASH"),
 ]
 
 
