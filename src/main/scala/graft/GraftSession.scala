@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session posture every main, diag and test runs under, and the
+/** The one session posture every main and test runs under, and the
   * one scoped override of runtime SQL confs.
   */
 object GraftSession {
 
-  /** Local thread count for the mains and diags: `SPARK_GRAFT_CPUS`,
+  /** Local thread count for the mains: `SPARK_GRAFT_CPUS`,
     * default 32.
     */
   lazy val envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

@@ -980,9 +980,9 @@ object Dedup {
     // projection by id ONCE (vectors are small rows; ~10 MB here) so every
     // downstream stage runs cluster-wide. At real corpus sizes the scan is
     // already wide and this is a no-op.
-    val v = Caching.persisted(widenedToCluster(
+    val v = Caching.persisted(Caching.coreWidthBy(
       vecs.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("norm", Similarity.l2norm(col("v"))), idCol))
+        .withColumn("norm", Similarity.l2norm(col("v"))), col(idCol)))
     val n = v.count()
     val (planesAdaptive, tablesAdaptive) = resolveLshKnobs(n, planesPerTable, tables)
     val dim = Similarity.vectorDim(vecs, vecCol)
@@ -1053,18 +1053,6 @@ object Dedup {
   /** Driver-side estimate of an (id, vec, norm) lookup's in-memory size. */
   private def vectorLookupBytes(n: Long, dim: Int): Long = n * (dim.toLong * 8 + 48)
 
-  /** Hash-spread `df` by `key` up to defaultParallelism when its plan is
-    * narrower — the parallelism floor for broadcast-only pipelines whose
-    * every stage otherwise inherits a single-split scan. Deterministic
-    * placement (hash partitioning, not round-robin); a no-op whenever the
-    * source is already at least cluster-wide.
-    */
-  private def widenedToCluster(df: DataFrame, key: String): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    else df.repartition(target, col(key))
-  }
-
   /** Explicit-broadcast ceiling for vector lookups (128 MB): far above
     * Spark's conservative 10 MB default — a 128 MB hashed relation is
     * routine on any executor sized for embedding work — and far below
@@ -1095,9 +1083,9 @@ object Dedup {
                                    threshold: Double, planesPerTable: Int = 0,
                                    tables: Int = 0): DataFrame = {
     graft.functions.NativeFunctions.register(fresh.sparkSession)
-    def prep(df: DataFrame) = Caching.persisted(widenedToCluster(
+    def prep(df: DataFrame) = Caching.persisted(Caching.coreWidthBy(
       df.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("norm", Similarity.l2norm(col("v"))), idCol))
+        .withColumn("norm", Similarity.l2norm(col("v"))), col(idCol)))
     val vf = prep(fresh)
     val vc = prep(corpus)
     // bucket occupancy is governed by the STANDING side: adapt to corpus n
@@ -1297,9 +1285,9 @@ object Dedup {
                                        threshold: Double): DataFrame = {
     val spark = fresh.sparkSession
     graft.functions.NativeFunctions.register(spark)
-    val vf = Caching.persisted(widenedToCluster(
+    val vf = Caching.persisted(Caching.coreWidthBy(
       fresh.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("norm", Similarity.l2norm(col("v"))), idCol))
+        .withColumn("norm", Similarity.l2norm(col("v"))), col(idCol)))
     val nFresh = vf.count()
     val dimFresh = Similarity.vectorDim(fresh, vecCol)
     require(dimFresh == index.dim || nFresh == 0,

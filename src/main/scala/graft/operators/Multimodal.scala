@@ -184,7 +184,7 @@ object Multimodal {
     // payload-carrying media rows to core width costs a full shuffle of
     // the bytes for a projection evaluated ONCE — m12/m13/m14 read 1.3–2×
     // SLOWER with the pin than at scan width. The width-pin pattern pays
-    // on narrow rows reused across iterations (Similarity.trainWidth);
+    // on narrow rows reused across iterations (Similarity.kmeansCentroids);
     // payload scans parallelize by split size instead.
     gearSpans(media, maskBits, minSize, maxSize, Seq("payload"))
       .select(col("doc_id"), col("chunk_no").cast("long").as("chunk_no"),

@@ -288,21 +288,15 @@ object Similarity {
     *  - assignment ranks by dot(v,c)/‖c‖ — ‖v‖ is constant per vector so
     *    the argmax is the cosine argmax without the extra fold.
     * Empty clusters keep their previous centroid.
+    *
+    * The training projection is core-width pinned ([[Caching.coreWidth]],
+    * optimization r21): the per-iteration partial-sum pass is CPU-dense
+    * per row (exact BigDecimal component sums), and a small corpus reads
+    * as ONE scan split — so every training job ran its map stage as one
+    * task (measured: ~300–500 ms/iteration at sf0.1, the whole cost of the
+    * PQ family). Partitioning cannot perturb results: the partial sums are
+    * exact and their merge is associative+commutative by construction.
     */
-  /** Width-pin for the TRAINING projection both Lloyd trainers iterate
-    * over (optimization r21, guide §2.5 / the `verifyWidthCands` pattern):
-    * the per-iteration partial-sum pass is CPU-dense per row (exact
-    * BigDecimal component sums), and a small corpus reads as ONE scan
-    * split — so every training job ran its map stage as one task
-    * (measured: ~300–500 ms/iteration at sf0.1, the whole cost of the PQ
-    * family). Repartition to core width ONLY when the scan is narrower
-    * than the cluster (a corpus-scale scan is already wide; down-shuffling
-    * it would be a regression). Partitioning cannot perturb results: the
-    * partial sums are exact and their merge is associative+commutative by
-    * construction.
-    */
-  private def trainWidth(df: DataFrame): DataFrame = Caching.coreWidth(df)
-
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                       k: Int = 16, iters: Int = 3): Array[Array[Double]] = {
     graft.functions.NativeFunctions.register(corpus.sparkSession)
@@ -310,7 +304,7 @@ object Similarity {
     // already cached (repeated training in one session), the unpersist in
     // `finally` releases that shared entry — acceptable, since the corpus
     // projection is rebuilt (and re-guarded) by any later caller.
-    val v = Caching.persisted(trainWidth(
+    val v = Caching.persisted(Caching.coreWidth(
       corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))))
     try {
       var cents: Array[Array[Double]] =
@@ -1385,8 +1379,8 @@ object Similarity {
       s"pqCodebooks: dim $dim not divisible into $subspaces subspaces")
     val sub = dim / subspaces
     graft.functions.NativeFunctions.register(corpus.sparkSession)
-    // same core-width pin as [[kmeansCentroids]] (see [[trainWidth]])
-    val v = Caching.persisted(trainWidth(
+    // same core-width training pin as [[kmeansCentroids]]
+    val v = Caching.persisted(Caching.coreWidth(
       corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))))
     try {
       val seeds = v.orderBy("id").limit(k).collect()

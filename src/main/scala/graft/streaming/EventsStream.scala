@@ -97,6 +97,9 @@ object EventsStream {
       joinType)
   }
 
+  /** Enforces the single-runner contract of [[runAvailableNow]]. */
+  private val inFlight = new java.util.concurrent.atomic.AtomicBoolean(false)
+
   /** Checkpoint root for throwaway AvailableNow runs: tmpfs when the host
     * has one. A micro-batch commits offsets + one state-store delta per
     * shuffle partition per store, each fsync'd — on spinning/virtual disks
@@ -106,14 +109,16 @@ object EventsStream {
     * these helpers are the reference's run-to-completion-then-discard model,
     * where the checkpoint dies with the run anyway.
     */
-  /** Enforces the single-runner contract of [[runAvailableNow]]. */
-  private val inFlight = new java.util.concurrent.atomic.AtomicBoolean(false)
-
   private def ephemeralCheckpointRoot: java.nio.file.Path = {
     val shm = new java.io.File("/dev/shm")
     if (shm.isDirectory && shm.canWrite) shm.toPath
     else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
   }
+
+  /** Checkpoint manager for [[ephemeralCheckpointRoot]] checkpoints. */
+  private val ephemeralCheckpointManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileSystemBasedCheckpointFileManager"
 
   /** Run a streaming query to a named in-memory sink with AvailableNow
     * semantics (process everything present, then stop) — the direct
@@ -152,26 +157,20 @@ object EventsStream {
     try {
       val ckpt = java.nio.file.Files
         .createTempDirectory(ephemeralCheckpointRoot, "graft-ckpt-")
-      // Checkpoint-manager choice (optimization r20, measured in
-      // StreamFloorDiag): Spark's default FileContext-based manager costs
-      // ~30 ms PER metadata write even on tmpfs — offsets WAL, commit log,
-      // and every state-store delta all pay it, ~0.3–0.5 s per
-      // AvailableNow run before any data work. The FileSystem-based
-      // manager (rename-based atomicity — exactly as strong on a local
-      // filesystem, where rename is atomic) does the same writes at ~7 ms.
-      // These helpers' checkpoints are ephemeral-local by contract (tmpfs,
-      // deleted on completion), so the local-FS guarantee is the relevant
-      // one; a durable deployment on a store whose rename is not atomic
-      // should override SPARK_GRAFT_STREAM_CKPT_MANAGER (empty = keep
-      // Spark's default). Both overrides ride the single-runner lock.
-      val ckptMgr = sys.env.getOrElse("SPARK_GRAFT_STREAM_CKPT_MANAGER",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
+      // Checkpoint-manager choice (optimization r20, OPTIMIZATION_r20.md
+      // §5): Spark's default FileContext-based manager costs ~30 ms PER
+      // metadata write even on tmpfs — offsets WAL, commit log, and every
+      // state-store delta all pay it, ~0.3–0.5 s per AvailableNow run
+      // before any data work. The FileSystem-based manager (rename-based
+      // atomicity — exactly as strong on a local filesystem, where rename
+      // is atomic) does the same writes at ~7 ms. The checkpoint above is
+      // always local and ephemeral ([[ephemeralCheckpointRoot]], deleted
+      // below), so the local-FS guarantee is the only one that applies.
+      // Both overrides ride the single-runner lock.
       val shuffle = "spark.sql.shuffle.partitions"
       val width = math.min(statePartitions, spark.conf.get(shuffle).toInt).max(1)
-      val overrides = Seq(shuffle -> width.toString) ++
-        Option.when(ckptMgr.nonEmpty)(
-          "spark.sql.streaming.checkpointFileManagerClass" -> ckptMgr)
+      val overrides = Seq(shuffle -> width.toString,
+        "spark.sql.streaming.checkpointFileManagerClass" -> ephemeralCheckpointManager)
       try graft.GraftSession.withConf(spark, overrides: _*) {
         val q = df.writeStream
           .format("memory")

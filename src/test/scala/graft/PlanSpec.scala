@@ -924,4 +924,40 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin")
       || plan.contains("BroadcastHashJoin"))
   }
+
+  test("width pins: a narrow batch frame spreads to core width, a wide or streaming one passes through") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Caching
+    val helper = new AdaptiveSparkPlanHelper {}
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      helper.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores > 1)
+    val path = java.nio.file.Files.createTempDirectory("core-width").resolve("t").toString
+    spark.range(1000).coalesce(1).write.parquet(path)
+    val narrow = spark.read.parquet(path)
+    assert(narrow.rdd.getNumPartitions === 1)
+
+    val byId = Caching.coreWidthBy(narrow, col("id"))
+    assert(byId.rdd.getNumPartitions === cores)
+    exchanges(byId).map(_.outputPartitioning) match {
+      case Seq(HashPartitioning(Seq(key: org.apache.spark.sql.catalyst.expressions.Attribute), n)) =>
+        assert(key.name === "id" && n === cores)
+      case other => fail(s"expected one hash exchange on id, got $other")
+    }
+    val spread = Caching.coreWidth(narrow)
+    assert(spread.rdd.getNumPartitions === cores)
+    assert(exchanges(spread).map(_.outputPartitioning) === Seq(RoundRobinPartitioning(cores)))
+
+    val wide = spark.range(0, 1000, 1, cores).toDF()
+    assert(Caching.coreWidthBy(wide, col("id")) eq wide)
+    assert(Caching.coreWidth(wide) eq wide)
+    assert(exchanges(wide).isEmpty)
+
+    val stream = spark.readStream.format("rate").load()
+    assert(Caching.coreWidthBy(stream, col("value")) eq stream)
+  }
 }
