@@ -62,6 +62,11 @@ object ScaleSmoke {
     dir.replaceAll(".*/", "").replaceAll("[^A-Za-z0-9_]", "_") + "_" +
       graft.sources.BucketedLake.layoutSuffix(dir, 16)
 
+  /** `f`'s result and its wall time in seconds. */
+  private def timed[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
+  }
+
   private def indexAb(spark: SparkSession, dir: String,
                       work: WorkMetricsListener): Unit = {
     import org.apache.spark.sql.functions._
@@ -75,11 +80,10 @@ object ScaleSmoke {
     val dim = Similarity.vectorDim(e, "embedding")
     val tag = abTag(dir)
 
-    def timed[A](f: => A): (A, Double, WorkSnapshot) = {
+    def timedWork[A](f: => A): (A, Double, WorkSnapshot) = {
       val w0 = work.snapshot(spark.sparkContext)
-      val t0 = System.nanoTime()
-      val a = f
-      ((a, (System.nanoTime() - t0) / 1e9, work.snapshot(spark.sparkContext) - w0))
+      val (a, sec) = timed(f)
+      (a, sec, work.snapshot(spark.sparkContext) - w0)
     }
     def volume(corpusKeyed: org.apache.spark.sql.DataFrame,
                freshKeyed: org.apache.spark.sql.DataFrame,
@@ -94,7 +98,7 @@ object ScaleSmoke {
 
     // — embedding signature index (the e23/d12 family) —
     for ((label, b0, l0) <- Seq(("pinned", 4, 8), ("adaptive", 0, 0))) {
-      val (idx, buildSec, _) = timed {
+      val (idx, buildSec) = timed {
         Dedup.writeEmbeddingSignatureIndex(
           corpus, "vec_id", "embedding", s"ab_${tag}_emb_$label", b0, l0)
       }
@@ -104,11 +108,11 @@ object ScaleSmoke {
         .select(posexplode(graft.functions.NativeFunctions.hyperplaneSignatures(
           spark, col("v"), signs.flatten, idx.planesPerTable, idx.tables))
           .as(Seq("tbl", "sig")))
-      val (cand, candSec, _) = timed {
+      val (cand, candSec) = timed {
         volume(spark.table(idx.signatures), fSig, Seq("tbl", "sig"))
       }
       val (pairs, sec, w) =
-        if (cand <= fullScreenCap) timed {
+        if (cand <= fullScreenCap) timedWork {
           Dedup.incrementalEmbeddingPairsIndexed(
             fresh, idx, "vec_id", "embedding", 0.4).count()
         } else ((-1L, -1.0, WorkSnapshot(0, 0, 0, 0, 0)))
@@ -118,7 +122,7 @@ object ScaleSmoke {
     // — MIH code index (the s24 family) —
     val adaptiveBits = Similarity.adaptiveMihBandBits(n)
     for ((label, bits) <- Seq(("pinned", 8), ("adaptive", adaptiveBits))) {
-      val (idx, buildSec, _) = timed {
+      val (idx, buildSec) = timed {
         Similarity.writeMihIndex(
           corpus, "vec_id", "embedding", s"ab_${tag}_mih_$label",
           bands = 4, bandBits = bits)
@@ -126,11 +130,11 @@ object ScaleSmoke {
       val mihSigns = Similarity.hyperplaneSigns(spark, 4 * bits, idx.planeOffset, dim)
       val fBand = Similarity.mihCodeBands(fresh, "vec_id", "embedding",
         "fresh_id", "f_code", mihSigns, 4, bits)
-      val (cand, candSec, _) = timed {
+      val (cand, candSec) = timed {
         volume(spark.table(idx.codes), fBand, Seq("band", "band_val"))
       }
       val (pairs, sec, w) =
-        if (cand <= fullScreenCap) timed {
+        if (cand <= fullScreenCap) timedWork {
           Similarity.mihHammingScreenIndexed(
             fresh, idx, "vec_id", "embedding", radius = 3).count()
         } else ((-1L, -1.0, WorkSnapshot(0, 0, 0, 0, 0)))
@@ -164,9 +168,6 @@ object ScaleSmoke {
     val fresh = docs.filter(pmod(col("doc_id"), lit(10)) === 0).persist()
     val (nC, nF) = (corpus.count(), fresh.count())
     val tag = abTag(dir)
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
     val (fixedIdx, fixedBuildSec) = timed {
       Dedup.writeEditIndex(
         corpus.select(col("doc_id"), substring(col("s0"), 1, 64).as("s0")),
@@ -238,9 +239,6 @@ object ScaleSmoke {
     val corpus = docs.filter(pmod(col("doc_id"), lit(10)) < 8)
     val fresh = docs.filter(pmod(col("doc_id"), lit(10)) >= 8)
     val tag = abTag(dir)
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
     val (shIdx, idxSec) = timed {
       Dedup.writeShingleIndex(corpus, "doc_id", "text",
         Dedup.ShingleIndex(s"ab_${tag}_lblsh", s"ab_${tag}_lblshsz"))
@@ -296,9 +294,6 @@ object ScaleSmoke {
     val base = docs.filter(pmod(col("doc_id"), lit(100)) < 100 - batchPct)
     val batch = docs.filter(pmod(col("doc_id"), lit(100)) >= 100 - batchPct)
     val tag = abTag(dir) + s"_p$batchPct"
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
     val names = (2 to 4).map(k => k -> s"ab_${tag}_kngc_k$k").toMap
     names.values.foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
     val (_, buildSec) = timed {

@@ -1799,10 +1799,6 @@ object ExtensionQueries {
         "vec_id", "embedding", epoch = 1L)
   }
 
-  /** Build (once per session + sf dir) the m10 standing chunk-digest index
-    * over the non-fresh corpus (`doc_id % 10 ≠ 0` — the m09 split); chunk
-    * size and bucket count ride the naming per the layout contract.
-    */
   /** Build (once per session + sf dir) the m15 standing GEAR digest index
     * over the ORIGINAL blobs of the shifted corpus; the mask family is
     * part of the layout identity via the suffix.
@@ -1972,6 +1968,10 @@ object ExtensionQueries {
     built
   }
 
+  /** Build (once per session + sf dir) the m10 standing chunk-digest index
+    * over the non-fresh corpus (`doc_id % 10 ≠ 0` — the m09 split); chunk
+    * size and bucket count ride the naming per the layout contract.
+    */
   private def ensureChunkIndex(s: org.apache.spark.sql.SparkSession,
                                dir: String,
                                media: org.apache.spark.sql.DataFrame) = {

@@ -28,13 +28,6 @@ object BucketedLake {
       scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xFFFFFFFFL) +
       s"_b$buckets"
 
-  /** Write `df` as a bucketed+sorted-by-`key` warehouse table unless it
-    * already exists in this session's catalog. The in-memory catalog
-    * forgets tables across JVMs but the warehouse files persist; the
-    * layout is a derived cache, so stale files from earlier JVMs are
-    * cleared first (CREATE TABLE AS validates the location even in
-    * Overwrite mode).
-    */
   /** Run `write` only when `name` is absent from this session's catalog,
     * clearing any stale warehouse files an earlier JVM left at the
     * table's location first (the in-memory catalog forgets tables across
@@ -59,6 +52,13 @@ object BucketedLake {
       write
     }
 
+  /** Write `df` as a bucketed+sorted-by-`key` warehouse table unless it
+    * already exists in this session's catalog. The in-memory catalog
+    * forgets tables across JVMs but the warehouse files persist; the
+    * layout is a derived cache, so stale files from earlier JVMs are
+    * cleared first (CREATE TABLE AS validates the location even in
+    * Overwrite mode).
+    */
   private[graft] def writeBucketedTable(spark: SparkSession, name: String,
                                         df: DataFrame, key: String,
                                         buckets: Int,

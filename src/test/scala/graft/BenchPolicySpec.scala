@@ -1,9 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the bench's rep-aggregation policy ([[Bench.judgeReps]]) and the
-  * scrape-safety of the stdout summary ([[Bench.compactSummary]]).
+/** Pins the bench's rep-aggregation policy ([[Bench.judgeReps]]), the
+  * scrape-safety of the stdout summary ([[Bench.compactSummary]]), and
+  * that a bench run writes nothing into the checkout.
   *
   * Round-7 VERDICT #4: a rep faster than the trusted minimum must never be
   * discarded by calibration — contention only inflates wall time, so the
@@ -92,114 +97,15 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(!line.contains("more"))
   }
 
-  // ---- adaptive rep plan (round 18, VERDICT r17 #1) ----
-
-  test("plannedReps: new queries (thin history) get the full default") {
-    assert(Bench.plannedReps(3, Nil, Nil) === 3)
-    assert(Bench.plannedReps(3, Seq(0.1, 0.1), Seq(0.1, 0.1)) === 3)
-  }
-
-  test("plannedReps: established, band-stable history → 2 reps (cold rep + warm measure, never 1)") {
-    // the 1-rep tier was tried and measured wrong: a cold rep is ~2× the
-    // warm floor (JIT/codegen), so one rep either ships inflated or
-    // relabels the warm rep as a retry; a blanket 3rd rep is not paid —
-    // within-band noise is the documented host-throughput band, which the
-    // normalized headline absorbs and extra reps cannot fix
-    val small = Seq(0.21, 0.22, 0.20)
-    assert(Bench.plannedReps(3, small, small) === 2)
-    val withinBand = Seq(4.0, 5.8, 3.9) // spread 1.49 ≤ 2.0
-    assert(Bench.plannedReps(3, withinBand, withinBand) === 2)
-  }
-
-  test("worthChasing: needs BOTH the 1.5× relative signal and 0.5s of absolute excess") {
-    // tiny query, hugely relative but immaterial: not chased
-    assert(!Bench.worthChasing(0.55, 0.2, 1.0))
-    // big query, material excess: chased
-    assert(Bench.worthChasing(4.5, 2.0, 1.0))
-    // relative trip but excess under the bar on a slow host: not chased
-    assert(!Bench.worthChasing(0.8, 0.3, 1.2))
-    // below the relative bar, however big the absolute gap: not chased
-    assert(!Bench.worthChasing(14.0, 10.0, 1.0))
-  }
-
-  test("plannedReps: never exceeds the configured default") {
-    val h = Seq(4.0, 5.8, 3.9) // would keep 3 under default 3
-    assert(Bench.plannedReps(2, h, h) === 2)
-    assert(Bench.plannedReps(1, h, h) === 1)
-    assert(Bench.plannedReps(1, Seq(0.2, 0.2, 0.2), Seq(0.2, 0.2, 0.2)) === 1)
-  }
-
-  test("plannedReps: a >2× spread in recent normalized floors keeps the full default (ADVICE r18)") {
-    // the norm series is now load-bearing: open disagreement in the last 3
-    // host-normalized floors = the genuine variance tail → 3 base reps
-    val unstable = Seq(1.0, 2.5, 1.1)
-    assert(Bench.plannedReps(3, unstable, unstable) === 3)
-    // raw noisy but normalized stable → the host moved, not the query → 2
-    assert(Bench.plannedReps(3, Seq(1.0, 2.5, 1.1), Seq(1.0, 1.2, 1.1)) === 2)
-    // older history beyond the last 3 never triggers the full default
-    assert(Bench.plannedReps(3, Seq(9.0, 1.0, 1.1, 1.0),
-      Seq(9.0, 1.0, 1.1, 1.0)) === 2)
-  }
-
-  // ---- host-throughput normalization (round 19, VERDICT r18 #1) ----
-
-  test("normalizedSec: scales down by the rep's parallel-probe inflation, never up") {
-    // probe at 2× the floor → host granted half throughput → quiet time ≈ sec/2
-    assert(Bench.normalizedSec(10.0, 100.0, 50.0) === 5.0)
-    // probe at the floor → untouched
-    assert(Bench.normalizedSec(10.0, 50.0, 50.0) === 10.0)
-    // degenerate probes (unmeasured, zero) → raw value unchanged
-    assert(Bench.normalizedSec(10.0, 0.0, 50.0) === 10.0)
-    assert(Bench.normalizedSec(10.0, 50.0, 0.0) === 10.0)
-  }
-
-  test("normalizedMin: decoupled mins absorb a transient probe-only spike, keep sustained steal") {
-    // transient: rep1's probe spiked 2.3× (GC hit the probe, not the
-    // query) — a per-rep pairing would emit 1.016/2.29 ≈ 0.44, far below
-    // the true 0.85 floor; decoupled mins pair best wall with best probe
-    val t = Bench.normalizedMin(Seq(1.016, 0.852), Seq(85.0, 38.0), 37.1)
-    assert(t.exists(v => math.abs(v - 0.852 * 37.1 / 38.0) < 1e-9))
-    // sustained: every probe inflated 1.24× (the r18 window) → the min
-    // probe still carries the correction
-    val s = Bench.normalizedMin(Seq(2.48, 2.52), Seq(46.0, 46.5), 37.1)
-    assert(s.exists(v => math.abs(v - 2.48 * 37.1 / 46.0) < 1e-9))
-    assert(Bench.normalizedMin(Nil, Nil, 37.1).isEmpty)
-  }
-
-  test("eraRef: same-era floors only, normalized entries preferred, None when era is silent") {
-    val hist = Seq(
-      // same era (within 5% of runFloor 100): raw 2.0, no norm
-      (103.0, Map("q" -> 2.0), Map.empty[String, Double]),
-      // same era: raw 3.0 but norm 1.5 — the norm value must win
-      (98.0, Map("q" -> 3.0), Map("q" -> 1.5)),
-      // different era (fast host): its misleading 0.5 must NOT leak in
-      (80.0, Map("q" -> 0.5), Map("q" -> 0.5)))
-    assert(Bench.eraRef("q", 100.0, hist) === Some(1.5))
-    // unknown query in the era → None (caller falls back to the global gate)
-    assert(Bench.eraRef("other", 100.0, hist) === None)
-    // no era match at all → None
-    assert(Bench.eraRef("q", 200.0, hist) === None)
-    // NaN floors never match
-    assert(Bench.eraRef("q", Double.NaN, hist) === None)
-    assert(Bench.eraRef("q", 100.0,
-      Seq((Double.NaN, Map("q" -> 1.0), Map.empty[String, Double]))) === None)
-  }
-
   test("compact line with the round-20 extra fields still fits the scrape window") {
     val names = (1 to 132).map(i => f"q${i}%02d_some_long_query_name_$i")
-    val extras =
-      s""","probe_floor_ms":123.4,"probe_par_floor_ms":45.6""" +
-        s""","host_speed_x":1.234,"host_parallel_x":1.567,"hist_anomalies_n":12,"repass_n":12""" +
-        s""","common_n":241,"total_common_prev":208.123,"prev_total_common":203.456""" +
-        s""","total_common_prev_norm":195.123,"prev_total_common_norm":196.456""" +
-        s""","reps_1":0,"reps_2":230,"excluded_n":1,"lane_n":1"""
+    val extras = s""","probe_floor_ms":123.4,"excluded_n":1,"lane_n":1"""
     val line = Bench.compactSummary(113.2345, 99999.9999, 132,
       names, names, 3, contended = true, sf = "/root/testdata/sf0.1",
-      detail = "/root/repo/BENCH.json", filterFields = extras,
-      totalNorm = 199.123)
+      detail = "/root/repo/BENCH.json", filterFields = extras)
     assert(line.length < 1500, s"compact line is ${line.length} chars")
-    // the decision headline leads the line (VERDICT r19 #2)
-    assert(line.startsWith("""{"metric":"total","value_normalized":199.123,"""))
+    // the raw total leads the line
+    assert(line.startsWith("""{"metric":"total","value":"""))
   }
 
   test("compact line carries the per-query map (VERDICT r20 #2) and stays parseable") {
@@ -208,7 +114,7 @@ class BenchPolicySpec extends AnyFunSuite {
     val qmap = (1 to 246).map(i => f"e${i}%02d_some_long_streaming_query_name_$i" -> (0.12345 * i)).toMap
     val line = Bench.compactSummary(113.2345, 113.2345, 246, Nil, Nil,
       3, contended = false, sf = "/root/testdata/sf0.1",
-      detail = "BENCH.json", totalNorm = 99.9, queries = qmap)
+      detail = "BENCH.json", queries = qmap)
     assert(line.contains(""""queries":{"""))
     // 3-decimal rounding bounds each entry; names sorted for stable diffs
     assert(line.contains(""""e01_some_long_streaming_query_name_1":0.123"""))
@@ -229,6 +135,17 @@ class BenchPolicySpec extends AnyFunSuite {
     val bare = Bench.compactSummary(1.0, 1.0, 1, Nil, Nil, 3,
       contended = false, sf = "sf", detail = "d")
     assert(!bare.contains("\"queries\":{"))
+  }
+
+  test("no main names the bench history file, so no run writes into the checkout") {
+    val walk = Files.walk(Paths.get("src", "main"))
+    val scala =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally walk.close()
+    assert(scala.exists(_.endsWith(Paths.get("graft", "Bench.scala"))),
+      s"source scan found no Bench.scala under ${Paths.get("src", "main").toAbsolutePath}")
+    val naming = scala.filter(p => Files.readString(p).contains("bench_history.jsonl"))
+    assert(naming.isEmpty, s"sources naming the history file: $naming")
   }
 
   test("contrast-only exclusion names real registry queries") {
