@@ -31,11 +31,11 @@ import org.apache.spark.sql.SparkSession
   *     single-thread spin probe timed right after the rep (`calibration_x`
   *     = probe / the run's learned probe floor ≈ host contention factor)
   *     and /proc/loadavg sampled at rep start, max-during-rep (200ms
-  *     daemon sampler — ADVICE r6: end-of-rep-only sampling can miss
-  *     transient mid-rep load), and rep end.
-  *   - The probe floor is LEARNED across the run (round 12, VERDICT r11
-  *     #1): every per-rep probe is a baseline sample (the spin work is
-  *     constant), so the running minimum converges on the true quiet floor
+  *     daemon sampler — end-of-rep-only sampling can miss transient
+  *     mid-rep load), and rep end.
+  *   - The probe floor is LEARNED across the run: every per-rep probe
+  *     is a baseline sample (the spin work is constant), so the running
+  *     minimum converges on the true quiet floor
   *     as soon as any instant of the run is quiet — a startup-only
   *     baseline measured during a contention window made plainly-contended
   *     reps read as trusted. Trust is judged at aggregation time against
@@ -151,9 +151,9 @@ object Bench {
     QueryVerdict(failed, rawMin, if (anyTrusted) rawMin else None)
   }
 
-  /** Scrape-safe stdout summary. ADVICE r7: an earlier "compact" line
-    * overran the driver's then ~2KB log-tail window two rounds running
-    * (`parsed: null`). Name lists are capped at `listCap` with an explicit
+  /** Scrape-safe stdout summary. An earlier "compact" line overran a
+    * ~2KB log-tail window and could not be parsed back. Name lists are
+    * capped at `listCap` with an explicit
     * "+N more" marker, and the per-rep payload lives only in the `detail`
     * file. `BenchPolicySpec` pins the worst-case length of the non-query
     * fields (all queries untrusted AND failed) under 1500 chars.
@@ -343,7 +343,7 @@ object Bench {
       (r.probeMs / probeFloor) <= 1.2 &&
         r.loads.forall(l => l < 0.0 || l <= loadThreshold)
 
-    // contrast-only foils stay out of the per-round suite unless
+    // contrast-only foils stay out of the default suite unless
     // SPARK_GRAFT_BENCH_ONLY names them
     val excluded =
       if (only.nonEmpty) Seq.empty[String] else ContrastOnly.toSeq.sorted

@@ -102,7 +102,7 @@ class BenchPolicySpec extends AnyFunSuite {
     val extras = s""","probe_floor_ms":123.4,"excluded_n":1,"lane_n":1"""
     val line = Bench.compactSummary(113.2345, 99999.9999, 132,
       names, names, 3, contended = true, sf = "/root/testdata/sf0.1",
-      detail = "/root/repo/BENCH.json", filterFields = extras)
+      detail = "target/bench-out/BENCH.json", filterFields = extras)
     assert(line.length < 1500, s"compact line is ${line.length} chars")
     // the raw total leads the line
     assert(line.startsWith("""{"metric":"total","value":"""))
