@@ -49,15 +49,12 @@ import org.apache.spark.sql.SparkSession
   *     rep is trusted, `trusted_min` = min over ALL successful reps —
   *     contention only ever inflates wall time, so a faster untrusted rep
   *     is never load-suspect and discarding it overstates cost (r7: s10
-  *     raw 5.00s vs trusted 7.31s). A query with no CLEAN rep (the
-  *     stricter calibration_x ≤ 1.2 gate — VERDICT r9 #3: 1.2–1.5× reps
-  *     stay trusted but carry the 10–50% noise that drifted r9's untouched
-  *     anchors 1.1–1.8× with no code change) is re-run up to 2 extra
-  *     times, stopping at the first clean rep; if no rep is even TRUSTED,
-  *     the query lands in `untrusted` and is EXCLUDED from
-  *     `value_trusted` — listed, never silently summed. `clean_reps`
-  *     ships per rep so the artifact shows which minima had a quiet-host
-  *     chance.
+  *     raw 5.00s vs trusted 7.31s). If no rep is trusted, the query
+  *     lands in `untrusted` and is EXCLUDED from `value_trusted` —
+  *     listed, never silently summed. No query is re-run: a stricter
+  *     ≤ 1.2× "clean" retry gate fired on the spin probe's own spread
+  *     (274 of 529 reps on a quiet 4-core host), so it bought retry time,
+  *     not quieter minima.
   *   - Headline: `value` = Σ raw per-query min, and `value_trusted` =
   *     Σ trusted_min over trusted queries, with `untrusted_n` making any
   *     exclusion visible at top level.
@@ -127,10 +124,7 @@ object Bench {
 
   /** Rep-aggregation policy, extracted so `BenchPolicySpec` can pin it.
     *
-    * `failed`: a query fails iff a BASE rep (the first `baseReps`) failed,
-    * or no rep succeeded at all. A transient failure on a trust-RETRY rep
-    * must not discard successful base reps (ADVICE r7): retries exist to
-    * chase an uncontended timing, not to re-test correctness.
+    * `failed`: a query fails iff any rep failed, or it has no rep.
     *
     * `trustedMin`: host contention only ever INFLATES a rep's wall time —
     * there is no mechanism by which load makes a query FASTER — so a rep
@@ -142,10 +136,10 @@ object Bench {
     * trusted even the min may be inflated, so None (the query lands in
     * `untrusted`). Invariant, spec-pinned: trustedMin ≤ min(runs) always.
     */
-  def judgeReps(secs: Seq[Double], ok: Seq[Boolean], trusted: Seq[Boolean],
-                baseReps: Int): QueryVerdict = {
+  def judgeReps(secs: Seq[Double], ok: Seq[Boolean],
+                trusted: Seq[Boolean]): QueryVerdict = {
     val okSecs = secs.zip(ok).collect { case (s, true) => s }
-    val failed = ok.take(baseReps).exists(o => !o) || okSecs.isEmpty
+    val failed = ok.exists(o => !o) || okSecs.isEmpty
     val rawMin = if (okSecs.isEmpty) None else Some(okSecs.min)
     val anyTrusted = ok.lazyZip(trusted).exists { case (o, t) => o && t }
     QueryVerdict(failed, rawMin, if (anyTrusted) rawMin else None)
@@ -291,7 +285,7 @@ object Bench {
     }
     // Probe baseline: warm the probe's JIT, then min of several runs. The
     // floor keeps LEARNING from every per-rep probe (see the trust model);
-    // the retry gate reads the current floor, trust the final one.
+    // trust reads the final one.
     (0 until 3).foreach(_ => probeMillis())
     val probeBaseline = (0 until 5).map(_ => probeMillis()).min
     var probeFloor = probeBaseline
@@ -332,16 +326,6 @@ object Bench {
     def trusted(r: Rep): Boolean =
       (r.probeMs / probeFloor) <= 1.5 &&
         r.loads.forall(l => l < 0.0 || l <= loadThreshold)
-    // CLEAN is the stricter retry gate (VERDICT r9 #3): reps between 1.2×
-    // and 1.5× calibration stay trusted (excluding them would overstate
-    // cost — contention only inflates), but they carry 10–50% noise that
-    // made r9's untouched anchors drift 1.1–1.8× round-over-round. A query
-    // none of whose reps ran on a quiet host (≤1.2× probe) gets the bounded
-    // re-runs, so the reported min has had a real chance at an uncontended
-    // rep instead of settling for a merely-not-thrashed one.
-    def clean(r: Rep): Boolean =
-      (r.probeMs / probeFloor) <= 1.2 &&
-        r.loads.forall(l => l < 0.0 || l <= loadThreshold)
 
     // contrast-only foils stay out of the default suite unless
     // SPARK_GRAFT_BENCH_ONLY names them
@@ -350,22 +334,12 @@ object Bench {
     val selected = SparkEntry.queries.filter { case (name, _) =>
       (if (only.isEmpty) !excluded.contains(name) else only.contains(name))
     }
-    val maxRetries = 2
     val allReps: Map[String, Seq[Rep]] = selected.map { case (name, fn) =>
-      var rs = (0 until reps).map(_ => oneRep(fn)).toVector
-      // a query with no CLEAN rep gets bounded re-runs: a contaminated min
-      // is WORSE than a late one (r6: g02 reported 21× its real cost).
-      // Failures are never load-related — don't retry them.
-      var extra = 0
-      while (rs.forall(_.ok) && !rs.exists(clean) && extra < maxRetries) {
-        rs = rs :+ oneRep(fn)
-        extra += 1
-      }
-      name -> (rs: Seq[Rep])
+      name -> (0 until reps).map(_ => oneRep(fn))
     }
 
     val verdicts: Map[String, QueryVerdict] = allReps.map { case (n, rs) =>
-      n -> judgeReps(rs.map(_.sec), rs.map(_.ok), rs.map(trusted), reps)
+      n -> judgeReps(rs.map(_.sec), rs.map(_.ok), rs.map(trusted))
     }
     val failed = scala.collection.immutable.SortedSet.empty[String] ++
       verdicts.collect { case (n, v) if v.failed => n }
@@ -418,7 +392,6 @@ object Bench {
     val fullLine = "{" + headline +
       s""","runs":${perRep(_.sec)}""" +
       s""","trusted_reps":${perRep(r => trusted(r))}""" +
-      s""","clean_reps":${perRep(r => clean(r))}""" +
       s""","gc_ms":${perRep(_.gcMs)}""" +
       s""","cpu_ms":${perRep(_.cpuMs)}""" +
       s""","micro_batches":${perRep(_.microBatches)}""" +

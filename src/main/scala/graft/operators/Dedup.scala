@@ -970,7 +970,6 @@ object Dedup {
   def embeddingCosinePairsLsh(vecs: DataFrame, idCol: String, vecCol: String,
                               threshold: Double, planesPerTable: Int = 0,
                               tables: Int = 0): DataFrame = {
-    graft.functions.NativeFunctions.register(vecs.sparkSession)
     // PARALLELISM FLOOR (r9): with every downstream join a broadcast there
     // is no exchange in the candidate pipeline, so signature computation,
     // candidate generation and verification ALL inherit the scan's
@@ -981,61 +980,12 @@ object Dedup {
     // downstream stage runs cluster-wide. At real corpus sizes the scan is
     // already wide and this is a no-op.
     val v = Caching.persisted(Caching.coreWidthBy(
-      vecs.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("norm", Similarity.l2norm(col("v"))), col(idCol)))
+      HyperplaneLsh.vectors(vecs, idCol, vecCol), col(idCol)))
     val n = v.count()
-    val (planesAdaptive, tablesAdaptive) = resolveLshKnobs(n, planesPerTable, tables)
-    val dim = Similarity.vectorDim(vecs, vecCol)
-    // The join-backs attach full vectors to every candidate occurrence.
-    // Catalyst's own estimate of the cached projection sits just above the
-    // default 10 MB auto-broadcast threshold at ~20k×64-dim, so it planned
-    // a sort-merge join that shuffled + sorted every candidate WITH its
-    // 512 B payload (measured at 10×: 600 MB shuffle, 13 GB spill). We know
-    // the true size driver-side (n counted for the adaptive knobs, dim
-    // probed) — broadcast the lookup whenever it genuinely fits
-    // ([[lookupBroadcastCap]]); past that, the shuffle join is the right
-    // plan and the standing-index bucket layout (d12/d15) is the scale path.
-    val vSide = if (vectorLookupBytes(n, dim) <= lookupBroadcastCap) broadcast(v) else v
-    // signs hoisted once for all tables, all signatures computed in ONE
-    // fused codegen loop (hyperplane_signatures — bit-identical to the
-    // per-plane dot_product form, spec-pinned; at adaptive knob sizes the
-    // per-plane expression forest fell out of whole-stage codegen and ran
-    // interpreted, ~7 s per 32 planes at 10×); an empty corpus degenerates
-    // to dim 0 / empty signs and an empty result, not a throw
-    val allSigns = Similarity.hyperplaneSigns(vecs.sparkSession,
-      tablesAdaptive * planesAdaptive, 0, dim)
-    val banded = v.select(col(idCol),
-        posexplode(Similarity.signaturesOrFail(vecs.sparkSession, "LSH signatures",
-          col("v"), vecCol, allSigns, planesAdaptive, tablesAdaptive))
-          .as(Seq("tbl", "sig")))
-    // VERIFY-THEN-DISTINCT (r9): candidate occurrences stream straight
-    // through the vector join-backs and the exact-cosine filter, and only
-    // SURVIVORS reach the dedup exchange. The previous shape
-    // (distinct-before-join-back) shuffled every raw candidate occurrence —
-    // measured at 10×/(8,16): a 716 MB exchange + 7.8 GB aggregate spill
-    // for 14.7M candidates of which 0.24% survive. A pair co-occurring in
-    // k tables is now verified k times instead of once, but the duplicate
-    // factor is ~1 for the bulk (a random pair rarely shares >1 bucket)
-    // and the 64-dim codegen'd dot is orders cheaper than shuffling the
-    // occurrence. Duplicates produce bit-identical (id_a, id_b, cosine)
-    // rows — same vectors, same fold order — so the final distinct
-    // collapses them exactly and the result set is unchanged.
-    val bandedBytes = n * tablesAdaptive.toLong * 40
-    val buildSide =
-      if (bandedBytes <= lookupBroadcastCap)
-        broadcast(banded.select(col(idCol).as("id_b"), col("tbl"), col("sig")))
-      else banded.select(col(idCol).as("id_b"), col("tbl"), col("sig"))
-    val candidates = banded.select(col(idCol).as("id_a"), col("tbl"), col("sig"))
-      .join(buildSide, Seq("tbl", "sig"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    candidates
-      .join(vSide.select(col(idCol).as("id_a"), col("v").as("v_a"), col("norm").as("n_a")), Seq("id_a"))
-      .join(vSide.select(col(idCol).as("id_b"), col("v").as("v_b"), col("norm").as("n_b")), Seq("id_b"))
-      .withColumn("cosine", Similarity.dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-      .distinct()
+    val (b, l) = resolveLshKnobs(n, planesPerTable, tables)
+    new HyperplaneLsh.Family(vecs.sparkSession, b, l,
+      Similarity.vectorDim(vecs, vecCol))
+      .selfPairs(v, n, idCol, vecCol, threshold)
   }
 
   /** Caller-override-aware knob resolution: explicit knobs win per-knob;
@@ -1049,17 +999,6 @@ object Dedup {
       (if (planesPerTable > 0) planesPerTable else ab,
         if (tables > 0) tables else al)
     }
-
-  /** Driver-side estimate of an (id, vec, norm) lookup's in-memory size. */
-  private def vectorLookupBytes(n: Long, dim: Int): Long = n * (dim.toLong * 8 + 48)
-
-  /** Explicit-broadcast ceiling for vector lookups (128 MB): far above
-    * Spark's conservative 10 MB default — a 128 MB hashed relation is
-    * routine on any executor sized for embedding work — and far below
-    * driver/executor memory pressure. Above it, candidates shuffle to the
-    * vectors instead (the only possible plan at that size).
-    */
-  private val lookupBroadcastCap: Long = 128L << 20
 
   /** Incremental EMBEDDING near-dup screening — the d11 daily-ingest shape
     * in cosine space: which `fresh` vectors are semantic near-dups of the
@@ -1082,56 +1021,22 @@ object Dedup {
                                    idCol: String, vecCol: String,
                                    threshold: Double, planesPerTable: Int = 0,
                                    tables: Int = 0): DataFrame = {
-    graft.functions.NativeFunctions.register(fresh.sparkSession)
+    // parallelism floor on both cached sides, as in [[embeddingCosinePairsLsh]]
     def prep(df: DataFrame) = Caching.persisted(Caching.coreWidthBy(
-      df.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("norm", Similarity.l2norm(col("v"))), col(idCol)))
+      HyperplaneLsh.vectors(df, idCol, vecCol), col(idCol)))
     val vf = prep(fresh)
     val vc = prep(corpus)
     // bucket occupancy is governed by the STANDING side: adapt to corpus n
     val nCorpus = vc.count()
-    val (planesAdaptive, tablesAdaptive) =
-      resolveLshKnobs(nCorpus, planesPerTable, tables)
+    val (b, l) = resolveLshKnobs(nCorpus, planesPerTable, tables)
     // an empty corpus has no dimension: band the fresh side at its own, so
     // its rows meet no candidates instead of failing the signature guard
     val dim = Similarity.vectorDim(if (nCorpus > 0) corpus else fresh, vecCol)
-    // size-aware join-back broadcasts, as in [[embeddingCosinePairsLsh]]:
-    // the fresh batch is usually small (always broadcast-able in the d15
-    // ingest shape); the standing corpus side falls back to a shuffle join
-    // past the cap, where the d12-style bucketed signature index co-locates
     val nFresh = vf.count()
-    val vfSide = if (vectorLookupBytes(nFresh, dim) <= lookupBroadcastCap) broadcast(vf) else vf
-    val vcSide = if (vectorLookupBytes(nCorpus, dim) <= lookupBroadcastCap) broadcast(vc) else vc
-    val allSigns = Similarity.hyperplaneSigns(fresh.sparkSession,
-      tablesAdaptive * planesAdaptive, 0, dim)
-    def banded(v: DataFrame, as: String) =
-      v.select(col(idCol).as(as),
-        posexplode(Similarity.signaturesOrFail(fresh.sparkSession, "LSH signatures",
-          col("v"), vecCol, allSigns, planesAdaptive, tablesAdaptive))
-          .as(Seq("tbl", "sig")))
-    // verify-then-distinct + parallelism floor (prep widens both cached
-    // sides) + size-aware broadcast, same rationale as
-    // [[embeddingCosinePairsLsh]]: the corpus side carries the volume;
-    // the fresh side is the natural broadcast in the d15 ingest shape,
-    // falling back to the co-partitioned join past the cap.
-    val freshBanded = banded(vf, "fresh_id")
-    val freshSide =
-      if (nFresh * tablesAdaptive.toLong * 40 <= lookupBroadcastCap)
-        broadcast(freshBanded)
-      else freshBanded
-    val candidates = banded(vc, "corpus_id")
-      .join(freshSide, Seq("tbl", "sig"))
-      .select("fresh_id", "corpus_id")
-    candidates
-      .join(vfSide.select(col(idCol).as("fresh_id"), col("v").as("v_f"),
-        col("norm").as("n_f")), Seq("fresh_id"))
-      .join(vcSide.select(col(idCol).as("corpus_id"), col("v").as("v_c"),
-        col("norm").as("n_c")), Seq("corpus_id"))
-      .withColumn("cosine",
-        Similarity.dot(col("v_f"), col("v_c")) / (col("n_f") * col("n_c")))
-      .filter(col("cosine") >= threshold)
-      .select("fresh_id", "corpus_id", "cosine")
-      .distinct()
+    val family = new HyperplaneLsh.Family(fresh.sparkSession, b, l, dim)
+    family.screen(vf, nFresh,
+      family.bands(vc, vecCol, col(idCol).as("corpus_id")), vc, nCorpus,
+      idCol, vecCol, threshold)
   }
 
   /** A standing embedding-signature index: the d12 bucketed-layout pattern
@@ -1149,7 +1054,11 @@ object Dedup {
   final case class EmbeddingSignatureIndex(signatures: String, vectors: String,
                                            planesPerTable: Int, tables: Int,
                                            dim: Int, corpusRows: Long,
-                                           buckets: Int)
+                                           buckets: Int) {
+    /** The signature family the index was built with. */
+    private[graft] def family(spark: org.apache.spark.sql.SparkSession) =
+      new HyperplaneLsh.Family(spark, planesPerTable, tables, dim)
+  }
 
   /** Materialize the standing signature index for `corpus` — write ONCE,
     * screen every later ingest against the tables
@@ -1174,23 +1083,15 @@ object Dedup {
                                    planesPerTable: Int = 0, tables: Int = 0,
                                    buckets: Int = 16): EmbeddingSignatureIndex = {
     val spark = corpus.sparkSession
-    graft.functions.NativeFunctions.register(spark)
-    val v = corpus
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("norm", Similarity.l2norm(col("v")))
-      .persist()
+    val v = HyperplaneLsh.vectors(corpus, idCol, vecCol).persist()
     val n = v.count()
     val (b, l) = resolveLshKnobs(n, planesPerTable, tables)
     val dim = Similarity.vectorDim(corpus, vecCol)
     val idx = EmbeddingSignatureIndex(
       s"${namePrefix}_sig_p${b}x${l}_b$buckets",
       s"${namePrefix}_vec_p${b}x${l}_b$buckets", b, l, dim, n, buckets)
-    val allSigns = Similarity.hyperplaneSigns(spark, l * b, 0, dim)
     graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.signatures,
-      v.select(col(idCol),
-        posexplode(Similarity.signaturesOrFail(spark, "LSH signatures",
-          col("v"), vecCol, allSigns, b, l)).as(Seq("tbl", "sig"))),
-      "tbl", buckets, "sig")
+      idx.family(spark).bands(v, vecCol, col(idCol)), "tbl", buckets, "sig")
     graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.vectors,
       v, idCol, buckets)
     v.unpersist(blocking = false)
@@ -1228,23 +1129,14 @@ object Dedup {
                                     idCol: String, vecCol: String,
                                     epoch: Long): EmbeddingSignatureIndex = {
     val spark = batch.sparkSession
-    graft.functions.NativeFunctions.register(spark)
-    val v = batch
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("norm", Similarity.l2norm(col("v")))
-      .persist()
+    val v = HyperplaneLsh.vectors(batch, idCol, vecCol).persist()
     val n = v.count()
     val dimBatch = Similarity.vectorDim(batch, vecCol)
     require(dimBatch == index.dim || n == 0,
       s"appendEmbeddingSignatureIndex: batch dim $dimBatch != index dim " +
         s"${index.dim} — the signature family is dimension-specific")
-    val allSigns = Similarity.hyperplaneSigns(spark,
-      index.tables * index.planesPerTable, 0, index.dim)
     graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.signatures,
-      v.select(col(idCol),
-        posexplode(Similarity.signaturesOrFail(spark, "LSH signatures",
-          col("v"), vecCol, allSigns, index.planesPerTable, index.tables))
-          .as(Seq("tbl", "sig"))),
+      index.family(spark).bands(v, vecCol, col(idCol)),
       epoch, "tbl", index.buckets, "sig")
     val appliedVectors = graft.sources.BucketedLake.appendBucketedTableOnce(
       spark, index.vectors, v, epoch, idCol, index.buckets)
@@ -1284,56 +1176,21 @@ object Dedup {
                                        idCol: String, vecCol: String,
                                        threshold: Double): DataFrame = {
     val spark = fresh.sparkSession
-    graft.functions.NativeFunctions.register(spark)
     val vf = Caching.persisted(Caching.coreWidthBy(
-      fresh.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-        .withColumn("norm", Similarity.l2norm(col("v"))), col(idCol)))
+      HyperplaneLsh.vectors(fresh, idCol, vecCol), col(idCol)))
     val nFresh = vf.count()
     val dimFresh = Similarity.vectorDim(fresh, vecCol)
     require(dimFresh == index.dim || nFresh == 0,
       s"incrementalEmbeddingPairsIndexed: fresh dim $dimFresh != index dim " +
         s"${index.dim} — the signature family is dimension-specific; " +
         "rebuild the index or fix the batch")
-    val allSigns = Similarity.hyperplaneSigns(spark,
-      index.tables * index.planesPerTable, 0, index.dim)
-    val freshBanded = vf.select(col(idCol).as("fresh_id"),
-      posexplode(Similarity.signaturesOrFail(spark, "LSH signatures",
-        col("v"), vecCol, allSigns, index.planesPerTable, index.tables))
-        .as(Seq("tbl", "sig")))
-    // the ingest batch is the natural broadcast; past the cap the probe
-    // join falls back to the bucket-co-located shuffle join, where ONLY the
-    // fresh side exchanges (the index side reads bucketed — PlanSpec)
-    val freshSide =
-      if (nFresh * index.tables.toLong * 40 <= lookupBroadcastCap)
-        broadcast(freshBanded)
-      else freshBanded
-    val candidates = spark.table(index.signatures)
-      .select(col(idCol).as("corpus_id"), col("tbl"), col("sig"))
-      .join(freshSide, Seq("tbl", "sig"))
-      .select("fresh_id", "corpus_id")
-    // verify-then-distinct, size-aware join-backs, as in the direct screen;
-    // the corpus lookup side reuses the build-time count instead of paying
-    // a count job per ingest
-    val vfSide =
-      if (vectorLookupBytes(nFresh, index.dim) <= lookupBroadcastCap)
-        broadcast(vf)
-      else vf
-    val vcLookup = spark.table(index.vectors)
-      .select(col(idCol).as("corpus_id"), col("v").as("v_c"),
-        col("norm").as("n_c"))
-    val vcSide =
-      if (vectorLookupBytes(index.corpusRows, index.dim) <= lookupBroadcastCap)
-        broadcast(vcLookup)
-      else vcLookup
-    candidates
-      .join(vfSide.select(col(idCol).as("fresh_id"), col("v").as("v_f"),
-        col("norm").as("n_f")), Seq("fresh_id"))
-      .join(vcSide, Seq("corpus_id"))
-      .withColumn("cosine",
-        Similarity.dot(col("v_f"), col("v_c")) / (col("n_f") * col("n_c")))
-      .filter(col("cosine") >= threshold)
-      .select("fresh_id", "corpus_id", "cosine")
-      .distinct()
+    // the corpus lookup is sized by the build-time count instead of a
+    // count job per ingest; the signature table reads bucketed, so past
+    // the cap only the fresh side exchanges (PlanSpec)
+    index.family(spark).screen(vf, nFresh,
+      spark.table(index.signatures)
+        .select(col(idCol).as("corpus_id"), col("tbl"), col("sig")),
+      spark.table(index.vectors), index.corpusRows, idCol, vecCol, threshold)
   }
 
   /** ==SMALL-SCALE CROSS-CHECK — not a scale path== Embedding near-dup

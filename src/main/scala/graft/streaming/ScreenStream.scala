@@ -234,30 +234,21 @@ object ScreenStream {
                        idleTtlMillis: Long = 0L): DataFrame = {
     val spark = freshVecs.sparkSession
     import spark.implicits._
-    graft.functions.NativeFunctions.register(spark)
-    val allSigns = graft.operators.Similarity.hyperplaneSigns(spark,
-      index.tables * index.planesPerTable, 0, index.dim)
-    val banded = freshVecs
-      .select(col(idCol).as("fresh_id"),
-        col(vecCol).cast("array<double>").as("v_f"))
-      // a null norm raises: the optimizer infers isnotnull(n_f) from the
-      // cosine filter and pushes it below the signature explode, where it
-      // would drop a bad vector before the signature guard sees it
-      .withColumn("n_f", coalesce(graft.operators.Similarity.l2norm(col("v_f")),
-        graft.operators.Similarity.badVector("LSH signatures", vecCol, index.dim)))
-      .select(col("fresh_id"), col("v_f"), col("n_f"),
-        posexplode(graft.operators.Similarity.signaturesOrFail(spark,
-          "LSH signatures", col("v_f"), vecCol, allSigns,
-          index.planesPerTable, index.tables)).as(Seq("tbl", "sig")))
+    import graft.operators.HyperplaneLsh
+    val family = index.family(spark)
+    // a null norm raises: the optimizer infers isnotnull(n_f) from the
+    // cosine filter and pushes it below the signature explode, where it
+    // would drop a bad vector before the signature guard sees it
+    val banded = family.bands(HyperplaneLsh.vectors(freshVecs, idCol, vecCol)
+        .withColumn("norm", family.normOrFail(vecCol)), vecCol,
+      col(idCol).as("fresh_id"), col("v").as("v_f"), col("norm").as("n_f"))
     foldPerDoc(banded
       .join(spark.table(index.signatures)
         .select(col(idCol).as("corpus_id"), col("tbl"), col("sig")),
         Seq("tbl", "sig"))
-      .join(spark.table(index.vectors)
-        .select(col(idCol).as("corpus_id"), col("v").as("v_c"),
-          col("norm").as("n_c")), Seq("corpus_id"))
-      .withColumn("cosine", graft.operators.Similarity.dot(col("v_f"), col("v_c"))
-        / (col("n_f") * col("n_c")))
+      .join(HyperplaneLsh.joinBack(spark.table(index.vectors), idCol,
+        "corpus_id", "c"), Seq("corpus_id"))
+      .withColumn("cosine", HyperplaneLsh.cosine("f", "c"))
       .filter(col("cosine") >= threshold)
       .select(col("fresh_id").cast("long").as("fresh_id"),
         col("corpus_id").cast("long").as("corpus_id"),

@@ -24,7 +24,7 @@ class BenchPolicySpec extends AnyFunSuite {
   test("trusted_min is the min over ALL ok reps when any rep is trusted (s10 case)") {
     // r7's s10_ivf_pq: fastest rep 5.00s was calibration-flagged, trusted
     // reps' min was 7.31s — the old policy reported 7.31s.
-    val v = Bench.judgeReps(Seq(7.31, 8.02, 5.00), Seq(T, T, T), Seq(T, T, F), 3)
+    val v = Bench.judgeReps(Seq(7.31, 8.02, 5.00), Seq(T, T, T), Seq(T, T, F))
     assert(!v.failed)
     assert(v.rawMin.contains(5.00))
     assert(v.trustedMin.contains(5.00))
@@ -38,7 +38,7 @@ class BenchPolicySpec extends AnyFunSuite {
     } {
       val ok = (0 until 4).map(i => (okBits & (1 << i)) != 0)
       val tr = (0 until 4).map(i => (trBits & (1 << i)) != 0)
-      val v = Bench.judgeReps(secs, ok, tr, baseReps = 3)
+      val v = Bench.judgeReps(secs, ok, tr)
       for (t <- v.trustedMin; r <- v.rawMin)
         assert(t <= r, s"trustedMin $t > rawMin $r for ok=$ok trusted=$tr")
       // trustedMin defined ⟹ rawMin defined
@@ -47,28 +47,19 @@ class BenchPolicySpec extends AnyFunSuite {
   }
 
   test("no trusted successful rep → trustedMin empty, query is untrusted not failed") {
-    val v = Bench.judgeReps(Seq(2.0, 2.1), Seq(T, T), Seq(F, F), 2)
+    val v = Bench.judgeReps(Seq(2.0, 2.1), Seq(T, T), Seq(F, F))
     assert(!v.failed && v.rawMin.contains(2.0) && v.trustedMin.isEmpty)
-  }
-
-  test("a failed trust-RETRY rep does not fail a query with clean base reps (ADVICE r7)") {
-    // 3 ok-but-untrusted base reps, then rep 4 (a trust retry) throws
-    val v = Bench.judgeReps(Seq(2.0, 2.2, 2.1, 9.9), Seq(T, T, T, F),
-      Seq(F, F, F, F), baseReps = 3)
-    assert(!v.failed, "retry failure must not discard 3 successful base reps")
-    assert(v.rawMin.contains(2.0))
-    assert(v.trustedMin.isEmpty) // still untrusted — listed, not summed
   }
 
   test("a trusted retry rep rescues an all-untrusted query at the raw floor") {
     val v = Bench.judgeReps(Seq(5.0, 6.0, 7.0, 5.5), Seq(T, T, T, T),
-      Seq(F, F, F, T), baseReps = 3)
+      Seq(F, F, F, T))
     assert(!v.failed && v.trustedMin.contains(5.0))
   }
 
   test("a base-rep failure fails the query; all-failed yields no minima") {
-    assert(Bench.judgeReps(Seq(1.0, 0.1), Seq(T, F), Seq(T, T), 2).failed)
-    val all = Bench.judgeReps(Seq(0.1, 0.1), Seq(F, F), Seq(T, T), 2)
+    assert(Bench.judgeReps(Seq(1.0, 0.1), Seq(T, F), Seq(T, T)).failed)
+    val all = Bench.judgeReps(Seq(0.1, 0.1), Seq(F, F), Seq(T, T))
     assert(all.failed && all.rawMin.isEmpty && all.trustedMin.isEmpty)
   }
 

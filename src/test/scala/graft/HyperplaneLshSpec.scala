@@ -1,0 +1,110 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Dedup, HyperplaneLsh, Similarity}
+
+/** The shared hyperplane-LSH kernel ([[graft.operators.HyperplaneLsh]])
+  * behind every embedding near-dup entry point: results must not depend on
+  * partitioning nor on which side of the broadcast cap a join lands, and
+  * the signature guard lives in the kernel alone.
+  */
+class HyperplaneLshSpec extends SparkSpec {
+
+  private val dir = "/root/testdata/sf0.001"
+  private lazy val embs = spark.read.parquet(s"$dir/embeddings.parquet")
+  private lazy val fresh = embs.filter(col("vec_id") % 8 === 0)
+  private lazy val corpus = embs.filter(col("vec_id") % 8 =!= 0)
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("self-pairs, direct, indexed and appended-index screen: identical rows " +
+    "under shuffle.partitions 1/7/64 x AQE on/off") {
+    val idx = Dedup.writeEmbeddingSignatureIndex(corpus, "vec_id", "embedding",
+      "inv_spec_emb")
+    val grown = Dedup.appendEmbeddingSignatureIndex(
+      corpus.filter(col("vec_id") % 8 >= 4),
+      Dedup.writeEmbeddingSignatureIndex(corpus.filter(col("vec_id") % 8 <= 3),
+        "vec_id", "embedding", "inv_spec_emb_app"),
+      "vec_id", "embedding", epoch = 1L)
+    val entries: Seq[(String, () => DataFrame)] = Seq(
+      "self-pairs" -> (() =>
+        Dedup.embeddingCosinePairsLsh(embs, "vec_id", "embedding", 0.4)),
+      "direct screen" -> (() => Dedup.incrementalEmbeddingPairsLsh(
+        fresh, corpus, "vec_id", "embedding", 0.4)),
+      "indexed screen" -> (() => Dedup.incrementalEmbeddingPairsIndexed(
+        fresh, idx, "vec_id", "embedding", 0.4)),
+      "appended-index screen" -> (() => Dedup.incrementalEmbeddingPairsIndexed(
+        fresh, grown, "vec_id", "embedding", 0.4)))
+    try {
+      val runs = for (parts <- Seq(1, 7, 64); aqe <- Seq(true, false)) yield
+        GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString,
+            "spark.sql.adaptive.enabled" -> aqe.toString) {
+          // drop cached intermediates so each posture recomputes them
+          spark.catalog.clearCache()
+          s"partitions=$parts aqe=$aqe" -> entries.map { case (n, f) => n -> rows(f()) }
+        }
+      val (_, base) = runs.head
+      base.foreach { case (n, r) => assert(r.nonEmpty, s"$n: empty fixture result") }
+      runs.tail.foreach { case (posture, got) =>
+        got.zip(base).foreach { case ((n, r), (_, b)) =>
+          assert(r === b, s"$n differs under $posture")
+        }
+      }
+    } finally spark.catalog.clearCache()
+  }
+
+  test("past the broadcast cap every join shuffles and the rows are unchanged") {
+    // over-cap row counts make the kernel's size rule withhold every
+    // broadcast hint; with Spark's own size-based broadcast off as well
+    // (the scale case, where its estimates exceed the threshold), each
+    // candidate and join-back join plans as a shuffle join
+    val overCap = 1L << 40
+    val v = HyperplaneLsh.vectors(embs, "vec_id", "embedding")
+    val vf = HyperplaneLsh.vectors(fresh, "vec_id", "embedding")
+    val vc = HyperplaneLsh.vectors(corpus, "vec_id", "embedding")
+    val dim = Similarity.vectorDim(embs, "embedding")
+    def family(n: Long) = {
+      val (b, l) = Dedup.adaptiveLshKnobs(n)
+      new HyperplaneLsh.Family(spark, b, l, dim)
+    }
+    val self = family(embs.count())
+    val screen = family(corpus.count())
+    assert(self.vectorBytes(overCap) > HyperplaneLsh.broadcastCap &&
+      self.bandBytes(overCap) > HyperplaneLsh.broadcastCap)
+    val shuffled = GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
+      Seq(self.selfPairs(v, overCap, "vec_id", "embedding", 0.4),
+        screen.screen(vf, overCap,
+          screen.bands(vc, "embedding", col("vec_id").as("corpus_id")),
+          vc, overCap, "vec_id", "embedding", 0.4)).map { df =>
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("Broadcast"), plan)
+        assert("SortMergeJoin".r.findAllIn(plan).size === 3, plan)
+        rows(df)
+      }
+    }
+    val broadcast = Seq(
+      Dedup.embeddingCosinePairsLsh(embs, "vec_id", "embedding", 0.4),
+      Dedup.incrementalEmbeddingPairsLsh(fresh, corpus, "vec_id", "embedding", 0.4))
+      .map(rows)
+    broadcast.foreach(r => assert(r.nonEmpty))
+    assert(shuffled === broadcast)
+  }
+
+  test("one signature guard: only the kernel names \"LSH signatures\"") {
+    val walk = Files.walk(Paths.get("src", "main"))
+    val scala =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally walk.close()
+    assert(scala.filter(p => Files.readString(p).contains("\"LSH signatures\""))
+      .map(_.getFileName.toString) === Vector("HyperplaneLsh.scala"))
+  }
+}
