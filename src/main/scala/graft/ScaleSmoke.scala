@@ -127,9 +127,8 @@ object ScaleSmoke {
           corpus, "vec_id", "embedding", s"ab_${tag}_mih_$label",
           bands = 4, bandBits = bits)
       }
-      val mihSigns = Similarity.hyperplaneSigns(spark, 4 * bits, idx.planeOffset, dim)
-      val fBand = Similarity.mihCodeBands(fresh, "vec_id", "embedding",
-        "fresh_id", "f_code", mihSigns, 4, bits)
+      val fBand = idx.family(spark).codeBands(fresh, "vec_id", "embedding",
+        "fresh_id", "f_code")
       val (cand, candSec) = timed {
         volume(spark.table(idx.codes), fBand, Seq("band", "band_val"))
       }

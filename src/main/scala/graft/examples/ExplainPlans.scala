@@ -1,9 +1,13 @@
 package graft.examples
 
 import graft.{GraftSession, SparkEntry}
+import graft.streaming.StreamTelemetry
 
 /** Dump `explain("formatted")` for selected queries — the plan-review loop
-  * (pushed filters, broadcast joins, whole-stage codegen spans).
+  * (pushed filters, broadcast joins, whole-stage codegen spans). A `stream`
+  * query returns the read-back of its memory sink, so each AvailableNow
+  * run it made is printed after it too, in run order: the terminated
+  * query's `explain(extended = true)`, the plan of its last micro-batch.
   * Usage: runMain graft.examples.ExplainPlans [queryName ...]
   *
   * Expression ids are JVM-global, and an AvailableNow run allocates a
@@ -24,9 +28,14 @@ object ExplainPlans {
     val (streams, batch) = names.partition(startsStream)
     (batch ++ streams).foreach { name =>
       println(s"\n########## $name ##########")
+      StreamTelemetry.takeRuns()
       SparkEntry.queries(name)(spark, dir).explain("formatted")
+      StreamTelemetry.takeRuns().zipWithIndex.foreach { case (q, i) =>
+        println(s"\n---------- $name: stream run ${i + 1} ----------")
+        q.explain(true)
+      }
       require(startsStream(name) ||
-        graft.streaming.StreamTelemetry.microBatchesCompleted.get() == 0,
+        StreamTelemetry.microBatchesCompleted.get() == 0,
         s"$name runs a stream but has no `stream` word in its name")
     }
     spark.stop()

@@ -1562,7 +1562,7 @@ object Dedup {
     val spark = corpus.sparkSession
     // the knobs ARE the layout (prefix length = q·maxDist + 1 is baked
     // into the prefix table at build time), so they are baked into the
-    // table names exactly like writeMihIndex's _mih_b{bands}x{bandBits}:
+    // table names exactly like writeMihIndex's _mih_b{bands}x{bandBits}_o{planeOffset}:
     // reusing a namePrefix with different maxDist/q/buckets builds a NEW
     // table family instead of silently returning an index whose stored
     // prefixes were cut for different knobs (which would break the

@@ -1005,6 +1005,26 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", "cosine")
   }
 
+  /** The occupancy-holding `bandBits` policy at corpus size `n` — the
+    * adaptive knob the r15 pinned-vs-adaptive A/B measured (bits =
+    * ⌈log₂ n⌉ − 7 clamped to [8, 24]: expected band-bucket occupancy
+    * n / 2^bandBits ≈ 128, the [[graft.operators.Dedup.adaptiveLshKnobs]]
+    * policy applied to the MIH substring length). The oracle anchor
+    * (bits = 8) is the fixed point below n = 2¹⁵; the s28 gate grades
+    * the policy's operating point with an oracle-replayed recall row.
+    */
+  def adaptiveMihBandBits(n: Long): Int =
+    math.min(24, math.max(8, ceilLog2(n) - 7))
+
+  /** Exact integer ⌈log₂ n⌉ (ADVICE r9: the double-log formulation held
+    * knob anchors only where libm's ln came out exactly integral;
+    * 64 − nlz(n−1) has no such dependence). Shared by every adaptive
+    * knob policy — [[adaptiveMihBandBits]] and
+    * [[graft.operators.Dedup.adaptiveLshKnobs]].
+    */
+  private[graft] def ceilLog2(n: Long): Int =
+    if (n <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(n - 1)
+
   /** Multi-index Hamming ANN (the Norouzi–Punjani–Fleet "Multi-Index
     * Hashing" shape, CVPR'12): every vector gets a `bands`×`bandBits`-bit
     * sign-random-projection code held as `bands` SEPARATE small integers
@@ -1039,116 +1059,29 @@ object Similarity {
     * (longer substrings, fewer of them, or accept a smaller guaranteed
     * radius; the adaptiveLshKnobs occupancy policy applies verbatim).
     */
-  /** The occupancy-holding `bandBits` policy at corpus size `n` — the
-    * adaptive knob the r15 pinned-vs-adaptive A/B measured (bits =
-    * ⌈log₂ n⌉ − 7 clamped to [8, 24]: expected band-bucket occupancy
-    * n / 2^bandBits ≈ 128, the [[graft.operators.Dedup.adaptiveLshKnobs]]
-    * policy applied to the MIH substring length). The oracle anchor
-    * (bits = 8) is the fixed point below n = 2¹⁵; the s28 gate grades
-    * the policy's operating point with an oracle-replayed recall row.
-    */
-  def adaptiveMihBandBits(n: Long): Int =
-    math.min(24, math.max(8, ceilLog2(n) - 7))
-
-  /** Exact integer ⌈log₂ n⌉ (ADVICE r9: the double-log formulation held
-    * knob anchors only where libm's ln came out exactly integral;
-    * 64 − nlz(n−1) has no such dependence). Shared by every adaptive
-    * knob policy — [[adaptiveMihBandBits]] and
-    * [[graft.operators.Dedup.adaptiveLshKnobs]].
-    */
-  private[graft] def ceilLog2(n: Long): Int =
-    if (n <= 1L) 0 else 64 - java.lang.Long.numberOfLeadingZeros(n - 1)
-
-  /** The MIH band-code array: one `bandBits`-bit SRP code per band, packed
-    * by the [[hyperplaneSignatureFrom]] fold (bit-identical everywhere) —
-    * computed by the FUSED `hyperplane_signatures` loop (optimization r20):
-    * the per-band `array(hyperplaneSignatureFrom...)` form is
-    * bands·bandBits separate dot_product calls, which at 4×8 = 32 planes
-    * falls out of whole-stage codegen (the d06 lesson at NativeFunctions
-    * §HyperplaneSignatures — Janino method budget) and ran every plane
-    * interpreted: measured 1.1 s single-task for a 1.7k-row corpus side
-    * where the fused loop is milliseconds. Packing is spec-pinned
-    * bit-identical (MSB-first per band, row-major plane order).
-    *
-    * Embedding contract, enforced: the fused loop returns NULL for a null
-    * vector, a null element or a vector of the wrong dimension, and such a
-    * row would silently vanish at the band posexplode (batch and stream
-    * screens alike). The NULL code instead fails the query naming
-    * `vecCol`; valid rows never evaluate the error branch.
-    */
-  private[graft] def mihCodeArray(spark: org.apache.spark.sql.SparkSession,
-                                  vecCol: String, signs: Array[Array[Double]],
-                                  bands: Int, bandBits: Int): Column =
-    signaturesOrFail(spark, "MIH band codes", col(vecCol).cast("array<double>"),
-      vecCol, signs, bandBits, bands)
-
-  /** The fused `hyperplane_signatures` of `vec` (the embedding column
-    * `vecCol`, cast to ARRAY<DOUBLE>) against `signs`, `tables` codes of
-    * `planesPerTable` bits each — failing the query, named `what` and
-    * `vecCol`, where the loop returns NULL: a null vector, a null element
-    * or a vector whose dimension is not the signs' own. Every posexplode of
-    * signatures (MIH band codes, the hyperplane-LSH families) goes through
-    * it, so such a row fails loudly instead of vanishing at the explode;
-    * valid rows never evaluate the error branch.
-    */
-  private[graft] def signaturesOrFail(spark: org.apache.spark.sql.SparkSession,
-                                      what: String, vec: Column, vecCol: String,
-                                      signs: Array[Array[Double]],
-                                      planesPerTable: Int, tables: Int): Column = {
-    coalesce(
-      graft.functions.NativeFunctions.hyperplaneSignatures(
-        spark, vec, signs.flatten, planesPerTable, tables),
-      badVector(what, vecCol, signs.headOption.fold(0)(_.length)))
-  }
-
-  /** The error [[signaturesOrFail]] raises, for a guard on a value the
-    * plan derives from the vector before the signature explode.
-    */
-  private[graft] def badVector(what: String, vecCol: String, dim: Int): Column =
-    raise_error(lit(s"$what: embedding column '$vecCol' holds a " +
-      s"null vector, a null element or a vector whose dimension is not " +
-      s"$dim; embeddings must be non-null with one fixed dimension"))
-
-  /** Full-code Hamming distance between two band-code arrays: Σ over bands
-    * of bit_count(xor) — pure integer arithmetic, one codegen projection.
-    */
-  private[graft] def mihHamming(qCode: Column, cCode: Column, bands: Int): Column =
-    (0 until bands).map(j =>
-      bit_count(element_at(qCode, j + 1)
-        .bitwiseXOR(element_at(cCode, j + 1))).cast("long"))
-      .reduce(_ + _)
-
   def mihHammingNeighbors(queries: DataFrame, corpus: DataFrame,
                           idCol: String, vecCol: String, k: Int,
                           bands: Int = 4, bandBits: Int = 8,
                           planeOffset: Int = 100,
                           coarseM: Int = 40): DataFrame = {
-    graft.functions.NativeFunctions.register(queries.sparkSession)
-    val signs = hyperplaneSigns(queries.sparkSession, bands * bandBits,
+    val family = HyperplaneLsh.mih(queries.sparkSession, bands, bandBits,
       planeOffset, vectorDim(corpus, vecCol))
-    // one small-int code per band: planes planeOffset+j*bandBits ..
-    // +bandBits-1, packed by the same signatureFrom fold (bit-identical
-    // everywhere); kept as an array so the band join explodes positionally
-    def coded(df: DataFrame, id: String, vec: String, norm: String) = {
-      val v = col(vecCol).cast("array<double>")
-      df.select(col(idCol).as(id), v.as(vec),
-        mihCodeArray(df.sparkSession, vecCol, signs, bands, bandBits).as("code"))
+    def coded(df: DataFrame, id: String, vec: String, norm: String) =
+      df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as(vec),
+        family.codes(vecCol).as("code"))
         .withColumn(norm, l2norm(col(vec)))
-    }
     val q = Caching.persisted(coded(queries, "query_id", "qv", "q_norm"))
     val c = Caching.persisted(coded(corpus, "neighbor_id", "cv", "c_norm"))
     // codes-only candidate stage (the PQ economy: floats join in only for
     // the coarseM survivors, never the corpus)
-    val qBands = q.select(col("query_id"), col("code").as("q_code"),
-      posexplode(col("code")).as(Seq("band", "band_val")))
-    val cBands = c.select(col("neighbor_id"), col("code").as("c_code"),
-      posexplode(col("code")).as(Seq("band", "band_val")))
-    val hamming = mihHamming(col("q_code"), col("c_code"), bands)
-    val cands = broadcast(qBands).join(cBands, Seq("band", "band_val"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    val cands = family.candidates(
+        broadcast(family.explodeCodes(q, "code", col("query_id"),
+          col("code").as("q_code"))),
+        family.explodeCodes(c, "code", col("neighbor_id"), col("code").as("c_code")),
+        "query_id", "neighbor_id")
       .select("query_id", "neighbor_id", "q_code", "c_code")
       .distinct()
-      .withColumn("hamming", hamming)
+      .withColumn("hamming", family.hamming("q_code", "c_code"))
     val wCoarse = Window.partitionBy(col("query_id"))
       .orderBy(col("hamming"), col("neighbor_id"))
     val wFine = Window.partitionBy(col("query_id"))
@@ -1165,21 +1098,17 @@ object Similarity {
       .select("query_id", "rank", "neighbor_id", "hamming", "cosine")
   }
 
-  /** A frame's MIH codes exploded to one row per band: (id, code array,
-    * band, band_val) — the join-ready layout both the batch screen and its
-    * streaming twin consume (the static corpus side is EXACTLY this frame,
-    * so stream and batch can never band differently).
+  /** A frame's MIH codes under `signs` exploded to one row per band: (id,
+    * code array, band, band_val) — [[HyperplaneLsh.Family.codeBands]], the
+    * layout the standing code table, the batch screens and their streaming
+    * twin all band through, so stream and batch can never band differently.
     */
   def mihCodeBands(df: DataFrame, idCol: String, vecCol: String,
                    idAs: String, codeAs: String,
                    signs: Array[Array[Double]],
-                   bands: Int, bandBits: Int): DataFrame = {
-    graft.functions.NativeFunctions.register(df.sparkSession)
-    df.select(col(idCol).as(idAs),
-        mihCodeArray(df.sparkSession, vecCol, signs, bands, bandBits).as(codeAs))
-      .select(col(idAs), col(codeAs),
-        posexplode(col(codeAs)).as(Seq("band", "band_val")))
-  }
+                   bands: Int, bandBits: Int): DataFrame =
+    HyperplaneLsh.mih(df.sparkSession, bands, bandBits, signs)
+      .codeBands(df, idCol, vecCol, idAs, codeAs)
 
   /** Radius-bounded MIH Hamming SCREEN (the fresh-vs-corpus shape of
     * [[mihHammingNeighbors]]): emit every band-sharing (fresh, corpus)
@@ -1219,53 +1148,27 @@ object Similarity {
                        bands: Int = 4, bandBits: Int = 8,
                        planeOffset: Int = 100,
                        probeBallRadius: Int = 0): DataFrame = {
-    graft.functions.NativeFunctions.register(fresh.sparkSession)
-    val signs = hyperplaneSigns(fresh.sparkSession, bands * bandBits,
+    val family = HyperplaneLsh.mih(fresh.sparkSession, bands, bandBits,
       planeOffset, vectorDim(corpus, vecCol))
-    val f = ballProbes(mihCodeBands(fresh, idCol, vecCol, "fresh_id",
-      "f_code", signs, bands, bandBits), bandBits, probeBallRadius)
-    val c = mihCodeBands(corpus, idCol, vecCol, "corpus_id", "c_code",
-      signs, bands, bandBits)
-    f.join(c, Seq("band", "band_val"))
-      .filter(col("fresh_id") =!= col("corpus_id"))
-      .select(col("fresh_id"), col("corpus_id"),
-        mihHamming(col("f_code"), col("c_code"), bands).as("hamming"))
-      .filter(col("hamming") <= radius)
-      .distinct()
-  }
-
-  /** Expand each fresh band row into its Hamming BALL in band space: the
-    * band value itself plus, at `ballRadius` 1, every single-bit flip —
-    * one explode over a (bandBits+1)-element array built from the
-    * materialized `band_val` column (cheap integer XORs; nothing about
-    * the code is recomputed). Probing is fresh-side only, so a standing
-    * corpus index serves any ball radius unchanged. Radius > 1 is not
-    * implemented: the ball grows as C(bandBits, r) and the guarantee
-    * step (bands·(r+1)−1) is better bought with more bands.
-    */
-  private def ballProbes(bandRows: DataFrame, bandBits: Int,
-                         ballRadius: Int): DataFrame = {
-    require(ballRadius >= 0 && ballRadius <= 1,
-      s"probeBallRadius must be 0 or 1, got $ballRadius")
-    if (ballRadius == 0) bandRows
-    else {
-      val ball = array((col("band_val") +:
-        (0 until bandBits).map(b =>
-          col("band_val").bitwiseXOR(lit(1L << b)))): _*)
-      bandRows.select(bandRows.columns.toIndexedSeq
-        .filter(_ != "band_val").map(col) :+
-        explode(ball).as("band_val"): _*)
-    }
+    family.probe(fresh, idCol, vecCol,
+      family.codeBands(corpus, idCol, vecCol, "corpus_id", "c_code"),
+      radius, probeBallRadius).distinct()
   }
 
   /** A standing MIH code table: the [[mihCodeBands]] layout written
     * bucketed by (band, band_val) — the d16/s17 lake pattern for the MIH
-    * family. The knob family (bands, bandBits, planeOffset, dim) is part
-    * of the table-name identity, so a screen can never probe an index
-    * banded differently.
+    * family. The plane family (bands, bandBits, planeOffset) and the
+    * bucket count are part of the table name, so a screen can never probe
+    * an index banded by other planes. `dim` is not: it is the indexed
+    * corpus's own, and a fresh vector of another dimension fails the code
+    * guard.
     */
   final case class MihIndex(codes: String, bands: Int, bandBits: Int,
-                            planeOffset: Int, dim: Int, buckets: Int)
+                            planeOffset: Int, dim: Int, buckets: Int) {
+    /** The code family the index was built with. */
+    private[graft] def family(spark: org.apache.spark.sql.SparkSession) =
+      HyperplaneLsh.mih(spark, bands, bandBits, planeOffset, dim)
+  }
 
   /** Build (idempotently, catalog-checked) the standing MIH code index
     * over `corpus`. One job: code + band-explode + bucketed write; no
@@ -1275,16 +1178,13 @@ object Similarity {
                     namePrefix: String, bands: Int = 4, bandBits: Int = 8,
                     planeOffset: Int = 100, buckets: Int = 16): MihIndex = {
     val spark = corpus.sparkSession
-    val dim = vectorDim(corpus, vecCol)
-    val idx = MihIndex(s"${namePrefix}_mih_b${bands}x${bandBits}_k$buckets",
-      bands, bandBits, planeOffset, dim, buckets)
-    if (!spark.catalog.tableExists(idx.codes)) {
-      val signs = hyperplaneSigns(spark, bands * bandBits, planeOffset, dim)
+    val idx = MihIndex(
+      s"${namePrefix}_mih_b${bands}x${bandBits}_o${planeOffset}_k$buckets",
+      bands, bandBits, planeOffset, vectorDim(corpus, vecCol), buckets)
+    if (!spark.catalog.tableExists(idx.codes))
       graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.codes,
-        mihCodeBands(corpus, idCol, vecCol, "corpus_id", "c_code", signs,
-          bands, bandBits),
+        idx.family(spark).codeBands(corpus, idCol, vecCol, "corpus_id", "c_code"),
         "band", buckets, "band_val")
-    }
     idx
   }
 
@@ -1303,12 +1203,8 @@ object Similarity {
   def appendMihIndex(batch: DataFrame, index: MihIndex, idCol: String,
                      vecCol: String, epoch: Long): MihIndex = {
     val spark = batch.sparkSession
-    graft.functions.NativeFunctions.register(spark)
-    val signs = hyperplaneSigns(spark, index.bands * index.bandBits,
-      index.planeOffset, index.dim)
     graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.codes,
-      mihCodeBands(batch, idCol, vecCol, "corpus_id", "c_code", signs,
-        index.bands, index.bandBits),
+      index.family(spark).codeBands(batch, idCol, vecCol, "corpus_id", "c_code"),
       epoch, "band", index.buckets, "band_val")
     index
   }
@@ -1328,18 +1224,8 @@ object Similarity {
                               radius: Int,
                               probeBallRadius: Int = 0): DataFrame = {
     val spark = fresh.sparkSession
-    graft.functions.NativeFunctions.register(spark)
-    val signs = hyperplaneSigns(spark, index.bands * index.bandBits,
-      index.planeOffset, index.dim)
-    val f = ballProbes(mihCodeBands(fresh, idCol, vecCol, "fresh_id",
-      "f_code", signs, index.bands, index.bandBits),
-      index.bandBits, probeBallRadius)
-    f.join(spark.table(index.codes), Seq("band", "band_val"))
-      .filter(col("fresh_id") =!= col("corpus_id"))
-      .select(col("fresh_id"), col("corpus_id"),
-        mihHamming(col("f_code"), col("c_code"), index.bands).as("hamming"))
-      .filter(col("hamming") <= radius)
-      .distinct()
+    index.family(spark).probe(fresh, idCol, vecCol, spark.table(index.codes),
+      radius, probeBallRadius).distinct()
   }
 
   /** Product-quantization codebooks (the FAISS-PQ shape, inner-product

@@ -5506,9 +5506,7 @@ object ExtensionQueries {
       val textRejects = s.table(textSink)
         .select(col("fresh_id").as("doc_id")).distinct()
       // --- stage C: MIH screen against the code index ---
-      val dim = Similarity.vectorDim(embs, "embedding")
-      val signs = Similarity.hyperplaneSigns(s,
-        mihIdx.bands * mihIdx.bandBits, mihIdx.planeOffset, dim)
+      val signs = mihIdx.family(s).signs
       val freshIdsStatic = docs.filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"))
         .unionByName(docs.filter(col("doc_id") < 20)
@@ -6926,8 +6924,8 @@ object ExtensionQueries {
     },
 
     // STREAMING MIH Hamming screen (e37) — s23 live: fresh vectors
-    // band-code in-row with the SAME mihCodeArray expression the standing
-    // code table was built with, the band join is stream-static against
+    // band-code in-row with the SAME code family the standing code table
+    // was built with, the band join is stream-static against
     // that table, Hamming + radius cut are one stateless integer
     // projection (codes only — no vector or norm ever enters the stream
     // plan), and the one stateful op is the per-fresh-doc distinct fold.

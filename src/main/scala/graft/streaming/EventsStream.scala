@@ -190,7 +190,7 @@ object EventsStream {
         // batch 0, so batchId + 1 = batches this run.
         val batches = Option(q.lastProgress).map(_.batchId + 1L).getOrElse(0L)
         StreamTelemetry.microBatchesCompleted.addAndGet(batches)
-        ()
+        StreamTelemetry.recordRun(q)
       } finally {
         // best-effort cleanup that must never mask the query's own failure:
         // walk streams throw UncheckedIOException (a RuntimeException) from

@@ -175,6 +175,28 @@ object ScreenStream {
   def readEmbeddings(spark: SparkSession, dir: String): DataFrame =
     TableStream.read(spark, dir, "embeddings", embeddingsSchema)
 
+  /** One verified (or radius-cut) collision row entering a distinct fold:
+    * `metric` is the cosine of the embedding screen or the Hamming distance
+    * of the MIH screen (a small integer, exact in a double).
+    */
+  final case class VerifiedRow(fresh_id: Long, corpus_id: Long, metric: Double)
+    extends FreshRow
+
+  /** Per-fresh-doc distinct-of-survivors fold: a doc's verified collision
+    * rows dedup by corpus doc in task memory (the metric is functionally
+    * determined by the pair, so first-seen is THE value), emit one row per
+    * surviving pair, store only the [[requireFirstArrival]] seen flag.
+    */
+  private[graft] def distinctPairFold(op: String, idleTtlMillis: Long = 0L)(
+      key: Long, rows: Iterator[VerifiedRow],
+      state: org.apache.spark.sql.streaming.GroupState[Boolean]): Iterator[VerifiedRow] = {
+    if (dropIfTimedOut(state)) return Iterator.empty
+    requireFirstArrival(key, state, op, idleTtlMillis)
+    val seen = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
+    rows.foreach(r => if (!seen.contains(r.corpus_id)) seen.update(r.corpus_id, r.metric))
+    seen.iterator.map { case (cid, m) => VerifiedRow(key, cid, m) }
+  }
+
   /** The EMBEDDING ingest screen as a Structured Streaming query — the
     * d15/d16 daily-ingest story live: fresh vectors ARRIVE as a stream and
     * screen against the standing [[graft.operators.Dedup
@@ -205,28 +227,6 @@ object ScreenStream {
     * same split, so the d15 oracle grades the streaming plan verbatim
     * (e23).
     */
-  /** One verified (or radius-cut) collision row entering a distinct fold:
-    * `metric` is cosine for the embedding screen, Hamming (as double) is
-    * NOT routed here — the MIH screen keeps its own integer row type.
-    */
-  final case class VerifiedRow(fresh_id: Long, corpus_id: Long, metric: Double)
-    extends FreshRow
-
-  /** Per-fresh-doc distinct-of-survivors fold: a doc's verified collision
-    * rows dedup by corpus doc in task memory (the metric is functionally
-    * determined by the pair, so first-seen is THE value), emit one row per
-    * surviving pair, store only the [[requireFirstArrival]] seen flag.
-    */
-  private[graft] def distinctPairFold(op: String, idleTtlMillis: Long = 0L)(
-      key: Long, rows: Iterator[VerifiedRow],
-      state: org.apache.spark.sql.streaming.GroupState[Boolean]): Iterator[VerifiedRow] = {
-    if (dropIfTimedOut(state)) return Iterator.empty
-    requireFirstArrival(key, state, op, idleTtlMillis)
-    val seen = scala.collection.mutable.LinkedHashMap.empty[Long, Double]
-    rows.foreach(r => if (!seen.contains(r.corpus_id)) seen.update(r.corpus_id, r.metric))
-    seen.iterator.map { case (cid, m) => VerifiedRow(key, cid, m) }
-  }
-
   def screenEmbeddings(freshVecs: DataFrame,
                        index: graft.operators.Dedup.EmbeddingSignatureIndex,
                        idCol: String, vecCol: String,
@@ -343,16 +343,16 @@ object ScreenStream {
 
   /** The MIH Hamming screen as a Structured Streaming query — s22's code
     * family serving live (e37): fresh vectors ARRIVE as a stream, band-code
-    * in their own row (the same [[graft.operators.Similarity.mihCodeArray]]
-    * expression the static side was coded with — one definition, stream and
-    * corpus can never band differently), and probe the STANDING code table.
-    * Same plan shape as [[screenEmbeddings]]:
+    * in their own row under `signs` and probe the STANDING code table
+    * through the same [[graft.operators.HyperplaneLsh.Family.probe]] as
+    * the batch screens (one definition: stream and corpus can never band
+    * differently). Same plan shape as [[screenEmbeddings]]:
     *
     *  - the band join is stream-static and stateless (corpus side is the
     *    [[graft.operators.Similarity.mihCodeBands]] layout);
     *  - Hamming + radius cut are one stateless integer projection — NO
     *    vector or norm ever joins (codes only, the screen's whole point);
-    *  - the one stateful operator is the per-fresh-doc [[mihDistinctFold]]
+    *  - the one stateful operator is the per-fresh-doc [[distinctPairFold]]
     *    (a doc's within-radius survivors dedup across shared bands in
     *    task memory), state one seen flag per doc. The first shape held
     *    the distinct survivors in a complete-mode groupBy — O(live pairs)
@@ -364,46 +364,21 @@ object ScreenStream {
     * [[graft.operators.Similarity.mihHammingScreen]] on the same split, so
     * one oracle grades batch and stream verbatim.
     */
-  /** One within-radius MIH collision row (codes only, integer Hamming). */
-  final case class MihRow(fresh_id: Long, corpus_id: Long, hamming: Long)
-    extends FreshRow
-
-  /** [[distinctPairFold]]'s integer twin for the codes-only screen: dedup
-    * a doc's within-radius survivors by corpus doc (the pair determines
-    * the Hamming), emit one row each, store only the seen flag.
-    */
-  private[graft] def mihDistinctFold(idleTtlMillis: Long = 0L)(
-      key: Long, rows: Iterator[MihRow],
-      state: org.apache.spark.sql.streaming.GroupState[Boolean]): Iterator[MihRow] = {
-    if (dropIfTimedOut(state)) return Iterator.empty
-    requireFirstArrival(key, state, "ScreenStream.screenMih", idleTtlMillis)
-    val seen = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
-    rows.foreach(r => if (!seen.contains(r.corpus_id)) seen.update(r.corpus_id, r.hamming))
-    seen.iterator.map { case (cid, h) => MihRow(key, cid, h) }
-  }
-
   def screenMih(freshVecs: DataFrame, corpusCodes: DataFrame,
                 idCol: String, vecCol: String,
                 signs: Array[Array[Double]], bands: Int, bandBits: Int,
                 radius: Int, idleTtlMillis: Long = 0L): DataFrame = {
-    import graft.operators.Similarity
     val spark = freshVecs.sparkSession
     import spark.implicits._
-    graft.functions.NativeFunctions.register(spark)
-    val banded = freshVecs
-      .select(col(idCol).as("fresh_id"),
-        Similarity.mihCodeArray(spark, vecCol, signs, bands, bandBits).as("f_code"))
-      .select(col("fresh_id"), col("f_code"),
-        posexplode(col("f_code")).as(Seq("band", "band_val")))
-    foldPerDoc(banded
-      .join(corpusCodes, Seq("band", "band_val"))
-      .filter(col("fresh_id") =!= col("corpus_id"))
-      .withColumn("hamming",
-        Similarity.mihHamming(col("f_code"), col("c_code"), bands))
-      .filter(col("hamming") <= radius)
+    foldPerDoc(graft.operators.HyperplaneLsh.mih(spark, bands, bandBits, signs)
+      .probe(freshVecs, idCol, vecCol, corpusCodes, radius, ballRadius = 0)
       .select(col("fresh_id").cast("long").as("fresh_id"),
-        col("corpus_id").cast("long").as("corpus_id"), col("hamming"))
-      .as[MihRow], idleTtlMillis)(mihDistinctFold(idleTtlMillis))
+        col("corpus_id").cast("long").as("corpus_id"),
+        col("hamming").cast("double").as("metric"))
+      .as[VerifiedRow], idleTtlMillis)(
+      distinctPairFold("ScreenStream.screenMih", idleTtlMillis))
+      .select(col("fresh_id"), col("corpus_id"),
+        col("metric").cast("long").as("hamming"))
   }
 
   /** One fresh-gram row entering the edit-distance fold. `g == null` marks

@@ -1,6 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentLinkedDeque
 import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Synchronous micro-batch accounting for bench telemetry.
   *
@@ -20,4 +23,22 @@ object StreamTelemetry {
     * invocations in this JVM; read-delta around a query run for its count.
     */
   val microBatchesCompleted = new AtomicLong(0L)
+
+  /** The most recent [[EventsStream.runAvailableNow]] runs' terminated
+    * queries, oldest first, at most [[KeptRuns]]. A terminated query still
+    * explains its last micro-batch's plan, so a plan dump prints what a
+    * stream ran after the run returns and the run builds no plan string;
+    * the cap bounds what a long-lived JVM holds on to.
+    */
+  private val runs = new ConcurrentLinkedDeque[StreamingQuery]()
+  private val KeptRuns = 8
+
+  private[graft] def recordRun(q: StreamingQuery): Unit = {
+    runs.addLast(q)
+    while (runs.size > KeptRuns) runs.pollFirst()
+  }
+
+  /** The kept runs, oldest first, and forget them. */
+  def takeRuns(): Seq[StreamingQuery] =
+    Iterator.continually(runs.pollFirst()).takeWhile(_ != null).toSeq
 }

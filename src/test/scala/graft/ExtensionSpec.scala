@@ -248,20 +248,36 @@ class ExtensionSpec extends SparkSpec {
 
   test("MIH screen: a null vector, a null element or a 63-dim vector fails naming the column") {
     val good = embs.filter(col("vec_id") % 8 === 0).select("vec_id", "embedding")
+    val corpus = embs.filter(col("vec_id") % 8 =!= 0).select("vec_id", "embedding")
     val one = good.limit(1)
+    val idx = Similarity.writeMihIndex(corpus, "vec_id", "embedding",
+      "mih_idx_contract")
     val bad = Seq(
       "null vector" -> lit(null).cast("array<float>"),
       "null element" -> transform(col("embedding"),
         (x, i) => when(i === 0, lit(null).cast("float")).otherwise(x)),
       "63-dim vector" -> slice(col("embedding"), 1, 63))
-    bad.foreach { case (what, vec) =>
-      val fresh = good.unionByName(
+    bad.zipWithIndex.foreach { case ((what, vec), i) =>
+      val withBad = good.unionByName(
         one.select(lit(900001L).as("vec_id"), vec.as("embedding")))
-      val e = intercept[Exception](Similarity.mihHammingScreen(fresh,
-        embs.filter(col("vec_id") % 8 =!= 0), "vec_id", "embedding",
-        radius = 6).collect())
-      assert(causeMentions(e, "embedding column 'embedding'",
-        "non-null with one fixed dimension"), s"$what: $e")
+      Seq[(String, () => Any)](
+        "neighbors" -> (() => Similarity.mihHammingNeighbors(withBad, corpus,
+          "vec_id", "embedding", 5).collect()),
+        "screen" -> (() => Similarity.mihHammingScreen(withBad, corpus,
+          "vec_id", "embedding", radius = 6).collect()),
+        "ball screen" -> (() => Similarity.mihHammingScreen(withBad, corpus,
+          "vec_id", "embedding", radius = 7, probeBallRadius = 1).collect()),
+        "index build" -> (() => Similarity.writeMihIndex(withBad, "vec_id",
+          "embedding", s"mih_idx_contract_bad$i")),
+        "index append" -> (() => Similarity.appendMihIndex(withBad, idx,
+          "vec_id", "embedding", epoch = 1L + i)),
+        "indexed screen" -> (() => Similarity.mihHammingScreenIndexed(withBad,
+          idx, "vec_id", "embedding", radius = 6).collect())).foreach {
+        case (path, run) =>
+          val e = intercept[Exception](run())
+          assert(causeMentions(e, "MIH band codes", "embedding column 'embedding'",
+            "non-null with one fixed dimension"), s"$path, $what: $e")
+      }
     }
   }
 
@@ -394,6 +410,27 @@ class ExtensionSpec extends SparkSpec {
     assert(gfinal.count() > 0)
     assert(gfinal.except(gdirect).count() === 0)
     assert(gdirect.except(gfinal).count() === 0)
+  }
+
+  test("MIH index: two plane offsets under one prefix give two tables, each indexed screen == its direct screen") {
+    val fresh = embs.filter(col("vec_id") % 8 === 0)
+    val corpus = embs.filter(col("vec_id") % 8 =!= 0)
+    val idxs = Seq(100, 7).map(off => off -> Similarity.writeMihIndex(corpus,
+      "vec_id", "embedding", "spec_mih_offsets", planeOffset = off))
+    assert(idxs.map(_._2.codes).distinct.size === 2)
+    val screens = idxs.map { case (off, idx) =>
+      assert(idx.planeOffset === off)
+      val direct = Similarity.mihHammingScreen(fresh, corpus, "vec_id",
+        "embedding", radius = 8, planeOffset = off)
+      val indexed = Similarity.mihHammingScreenIndexed(fresh, idx, "vec_id",
+        "embedding", radius = 8)
+      val d = direct.collect().toSet
+      assert(d.nonEmpty)
+      assert(indexed.collect().toSet === d, s"planeOffset $off")
+      d
+    }
+    // the two plane families genuinely differ, so a shared table would show
+    assert(screens(0) !== screens(1))
   }
 
   test("indexed MIH screen == direct screen; indexed gear screen == direct screen") {

@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, HyperplaneLsh, Similarity}
 
-/** The shared hyperplane-LSH kernel ([[graft.operators.HyperplaneLsh]])
-  * behind every embedding near-dup entry point: results must not depend on
-  * partitioning nor on which side of the broadcast cap a join lands, and
-  * the signature guard lives in the kernel alone.
+/** The shared hyperplane kernel ([[graft.operators.HyperplaneLsh]]) behind
+  * every embedding near-dup entry point, cosine and Hamming (MIH): results
+  * must not depend on partitioning nor on which side of the broadcast cap a
+  * join lands, and each signature guard lives in the kernel alone.
   */
 class HyperplaneLshSpec extends SparkSpec {
 
@@ -33,7 +33,7 @@ class HyperplaneLshSpec extends SparkSpec {
       Dedup.writeEmbeddingSignatureIndex(corpus.filter(col("vec_id") % 8 <= 3),
         "vec_id", "embedding", "inv_spec_emb_app"),
       "vec_id", "embedding", epoch = 1L)
-    val entries: Seq[(String, () => DataFrame)] = Seq(
+    samePerPartitioning(Seq(
       "self-pairs" -> (() =>
         Dedup.embeddingCosinePairsLsh(embs, "vec_id", "embedding", 0.4)),
       "direct screen" -> (() => Dedup.incrementalEmbeddingPairsLsh(
@@ -41,7 +41,31 @@ class HyperplaneLshSpec extends SparkSpec {
       "indexed screen" -> (() => Dedup.incrementalEmbeddingPairsIndexed(
         fresh, idx, "vec_id", "embedding", 0.4)),
       "appended-index screen" -> (() => Dedup.incrementalEmbeddingPairsIndexed(
-        fresh, grown, "vec_id", "embedding", 0.4)))
+        fresh, grown, "vec_id", "embedding", 0.4))))
+  }
+
+  test("MIH neighbors, direct, indexed, appended-index and ball screen: " +
+    "identical rows under shuffle.partitions 1/7/64 x AQE on/off") {
+    val idx = Similarity.writeMihIndex(corpus, "vec_id", "embedding", "inv_spec_mih")
+    val grown = Similarity.appendMihIndex(corpus.filter(col("vec_id") % 8 >= 4),
+      Similarity.writeMihIndex(corpus.filter(col("vec_id") % 8 <= 3),
+        "vec_id", "embedding", "inv_spec_mih_app"),
+      "vec_id", "embedding", epoch = 1L)
+    samePerPartitioning(Seq(
+      "neighbors" -> (() => Similarity.mihHammingNeighbors(
+        embs.filter(col("vec_id") < 10), embs, "vec_id", "embedding", 5)),
+      "direct screen" -> (() => Similarity.mihHammingScreen(
+        fresh, corpus, "vec_id", "embedding", radius = 6)),
+      "indexed screen" -> (() => Similarity.mihHammingScreenIndexed(
+        fresh, idx, "vec_id", "embedding", radius = 6)),
+      "appended-index screen" -> (() => Similarity.mihHammingScreenIndexed(
+        fresh, grown, "vec_id", "embedding", radius = 6)),
+      "ball screen" -> (() => Similarity.mihHammingScreen(
+        fresh, corpus, "vec_id", "embedding", radius = 7, probeBallRadius = 1))))
+  }
+
+  /** Every entry's rows are non-empty and the same under each posture. */
+  private def samePerPartitioning(entries: Seq[(String, () => DataFrame)]): Unit =
     try {
       val runs = for (parts <- Seq(1, 7, 64); aqe <- Seq(true, false)) yield
         GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString,
@@ -58,7 +82,6 @@ class HyperplaneLshSpec extends SparkSpec {
         }
       }
     } finally spark.catalog.clearCache()
-  }
 
   test("past the broadcast cap every join shuffles and the rows are unchanged") {
     // over-cap row counts make the kernel's size rule withhold every
@@ -99,12 +122,20 @@ class HyperplaneLshSpec extends SparkSpec {
     assert(shuffled === broadcast)
   }
 
-  test("one signature guard: only the kernel names \"LSH signatures\"") {
+  /** The src/main files whose text names `s`. */
+  private def sourcesNaming(s: String): Vector[String] = {
     val walk = Files.walk(Paths.get("src", "main"))
     val scala =
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
       finally walk.close()
-    assert(scala.filter(p => Files.readString(p).contains("\"LSH signatures\""))
-      .map(_.getFileName.toString) === Vector("HyperplaneLsh.scala"))
+    scala.filter(p => Files.readString(p).contains(s)).map(_.getFileName.toString)
+  }
+
+  test("one signature guard: only the kernel names \"LSH signatures\"") {
+    assert(sourcesNaming("\"LSH signatures\"") === Vector("HyperplaneLsh.scala"))
+  }
+
+  test("one code guard: only the kernel names \"MIH band codes\"") {
+    assert(sourcesNaming("\"MIH band codes\"") === Vector("HyperplaneLsh.scala"))
   }
 }

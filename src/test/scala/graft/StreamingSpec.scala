@@ -1585,11 +1585,11 @@ class StreamingSpec extends SparkSpec {
     assert(vout.toSet === Set(
       ScreenStream.VerifiedRow(2L, 20L, 0.9),
       ScreenStream.VerifiedRow(2L, 21L, 0.7)))
-    // mihDistinctFold: integer twin
-    val mout = ScreenStream.mihDistinctFold()(3L, Iterator(
-      ScreenStream.MihRow(3L, 30L, 2L), ScreenStream.MihRow(3L, 30L, 2L)),
+    // the MIH screen's rows through the same fold: Hamming as the metric
+    val mout = ScreenStream.distinctPairFold("ScreenStream.screenMih")(3L, Iterator(
+      ScreenStream.VerifiedRow(3L, 30L, 2.0), ScreenStream.VerifiedRow(3L, 30L, 2.0)),
       st(None)).toList
-    assert(mout === List(ScreenStream.MihRow(3L, 30L, 2L)))
+    assert(mout === List(ScreenStream.VerifiedRow(3L, 30L, 2.0)))
     // the whole-doc-delivery contract is ENFORCED: a doc whose rows span a
     // second micro-batch fails loudly instead of silently undercounting
     val e = intercept[IllegalStateException] {
@@ -1640,7 +1640,8 @@ class StreamingSpec extends SparkSpec {
       GroupStateTimeout.ProcessingTimeTimeout, 1000L,
       Optional.empty[java.lang.Long]().asInstanceOf[Optional[Long]],
       hasTimedOut = true)
-    assert(ScreenStream.mihDistinctFold(ttl)(9L, Iterator.empty, sT3).isEmpty)
+    assert(ScreenStream.distinctPairFold("ScreenStream.screenMih", ttl)(
+      9L, Iterator.empty, sT3).isEmpty)
     assert(sT3.isRemoved)
     val sT4 = TestGroupState.create[Boolean](Optional.of(true),
       GroupStateTimeout.ProcessingTimeTimeout, 1000L,

@@ -8,7 +8,8 @@ Files pair up by query name (the file name without its `_<suffix>.txt`).
 Before comparing, both sides mask what differs between any two runs of the
 same code: expression ids (`#123L`), whole-stage codegen ids, exchange
 `plan_id`s, adaptive query stage ids, RDD ids with their source call
-sites, file locations and object identity hashes.
+sites, file locations, object identity hashes, and a stream run's query
+and run ids, batch timestamp and checkpoint directory.
 Prints each differing query (with its first N changed lines) and exits 1
 if any query differs or is missing on one side.
 """
@@ -30,6 +31,10 @@ MASKS = [
     # printed by its default toString (an aggregator object in a plan)
     (r"\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+", "$Lambda$N@HASH"),
     (r"(\.[A-Za-z_$][\w$]{0,80})@[0-9a-f]{1,8}\b", r"\1@HASH"),
+    # a stream run's ids, batch timestamp and ephemeral checkpoint directory
+    (r"(Timeout), \d+, ", r"\1, TS, "),
+    (r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b", "UUID"),
+    (r"graft-ckpt-\d+", "graft-ckpt-N"),
 ]
 
 
