@@ -1193,19 +1193,6 @@ object Dedup {
       spark.table(index.vectors), index.corpusRows, idCol, vecCol, threshold)
   }
 
-  /** ==SMALL-SCALE CROSS-CHECK — not a scale path== Embedding near-dup
-    * pairs: cosine ≥ threshold over `ARRAY<FLOAT>` columns, as an EXACT
-    * all-pairs crossJoin. Deliberately O(n²): it exists to verify
-    * [[embeddingCosinePairsLsh]] (the production variant — LSH-bucketed,
-    * never all-pairs) on corpora small enough to enumerate.
-    *
-    * The smallness contract is ENFORCED, not advisory (VERDICT r6 #3): the
-    * input is counted ONCE up front (an id-column-only scan — the count is
-    * reused for the error message, never recomputed) and the call aborts
-    * loudly above `crossCheckCap` (default 100k rows ⇒ ≤ ~5·10⁹ candidate
-    * pairs), so the all-pairs shape is structurally incapable of running
-    * at corpus scale. Raising the cap is an explicit caller decision.
-    */
   /** Default [[editDistancePairs]]/[[incrementalEditDistancePairs]]
     * candidate-volume cap. d19 is the one family member whose work is
     * inherently ∝ candidate collisions rather than corpus size — a
@@ -1218,52 +1205,13 @@ object Dedup {
     */
   val DefaultEditCandidateCap = 25000000L
 
-  /** In-plan candidate-volume guard: one count over the (persisted)
-    * candidate frame rides every output row via a broadcast cross join,
-    * and `raise_error` aborts the job above `cap` BEFORE the verify stage
-    * pays for the blow-up (the broadcast side materializes first). The
-    * count column is consumed by an always-true filter so column pruning
-    * cannot elide the guard.
-    */
-  private def guardCandidates(cands: DataFrame, cap: Long, what: String,
-                              advice: String): DataFrame = {
-    val n = cands.agg(count(lit(1)).as("n_cand"))
-      .select(when(col("n_cand") <= cap, col("n_cand"))
-        .otherwise(raise_error(concat(
-          lit(s"$what: candidate volume "), col("n_cand").cast("string"),
-          lit(s" exceeds maxCandidates=$cap - the prefix filter is not " +
-            s"selective on this corpus (low-entropy or tiny-alphabet " +
-            s"strings). $advice, or raise maxCandidates deliberately."))))
-        .cast("long").as("n_cand"))
-    cands.crossJoin(broadcast(n)).filter(col("n_cand") >= 0).drop("n_cand")
-  }
-
   /** Corpus-wide longest-common-prefix length of `strCol`, in code
-    * points (Spark `substring` units). Distributed via the classic
-    * identity LCP(set) = LCP(lexicographic min, lexicographic max) — any
-    * divergence inside the set already separates min from max — so the
-    * whole corpus costs TWO string aggregates (one partial-aggregated
-    * scan, no shuffle beyond the two-row final merge) and one driver-side
-    * compare of two strings bounded by `maxScan` (truncation is
-    * order-monotone, so the truncated min/max ARE the truncations of the
-    * true min/max and the result is exactly min(LCP, maxScan)). Empty or
-    * all-null input → 0.
+    * points, capped at `maxScan` — two string aggregates
+    * ([[EdJoin.lcp]]). Empty or all-null input → 0.
     */
   def commonPrefixLength(docs: DataFrame, strCol: String,
-                         maxScan: Int = 4096): Int = {
-    val r = docs.filter(col(strCol).isNotNull)
-      .agg(min(substring(col(strCol), 1, maxScan)).as("lo"),
-        max(substring(col(strCol), 1, maxScan)).as("hi")).head()
-    if (r.isNullAt(0) || r.isNullAt(1)) 0
-    else {
-      val (lo, hi) = (r.getString(0), r.getString(1))
-      val n = math.min(lo.length, hi.length)
-      var i = 0
-      while (i < n && lo.charAt(i) == hi.charAt(i)) i += 1
-      if (i > 0 && Character.isHighSurrogate(lo.charAt(i - 1))) i -= 1
-      lo.codePointCount(0, i)
-    }
-  }
+                         maxScan: Int = 4096): Int =
+    EdJoin.lcp(docs, strCol, maxScan)
 
   /** Content-adaptive slice for the edit family (VERDICT r14 #2): the
     * `sliceChars` characters starting AFTER the corpus-wide common
@@ -1293,113 +1241,39 @@ object Dedup {
   def adaptiveEditSlice(docs: DataFrame, strCol: String,
                         sliceChars: Int = 64,
                         maxScan: Int = 4096): org.apache.spark.sql.Column =
-    substring(col(strCol),
-      commonPrefixLength(docs, strCol, maxScan) + 1, sliceChars)
+    EdJoin.slice(docs, strCol, sliceChars, maxScan)(col(strCol))
 
   /** Edit-distance near-dup pairs — the typo/OCR-noise rung of the dedup
     * ladder (shingle Jaccard needs whole shared windows; a handful of
     * single-character edits scattered through a title destroys every
-    * 4-gram yet leaves levenshtein ≤ k). Returns (id_a < id_b, dist) for
-    * every pair with levenshtein(s_a, s_b) ≤ `maxDist`.
+    * 4-gram yet leaves the edit distance ≤ k). Returns (id_a < id_b, dist)
+    * for every pair within `maxDist` edits.
     *
-    * Scale shape (Ed-Join — Xiao, Wang & Lin, VLDB'08): all-pairs
-    * levenshtein is O(n²·len²), the worst join in this file; prefix
-    * filtering makes candidates ∝ rare-gram collisions instead. Each
-    * string's DISTINCT q-grams rank in a GLOBAL (df, gram) order and only
-    * the `q·maxDist + 1` RAREST form its prefix: one edit destroys at
-    * most q distinct grams, so |G_a ∩ G_b| ≥ max(|G_a|,|G_b|) − q·maxDist
-    * for any true pair, and whenever the LARGER gram set holds more than
-    * q·maxDist distinct grams that overlap forces the two prefixes to
-    * intersect — a pair missing from the prefix bucket join is PROVABLY
-    * beyond the bound (no recall loss, unlike LSH). The theorem has ONE
-    * blind spot: pairs where BOTH sides are gram-poor (< q·maxDist + 1
-    * distinct grams — short or highly repetitive strings; 'abcd' vs
-    * 'abce' at q=4 share zero grams yet sit at distance 1). Those route
-    * through an exhaustive SHORT-POOL length-band join — exact, and
-    * self-bounding because a true partner of a gram-poor string within
-    * `maxDist` edits is length-bounded and (at any realistic q·maxDist)
-    * gram-poor itself. Candidates prune further by the length filter
-    * |len_a − len_b| ≤ maxDist, then verify with one exact `levenshtein`
-    * per candidate. Shuffles: gram df agg, the prefix bucket join, the
-    * length-bucket pool join, the verify join-back — all equi-joins on
-    * grams/lengths/ids; hub grams never join because common grams rank
-    * LAST in rarity order and fall outside every prefix (the df-cut
-    * built into the theorem). Strings shorter than q contribute
-    * themselves as their only gram. `maxCandidates` is the in-plan
-    * volume guard ([[DefaultEditCandidateCap]]).
+    * Scale shape (Ed-Join, [[EdJoin]]): all-pairs Levenshtein is
+    * O(n²·len²), the worst join in this file; prefix filtering makes
+    * candidates ∝ rare-gram collisions instead. Each string's DISTINCT
+    * q-grams rank in a GLOBAL (df, gram) order and only the
+    * `q·maxDist + 1` RAREST form its prefix; a pair missing from the
+    * prefix bucket join is PROVABLY beyond the bound (no recall loss,
+    * unlike LSH). The theorem's one blind spot — pairs where BOTH sides
+    * are gram-poor (short or highly repetitive strings; 'abcd' vs 'abce'
+    * at q=4 share zero grams yet sit at distance 1) — routes through an
+    * exhaustive SHORT-POOL length-band join, exact and self-bounding.
+    * Candidates prune further by |len_a − len_b| ≤ maxDist, then verify
+    * with one banded Levenshtein each. Shuffles: gram df agg, the prefix
+    * bucket join, the length-bucket pool join, the verify join-back — all
+    * equi-joins; hub grams rank LAST and fall outside every prefix.
+    * `maxCandidates` is the in-plan volume guard
+    * ([[DefaultEditCandidateCap]]).
     */
-  /** Candidate-pair cache sized for the banded-levenshtein VERIFY stage
-    * (optimization r20, guide §1.2 per-task work): the verify is CPU-dense
-    * per byte, so AQE's bytes-based coalescing (and a cached plan's
-    * coalesced output partitioning) sizes it far too narrow — measured at
-    * sf0.1 the whole verify collapsed to one task (+75% wall on d19). Pin
-    * the partitioning to the session's core count on the SAME keys the
-    * dedup needs, so the explicit exchange REPLACES the distinct's own
-    * (no extra shuffle) and AQE leaves a user repartition uncoalesced.
-    * Scale-adaptive: defaultParallelism is the cluster core count — the
-    * right width for a CPU-bound stage at any data size; rows are
-    * (long, long) pairs, so even the 25M-candidate cap is ~400 MB.
-    */
-  private def verifyWidthCands(cands: DataFrame): DataFrame =
-    Caching.persisted(cands
-      .repartition(cands.sparkSession.sparkContext.defaultParallelism,
-        cands.columns.map(col).toIndexedSeq: _*)
-      .distinct())
-
   def editDistancePairs(docs: DataFrame, idCol: String, strCol: String,
                         maxDist: Int = 4, q: Int = 4,
-                        maxCandidates: Long = DefaultEditCandidateCap): DataFrame = {
-    require(maxDist >= 0 && q >= 1, s"bad knobs: maxDist=$maxDist, q=$q")
-    val prefixLen = q * maxDist + 1
-    val s = docs.select(col(idCol).as("id"), col(strCol).as("s"))
-      .filter(col("s").isNotNull)
-    // fused char_qgrams (optimization r21): the HOF CASE/transform form is
-    // CodegenFallback and burned interpreted lambda dispatch per gram on
-    // every edit screen's hottest projection — bit-identical by spec pin
-    val grams = Caching.persisted(s.select(col("id"),
-        explode(array_distinct(graft.functions.NativeFunctions
-          .charQgramsFused(docs.sparkSession, col("s"), q)))
-          .as("g")))
-    val df = grams.groupBy("g").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df"), col("g"))
-    val prefix = grams.join(df, "g")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= prefixLen)
-      .select(col("id"), col("g"))
-    val prefCands = prefix.select(col("id").as("id_a"), col("g"))
-      .join(prefix.select(col("id").as("id_b"), col("g")), "g")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // short pool: both-gram-poor pairs are outside the prefix theorem, so
-    // they pair exhaustively WITHIN the |len_a − len_b| ≤ maxDist band —
-    // realized as an equi-join on exploded candidate lengths (2·maxDist+1
-    // keys per short string), never a cross join
-    val short = s.join(grams.groupBy("id").agg(count(lit(1)).as("ng")), "id")
-      .filter(col("ng") < prefixLen)
-      .select(col("id"), length(col("s")).as("len"))
-    val shortCands = short.select(col("id").as("id_a"),
-        explode(sequence(col("len") - maxDist, col("len") + maxDist)).as("len_b"))
-      .join(short.select(col("id").as("id_b"), col("len").as("len_b")), "len_b")
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    val cands = verifyWidthCands(prefCands.union(shortCands))
-    guardCandidates(cands, maxCandidates, "editDistancePairs",
+                        maxCandidates: Long = DefaultEditCandidateCap): DataFrame =
+    EdJoin.selfPairs(
+      docs.select(col(idCol).as("id"), col(strCol).as("s")).filter(col("s").isNotNull),
+      EdJoin.Knobs(maxDist, q), maxCandidates, "editDistancePairs",
       "Raise q, lower maxDist, or screen incrementally with " +
         "incrementalEditDistancePairs")
-      .join(s.select(col("id").as("id_a"), col("s").as("s_a")), "id_a")
-      .join(s.select(col("id").as("id_b"), col("s").as("s_b")), "id_b")
-      .filter(abs(length(col("s_a")) - length(col("s_b"))) <= maxDist)
-      // thresholded (banded) levenshtein: O(len·maxDist) with early exit,
-      // returning -1 above the bound — the verify stage dominates cost
-      // when the corpus vocabulary keeps grams common (measured at sf0.1:
-      // full-DP verify 63 s vs banded ~2 s over the same candidates), and
-      // for kept rows (0 ≤ dist ≤ maxDist) the value equals the full DP's
-      .withColumn("dist",
-        levenshtein(col("s_a"), col("s_b"), maxDist).cast("long"))
-      .filter(col("dist") >= 0 && col("dist") <= maxDist)
-      .select("id_a", "id_b", "dist")
-  }
 
   /** Incremental edit-distance screen — the d11 daily-ingest shape for
     * the typo rung: FRESH strings screen against the standing corpus
@@ -1409,65 +1283,24 @@ object Dedup {
     * theorem holds under ANY shared total order, so the screen stays
     * exact); candidates form only where a fresh prefix gram hits a corpus
     * prefix gram, per-ingest work ∝ the batch's rare-gram collisions.
-    * Gram-poor strings (< q·maxDist + 1 distinct grams on BOTH sides of a
-    * pair — the prefix theorem's one blind spot, see [[editDistancePairs]])
-    * route through the exhaustive fresh-short × corpus-short length-band
-    * pool, so the screen is exact for every input. `maxCandidates` guards
-    * the candidate volume in-plan. Returns (fresh_id, corpus_id,
-    * dist ≤ maxDist).
+    * Gram-poor strings route through the exhaustive fresh-short ×
+    * corpus-short length-band pool, so the screen is exact for every
+    * input. This is [[EdJoin.screen]] fed corpus frames built on the fly;
+    * [[incrementalEditDistancePairsIndexed]] feeds it the index tables.
+    * `maxCandidates` guards the candidate volume in-plan. Returns
+    * (fresh_id, corpus_id, dist ≤ maxDist).
     */
   def incrementalEditDistancePairs(fresh: DataFrame, corpus: DataFrame,
                                    idCol: String, strCol: String,
                                    maxDist: Int = 4, q: Int = 4,
                                    maxCandidates: Long = DefaultEditCandidateCap): DataFrame = {
-    require(maxDist >= 0 && q >= 1, s"bad knobs: maxDist=$maxDist, q=$q")
-    val prefixLen = q * maxDist + 1
-    def strs(df: DataFrame) = df.select(col(idCol).as("id"), col(strCol).as("s"))
-      .filter(col("s").isNotNull)
-    def grams(df: DataFrame) = df.select(col("id"),
-      explode(array_distinct(graft.functions.NativeFunctions
-        .charQgramsFused(fresh.sparkSession, col("s"), q)))
-        .as("g"))
-    val (cs, fs) = (strs(corpus), strs(fresh))
-    val cg = Caching.persisted(grams(cs))
-    val fg = Caching.persisted(grams(fs))
-    val dfq = cg.groupBy("g").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df"), col("g"))
-    val cpref = cg.join(dfq, "g")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= prefixLen)
-      .select(col("id").as("corpus_id"), col("g"))
-    val fpref = fg
-      .join(dfq, Seq("g"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= prefixLen)
-      .select(col("id").as("fresh_id"), col("g"))
-    val prefCands = fpref.join(cpref, "g")
-      .select("fresh_id", "corpus_id")
-    // short pool (both-gram-poor cross pairs): fresh-short length keys
-    // explode over the band, corpus-short side equi-joins on exact length
-    def shortSide(st: DataFrame, g: DataFrame) =
-      st.join(g.groupBy("id").agg(count(lit(1)).as("ng")), "id")
-        .filter(col("ng") < prefixLen)
-        .select(col("id"), length(col("s")).as("len"))
-    val shortCands = shortSide(fs, fg)
-      .select(col("id").as("fresh_id"),
-        explode(sequence(col("len") - maxDist, col("len") + maxDist)).as("len_c"))
-      .join(shortSide(cs, cg).select(col("id").as("corpus_id"),
-        col("len").as("len_c")), "len_c")
-      .select("fresh_id", "corpus_id")
-    val cands = verifyWidthCands(prefCands.union(shortCands))
-    guardCandidates(cands, maxCandidates, "incrementalEditDistancePairs",
-      "Raise q or lower maxDist")
-      .join(fs.select(col("id").as("fresh_id"), col("s").as("s_f")), "fresh_id")
-      .join(cs.select(col("id").as("corpus_id"), col("s").as("s_c")), "corpus_id")
-      .filter(abs(length(col("s_f")) - length(col("s_c"))) <= maxDist)
-      .withColumn("dist",
-        levenshtein(col("s_f"), col("s_c"), maxDist).cast("long"))
-      .filter(col("dist") >= 0 && col("dist") <= maxDist)
-      .select("fresh_id", "corpus_id", "dist")
+    val k = EdJoin.Knobs(maxDist, q)
+    val cs = corpus.select(col(idCol).as("corpus_id"), col(strCol).as("s_c"))
+      .filter(col("s_c").isNotNull)
+    EdJoin.screen(
+      fresh.select(col(idCol).as("id"), col(strCol).as("s")).filter(col("s").isNotNull),
+      EdJoin.corpus(cs, EdJoin.corpusGrams(cs, k), k), k, maxCandidates,
+      "incrementalEditDistancePairs", "Raise q or lower maxDist")
   }
 
   /** Standing edit-distance screen index — the d12/d16/s24 lake pattern
@@ -1479,8 +1312,8 @@ object Dedup {
     * fresh batch; every corpus-side probe reads pre-bucketed files.
     * `maxDist`/`q` are part of the layout contract (the prefix length is
     * `q·maxDist + 1` — baked into the prefix table at build time).
-    */
-  /** `sliceFrom`/`sliceChars` are the FROZEN pairing-window knobs
+    *
+    * `sliceFrom`/`sliceChars` are the FROZEN pairing-window knobs
     * (VERDICT r15 #1): when `sliceChars > 0` the index was built over
     * `substring(s, sliceFrom, sliceChars)` with `sliceFrom` = the
     * corpus-wide LCP + 1 computed AT BUILD TIME — the [[adaptiveEditSlice]]
@@ -1496,47 +1329,21 @@ object Dedup {
   final case class EditIndex(dfq: String, prefix: String, shortPool: String,
                              strings: String, maxDist: Int, q: Int,
                              buckets: Int, sliceFrom: Int = 1,
-                             sliceChars: Int = 0)
+                             sliceChars: Int = 0) {
+    private[graft] def knobs: EdJoin.Knobs = EdJoin.Knobs(maxDist, q)
 
-  private def editGramsOf(spark: org.apache.spark.sql.SparkSession,
-                          c: String, q: Int) =
-    graft.functions.NativeFunctions.charQgramsFused(spark, col(c), q)
+    /** The frozen pairing window. */
+    private[graft] def slice: EdJoin.Slice = EdJoin.Slice(sliceFrom, sliceChars)
 
-  /** The edit family's corpus-side probe structures from (corpus_id, s_c)
-    * strings — the standing [[EditIndex]] tables and the live screen's
-    * static side alike: the q-gram set `cg` (persisted, for the caller to
-    * release), the gram df table, each doc's rarity prefix — its rarest
-    * `q·maxDist + 1` distinct grams by (df, g), carrying the string — and
-    * the gram-poor short pool keyed by length.
-    * Returns (cg, dfq, (g, corpus_id, s_c), (len_b, corpus_id, s_c)).
-    */
-  private[graft] def editCorpusSide(cs: DataFrame, q: Int, maxDist: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val prefixLen = q * maxDist + 1
-    val cg = Caching.persisted(cs.select(col("corpus_id"),
-      explode(array_distinct(editGramsOf(cs.sparkSession, "s_c", q))).as("g")))
-    val dfq = Caching.persisted(cg.groupBy("g").agg(count(lit(1)).as("df")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("corpus_id")).orderBy(col("df"), col("g"))
-    val cpref = cg.join(dfq, "g")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= prefixLen)
-      .select(col("corpus_id"), col("g"))
-      .join(cs, Seq("corpus_id"))
-      .select(col("g"), col("corpus_id"), col("s_c"))
-    val cshort = cs
-      .join(cg.groupBy("corpus_id").agg(count(lit(1)).as("ng")), Seq("corpus_id"))
-      .filter(col("ng") < prefixLen)
-      .select(length(col("s_c")).as("len_b"), col("corpus_id"), col("s_c"))
-    (cg, dfq, cpref, cshort)
+    /** The index tables' stored columns (no epoch ledger) as the frames a
+      * fresh side probes.
+      */
+    private[graft] def corpus(spark: org.apache.spark.sql.SparkSession): EdJoin.Corpus =
+      EdJoin.Corpus(spark.table(dfq).select("g", "df"),
+        spark.table(prefix).select("g", "corpus_id", "s_c"),
+        spark.table(shortPool).select("len_b", "corpus_id", "s_c"),
+        spark.table(strings).select("corpus_id", "s_c"))
   }
-
-  /** The index's frozen pairing window applied to a string column:
-    * identity when `sliceChars = 0` (caller-sliced contract).
-    */
-  private def slicedStr(c: org.apache.spark.sql.Column,
-                        idx: EditIndex): org.apache.spark.sql.Column =
-    if (idx.sliceChars > 0) substring(c, idx.sliceFrom, idx.sliceChars) else c
 
   /** `sliceChars > 0` builds the ADAPTIVE-WINDOW variant: the corpus-wide
     * LCP is computed here (two string aggregates — [[commonPrefixLength]])
@@ -1544,14 +1351,14 @@ object Dedup {
     * the offset joins maxDist/q/buckets in the knob-baked table names
     * (`..._w{sliceChars}o{sliceFrom}`). HARD CONTRACT (ADVICE r16): a
     * `namePrefix` names ONE corpus — the build-time LCP is memoized per
-    * (namePrefix, window knobs) within the session, so re-entering with
-    * the SAME prefix over a corpus whose head has drifted reuses the
+    * (namePrefix, window knobs) within the application, so re-entering
+    * with the SAME prefix over a corpus whose head has drifted reuses the
     * frozen offset and the existing table family (exactly what a
     * standing index should do: the probe window never moves under a
-    * live screen). Drift protection is cross-JVM only: a fresh session
+    * live screen). Drift protection is cross-JVM only: a fresh JVM
     * recomputes the LCP, and a drifted head then derives a DIFFERENT
     * `_w{chars}o{off}` family instead of silently probing a stale
-    * window. To re-window within a session, use a new `namePrefix`.
+    * window. To re-window within an application, use a new `namePrefix`.
     * `sliceChars = 0` (default) keeps the pre-r16 whole-string contract
     * and table names verbatim.
     */
@@ -1570,40 +1377,31 @@ object Dedup {
     // the offset is needed to DERIVE the table name, which would put a
     // corpus min/max aggregate in front of the tableExists fast path on
     // every serve — contradicting the index's own "no corpus-side work
-    // per ingest" contract — so the build-time LCP is memoized per
-    // (namePrefix, window knobs) in a session temp view (the d23
-    // '_appended' marker pattern; a fresh session recomputes once and
-    // derives the same knob-baked names)
-    val sliceFrom =
-      if (sliceChars > 0) {
-        val marker = s"${namePrefix}_edit_w${sliceChars}s${sliceMaxScan}_off"
-        if (spark.catalog.tableExists(marker))
-          spark.table(marker).head().getLong(0).toInt
-        else {
-          val off = commonPrefixLength(
-            corpus.select(col(strCol)), strCol, sliceMaxScan) + 1
-          spark.range(off, off + 1L).createOrReplaceTempView(marker)
-          off
-        }
-      } else 1
+    // per ingest" contract — so the build-time LCP is a KnobMemo
+    // derivation keyed by (namePrefix, window knobs)
+    val sliceFrom = KnobMemo.corpusN(spark,
+      s"${namePrefix}_edit_w${sliceChars}s${sliceMaxScan}_off")(
+      EdJoin.slice(corpus, strCol, sliceChars, sliceMaxScan).from).toInt
     val win = if (sliceChars > 0) s"_w${sliceChars}o$sliceFrom" else ""
     val nm = s"${namePrefix}_edit_d${maxDist}q${q}_k$buckets$win"
     val idx = EditIndex(s"${nm}_dfq", s"${nm}_pref",
       s"${nm}_short", s"${nm}_str", maxDist, q, buckets, sliceFrom, sliceChars)
     if (!spark.catalog.tableExists(idx.dfq)) {
-      val cs = corpus.select(col(idCol).cast("long").as("corpus_id"),
-        slicedStr(col(strCol), idx).as("s_c")).filter(col("s_c").isNotNull)
-      val (_, dfq, cpref, cshort) = editCorpusSide(cs, q, maxDist)
+      val k = idx.knobs
+      val cs = idx.slice.strings(corpus, idCol, strCol, "corpus_id", "s_c")
+      val c = EdJoin.corpus(cs, EdJoin.corpusGrams(cs, k), k)
+      // read by the prefix cut and written as its own table
+      Caching.persisted(c.dfq)
       // the three APPENDED tables carry the exactly-once epoch ledger;
       // dfq is frozen at build time (the honest asymmetry) and stays plain
       graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.prefix,
-        cpref, "g", buckets)
+        c.prefixRows, "g", buckets)
       graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.shortPool,
-        cshort, "len_b", buckets)
+        c.short, "len_b", buckets)
       graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.strings,
         cs, "corpus_id", buckets)
       graft.sources.BucketedLake.writeBucketedTable(spark, idx.dfq,
-        dfq, "g", buckets)
+        c.dfq, "g", buckets)
     }
     idx
   }
@@ -1638,29 +1436,14 @@ object Dedup {
   def appendEditIndex(batch: DataFrame, index: EditIndex, idCol: String,
                       strCol: String, epoch: Long): EditIndex = {
     val spark = batch.sparkSession
-    val prefixLen = index.q * index.maxDist + 1
-    val cs = batch.select(col(idCol).cast("long").as("corpus_id"),
-      slicedStr(col(strCol), index).as("s_c")).filter(col("s_c").isNotNull)
-    val cg = Caching.persisted(cs.select(col("corpus_id"),
-      explode(array_distinct(editGramsOf(spark, "s_c", index.q))).as("g")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("corpus_id")).orderBy(col("df"), col("g"))
-    val bpref = cg
-      .join(spark.table(index.dfq), Seq("g"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= prefixLen)
-      .select(col("corpus_id"), col("g"))
-      .join(cs, Seq("corpus_id"))
-      .select(col("g"), col("corpus_id"), col("s_c"))
-    val bshort = cs
-      .join(cg.groupBy("corpus_id").agg(count(lit(1)).as("ng")), Seq("corpus_id"))
-      .filter(col("ng") < prefixLen)
-      .select(length(col("s_c")).as("len_b"), col("corpus_id"), col("s_c"))
+    val k = index.knobs
+    val cs = index.slice.strings(batch, idCol, strCol, "corpus_id", "s_c")
+    val c = EdJoin.corpus(cs, EdJoin.corpusGrams(cs, k), k,
+      frozen = Some(spark.table(index.dfq)))
     graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.prefix,
-      bpref, epoch, "g", index.buckets)
+      c.prefixRows, epoch, "g", index.buckets)
     graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.shortPool,
-      bshort, epoch, "len_b", index.buckets)
+      c.short, epoch, "len_b", index.buckets)
     graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.strings,
       cs, epoch, "corpus_id", index.buckets)
     index
@@ -1670,56 +1453,34 @@ object Dedup {
     * identical RESULTS when the index was built from the same corpus (the
     * d20 oracle applies verbatim; under appends the frozen-order theorem
     * keeps the OUTPUT identical even where candidates differ), but the
-    * per-ingest cost excludes every corpus-side derivation: only the
-    * fresh batch grams/ranks/explodes, and the df/prefix/short/strings
-    * probes read the bucketed tables. An adaptive-window index
-    * (`sliceChars > 0`) slices the fresh batch at its FROZEN
-    * `sliceFrom` — the probe always reads the window the index was
-    * built over.
+    * per-ingest cost excludes every corpus-side derivation: the same
+    * [[EdJoin.screen]] probe reads the df/prefix/short/strings frames from
+    * the bucketed tables. An adaptive-window index (`sliceChars > 0`)
+    * slices the fresh batch at its FROZEN `sliceFrom` — the probe always
+    * reads the window the index was built over.
     */
   def incrementalEditDistancePairsIndexed(fresh: DataFrame, index: EditIndex,
                                           idCol: String, strCol: String,
-                                          maxCandidates: Long = DefaultEditCandidateCap): DataFrame = {
-    val spark = fresh.sparkSession
-    val (maxDist, q) = (index.maxDist, index.q)
-    val prefixLen = q * maxDist + 1
-    val fs = fresh.select(col(idCol).cast("long").as("id"),
-      slicedStr(col(strCol), index).as("s")).filter(col("s").isNotNull)
-    val fg = Caching.persisted(fs.select(col("id"),
-      explode(array_distinct(editGramsOf(spark, "s", q))).as("g")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("df"), col("g"))
-    val fpref = fg
-      .join(spark.table(index.dfq), Seq("g"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= prefixLen)
-      .select(col("id").as("fresh_id"), col("g"))
-    val prefCands = fpref
-      .join(spark.table(index.prefix).select(col("g"), col("corpus_id")), "g")
-      .select("fresh_id", "corpus_id")
-    val shortCands = fs
-      .join(fg.groupBy("id").agg(count(lit(1)).as("ng")), "id")
-      .filter(col("ng") < prefixLen)
-      .select(col("id").as("fresh_id"),
-        explode(sequence(length(col("s")) - maxDist,
-          length(col("s")) + maxDist)).as("len_b"))
-      .join(spark.table(index.shortPool).select(col("len_b"), col("corpus_id")),
-        "len_b")
-      .select("fresh_id", "corpus_id")
-    val cands = verifyWidthCands(prefCands.union(shortCands))
-    guardCandidates(cands, maxCandidates, "incrementalEditDistancePairsIndexed",
+                                          maxCandidates: Long = DefaultEditCandidateCap): DataFrame =
+    EdJoin.screen(index.slice.strings(fresh, idCol, strCol, "id", "s"),
+      index.corpus(fresh.sparkSession), index.knobs, maxCandidates,
+      "incrementalEditDistancePairsIndexed",
       "Raise q or lower maxDist; rebuild the index if corpus drift has " +
         "eroded the frozen rarity order")
-      .join(fs.select(col("id").as("fresh_id"), col("s").as("s_f")), "fresh_id")
-      .join(spark.table(index.strings), Seq("corpus_id"))
-      .filter(abs(length(col("s_f")) - length(col("s_c"))) <= maxDist)
-      .withColumn("dist",
-        levenshtein(col("s_f"), col("s_c"), maxDist).cast("long"))
-      .filter(col("dist") >= 0 && col("dist") <= maxDist)
-      .select("fresh_id", "corpus_id", "dist")
-  }
 
+  /** ==SMALL-SCALE CROSS-CHECK — not a scale path== Embedding near-dup
+    * pairs: cosine ≥ threshold over `ARRAY<FLOAT>` columns, as an EXACT
+    * all-pairs crossJoin. Deliberately O(n²): it exists to verify
+    * [[embeddingCosinePairsLsh]] (the production variant — LSH-bucketed,
+    * never all-pairs) on corpora small enough to enumerate.
+    *
+    * The smallness contract is ENFORCED, not advisory (VERDICT r6 #3): the
+    * input is counted ONCE up front (an id-column-only scan — the count is
+    * reused for the error message, never recomputed) and the call aborts
+    * loudly above `crossCheckCap` (default 100k rows ⇒ ≤ ~5·10⁹ candidate
+    * pairs), so the all-pairs shape is structurally incapable of running
+    * at corpus scale. Raising the cap is an explicit caller decision.
+    */
   def embeddingCosinePairs(vecs: DataFrame, idCol: String, vecCol: String,
                            threshold: Double,
                            crossCheckCap: Long = CrossCheckGuard.DefaultCap): DataFrame = {

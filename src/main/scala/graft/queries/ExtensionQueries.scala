@@ -245,9 +245,10 @@ object ExtensionQueries {
     * the screened structure), left-joined against the screen's caught
     * pairs.
     */
-  private def plantedRecallRollup(planted: org.apache.spark.sql.DataFrame,
-                                  others: org.apache.spark.sql.DataFrame,
-                                  caught: org.apache.spark.sql.DataFrame) = {
+  private[graft] def plantedRecallRollup(planted: org.apache.spark.sql.DataFrame,
+                                         others: org.apache.spark.sql.DataFrame,
+                                         caught: org.apache.spark.sql.DataFrame) = {
+    graft.functions.NativeFunctions.register(planted.sparkSession)
     def withNorm(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("norm", Similarity.l2norm(col("v")))
     val truth = withNorm(planted)

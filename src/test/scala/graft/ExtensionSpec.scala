@@ -1099,6 +1099,22 @@ class ExtensionSpec extends SparkSpec {
     assert(other === 99L && derived.get() === 1)
   }
 
+  test("s27/s28 planted-recall truth resolves dot_product in a new session") {
+    // a new session's function registry holds none of graft's functions, so
+    // the recall truth must register them itself rather than rely on the
+    // screen it grades having done so first
+    val fresh = spark.newSession()
+    val e = fresh.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val truth = graft.queries.ExtensionQueries.plantedRecallRollup(
+      e.filter(col("vec_id") < 5), e, e.limit(0).select(
+        col("vec_id").as("query_id"), col("vec_id").as("other_id")))
+    assert(truth.collect().forall(_.getAs[Long]("caught_n") === 0L))
+    val s28 = SparkEntry.queries("s28_adaptive_mih_recall")(spark.newSession(), dir)
+      .collect()
+    assert(s28.nonEmpty && s28.forall(_.getAs[Long]("truth_n") > 0))
+  }
+
   test("exact dedup keeps lowest tiebreak row and all groups") {
     val out = Dedup.exact(docs, Seq("lang", "source"), "doc_id")
     val groups = docs.select("lang", "source").distinct().count()

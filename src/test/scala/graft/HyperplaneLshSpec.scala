@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, HyperplaneLsh, Similarity}
@@ -20,9 +19,6 @@ class HyperplaneLshSpec extends SparkSpec {
   private lazy val embs = spark.read.parquet(s"$dir/embeddings.parquet")
   private lazy val fresh = embs.filter(col("vec_id") % 8 === 0)
   private lazy val corpus = embs.filter(col("vec_id") % 8 =!= 0)
-
-  private def rows(df: DataFrame): Seq[String] =
-    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   test("self-pairs, direct, indexed and appended-index screen: identical rows " +
     "under shuffle.partitions 1/7/64 x AQE on/off") {
@@ -64,25 +60,6 @@ class HyperplaneLshSpec extends SparkSpec {
         fresh, corpus, "vec_id", "embedding", radius = 7, probeBallRadius = 1))))
   }
 
-  /** Every entry's rows are non-empty and the same under each posture. */
-  private def samePerPartitioning(entries: Seq[(String, () => DataFrame)]): Unit =
-    try {
-      val runs = for (parts <- Seq(1, 7, 64); aqe <- Seq(true, false)) yield
-        GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString,
-            "spark.sql.adaptive.enabled" -> aqe.toString) {
-          // drop cached intermediates so each posture recomputes them
-          spark.catalog.clearCache()
-          s"partitions=$parts aqe=$aqe" -> entries.map { case (n, f) => n -> rows(f()) }
-        }
-      val (_, base) = runs.head
-      base.foreach { case (n, r) => assert(r.nonEmpty, s"$n: empty fixture result") }
-      runs.tail.foreach { case (posture, got) =>
-        got.zip(base).foreach { case ((n, r), (_, b)) =>
-          assert(r === b, s"$n differs under $posture")
-        }
-      }
-    } finally spark.catalog.clearCache()
-
   test("past the broadcast cap every join shuffles and the rows are unchanged") {
     // over-cap row counts make the kernel's size rule withhold every
     // broadcast hint; with Spark's own size-based broadcast off as well
@@ -111,13 +88,13 @@ class HyperplaneLshSpec extends SparkSpec {
         val plan = df.queryExecution.executedPlan.toString
         assert(!plan.contains("Broadcast"), plan)
         assert("SortMergeJoin".r.findAllIn(plan).size === 3, plan)
-        rows(df)
+        sortedRows(df)
       }
     }
     val broadcast = Seq(
       Dedup.embeddingCosinePairsLsh(embs, "vec_id", "embedding", 0.4),
       Dedup.incrementalEmbeddingPairsLsh(fresh, corpus, "vec_id", "embedding", 0.4))
-      .map(rows)
+      .map(sortedRows)
     broadcast.foreach(r => assert(r.nonEmpty))
     assert(shuffled === broadcast)
   }
