@@ -674,224 +674,151 @@ object PqCodes {
   }
 }
 
-/** Max-similarity centroid id of a vector against a centroid matrix in ONE
-  * fused loop — `nearest_centroid(vec, flatCents, norms, useVnorm)` → LONG.
+/** The best cells of a vector against a centroid matrix in ONE fused loop —
+  * `nearest_centroid_cos|dot(vec, flatCents, norms)` → the best cell id
+  * (LONG), and `nearest_centroids(vec, flatCents, norms, n)` → the `n` best
+  * cell ids by cosine, best first (ARRAY<LONG> of min(n, k) entries).
   * `flatCents` is the k × dim centroid matrix flattened row-major and
-  * `norms` the k centroid L2 norms, both plan literals.
+  * `norms` the k centroid L2 norms, both plan literals. It is the one cell ranking of the IVF family
+  * ([[graft.operators.Ivf]]): assignment is the n = 1 form, every probe the
+  * n = nProbe form.
   *
-  * Same motivation as [[HyperplaneSignatures]]: the k-struct
-  * `array_max(array(struct(dot/…, -ci)…))` argmax forest blows past the
-  * codegen budget once k is corpus-adaptive (√n — 141 at the 10× smoke)
-  * and every dot runs interpreted.
+  * Same motivation as [[HyperplaneSignatures]]: a k-struct argmax forest or
+  * a crossJoin + window walk over the centroids blows past the codegen
+  * budget (or shuffles n × k rows) once k is corpus-adaptive (√n).
   *
   * Semantics contract (spec-pinned bit-equality with the struct-argmax
-  * form, [[graft.operators.Similarity.assignToCentroids]]):
-  *  - per centroid, sim = dot/(vnorm·norm_ci) when `useVnorm` (cosine
-  *    assignment; vnorm = √(Σv²) over the same sequential fold as
-  *    `l2norm`, divisions in the same association) or dot/norm_ci when not
-  *    (the k-means iteration form, argmax-invariant to the positive vnorm
-  *    factor), where a zero norm_ci in the latter form pins sim = -∞ (the
-  *    degenerate-seed guard);
-  *  - a null dot (null vector element / dim mismatch) is a NULL sim,
-  *    ranking below every value exactly like Spark's struct ordering; a
-  *    null NORM or null CENTROID component likewise nulls that centroid's
-  *    sim (ADVICE r9 — previously those flowed through getDouble as a
-  *    silent 0.0);
-  *  - winner = highest sim under Spark's double total order
-  *    (java.lang.Double.compare: NaN above all, -0.0 < 0.0), ties to the
-  *    LOWEST ci — the `(sim, -ci)` lexicographic max.
+  * form on non-degenerate input):
+  *  - per centroid, sim = dot/(vnorm·norm_ci) when `useVnorm` (cosine;
+  *    vnorm = √(Σv²) over the same sequential fold as `l2norm`, divisions
+  *    in the same association) or dot/norm_ci when not (the k-means
+  *    iteration form, argmax-invariant to the positive vnorm factor);
+  *  - the sim is NULL when the dot is null (null vector element, dim
+  *    mismatch), when the centroid's norm or a component is null, when
+  *    norm_ci is 0, or, in the cosine form, when vnorm is 0 — the DuckDB
+  *    oracle's `x / 0.0 = NULL`;
+  *  - ranking is by sim under Spark's double total order
+  *    (java.lang.Double.compare: NaN above all, -0.0 < 0.0), NULL sims
+  *    last (`ORDER BY sim DESC` in Spark and DuckDB), ties to the LOWEST ci.
   *
-  * Degenerate norms (cosine form only): division is IEEE, like the DuckDB
-  * oracle — a zero vnorm makes every sim NaN (→ ci 0 by the tie rule); an
-  * un-guarded zero-norm CENTROID yields 0/0 = NaN which ranks above every
-  * real sim and captures the row. NB the expression-forest form this
-  * replaces did NOT get that far under Spark 4's default ANSI mode — it
-  * threw DIVIDE_BY_ZERO — so the fused loop is strictly more permissive
-  * there, and agrees with the oracle. Training paths use the guarded
-  * iteration form (`useVnorm = false`, zero-norm → -∞), so the hazard is
-  * confined to a genuinely zero-mean trained cluster.
+  * So a zero-norm centroid ranks last for every vector and never captures
+  * one, and a zero vector (every sim NULL) lands in cell 0 and probes cells
+  * 0 .. n−1 — the oracle's `ORDER BY cosine DESC, cid` order exactly.
   */
 case class NearestCentroid(first: Expression, second: Expression,
-                           third: Expression, useVnorm: Boolean)
+                           third: Expression, useVnorm: Boolean, n: Option[Int] = None)
     extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(first, second, third).forall(_.dataType match {
       case ArrayType(DoubleType, _) => true
       case _ => false
-    })
+    }) && n.forall(_ >= 1)
     if (ok) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       "nearest_centroid expects (ARRAY<DOUBLE> vec, ARRAY<DOUBLE> flat centroids, " +
-        s"ARRAY<DOUBLE> norms), got ${first.dataType.sql} / ${second.dataType.sql} / ${third.dataType.sql}")
+        s"ARRAY<DOUBLE> norms[, n >= 1]), got ${first.dataType.sql} / " +
+        s"${second.dataType.sql} / ${third.dataType.sql}, n=${n.getOrElse(1)}")
   }
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
+  override def dataType: DataType =
+    if (n.isEmpty) org.apache.spark.sql.types.LongType
+    else ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def prettyName: String = "nearest_centroid"
   override def nullable: Boolean = true
 
-  private def vecElementsNullable: Boolean = first.dataType match {
-    case ArrayType(_, containsNull) => containsNull
-    case _ => false
-  }
-
-  // null elements in the CENTROID/NORM arrays get the same treatment as the
-  // vector path: a null norm or null centroid component makes that
-  // centroid's sim NULL (ranks below every value), never a silent 0.0
-  // through getDouble's unboxing (ADVICE r9). Internal callers pass
-  // containsNull=false literals ([[NativeFunctions.nearestCentroid]] uses
-  // typedlit, whose Scala-reflected schema carries primitive-element
-  // non-nullability), so the per-element branch compiles away on the hot
-  // path and only guards the SQL surface.
-  private def matElementsNullable: Boolean = Seq(second, third).exists(_.dataType match {
+  private def elementsNullable(es: Expression*): Boolean = es.exists(_.dataType match {
     case ArrayType(_, containsNull) => containsNull
     case _ => false
   })
 
+  // Internal callers pass containsNull=false literals
+  // ([[NativeFunctions.nearestCentroid]] uses typedlit), so the per-element
+  // null checks are skipped on the hot path and only guard the SQL surface.
   override def nullSafeEval(a: Any, b: Any, c: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val cents = b.asInstanceOf[ArrayData]
-    val norms = c.asInstanceOf[ArrayData]
-    val dim = v.numElements()
-    val k = norms.numElements()
-    if (k == 0) return null
-    val dimOk = cents.numElements() == dim.toLong * k
-    var vHasNull = false
-    if (vecElementsNullable) {
-      var i = 0
-      while (i < dim && !vHasNull) { vHasNull = v.isNullAt(i); i += 1 }
-    }
-    val dotNull = !dimOk || vHasNull
-    val matsNullable = matElementsNullable
-    var vnorm = 0.0
-    if (useVnorm && !dotNull) {
-      var i = 0
-      var acc = 0.0
-      while (i < dim) { acc += v.getDouble(i) * v.getDouble(i); i += 1 }
-      vnorm = math.sqrt(acc)
-    }
-    var bestCi = 0
-    var bestSim = 0.0
-    var bestNull = true
-    var ci = 0
-    while (ci < k) {
-      var simNull = dotNull
-      var sim = 0.0
-      if (matsNullable && norms.isNullAt(ci)) simNull = true
-      else {
-        val norm = norms.getDouble(ci)
-        if (!useVnorm && norm == 0.0) { sim = Double.NegativeInfinity; simNull = false }
-        else if (!dotNull) {
-          var d = 0.0
-          val base = ci * dim
-          var i = 0
-          while (i < dim && !simNull) {
-            if (matsNullable && cents.isNullAt(base + i)) simNull = true
-            else { d += v.getDouble(i) * cents.getDouble(base + i); i += 1 }
-          }
-          if (!simNull) sim = if (useVnorm) d / (vnorm * norm) else d / norm
-        }
-      }
-      val wins =
-        if (ci == 0) true
-        else if (simNull) false
-        else if (bestNull) true
-        else java.lang.Double.compare(sim, bestSim) > 0
-      if (wins) { bestCi = ci; bestSim = sim; bestNull = simNull }
-      ci += 1
-    }
-    bestCi.toLong
+    val best = NearestCentroid.compute(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], useVnorm,
+      n.getOrElse(1), elementsNullable(first), elementsNullable(second, third))
+    if (best == null) null
+    else if (n.isEmpty) best(0)
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(best)
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b, c) => {
-      val dim = ctx.freshName("dim")
-      val k = ctx.freshName("k")
-      val dotNull = ctx.freshName("dotNull")
-      val vnorm = ctx.freshName("vnorm")
-      val acc = ctx.freshName("acc")
-      val bestCi = ctx.freshName("bestCi")
-      val bestSim = ctx.freshName("bestSim")
-      val bestNull = ctx.freshName("bestNull")
-      val ci = ctx.freshName("ci")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val base = ctx.freshName("base")
-      val norm = ctx.freshName("nrm")
-      val sim = ctx.freshName("sim")
-      val simNull = ctx.freshName("simNull")
-      val wins = ctx.freshName("wins")
-      val vNullScan =
-        if (vecElementsNullable)
-          s"for (int $i = 0; $i < $dim && !$dotNull; $i++) { if ($a.isNullAt($i)) $dotNull = true; }"
-        else ""
-      val vnormCalc =
-        if (useVnorm)
-          s"""
-             |double $acc = 0.0;
-             |if (!$dotNull) {
-             |  for (int $i = 0; $i < $dim; $i++) {
-             |    $acc += $a.getDouble($i) * $a.getDouble($i);
-             |  }
-             |  $vnorm = java.lang.Math.sqrt($acc);
-             |}
-           """.stripMargin
-        else ""
-      val simCalc =
-        if (useVnorm) s"if (!$simNull) $sim = $d / ($vnorm * $norm);"
-        else s"if (!$simNull) $sim = $d / $norm;"
-      val zeroNormGuard =
-        if (useVnorm) ""
-        else s"if ($norm == 0.0) { $sim = Double.NEGATIVE_INFINITY; $simNull = false; } else"
-      val normNullGuard =
-        if (matElementsNullable)
-          s"if ($c.isNullAt($ci)) { $simNull = true; } else"
-        else ""
-      val centNullCheck =
-        if (matElementsNullable)
-          s"if ($b.isNullAt($base + $i)) { $simNull = true; break; }"
-        else ""
+      val best = ctx.freshName("best")
+      val value =
+        if (n.isEmpty) s"$best[0]"
+        else s"new org.apache.spark.sql.catalyst.util.GenericArrayData($best)"
       s"""
-         |int $dim = $a.numElements();
-         |int $k = $c.numElements();
-         |if ($k == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  boolean $dotNull = $b.numElements() != (long) $dim * $k;
-         |  $vNullScan
-         |  double $vnorm = 0.0;
-         |  $vnormCalc
-         |  int $bestCi = 0;
-         |  double $bestSim = 0.0;
-         |  boolean $bestNull = true;
-         |  for (int $ci = 0; $ci < $k; $ci++) {
-         |    boolean $simNull = $dotNull;
-         |    double $sim = 0.0;
-         |    $normNullGuard
-         |    {
-         |      double $norm = $c.getDouble($ci);
-         |      $zeroNormGuard
-         |      if (!$dotNull) {
-         |        double $d = 0.0;
-         |        int $base = $ci * $dim;
-         |        for (int $i = 0; $i < $dim; $i++) {
-         |          $centNullCheck
-         |          $d += $a.getDouble($i) * $b.getDouble($base + $i);
-         |        }
-         |        $simCalc
-         |      }
-         |    }
-         |    boolean $wins = ($ci == 0) ||
-         |      (!$simNull && ($bestNull || java.lang.Double.compare($sim, $bestSim) > 0));
-         |    if ($wins) { $bestCi = $ci; $bestSim = $sim; $bestNull = $simNull; }
-         |  }
-         |  ${ev.value} = (long) $bestCi;
-         |}
+         |long[] $best = graft.functions.NearestCentroid.compute($a, $b, $c, $useVnorm,
+         |  ${n.getOrElse(1)}, ${elementsNullable(first)}, ${elementsNullable(second, third)});
+         |if ($best == null) { ${ev.isNull} = true; } else { ${ev.value} = $value; }
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
                                                  t: Expression): NearestCentroid =
     copy(first = f, second = s, third = t)
+}
+
+object NearestCentroid {
+  /** The min(`n`, k) best cell ids of `v`, best first, under the class
+    * contract; null when there are no centroids.
+    */
+  def compute(v: ArrayData, cents: ArrayData, norms: ArrayData, useVnorm: Boolean,
+              n: Int, vecNullable: Boolean, matNullable: Boolean): Array[Long] = {
+    val dim = v.numElements()
+    val k = norms.numElements()
+    if (k == 0) return null
+    var dotNull = cents.numElements() != dim.toLong * k
+    var i = 0
+    while (vecNullable && i < dim && !dotNull) { dotNull = v.isNullAt(i); i += 1 }
+    var vnorm = 0.0
+    if (useVnorm && !dotNull) {
+      var acc = 0.0
+      i = 0
+      while (i < dim) { acc += v.getDouble(i) * v.getDouble(i); i += 1 }
+      vnorm = math.sqrt(acc)
+    }
+    val allNull = dotNull || (useVnorm && vnorm == 0.0)
+    val m = math.min(n, k)
+    val ids = new Array[Long](m)
+    val sims = new Array[Double](m)
+    val nulls = new Array[Boolean](m)
+    var filled = 0
+    var ci = 0
+    while (ci < k) {
+      var simNull = allNull || (matNullable && norms.isNullAt(ci))
+      var sim = 0.0
+      if (!simNull) {
+        val norm = norms.getDouble(ci)
+        simNull = norm == 0.0
+        var d = 0.0
+        val base = ci * dim
+        i = 0
+        while (i < dim && !simNull) {
+          if (matNullable && cents.isNullAt(base + i)) simNull = true
+          else { d += v.getDouble(i) * cents.getDouble(base + i); i += 1 }
+        }
+        if (!simNull) sim = if (useVnorm) d / (vnorm * norm) else d / norm
+      }
+      // insert behind every kept entry this one does not strictly beat, so
+      // ties keep the lower ci first and NULL sims queue in ci order
+      var p = filled
+      while (p > 0 && !simNull &&
+          (nulls(p - 1) || java.lang.Double.compare(sim, sims(p - 1)) > 0)) p -= 1
+      if (p < m) {
+        var j = math.min(filled, m - 1)
+        while (j > p) {
+          ids(j) = ids(j - 1); sims(j) = sims(j - 1); nulls(j) = nulls(j - 1); j -= 1
+        }
+        ids(p) = ci; sims(p) = sim; nulls(p) = simNull
+        if (filled < m) filled += 1
+      }
+      ci += 1
+    }
+    ids
+  }
 }
 
 /** Jackson over the UTF-8 bytes of a `coordinates` text, shared by
@@ -1182,6 +1109,9 @@ object NativeFunctions {
     vecProbe, vecProbe, vecProbe)(e => NearestCentroid(e(0), e(1), e(2), useVnorm = true))
   private val nearestCentroidDotFn = fn("nearest_centroid_dot", 3)(
     vecProbe, vecProbe, vecProbe)(e => NearestCentroid(e(0), e(1), e(2), useVnorm = false))
+  private val nearestCentroidsFn = fn("nearest_centroids", 4)(
+    vecProbe, vecProbe, vecProbe, intProbe)(e => NearestCentroid(e(0), e(1), e(2),
+    useVnorm = true, Some(intConstArg("nearest_centroids", "n", e(3)))))
   private val gearChunkEndsFn = fn("gear_chunk_ends", 2, 4)(
     Literal.create(Array.empty[Byte], BinaryType), intProbe) { e =>
     val maskBits = intConstArg("gear_chunk_ends", "maskBits", e(1))
@@ -1205,7 +1135,7 @@ object NativeFunctions {
   private[graft] val table: Seq[NativeFunction] = Seq(dotProductFn, wordShinglesFn,
     charQgramsFn, logLinCodeFn, jsonArrayElementsFn, geoJsonFeatureFn,
     hyperplaneSignaturesFn, pqCodesFn, nearestCentroidCosFn, nearestCentroidDotFn,
-    gearChunkEndsFn, bloomAggFn, mightContainFn, hilbertKeyFn)
+    nearestCentroidsFn, gearChunkEndsFn, bloomAggFn, mightContainFn, hilbertKeyFn)
 
   /** Idempotent, atomic session registration of one native function: the
     * check and the registration run under the registry's own lock, so
@@ -1313,21 +1243,27 @@ object NativeFunctions {
         lit(cbs.length), lit(cbs.head.length)),
       typedlit(Array.fill(cbs.length)(0L)))
 
-  /** Nearest-centroid id by the fused argmax loop (see [[NearestCentroid]]).
-    * `useVnorm = true` is the cosine-assignment form; `false` the k-means
-    * iteration form (vnorm factored out, zero-norm seeds pinned to -∞).
-    * Registers both forms.
+  /** The best cell id by the fused ranking loop (see [[NearestCentroid]]).
+    * `useVnorm = true` is the cosine form; `false` the k-means iteration
+    * form (vnorm factored out). Registers both forms.
     */
   def nearestCentroid(spark: SparkSession, vec: Column,
                       flatCents: Array[Double], norms: Array[Double],
                       useVnorm: Boolean): Column = {
     ensure(spark, nearestCentroidCosFn)
     ensure(spark, nearestCentroidDotFn)
-    // typedlit (containsNull=false): keeps the argmax loop branch-free —
-    // the null-element guard compiles in only for genuinely nullable args
+    // typedlit (containsNull=false): keeps the ranking loop branch-free —
+    // the null-element guard runs only for genuinely nullable args
     call_function((if (useVnorm) nearestCentroidCosFn else nearestCentroidDotFn).name,
       vec, typedlit(flatCents), typedlit(norms))
   }
+
+  /** The `n` best cell ids by cosine, best first (ARRAY<LONG>): the same
+    * ranking as [[nearestCentroid]]'s cosine form, one probe per row.
+    */
+  def nearestCentroids(spark: SparkSession, vec: Column, flatCents: Array[Double],
+                       norms: Array[Double], n: Int): Column =
+    call(spark, nearestCentroidsFn, vec, typedlit(flatCents), typedlit(norms), lit(n))
 
   /** Gear content-defined chunk end positions of a BINARY payload (see
     * [[GearChunkEnds]]); `minSize`/`maxSize` bound chunk lengths (the

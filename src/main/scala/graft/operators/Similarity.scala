@@ -1,8 +1,6 @@
 package graft.operators
 
-import scala.collection.mutable
-
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -97,16 +95,23 @@ object Similarity {
     */
   def cosineTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                  vecCol: String, k: Int,
-                 broadcastQueries: Boolean = true): DataFrame = {
+                 broadcastQueries: Boolean = true): DataFrame =
+    topKRows(topKLists(scoredPairs(queries, corpus, idCol, vecCol, broadcastQueries), k))
+
+  /** (query_id, neighbor_id, cosine) candidates folded to each query's
+    * [[TopKAggregator]] list: (query_id, neighbors).
+    */
+  private[graft] def topKLists(cands: DataFrame, k: Int): DataFrame = {
     val topk = udaf(new TopKAggregator(k), ExpressionEncoder[Scored]())
-    scoredPairs(queries, corpus, idCol, vecCol, broadcastQueries)
-      .groupBy(col("query_id"))
+    cands.groupBy(col("query_id"))
       .agg(topk(col("neighbor_id"), col("cosine")).as("neighbors"))
-      .select(col("query_id"),
-        posexplode(col("neighbors")).as(Seq("rank0", "n")))
+  }
+
+  /** [[topKLists]] lists as ranked (query_id, rank, neighbor_id, cosine) rows. */
+  private[graft] def topKRows(lists: DataFrame): DataFrame =
+    lists.select(col("query_id"), posexplode(col("neighbors")).as(Seq("rank0", "n")))
       .select(col("query_id"), (col("rank0") + 1).as("rank"),
         col("n.id").as("neighbor_id"), col("n.score").as("cosine"))
-  }
 
   /** ==SMALL-SCALE CROSS-CHECK — not a scale path== Window-ranked variant
     * of the same query (built-ins only): correct, but it shuffles the FULL
@@ -194,183 +199,34 @@ object Similarity {
         lit(1L << (signs.length - 1 - i))).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
 
-  /** One task's exact per-cluster partial: scale-18 decimal component sums
-    * plus the row count. The Tungsten leg of [[kmeansCentroids]] — at most k
-    * of these leave each input partition, so the per-iteration shuffle is
-    * O(partitions × k) rows (spec-pinned in SimilaritySpec), never the
-    * corpus. `java.math.BigDecimal` encodes as DECIMAL(38,18) (Spark's
-    * system default), which round-trips scale-18 sums exactly while
-    * |sum| < 10²⁰ — the loud guard in [[centroidPartials]] enforces that
-    * envelope instead of letting an encoder overflow null out a centroid.
-    */
-  private[graft] final case class CentroidPartial(
-      cid: Int, sums: Array[java.math.BigDecimal], n: Long)
-
-  /** Exact image of Spark's cast(DOUBLE AS DECIMAL(38,18)): shortest-repr
-    * string, then scale-18 HALF_UP (Decimal.changePrecision's rounding).
-    */
-  private def toDec18(x: Double): java.math.BigDecimal =
-    new java.math.BigDecimal(java.lang.Double.toString(x))
-      .setScale(18, java.math.RoundingMode.HALF_UP)
-
-  private val DecLimit = new java.math.BigDecimal(java.math.BigInteger.ONE, -20)
-
-  /** Exact combine of two per-cluster partials — the reduce both k-means
-    * trainers ([[kmeansCentroids]], [[pqCodebooksFor]]) shuffle through.
-    * BigDecimal addition is exact and associative, so combine order cannot
-    * perturb the merged sums; a shorter array (an empty partial) extends
-    * with exact zeros implicitly.
-    */
-  private def mergeCentroidPartials(a: CentroidPartial,
-                                    b: CentroidPartial): CentroidPartial = {
-    val (lo, hi) = if (a.sums.length >= b.sums.length) (b, a) else (a, b)
-    val merged = hi.sums.clone()
-    var i = 0
-    while (i < lo.sums.length) { merged(i) = merged(i).add(lo.sums(i)); i += 1 }
-    CentroidPartial(a.cid, merged, a.n + b.n)
-  }
-
-  /** Per-partition exact partial sums over an assignment frame with
-    * `cid: int` and `v: array<double>` (nulls pre-handled by the caller:
-    * null rows filtered, null components zeroed — adding exact decimal 0 is
-    * the identity, so the sums equal SUM-skips-null semantics). Typed
-    * Dataset end to end: rows deserialize to primitive (Int, Array[Double])
-    * tuples — no external `Row`/boxed-Seq pass — and the partials shuffle
-    * through the DECIMAL(38,18) encoder, ≤ k rows per input partition.
-    */
-  private[graft] def centroidPartials(
-      assigned: DataFrame): org.apache.spark.sql.Dataset[CentroidPartial] = {
-    implicit val inEnc: Encoder[(Int, Array[Double])] = ExpressionEncoder()
-    implicit val outEnc: Encoder[CentroidPartial] = ExpressionEncoder()
-    assigned.select(col("cid").cast("int"), col("v")).as[(Int, Array[Double])]
-      .mapPartitions { it =>
-        val acc = mutable.Map.empty[Int, (mutable.ArrayBuffer[java.math.BigDecimal], Long)]
-        it.foreach { case (cid, vec) =>
-          val (buf, n) = acc.getOrElse(cid,
-            (mutable.ArrayBuffer.empty[java.math.BigDecimal], 0L))
-          while (buf.length < vec.length) buf += java.math.BigDecimal.ZERO
-          var i = 0
-          while (i < vec.length) {
-            buf(i) = buf(i).add(toDec18(vec(i)))
-            i += 1
-          }
-          acc(cid) = (buf, n + 1)
-        }
-        acc.iterator.map { case (cid, (buf, n)) =>
-          // DECIMAL(38,18) holds |sum| < 10²⁰ exactly; beyond that the
-          // encoder would overflow to null and silently corrupt a centroid
-          // — abort loudly at the boundary instead (10²⁰ ≈ a 10¹⁹-row
-          // partition of unit-scale components; unreachable on real input).
-          buf.foreach { s =>
-            if (s.abs.compareTo(DecLimit) >= 0)
-              throw new IllegalStateException(
-                "kmeansCentroids: partial component sum exceeds DECIMAL(38,18) range")
-          }
-          CentroidPartial(cid, buf.toArray, n)
-        }
-      }
-  }
-
-  /** Deterministic Lloyd k-means for the IVF coarse quantizer. Init = first
-    * k corpus vectors by id; each iteration assigns every vector to its
-    * nearest centroid by cosine (ties → lowest centroid id) and recomputes
-    * per-dimension means. Fully reproducible run to run — the property the
-    * DuckDB oracle needs, since Verify trains twice (query + centroid dump)
-    * and the results must bit-match:
-    *  - per-dimension sums aggregate as scale-18 BigDecimals (the exact
-    *    image of cast(DOUBLE AS DECIMAL(38,18)), so partition / merge order
-    *    can't perturb them), combined as per-partition array partials
-    *    ([[centroidPartials]] — O(partitions × k) shuffled rows, typed
-    *    Dataset with primitive encoders, no RDD/external-Row pass) and
-    *    divided once on the driver;
-    *  - centroids are collected (k × dim doubles — tiny) and re-broadcast as
-    *    literals each iteration, exactly how MLlib's KMeans iterates;
-    *  - assignment ranks by dot(v,c)/‖c‖ — ‖v‖ is constant per vector so
-    *    the argmax is the cosine argmax without the extra fold.
-    * Empty clusters keep their previous centroid.
-    *
-    * The training projection is core-width pinned ([[Caching.coreWidth]],
-    * optimization r21): the per-iteration partial-sum pass is CPU-dense
-    * per row (exact BigDecimal component sums), and a small corpus reads
-    * as ONE scan split — so every training job ran its map stage as one
-    * task (measured: ~300–500 ms/iteration at sf0.1, the whole cost of the
-    * PQ family). Partitioning cannot perturb results: the partial sums are
-    * exact and their merge is associative+commutative by construction.
+  /** Deterministic Lloyd k-means for the IVF coarse quantizer: the
+    * one-subspace case of [[Ivf.train]]. Init = first k corpus vectors by
+    * id; each iteration assigns every vector to its best centroid (ties →
+    * lowest centroid id) and recomputes per-dimension means as exact
+    * decimal sums divided on the driver. Fully reproducible run to run — the
+    * property the DuckDB oracle needs, since Verify trains twice (query +
+    * centroid dump) and the results must bit-match. Empty clusters keep
+    * their previous centroid; an empty corpus gives no centroids.
     */
   def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                      k: Int = 16, iters: Int = 3): Array[Array[Double]] = {
-    graft.functions.NativeFunctions.register(corpus.sparkSession)
-    // guarded persist + unconditional unpersist: if an equivalent plan is
-    // already cached (repeated training in one session), the unpersist in
-    // `finally` releases that shared entry — acceptable, since the corpus
-    // projection is rebuilt (and re-guarded) by any later caller.
-    val v = Caching.persisted(Caching.coreWidth(
-      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))))
-    try {
-      var cents: Array[Array[Double]] =
-        v.orderBy("id").limit(k).collect().map(_.getSeq[Double](1).toArray)
-      // empty corpus → no centroids → empty ANN result downstream (the same
-      // degrade-not-throw contract as vectorDim/hyperplaneSigns)
-      if (cents.isEmpty) return Array.empty
-      for (_ <- 0 until iters) {
-        val norms = cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
-        // fused argmax (nearest_centroid_dot): highest dot/norm, ties to
-        // the lowest cid, zero-norm (degenerate-seed) centroids pinned to
-        // -∞ so they can never swallow assignments. Bit-identical to the
-        // struct(sim, -cid)/array_max form (NativeFunctionsSpec pins it) —
-        // the k-expression argmax forest fell out of whole-stage codegen
-        // at corpus-adaptive k = √n and ran interpreted.
-        val assigned = v.withColumn("cid",
-          graft.functions.NativeFunctions.nearestCentroid(
-            corpus.sparkSession, col("v"), cents.flatten, norms, useVnorm = false))
-        // Per-dimension sums as PER-PARTITION exact partial sums
-        // ([[centroidPartials]]): each task emits at most k rows (cid →
-        // array of decimal component sums + count), so the per-iteration
-        // shuffle is O(partitions × k) rows — not the n×d posexploded rows
-        // a groupBy(cid, pos) would move, and not a corpus re-shuffle. At
-        // 100 TB × 3 iterations that is a metadata-sized shuffle. Exactness
-        // is preserved: double→BigDecimal reproduces Spark's cast(DOUBLE AS
-        // DECIMAL(38,18)) bit for bit, and BigDecimal addition is exact and
-        // associative, so partition boundaries and merge order cannot
-        // perturb the centroid values. Null handling matches SUM: null
-        // vectors contribute nothing (filtered), null components add exact
-        // decimal zero — identity — while the row still counts toward n.
-        val prepared = assigned
-          .filter(col("v").isNotNull)
-          .select(col("cid"),
-            transform(col("v"), x => coalesce(x, lit(0.0))).as("v"))
-        implicit val intEnc: Encoder[Int] = Encoders.scalaInt
-        val sums = centroidPartials(prepared)
-          .groupByKey(_.cid)
-          .reduceGroups(mergeCentroidPartials _)
-          .collect()
-        val next = cents.map(_.clone())
-        sums.foreach { case (_, CentroidPartial(cid, buf, n)) =>
-          var pos = 0
-          while (pos < buf.length) {
-            next(cid)(pos) = buf(pos).doubleValue() / n
-            pos += 1
-          }
-        }
-        cents = next
-      }
-      cents
-    } finally v.unpersist()
-  }
+                      k: Int = 16, iters: Int = 3): Array[Array[Double]] =
+    Ivf.train(corpus, idCol, vecCol, k, iters).head
 
-  /** Trained-quantizer IVF ANN: k-means centroids ([[kmeansCentroids]])
-    * instead of the first-N stand-in, same inverted-file search.
+  /** Trained-quantizer IVF ANN: k-means centroids ([[kmeansCentroids]]);
+    * every corpus vector sits in its best cell, a query probes its `nProbe`
+    * best cells and ranks only their members by exact cosine
+    * ([[Ivf.search]]) — at scale a probe touches nProbe/nCentroids of the
+    * corpus. Fully deterministic → DuckDB-oracle-able.
     */
   def ivfNeighborsTrained(queries: DataFrame, corpus: DataFrame, idCol: String,
                           vecCol: String, k: Int, nCentroids: Int = 16,
                           nProbe: Int = 2, iters: Int = 3): DataFrame = {
     val cents = kmeansCentroids(corpus, idCol, vecCol, nCentroids, iters)
-    ivfFrom(queries, corpus, idCol, vecCol, k,
-      centroidsDf(queries.sparkSession, cents), nProbe,
-      centsArr = Some(cents))
+    Ivf.search(queries, Ivf.assign(corpus, idCol, vecCol, cents), idCol, vecCol,
+      k, cents, nProbe)
   }
 
-  /** Centroid array → (cid, cvec) DataFrame (shared by the IVF search plan
+  /** Centroid array → (cid, cvec) DataFrame (shared by the standing index
     * and the Verify aux dump so both see literally the same values).
     */
   def centroidsDf(spark: org.apache.spark.sql.SparkSession,
@@ -380,87 +236,14 @@ object Similarity {
       .toDF("cid", "cvec")
   }
 
-  /** IVF-style approximate nearest neighbors with a deterministic coarse
-    * quantizer (SURVEY §2.11 "IVF or LSH-bucketed variant as the scale path").
-    * The coarse "centroids" are the first `nCentroids` corpus vectors by id —
-    * the untrained stand-in kept as [[ivfNeighborsTrained]]'s cross-check.
-    * Every corpus vector is assigned to
-    * its max-cosine centroid (the inverted file); a query probes its `nProbe`
-    * closest centroids and ranks only those lists — at scale the corpus is
-    * hash-partitioned by centroid id, so a probe touches nProbe/nCentroids of
-    * the data instead of all of it. Fully deterministic → DuckDB-oracle-able.
+  /** IVF ANN with the untrained stand-in quantizer — the first `nCentroids`
+    * corpus vectors by id, kept as [[ivfNeighborsTrained]]'s cross-check:
+    * its `iters = 0` case.
     */
   def ivfNeighbors(queries: DataFrame, corpus: DataFrame, idCol: String,
                    vecCol: String, k: Int, nCentroids: Int = 16,
                    nProbe: Int = 2): DataFrame =
-    ivfFrom(queries, corpus, idCol, vecCol, k,
-      corpus.filter(col(idCol) < nCentroids)
-        .select(col(idCol).as("cid"), col(vecCol).cast("array<double>").as("cvec")),
-      nProbe)
-
-  /** Shared inverted-file search: assign corpus to max-cosine centroid,
-    * probe nProbe lists per query, exact-cosine rank within them. The
-    * centroid table is broadcast (k × dim — always small). When `attrCol`
-    * is set, the search is METADATA-FILTERED: the attribute rides both the
-    * inverted file and the probe side, and the probe join keys on
-    * (cid, attr) — each probe scans only the matching slice of its cells
-    * (pre-filtering; post-filtering a top-k would LOSE recall when the
-    * unfiltered top-k is dominated by non-matching neighbors).
-    */
-  private def ivfFrom(queries: DataFrame, corpus: DataFrame, idCol: String,
-                      vecCol: String, k: Int, centroids: DataFrame,
-                      nProbe: Int, attrCol: Option[String] = None,
-                      centsArr: Option[Array[Array[Double]]] = None): DataFrame = {
-    graft.functions.NativeFunctions.register(queries.sparkSession)
-    val cent = broadcast(centroids.withColumn("c_norm", l2norm(col("cvec"))))
-    def closestCentroids(df: DataFrame, idAs: String, vecAs: String, n: Int) = {
-      val w = Window.partitionBy(col(idAs)).orderBy(col("c_sim").desc, col("cid"))
-      df.select(Seq(col(idCol).as(idAs), col(vecCol).cast("array<double>").as(vecAs)) ++
-          attrCol.map(a => col(a).as("attr")): _*)
-        .withColumn("v_norm", l2norm(col(vecAs)))
-        .crossJoin(cent)
-        .withColumn("c_sim", dot(col(vecAs), col("cvec")) / (col("v_norm") * col("c_norm")))
-        .withColumn("crn", row_number().over(w))
-        .filter(col("crn") <= n)
-    }
-    val attr = attrCol.map(_ => col("attr")).toSeq
-    // Corpus-side assignment (optimization r21, guide §2.4): when the
-    // caller holds the trained centroid MATRIX (the s12/s16 paths), the
-    // inverted file assigns through the fused nearest_centroid argmax —
-    // no corpus-wide crossJoin + window Exchange/Sort. Identical ranking
-    // arithmetic and min-cid tie-break (spec-pinned vs the struct form;
-    // writeIvfIndex already builds standing cells this way and its
-    // searches are oracle-graded against this very SQL). The untrained
-    // path (s04 — centroids are corpus ROWS) keeps the window walk.
-    val inverted = centsArr match {
-      case Some(c) if c.nonEmpty =>
-        val norms = c.map(cc => math.sqrt(cc.foldLeft(0.0)((a, x) => a + x * x)))
-        corpus.select(Seq(col(idCol).as("neighbor_id"),
-            col(vecCol).cast("array<double>").as("nv")) ++
-            attrCol.map(a => col(a).as("attr")): _*)
-          .withColumn("n_norm", l2norm(col("nv")))
-          .withColumn("cid", graft.functions.NativeFunctions.nearestCentroid(
-            corpus.sparkSession, col("nv"), c.flatten, norms, useVnorm = true))
-          .select(Seq(col("cid"), col("neighbor_id"), col("nv"),
-            col("n_norm")) ++ attr: _*)
-      case _ => closestCentroids(corpus, "neighbor_id", "nv", 1)
-        .select(Seq(col("cid"), col("neighbor_id"), col("nv"),
-          col("v_norm").as("n_norm")) ++ attr: _*)
-    }
-    val probes = closestCentroids(queries, "query_id", "qv", nProbe)
-      .select(Seq(col("query_id"), col("qv"), col("v_norm").as("q_norm"),
-        col("cid")) ++ attr: _*)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(inverted, Seq("cid") ++ attrCol.map(_ => "attr"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("nv")) / (col("q_norm") * col("n_norm"))).as("cosine"))
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
-  }
+    ivfNeighborsTrained(queries, corpus, idCol, vecCol, k, nCentroids, nProbe, iters = 0)
 
   /** Metadata-filtered trained-IVF search: valid neighbors must share the
     * query's `attrCol` value (same-language chunks, same-tenant documents —
@@ -468,7 +251,9 @@ object Similarity {
     * quantizer is trained on the FULL corpus (standard for filtered
     * search — per-attr quantizers fragment training data); the filter is
     * applied INSIDE the cell scan via the (cid, attr) probe join, so a
-    * probe's work shrinks to the matching slice of its nProbe cells.
+    * probe's work shrinks to the matching slice of its nProbe cells
+    * (pre-filtering; post-filtering a top-k would LOSE recall when the
+    * unfiltered top-k is dominated by non-matching neighbors).
     */
   def ivfNeighborsTrainedFiltered(queries: DataFrame, corpus: DataFrame,
                                   idCol: String, vecCol: String,
@@ -476,9 +261,9 @@ object Similarity {
                                   nCentroids: Int = 16, nProbe: Int = 2,
                                   iters: Int = 3): DataFrame = {
     val cents = kmeansCentroids(corpus, idCol, vecCol, nCentroids, iters)
-    ivfFrom(queries, corpus, idCol, vecCol, k,
-      centroidsDf(queries.sparkSession, cents),
-      nProbe, Some(attrCol), centsArr = Some(cents))
+    Ivf.search(queries,
+      Ivf.assign(corpus, idCol, vecCol, cents, col(attrCol).as("attr")),
+      idCol, vecCol, k, cents, nProbe, Some(attrCol))
   }
 
   /** Exact metadata-filtered top-k — the ground truth [[ivfNeighborsTrainedFiltered]]
@@ -491,22 +276,16 @@ object Similarity {
                          vecCol: String, attrCol: String, k: Int,
                          broadcastQueries: Boolean = true): DataFrame = {
     graft.functions.NativeFunctions.register(queries.sparkSession)
-    val topk = udaf(new TopKAggregator(k), ExpressionEncoder[Scored]())
     val q = queries.select(col(idCol).as("query_id"), col(attrCol).as("attr"),
         col(vecCol).cast("array<double>").as("qv"))
       .withColumn("q_norm", l2norm(col("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(attrCol).as("attr"),
         col(vecCol).cast("array<double>").as("cv"))
       .withColumn("c_norm", l2norm(col("cv")))
-    (if (broadcastQueries) broadcast(q) else q).join(c, Seq("attr"))
+    val pairs = (if (broadcastQueries) broadcast(q) else q).join(c, Seq("attr"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", dot(col("qv"), col("cv")) / (col("q_norm") * col("c_norm")))
-      .groupBy(col("query_id"))
-      .agg(topk(col("neighbor_id"), col("cosine")).as("neighbors"))
-      .select(col("query_id"),
-        posexplode(col("neighbors")).as(Seq("rank0", "n")))
-      .select(col("query_id"), (col("rank0") + 1).as("rank"),
-        col("n.id").as("neighbor_id"), col("n.score").as("cosine"))
+    topKRows(topKLists(pairs, k))
   }
 
   /** Standing IVF index handle (the d16 amortized-serving pattern applied
@@ -549,9 +328,7 @@ object Similarity {
       // the appended cells table carries the exactly-once epoch ledger;
       // the centroid table is the frozen quantizer and is never appended
       graft.sources.BucketedLake.writeBucketedTableLedgered(spark, idx.cells,
-        assignToCentroids(corpus, idCol, vecCol, cents)
-          .select(col("cid"), col("id"), col("v"), col("v_norm").as("norm")),
-        "cid", buckets)
+        Ivf.cellRows(corpus, idCol, vecCol, cents), "cid", buckets)
       graft.sources.BucketedLake.writeBucketedTable(spark, idx.centroids,
         centroidsDf(spark, cents), "cid", 1)
     }
@@ -563,15 +340,8 @@ object Similarity {
     * shape), validated against the handle's k.
     */
   def loadCentroids(spark: org.apache.spark.sql.SparkSession,
-                    index: IvfIndex): Array[Array[Double]] = {
-    val cents = spark.table(index.centroids)
-      .orderBy("cid").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("cvec").toArray)
-    require(cents.length == index.nCentroids,
-      s"loadCentroids: centroid table ${index.centroids} holds " +
-        s"${cents.length} rows, expected ${index.nCentroids}")
-    cents
-  }
+                    index: IvfIndex): Array[Array[Double]] =
+    Ivf.frozen(spark, index.centroids, index.nCentroids)
 
   /** Fold an ingest batch into a standing [[IvfIndex]] without rebuilding
     * it — the compaction step that closes the retrieval daily loop (the
@@ -597,11 +367,9 @@ object Similarity {
     require(dimBatch == index.dim,
       s"appendIvfIndex: batch dim $dimBatch != index dim ${index.dim} — " +
         "the quantizer is dimension-specific")
-    val cents = loadCentroids(spark, index)
-    val assigned = assignToCentroids(batch, idCol, vecCol, cents)
-      .select(col("cid"), col("id"), col("v"), col("v_norm").as("norm"))
     graft.sources.BucketedLake.appendBucketedTableOnce(spark, index.cells,
-      assigned, epoch, "cid", index.buckets)
+      Ivf.cellRows(batch, idCol, vecCol, loadCentroids(spark, index)), epoch,
+      "cid", index.buckets)
     index.copy(corpusRows = spark.table(index.cells).count())
   }
 
@@ -609,53 +377,17 @@ object Similarity {
     * corpus DataFrame — identical results when the index was built from
     * the same corpus (spec-pinned), but per-query-batch cost excludes the
     * k-means training and the corpus assignment scan: the query batch
-    * ranks centroids from the broadcast centroid table and probes its
-    * nProbe cells through the bucketed inverted file. The probe tail is
-    * the exact [[ivfNeighborsTrained]] walk, so the s04 oracle grades this
-    * path verbatim.
+    * probes its nProbe best cells under the frozen quantizer (read back on
+    * the driver, nCentroids rows) and meets their members through the
+    * bucketed inverted file. The s04 oracle grades this path verbatim.
     */
   def ivfSearchIndexed(queries: DataFrame, index: IvfIndex, idCol: String,
                        vecCol: String, k: Int, nProbe: Int = 2): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.NativeFunctions.register(spark)
-    val cent = broadcast(spark.table(index.centroids)
-      .withColumn("c_norm", l2norm(col("cvec"))))
-    val wp = Window.partitionBy(col("query_id")).orderBy(col("c_sim").desc, col("cid"))
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("q_norm", l2norm(col("qv")))
-      .crossJoin(cent)
-      .withColumn("c_sim", dot(col("qv"), col("cvec")) / (col("q_norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(wp))
-      .filter(col("crn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("q_norm"), col("cid"))
-    val inverted = spark.table(index.cells)
-      .select(col("cid"), col("id").as("neighbor_id"), col("v").as("nv"),
-        col("norm").as("n_norm"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(inverted, Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (dot(col("qv"), col("nv")) / (col("q_norm") * col("n_norm"))).as("cosine"))
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "cosine")
+    Ivf.search(queries, spark.table(index.cells), idCol, vecCol, k,
+      loadCentroids(spark, index), nProbe)
   }
 
-  /** Nearest-centroid assignment as a SHUFFLE-FREE argmax projection
-    * (struct(sim, -cid) lexicographic max — the kmeansCentroids shape),
-    * not crossJoin(centroids) + row_number: the window form shuffled n×k
-    * expanded rows just to keep rank 1. Semantics are identical INCLUDING
-    * the degenerate cases, because the sim formula is the unmodified
-    * per-pair cosine dot/(v_norm·c_norm) every oracle recomputes: a
-    * zero-norm vector or centroid yields NaN, which ranks ABOVE all
-    * doubles in struct ordering exactly as it sorted first in the
-    * row_number window (and in DuckDB's ORDER BY DESC), with the same
-    * lowest-cid tie-break via the negated id. Returns
-    * (id, v, v_norm, cid) — one row per corpus vector, no shuffle.
-    */
   /** Embedding-space drift monitor — the vector twin of the t33 token
     * alarm: a fresh batch's per-CELL occupancy (assignment under the
     * corpus-trained quantizer) against the corpus-proportional
@@ -677,8 +409,7 @@ object Similarity {
                          iters: Int = 3): DataFrame = {
     val cents = kmeansCentroids(corpus, idCol, vecCol, nCells, iters)
     def occ(df: DataFrame, as: String) =
-      assignToCentroids(df, idCol, vecCol, cents)
-        .groupBy("cid").agg(count(lit(1)).as(as))
+      Ivf.assign(df, idCol, vecCol, cents).groupBy("cid").agg(count(lit(1)).as(as))
     val joined = occ(corpus, "corpus_n")
       .join(occ(fresh, "fresh_n"), Seq("cid"), "left")
       .na.fill(0L, Seq("fresh_n"))
@@ -697,8 +428,8 @@ object Similarity {
     * top-`k` most-similar corpus vectors whose `labelCol` DIFFERS from the
     * query's: the near-misses a retrieval model must learn to push away,
     * the single highest-leverage data op in embedding-model training. The
-    * scale path is the trained IVF walk (broadcast centroid table, probes
-    * read nProbe/nCells of the cell-bucketed corpus) with the label
+    * scale path is the trained IVF walk (literal centroids, probes read
+    * nProbe/nCells of the corpus through the cid join) with the label
     * MISMATCH applied as a post-filter inside the probed cells.
     *
     * Post-filter vs s16's pre-filter, the duality stated: s16's equality
@@ -716,78 +447,22 @@ object Similarity {
                     vecCol: String, labelCol: String, k: Int,
                     nCentroids: Int = 16, nProbe: Int = 2,
                     iters: Int = 3): DataFrame = {
-    graft.functions.NativeFunctions.register(queries.sparkSession)
     val cents = kmeansCentroids(corpus, idCol, vecCol, nCentroids, iters)
-    if (cents.isEmpty)
-      return queries.limit(0).select(col(idCol).cast("long").as("query_id"),
-        lit(0).as("rank"), col(idCol).cast("long").as("neighbor_id"),
-        col(labelCol).as("neighbor_label"), lit(0.0).as("cosine"))
-    val inverted = assignToCentroids(corpus, idCol, vecCol, cents)
-      .join(corpus.select(col(idCol).as("id"), col(labelCol).as("n_label")), "id")
-      .select(col("cid"), col("id").as("neighbor_id"), col("v").as("nv"),
-        col("v_norm").as("n_norm"), col("n_label"))
-    val probes = probeCells(queries, idCol, vecCol, cents, nProbe)
-      .join(queries.select(col(idCol).as("id"), col(labelCol).as("q_label")), "id")
-      .select(col("id").as("query_id"), col("v").as("qv"),
-        col("v_norm").as("q_norm"), col("cid"), col("q_label"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    probes.join(inverted, Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id") &&
-        col("q_label") =!= col("n_label"))
-      .withColumn("cosine",
-        dot(col("qv"), col("nv")) / (col("q_norm") * col("n_norm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("n_label").as("neighbor_label"), col("cosine"))
+    Ivf.top(Ivf.candidates(
+        Ivf.probe(queries, idCol, vecCol, cents, nProbe, col(labelCol).as("q_label")),
+        Ivf.assign(corpus, idCol, vecCol, cents, col(labelCol).as("n_label")))
+      .filter(col("q_label") =!= col("n_label")), k,
+      col("n_label").as("neighbor_label"))
   }
 
   /** Per-row top-`nProbe` cell selection against LITERAL centroids — the
-    * stream-safe probe: a window can't rank centroids per query inside a
-    * stream, but `slice(array_sort(...))` over a per-row struct array can,
-    * with no shuffle and no state. Sort key = (−cosine, cid), the s04
-    * window's (cosine DESC, cid) order; cosine is the same
-    * dot/(v_norm·c_norm) tree as the batch walk, so probed cells are
-    * bit-identical to it. Returns one row per (id, probed cid) with the
-    * vector and its norm carried for the candidate join.
+    * stream-safe probe ([[Ivf.probe]]): one row per (id, probed cid) with
+    * the vector and its norm carried for the candidate join, cells in the
+    * batch walk's (cosine DESC, cid) order. Returns (id, v, v_norm, cid).
     */
   def probeCells(df: DataFrame, idCol: String, vecCol: String,
-                 cents: Array[Array[Double]], nProbe: Int): DataFrame = {
-    graft.functions.NativeFunctions.register(df.sparkSession)
-    val norms = cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
-    val v = col(vecCol).cast("array<double>")
-    val cellStructs = cents.indices.map { ci =>
-      struct(
-        (-(dot(col("__v"), lit(cents(ci))) / (col("__vn") * lit(norms(ci)))))
-          .as("ns"),
-        lit(ci.toLong).as("cid"))
-    }
-    df.select(col(idCol).as("id"), v.as("__v"))
-      .withColumn("__vn", l2norm(col("__v")))
-      .select(col("id"), col("__v"), col("__vn"),
-        explode(slice(array_sort(array(cellStructs: _*)), 1, nProbe)).as("__pc"))
-      .select(col("id"), col("__v").as("v"), col("__vn").as("v_norm"),
-        col("__pc.cid").as("cid"))
-  }
-
-  private[graft] def assignToCentroids(corpus: DataFrame, idCol: String,
-                                       vecCol: String,
-                                       cents: Array[Array[Double]]): DataFrame = {
-    graft.functions.NativeFunctions.register(corpus.sparkSession)
-    val norms = cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
-    // fused cosine argmax (nearest_centroid_cos): same values, same
-    // Double.compare ordering and min-ci tie-break as the struct/array_max
-    // form it replaces (spec-pinned) — one tight k × dim loop instead of a
-    // k-expression forest that leaves whole-stage codegen at k = √n.
-    corpus
-      .select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-      .withColumn("v_norm", l2norm(col("v")))
-      .withColumn("cid",
-        graft.functions.NativeFunctions.nearestCentroid(
-          corpus.sparkSession, col("v"), cents.flatten, norms, useVnorm = true))
-      .select(col("id"), col("v"), col("v_norm"), col("cid"))
-  }
+                 cents: Array[Array[Double]], nProbe: Int): DataFrame =
+    Ivf.probe(df, idCol, vecCol, cents, nProbe).withColumnRenamed("norm", "v_norm")
 
   /** Cluster-balanced diversity sampling (the D4/DeDup-then-Diversify
     * shape): cap each semantic cluster's contribution at `perCluster`
@@ -812,12 +487,9 @@ object Similarity {
     val k = nClusters.getOrElse(
       math.min(math.ceil(math.sqrt(corpus.count().toDouble)).toInt, 65536).max(1))
     val cents = kmeansCentroids(corpus, idCol, vecCol, k, iters)
-    if (cents.isEmpty)
-      return corpus.select(col(idCol).as("id"), lit(0L).as("cid"),
-        lit(0).as("sample_rank")).limit(0)
     val w = Window.partitionBy(col("cid"))
       .orderBy(xxhash64(col("id")), col("id"))
-    assignToCentroids(corpus, idCol, vecCol, cents)
+    Ivf.assign(corpus, idCol, vecCol, cents)
       .select(col("id"), col("cid"))
       .withColumn("sample_rank", row_number().over(w))
       .filter(col("sample_rank") <= perCluster)
@@ -866,7 +538,7 @@ object Similarity {
     * hash-partitioned by cluster id so each cluster's pairing is one
     * partition-local job. `nClusters` defaults to ⌈√n⌉ — the choice that
     * balances cluster count against cluster size, making expected pair work
-    * O(n^1.5) — capped at 65536 so the broadcast centroid table stays
+    * O(n^1.5) — capped at 65536 so the literal centroid matrix stays
     * metadata-sized at any corpus scale (the default costs one count()
     * action; pass an explicit value to skip it — the oracled d09 fixture
     * pins 16 = the s04 quantizer's default so both read one dumped centroid
@@ -879,23 +551,16 @@ object Similarity {
     val k = nClusters.getOrElse(
       math.min(math.ceil(math.sqrt(corpus.count().toDouble)).toInt, 65536).max(1))
     val cents = kmeansCentroids(corpus, idCol, vecCol, k, iters)
-    // empty corpus → no centroids → no pairs (the degrade-not-throw
-    // contract of vectorDim/kmeansCentroids; an empty struct-argmax array
-    // below would otherwise fail analysis)
-    if (cents.isEmpty)
-      return corpus.select(col(idCol).as("id_a"), col(idCol).as("id_b"),
-        lit(0.0).as("cosine")).limit(0)
     // both pair sides consume the assignment — persist (guarded) so the n×k
     // dot products run once, not twice. Like the Dedup shingle caches this
     // CANNOT be unpersisted eagerly — the returned frame is a lazy plan
     // built on it — so release is the documented session convention:
     // [[graft.SessionSweep.sweep]] between corpora/queries.
-    val assigned = Caching.persisted(
-      assignToCentroids(corpus, idCol, vecCol, cents))
+    val assigned = Caching.persisted(Ivf.assign(corpus, idCol, vecCol, cents))
     val a = assigned.select(col("id").as("id_a"), col("v").as("va"),
-      col("v_norm").as("na"), col("cid"))
+      col("norm").as("na"), col("cid"))
     val b = assigned.select(col("id").as("id_b"), col("v").as("vb"),
-      col("v_norm").as("nb"), col("cid"))
+      col("norm").as("nb"), col("cid"))
     a.join(b, Seq("cid")).filter(col("id_a") < col("id_b"))
       .withColumn("cosine", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cosine") >= threshold)
@@ -1231,129 +896,32 @@ object Similarity {
   /** Product-quantization codebooks (the FAISS-PQ shape, inner-product
     * flavor): the vector splits into `subspaces` contiguous slices and each
     * slice gets its own `k`-centroid quantizer trained with the SAME
-    * bit-reproducible k-means as the IVF coarse quantizer — so the whole
-    * codebook is rebuildable and auditable. Returns one centroid array per
-    * subspace.
+    * bit-reproducible k-means as the IVF coarse quantizer, all subspaces in
+    * one corpus pass per iteration ([[Ivf.train]]) — so the whole codebook
+    * is rebuildable and auditable. Returns one centroid array per subspace.
     */
   def pqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                   subspaces: Int = 4, k: Int = 16,
                   iters: Int = 3): Seq[Array[Array[Double]]] =
-    pqCodebooksFor(corpus, idCol, vecCol, vectorDim(corpus, vecCol),
+    Ivf.codebooks(corpus, idCol, vecCol, vectorDim(corpus, vecCol),
       subspaces, k, iters)
 
-  /** FUSED product-codebook trainer: one corpus pass per Lloyd iteration
-    * trains ALL subspaces at once. Per row, one projection computes every
-    * subspace's cosine-argmax assignment and one explode emits
-    * (key = sub·k + cid, subvector) — the composite key rides the SAME
-    * exact-decimal partial-sum machinery as [[kmeansCentroids]]
-    * ([[centroidPartials]]), so the shuffle stays O(partitions × sub·k)
-    * rows. Training `subspaces` separate k-means would scan (and persist a
-    * sliced copy of) the corpus `subspaces` times per iteration; at 100 TB
-    * the fused pass is the difference between 3 scans and 12.
-    *
-    * Bit-parity with the unfused form is BY CONSTRUCTION — same first-k
-    * seed slices (the seeds of a sliced corpus are slices of the seeds),
-    * same per-subspace assignment arithmetic, and BigDecimal addition is
-    * exact and associative so regrouping by composite key cannot perturb a
-    * sum — and spec-pinned (fused == per-slice [[kmeansCentroids]]).
-    */
-  private[graft] def pqCodebooksFor(corpus: DataFrame, idCol: String,
-                                    vecCol: String, dim: Int, subspaces: Int,
-                                    k: Int, iters: Int): Seq[Array[Array[Double]]] = {
-    if (dim == 0) return Seq.fill(subspaces)(Array.empty)
-    require(dim % subspaces == 0,
-      s"pqCodebooks: dim $dim not divisible into $subspaces subspaces")
-    val sub = dim / subspaces
-    graft.functions.NativeFunctions.register(corpus.sparkSession)
-    // same core-width training pin as [[kmeansCentroids]]
-    val v = Caching.persisted(Caching.coreWidth(
-      corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))))
-    try {
-      val seeds = v.orderBy("id").limit(k).collect()
-        .map(_.getSeq[Double](1).toArray)
-      if (seeds.isEmpty) return Seq.fill(subspaces)(Array.empty)
-      var cents: Array[Array[Array[Double]]] =
-        Array.tabulate(subspaces)(s => seeds.map(_.slice(s * sub, s * sub + sub)))
-      for (_ <- 0 until iters) {
-        val pieces = (0 until subspaces).map { s =>
-          val sv = slice(col("v"), s * sub + 1, sub)
-          val norms = cents(s).map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
-          val simStructs = cents(s).indices.map { ci =>
-            val sim =
-              if (norms(ci) == 0.0) lit(Double.NegativeInfinity)
-              else dot(sv, lit(cents(s)(ci))) / lit(norms(ci))
-            struct(sim.as("sim"), lit(-ci).as("ncid"))
-          }
-          struct(
-            (lit(s * k) - array_max(array(simStructs: _*)).getField("ncid"))
-              .cast("int").as("cid"),
-            transform(sv, x => coalesce(x, lit(0.0))).as("v"))
-        }
-        val prepared = v.filter(col("v").isNotNull)
-          .select(explode(array(pieces: _*)).as("p"))
-          .select(col("p.cid").as("cid"), col("p.v").as("v"))
-        implicit val intEnc: Encoder[Int] = Encoders.scalaInt
-        val sums = centroidPartials(prepared)
-          .groupByKey(_.cid)
-          .reduceGroups(mergeCentroidPartials _)
-          .collect()
-        val next = cents.map(_.map(_.clone()))
-        sums.foreach { case (_, CentroidPartial(key, buf, n)) =>
-          val (s, ci) = (key / k, key % k)
-          var pos = 0
-          while (pos < buf.length) {
-            next(s)(ci)(pos) = buf(pos).doubleValue() / n
-            pos += 1
-          }
-        }
-        cents = next
-      }
-      cents.toIndexedSeq
-    } finally v.unpersist()
-  }
-
-  /** Per-vector cell residuals r = v − centroid(cell) under the given
-    * coarse centroids: (id, rv) with the same cosine-argmax assignment the
-    * IVF probe uses. The subtraction is one `zip_with` of IEEE doubles —
-    * deterministic, so residuals (and everything trained on them) stay
-    * bit-reproducible.
-    */
-  private[graft] def residualFrame(corpus: DataFrame, idCol: String,
-                                   vecCol: String,
-                                   cents: Array[Array[Double]]): DataFrame =
-    assignToCentroids(corpus, idCol, vecCol, cents)
-      .join(broadcast(centroidsDf(corpus.sparkSession, cents)), "cid")
-      .select(col("id"),
-        zip_with(col("v"), col("cvec"), (x, y) => x - y).as("rv"))
-
-  /** Residual product codebooks: the [[pqCodebooksFor]] trainer run over
-    * the cell residuals instead of the raw vectors — the FAISS IVF-PQ
-    * shape. Residuals cluster around the origin with the coarse structure
-    * subtracted out, so a fixed code budget spends its centroids on
-    * within-cell variation instead of re-describing cell means — the
-    * recall-per-byte gain the s14 gate measures. Deterministic end to end
-    * (assignment, subtraction, and the exact-decimal k-means), so a
-    * retraining inside Verify reproduces the search plan's codebooks
-    * bit-for-bit (the s09 dump contract).
+  /** Residual product codebooks: the [[pqCodebooks]] trainer run over the
+    * cell residuals v − centroid(cell) under the [[kmeansCentroids]] coarse
+    * quantizer — the FAISS IVF-PQ shape. Residuals cluster around the
+    * origin with the coarse structure subtracted out, so a fixed code
+    * budget spends its centroids on within-cell variation instead of
+    * re-describing cell means — the recall-per-byte gain the s14 gate
+    * measures. Deterministic end to end, so a retraining inside Verify
+    * reproduces the search plan's codebooks bit-for-bit (the s09 dump
+    * contract).
     */
   def residualPqCodebooks(corpus: DataFrame, idCol: String, vecCol: String,
                           nCells: Int = 16, subspaces: Int = 4,
                           codebookK: Int = 16,
-                          iters: Int = 3): Seq[Array[Array[Double]]] = {
-    val cents = kmeansCentroids(corpus, idCol, vecCol, nCells, iters)
-    residualPqCodebooksFor(corpus, idCol, vecCol, cents, subspaces,
-      codebookK, iters)
-  }
-
-  private def residualPqCodebooksFor(corpus: DataFrame, idCol: String,
-                                     vecCol: String,
-                                     cents: Array[Array[Double]],
-                                     subspaces: Int, codebookK: Int,
-                                     iters: Int): Seq[Array[Array[Double]]] = {
-    if (cents.isEmpty) return Seq.fill(subspaces)(Array.empty)
-    pqCodebooksFor(residualFrame(corpus, idCol, vecCol, cents), "id", "rv",
-      cents.head.length, subspaces, codebookK, iters)
-  }
+                          iters: Int = 3): Seq[Array[Array[Double]]] =
+    Ivf.residualCodebooks(corpus, idCol, vecCol,
+      kmeansCentroids(corpus, idCol, vecCol, nCells, iters), subspaces, codebookK, iters)
 
   /** Codebook arrays → (sub, cid, cvec) DataFrame — shared by the search
     * plan and the Verify aux dump so both see literally the same values
@@ -1365,90 +933,6 @@ object Similarity {
     cbs.zipWithIndex.flatMap { case (cb, s) =>
       cb.zipWithIndex.map { case (c, i) => (s.toLong, i.toLong, c.toSeq) }
     }.toDF("sub", "cid", "cvec")
-  }
-
-  /** Per-subspace PQ code columns over broadcast codebook literals
-    * (struct-argmax: max dot, then lowest cid — the d09 assignment shape);
-    * column s is named `code_s`. Shared by [[pqSearch]] and
-    * [[ivfPqSearch]] so the code-assignment arithmetic cannot drift
-    * between the flat and the IVF-composed index.
-    */
-  private def pqCodeCols(spark: org.apache.spark.sql.SparkSession,
-                         cbs: Seq[Array[Array[Double]]], v: Column,
-                         sub: Int): Seq[Column] = {
-    // fused pq_codes loop (optimization r21): the per-subspace
-    // struct-argmax forest (subspaces × k dot trees in one projection)
-    // fell out of whole-stage codegen and encoded every corpus row
-    // interpreted — the same bailout class the MIH band codes hit in r20.
-    // One expression computes all codes; the per-column element_at views
-    // share it through subexpression elimination. Bit-identical including
-    // the null/ragged edges (spec-pinned; the helper coalesces a null
-    // vector back to the forest's all-zero codes).
-    val codes = graft.functions.NativeFunctions.pqCodes(spark, v, cbs)
-    cbs.indices.map(s => element_at(codes, s + 1).as(s"code_$s"))
-  }
-
-  /** Melt `code_0..code_{n-1}` columns to (neighbor_id, [carry,] sub, cid)
-    * rows — the compressed-domain scan relation both PQ searches join.
-    */
-  private def pqMeltCodes(withCodes: DataFrame, subspaces: Int,
-                          carry: Seq[String]): DataFrame =
-    withCodes
-      .select(col("neighbor_id") +: (carry.map(col) :+
-        posexplode(array((0 until subspaces).map(s => col(s"code_$s")): _*))
-          .as(Seq("sub", "cid"))): _*)
-      .select(col("neighbor_id") +: (carry.map(col) ++
-        Seq(col("sub").cast("long").as("sub"), col("cid"))): _*)
-
-  /** ADC lookup tables: one dot per (query, subspace, centroid). */
-  private def pqAdcTables(queries: DataFrame, idCol: String, v: Column,
-                          cbs: Seq[Array[Array[Double]]], sub: Int): DataFrame =
-    queries.select(col(idCol).as("query_id"), v.as("qv"))
-      .crossJoin(broadcast(pqCodebooksDf(queries.sparkSession, cbs)))
-      .select(col("query_id"), col("sub"), col("cid"),
-        dot(slice(col("qv"), (col("sub") * sub + 1).cast("int"), lit(sub)),
-          col("cvec")).as("tdot"))
-
-  /** The shared ADC→re-rank tail: candidate (query_id, neighbor_id, sub,
-    * tdot) rows fold per candidate in SUBSPACE ORDER from a 0.0 seed (so
-    * the coarse cut is bit-reproducible on any partitioning; the buffered
-    * list is `subspaces` entries — a constant, never a hub), the coarse
-    * window keeps `coarseM` per query, and the exact cosine re-ranks the
-    * survivors into the top `k`. If the candidates carry an `adc_shift`
-    * column (the residual path's per-(query, cell) ⟨q, centroid⟩ dot,
-    * constant within a candidate group), the ADC score is shift + fold —
-    * the residual decomposition ⟨q,v⟩ ≈ ⟨q,c⟩ + ⟨q,r̂⟩.
-    */
-  private def pqRankTail(cands: DataFrame, queries: DataFrame,
-                         corpus: DataFrame, idCol: String, v: Column,
-                         coarseM: Int, k: Int): DataFrame = {
-    val coarseW = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id"))
-    val fineW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    val qv = queries.select(col(idCol).as("query_id"), v.as("qv"))
-    val nv = corpus.select(col(idCol).as("neighbor_id"), v.as("nv"))
-    val fold = aggregate(
-      array_sort(collect_list(struct(col("sub"), col("tdot").as("t")))),
-      lit(0.0), (acc, x) => acc + x.getField("t"))
-    val scored =
-      if (cands.columns.contains("adc_shift"))
-        cands.groupBy(col("query_id"), col("neighbor_id"))
-          .agg(fold.as("__adc0"), max(col("adc_shift")).as("__shift"))
-          .select(col("query_id"), col("neighbor_id"),
-            (col("__shift") + col("__adc0")).as("adc"))
-      else
-        cands.groupBy(col("query_id"), col("neighbor_id"))
-          .agg(fold.as("adc"))
-    scored
-      .withColumn("__crn", row_number().over(coarseW))
-      .filter(col("__crn") <= coarseM)
-      .join(broadcast(qv), "query_id")
-      .join(nv, "neighbor_id")
-      .withColumn("cosine", cosine(col("qv"), col("nv")))
-      .withColumn("rank", row_number().over(fineW))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "neighbor_id", "adc", "cosine")
   }
 
   /** PQ-ADC approximate search with exact re-rank: corpus vectors compress
@@ -1471,116 +955,54 @@ object Similarity {
                vecCol: String, k: Int, coarseM: Int = 20,
                subspaces: Int = 4, codebookK: Int = 16,
                iters: Int = 3): DataFrame = {
-    graft.functions.NativeFunctions.register(queries.sparkSession)
-    // dimension probed ONCE for both training and search (it's a one-row
-    // job, but it's a job — no reason to schedule it twice per call)
+    // dimension probed ONCE for both training and search
     val dim = vectorDim(corpus, vecCol)
-    val cbs = pqCodebooksFor(corpus, idCol, vecCol, dim, subspaces,
-      codebookK, iters)
-    val v = col(vecCol).cast("array<double>")
-    if (cbs.exists(_.isEmpty))
-      // empty corpus → empty result, schema intact (degrade-not-throw)
-      return queries.limit(0).select(col(idCol).cast("long").as("query_id"),
-        lit(0).as("rank"), col(idCol).cast("long").as("neighbor_id"),
-        lit(0.0).as("adc"), lit(0.0).as("cosine"))
-    val sub = dim / subspaces
-    // corpus → codes (pure projection over broadcast codebook literals) →
-    // melted code rows; ADC tables per query; fold + rank via the shared
-    // tail
-    val melted = pqMeltCodes(
-      corpus.select(col(idCol).as("neighbor_id") +: pqCodeCols(corpus.sparkSession, cbs, v, sub): _*),
-      subspaces, Nil)
-    val tables = pqAdcTables(queries, idCol, v, cbs, sub)
-    pqRankTail(
-      melted.join(broadcast(tables), Seq("sub", "cid"))
+    val cbs = Ivf.codebooks(corpus, idCol, vecCol, dim, subspaces, codebookK, iters)
+    if (cbs.exists(_.isEmpty)) return Ivf.noPqResult(queries, idCol)
+    val codes = Ivf.codeRows(corpus, col(vecCol).cast("array<double>"), cbs,
+      col(idCol).as("neighbor_id"))
+    val tables = Ivf.adcTables(queries, idCol, vecCol,
+      pqCodebooksDf(queries.sparkSession, cbs), dim / subspaces)
+    Ivf.pqRerank(codes.join(broadcast(tables), Seq("sub", "cid"))
         .filter(col("query_id") =!= col("neighbor_id")),
-      queries, corpus, idCol, v, coarseM, k)
+      queries, corpus, idCol, vecCol, coarseM, k)
   }
 
   /** IVF-PQ composite index search — the two proven quantizers composed
     * into the workhorse large-corpus index architecture: a coarse k-means
     * partitions the corpus into cells ([[kmeansCentroids]], the s04
     * trainer), each vector compresses to PQ codes, and a query touches
-    * ONLY the codes of its `nProbe` closest cells: ADC-scores them, keeps
+    * ONLY the codes of its `nProbe` best cells: ADC-scores them, keeps
     * `coarseM`, exact-cosine re-ranks into the top `k`. `residual = true`
     * (the s10 serving configuration) encodes the cell residual
     * v − centroid(cell) against residual-trained codebooks and scores
     * ⟨q,v⟩ ≈ ⟨q,c⟩ + Σ table entries — the FAISS shape, better recall at
     * the same code budget (the s14 gate measures it); `false` quantizes
-    * the raw vector ([[pqCodebooksFor]] on v, the s09 flat-PQ trainer) as
-    * the cross-check option.
+    * the raw vector (the s09 flat-PQ trainer) as the cross-check option.
     *
-    * Scale shape: the corpus is hash-partitioned by cell; a probe reads
-    * nProbe/nCells of the CODES (bytes per vector), and floats surface
-    * only for the bounded re-rank join — IVF's data-skipping stacked on
-    * PQ's compression. All rankings tie-break on ids and the ADC fold is
-    * subspace-ordered, so results are bit-reproducible (and DuckDB-graded
-    * from the same two aux dumps s04 and s09 already materialize).
+    * Scale shape: a probe reads nProbe/nCells of the CODES (bytes per
+    * vector), and floats surface only for the bounded re-rank join — IVF's
+    * data-skipping stacked on PQ's compression. All rankings tie-break on
+    * ids and the ADC fold is subspace-ordered, so results are
+    * bit-reproducible (and DuckDB-graded from the same two aux dumps s04
+    * and s09 already materialize).
     */
   def ivfPqSearch(queries: DataFrame, corpus: DataFrame, idCol: String,
                   vecCol: String, k: Int, nProbe: Int = 2, coarseM: Int = 20,
                   nCells: Int = 16, subspaces: Int = 4, codebookK: Int = 16,
                   iters: Int = 3, residual: Boolean = false): DataFrame = {
-    graft.functions.NativeFunctions.register(queries.sparkSession)
     val dim = vectorDim(corpus, vecCol)
     val cents = kmeansCentroids(corpus, idCol, vecCol, nCells, iters)
-    // residual=true trains the codebooks on v − centroid(cell) (the FAISS
-    // IVF-PQ shape — see [[residualPqCodebooks]]); false keeps the
-    // raw-vector codebooks as the cross-check option
-    val cbs =
-      if (residual) residualPqCodebooksFor(corpus, idCol, vecCol, cents,
-        subspaces, codebookK, iters)
-      else pqCodebooksFor(corpus, idCol, vecCol, dim, subspaces,
-        codebookK, iters)
-    val v = col(vecCol).cast("array<double>")
-    if (cents.isEmpty || cbs.exists(_.isEmpty))
-      return queries.limit(0).select(col(idCol).cast("long").as("query_id"),
-        lit(0).as("rank"), col(idCol).cast("long").as("neighbor_id"),
-        lit(0.0).as("adc"), lit(0.0).as("cosine"))
-    val sub = dim / subspaces
-    val cent = broadcast(centroidsDf(queries.sparkSession, cents)
-      .withColumn("c_norm", l2norm(col("cvec"))))
-    // cell assignment/probing: the s04 window shape (cosine rank, cid
-    // tie); probe rows carry ⟨q, centroid⟩ — the residual path's ADC shift
-    def closestCells(df: DataFrame, idAs: String, n: Int) = {
-      val w = Window.partitionBy(col(idAs)).orderBy(col("c_sim").desc, col("cid"))
-      df.select(col(idCol).as(idAs), v.as("__v"))
-        .withColumn("v_norm", l2norm(col("__v")))
-        .crossJoin(cent)
-        .withColumn("c_sim", dot(col("__v"), col("cvec")) / (col("v_norm") * col("c_norm")))
-        .withColumn("crn", row_number().over(w))
-        .filter(col("crn") <= n)
-        .select(col(idAs), col("cid").as("cell"),
-          dot(col("__v"), col("cvec")).as("adc_shift"))
-    }
-    // corpus → (cell, PQ code rows): only codes move through the probe
-    // join; the shared tail folds + ranks exactly as pqSearch. On the
-    // residual path the encoded vector is the cell residual.
-    val encoded =
-      if (residual)
-        residualFrame(corpus, idCol, vecCol, cents)
-          .select(col("id").as("neighbor_id") +:
-            pqCodeCols(corpus.sparkSession, cbs, col("rv"), sub): _*)
-      else corpus.select(col(idCol).as("neighbor_id") +: pqCodeCols(corpus.sparkSession, cbs, v, sub): _*)
-    // corpus cells through the fused windowless assignment — exactly the
-    // standing-index build's shape (writeIvfPqIndex), whose searches the
-    // s10 oracle already grades as identical to this path
-    val cells = assignToCentroids(corpus, idCol, vecCol, cents)
-      .select(col("id").as("neighbor_id"), col("cid").as("cell"))
-    val melted = pqMeltCodes(encoded.join(cells, "neighbor_id"),
-      subspaces, Seq("cell"))
-    val tables = pqAdcTables(queries, idCol, v, cbs, sub)
-    val probes0 = closestCells(queries, "query_id", nProbe)
-    val probes = if (residual) probes0 else probes0.drop("adc_shift")
-    pqRankTail(
-      melted.join(broadcast(probes), Seq("cell"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .join(broadcast(tables), Seq("query_id", "sub", "cid")),
-      queries, corpus, idCol, v, coarseM, k)
+    val cbs = Ivf.codebooks(corpus, idCol, vecCol, dim, cents, residual,
+      subspaces, codebookK, iters)
+    if (cents.isEmpty || cbs.exists(_.isEmpty)) return Ivf.noPqResult(queries, idCol)
+    Ivf.ivfPqSearch(queries, idCol, vecCol, k, nProbe, coarseM, cents,
+      Ivf.ivfCodeRows(corpus, idCol, vecCol, cents, cbs, residual),
+      pqCodebooksDf(queries.sparkSession, cbs), dim / subspaces, corpus, residual)
   }
 
   /** Standing IVF-PQ index handle — the [[IvfIndex]] pattern for the
-    * compressed composite: `codes` = the melted (cell, neighbor_id, sub,
+    * compressed composite: `codes` = the melted (neighbor_id, cell, sub,
     * cid) code rows bucketed by cell (bytes per vector on disk and on the
     * probe path), `vectors` = the full-precision (id, v) table the bounded
     * re-rank joins, plus the two trained artifact tables. Names embed
@@ -1596,10 +1018,9 @@ object Similarity {
     * encode ONCE; every later query batch ADC-scans stored codes for its
     * probed cells and re-ranks from the stored vectors
     * ([[ivfPqSearchIndexed]]), paying neither training nor corpus
-    * encoding per call. Both trainings are bit-reproducible and the code
-    * assignment is the same [[pqCodeCols]] projection [[ivfPqSearch]]
-    * runs, so the indexed search is result-identical to the direct one by
-    * construction (the s10 oracle applies verbatim). Idempotent per
+    * encoding per call. Training and encoding are [[ivfPqSearch]]'s own
+    * kernel steps, so the indexed search is result-identical to the direct
+    * one by construction (the s10 oracle applies verbatim). Idempotent per
     * (session, names).
     */
   def writeIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
@@ -1608,7 +1029,6 @@ object Similarity {
                       iters: Int = 3, buckets: Int = 16,
                       residual: Boolean = false): IvfPqIndex = {
     val spark = corpus.sparkSession
-    graft.functions.NativeFunctions.register(spark)
     val dim = vectorDim(corpus, vecCol)
     // residual codes are a different layout identity — the flag rides the
     // table names so residual and raw indexes never alias in the catalog
@@ -1624,31 +1044,17 @@ object Similarity {
         spark.catalog.tableExists(idx.codebooks) &&
         spark.catalog.tableExists(idx.vectors))) {
       val cents = kmeansCentroids(corpus, idCol, vecCol, nCells, iters)
-      val cbs =
-        if (residual) residualPqCodebooksFor(corpus, idCol, vecCol, cents,
-          subspaces, codebookK, iters)
-        else pqCodebooksFor(corpus, idCol, vecCol, dim, subspaces,
-          codebookK, iters)
-      val sub = dim / subspaces
-      val v = col(vecCol).cast("array<double>")
-      val cells = assignToCentroids(corpus, idCol, vecCol, cents)
-        .select(col("id").as("neighbor_id"), col("cid").as("cell"))
-      val encoded =
-        if (residual)
-          residualFrame(corpus, idCol, vecCol, cents)
-            .select(col("id").as("neighbor_id") +:
-              pqCodeCols(corpus.sparkSession, cbs, col("rv"), sub): _*)
-        else corpus.select(col(idCol).as("neighbor_id") +: pqCodeCols(corpus.sparkSession, cbs, v, sub): _*)
-      val melted = pqMeltCodes(encoded.join(cells, "neighbor_id"),
-        subspaces, Seq("cell"))
+      val cbs = Ivf.codebooks(corpus, idCol, vecCol, dim, cents, residual,
+        subspaces, codebookK, iters)
       graft.sources.BucketedLake.writeBucketedTable(spark, idx.codes,
-        melted, "cell", buckets)
+        Ivf.ivfCodeRows(corpus, idCol, vecCol, cents, cbs, residual), "cell", buckets)
       graft.sources.BucketedLake.writeBucketedTable(spark, idx.centroids,
         centroidsDf(spark, cents), "cid", 1)
       graft.sources.BucketedLake.writeBucketedTable(spark, idx.codebooks,
         pqCodebooksDf(spark, cbs), "sub", 1)
       graft.sources.BucketedLake.writeBucketedTable(spark, idx.vectors,
-        corpus.select(col(idCol).as("id"), v.as("v")), "id", buckets)
+        corpus.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v")),
+        "id", buckets)
     }
     idx.copy(corpusRows = spark.table(idx.codes).count() / subspaces)
   }
@@ -1656,43 +1062,20 @@ object Similarity {
   /** [[ivfPqSearch]] against a standing [[IvfPqIndex]] — identical results
     * when the index was built from the same corpus (spec-pinned; the s10
     * oracle grades this path verbatim), but the per-query-batch plan
-    * touches only the broadcast artifact tables, the probed cells' CODE
-    * rows (read through the bucket layout, no index-side exchange), and a
+    * touches only the frozen quantizer (read back on the driver, nCells
+    * rows), the broadcast codebook table, the probed cells' CODE rows
+    * (read through the bucket layout, no index-side exchange), and a
     * coarseM-bounded slice of the vector table.
     */
   def ivfPqSearchIndexed(queries: DataFrame, index: IvfPqIndex,
                          idCol: String, vecCol: String, k: Int,
                          nProbe: Int = 2, coarseM: Int = 20): DataFrame = {
     val spark = queries.sparkSession
-    graft.functions.NativeFunctions.register(spark)
-    val sub = index.dim / index.subspaces
-    val v = col(vecCol).cast("array<double>")
-    val cent = broadcast(spark.table(index.centroids)
-      .withColumn("c_norm", l2norm(col("cvec"))))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("c_sim").desc, col("cid"))
-    val probes0 = queries.select(col(idCol).as("query_id"), v.as("__v"))
-      .withColumn("v_norm", l2norm(col("__v")))
-      .crossJoin(cent)
-      .withColumn("c_sim", dot(col("__v"), col("cvec")) / (col("v_norm") * col("c_norm")))
-      .withColumn("crn", row_number().over(w))
-      .filter(col("crn") <= nProbe)
-      .select(col("query_id"), col("cid").as("cell"),
-        dot(col("__v"), col("cvec")).as("adc_shift"))
-    // a residual index scores shift + fold (the stored codes are residual
-    // codes); a raw index drops the shift column and folds alone
-    val probes = if (index.residual) probes0 else probes0.drop("adc_shift")
-    val tables = queries.select(col(idCol).as("query_id"), v.as("qv"))
-      .crossJoin(broadcast(spark.table(index.codebooks)))
-      .select(col("query_id"), col("sub"), col("cid"),
-        dot(slice(col("qv"), (col("sub") * sub + 1).cast("int"), lit(sub)),
-          col("cvec")).as("tdot"))
-    val cands = spark.table(index.codes)
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .join(broadcast(tables), Seq("query_id", "sub", "cid"))
-    val corpusTbl = spark.table(index.vectors)
-      .select(col("id").as(idCol), col("v").as(vecCol))
-    pqRankTail(cands, queries, corpusTbl, idCol, v, coarseM, k)
+    Ivf.ivfPqSearch(queries, idCol, vecCol, k, nProbe, coarseM,
+      Ivf.frozen(spark, index.centroids, index.nCells), spark.table(index.codes),
+      spark.table(index.codebooks), index.dim / index.subspaces,
+      spark.table(index.vectors).select(col("id").as(idCol), col("v").as(vecCol)),
+      index.residual)
   }
 
   /** Two-stage ANN: LSH-bucketed candidates → int8-quantized integer-dot

@@ -1592,10 +1592,9 @@ object ExtensionQueries {
     * probe width — one SQL definition of the inverted-file walk whoever
     * trained the quantizer (s04/s12/s17 = full-corpus training, s18 = the
     * frozen initial-half quantizer the appended index serves under) and
-    * however many cells a query probes (e28's streaming serve probes 1 via
-    * the nearest-cell assignment expression; e34 probes 2 via the per-row
-    * slice(array_sort) rank — windows can't rank centroids in-stream, but
-    * a per-row sort over the literal centroid table can).
+    * however many cells a query probes (e28's streaming serve probes 1,
+    * e34 probes 2 — windows can't rank centroids in-stream, but the per-row
+    * cell ranking over the literal centroids can).
     */
   private def ivfCtesFrom(centroidAux: String, nProbe: Int = 2) =
     s"""corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1753,7 +1752,7 @@ object ExtensionQueries {
     * assignment is unchanged (the quantizer is label-blind), but the label
     * rides both the inverted file and the probes, and the candidate join
     * requires `a.label = p.label` — the SQL mirror of the (cid, attr)
-    * probe join in Similarity.ivfFrom. Ends in `cand`, so [[ivfSelect]]
+    * probe join in Ivf.search. Ends in `cand`, so [[ivfSelect]]
     * mounts unchanged.
     */
   private val ivfFiltCtes =
@@ -1775,6 +1774,29 @@ object ExtensionQueries {
       |  SELECT DISTINCT p.query_id, a.neighbor_id, ${listCos("p.qv", "a.nv")} AS cosine
       |  FROM probes p JOIN assign a
       |    ON a.cid = p.cid AND a.label = p.label AND a.neighbor_id <> p.query_id)""".stripMargin
+
+  /** The s17/e28/e34 standing IVF index of `dir`'s embeddings (built once
+    * per session, then reused).
+    */
+  private def standingIvf(s: org.apache.spark.sql.SparkSession,
+                          dir: String): Similarity.IvfIndex =
+    Similarity.writeIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
+      "ivf_idx_" + graft.sources.BucketedLake.layoutSuffix(dir + "#ivf", 16))
+
+  /** The e28/e34 live serve: the `vec_id < 10` query vectors stream into
+    * [[graft.streaming.ScreenStream.serveIvf]] against [[standingIvf]] at
+    * `nProbe`, one AvailableNow run, top-5 rows read back from its sink.
+    */
+  private def ivfServe(s: org.apache.spark.sql.SparkSession, dir: String,
+                       nProbe: Int): org.apache.spark.sql.DataFrame = {
+    import graft.streaming.{EventsStream, ScreenStream}
+    val sinkName = s"stream_ivf_serve_p${nProbe}_${sinkCounter.incrementAndGet()}"
+    EventsStream.runAvailableNow(ScreenStream.serveIvf(
+      ScreenStream.readEmbeddings(s, dir).filter(col("vec_id") < 10),
+      standingIvf(s, dir), "vec_id", "embedding", 5, nProbe),
+      sinkName, outputMode = "complete")
+    Similarity.topKRows(s.table(sinkName)).orderBy("query_id", "rank")
+  }
 
   /** Build-then-append the s18 standing IVF index: trained on the initial
     * 3/4 (`vec_id % 4 ≠ 0`), the remaining quarter folded in under the
@@ -3511,17 +3533,15 @@ object ExtensionQueries {
 
     // Standing IVF index (s17): the d16 amortized-serving pattern applied
     // to retrieval — quantizer + cid-bucketed inverted file persisted as
-    // warehouse tables; each query batch ranks the broadcast centroid
-    // table and probes its cells through the bucketed layout, paying
-    // neither the k-means training nor the corpus assignment scan that
-    // s04's direct path pays per call. Result-identical to s04 by
+    // warehouse tables; each query batch ranks the frozen centroids (read
+    // back on the driver) and probes its cells through the bucketed
+    // layout, paying neither the k-means training nor the corpus
+    // assignment scan that s04's direct path pays per call. Result-identical to s04 by
     // construction (bit-reproducible training, spec-pinned assignment
     // parity), so the s04 oracle grades this path verbatim.
     "s17_ivf_indexed" -> of(s"WITH $ivfCtes\n$ivfSelect") { (s, d) =>
       val e = t(s, d, "embeddings")
-      val idx = Similarity.writeIvfIndex(e, "vec_id", "embedding",
-        "ivf_idx_" + graft.sources.BucketedLake.layoutSuffix(d + "#ivf", 16))
-      Similarity.ivfSearchIndexed(e.filter(col("vec_id") < 10), idx,
+      Similarity.ivfSearchIndexed(e.filter(col("vec_id") < 10), standingIvf(s, d),
         "vec_id", "embedding", 5)
         .orderBy("query_id", "rank")
     },
@@ -3547,44 +3567,15 @@ object ExtensionQueries {
 
     // Streaming retrieval serve (e28): query vectors ARRIVE as a stream
     // and take top-5 from the standing IVF index live — the serving twin
-    // of s17 (the e23 pattern for retrieval). In-stream cell assignment
-    // uses the fused nearest-centroid expression (windows can't rank
-    // centroids in a stream), so this path probes nProbe=1 — the
-    // latency-over-recall serving point; e34 is the nProbe=2 variant via
-    // per-row slice(array_sort) cell ranking; the stream-static
+    // of s17 (the e23 pattern for retrieval). Each vector ranks the
+    // literal centroids in its own row (windows can't rank centroids in a
+    // stream) and probes nProbe=1 — the latency-over-recall serving point;
+    // e34 is the nProbe=2 variant of the same helper. The stream-static
     // candidate join runs BEFORE the one stateful op, a complete-mode
     // bounded-heap top-k whose state is O(queries × k). Oracle = the IVF
-    // walk at crn <= 1, assignment parity spec-pinned.
+    // walk at crn <= 1.
     "e28_stream_ivf_serve" -> of(s"WITH ${ivfCtesFrom("s04_centroids", 1)}\n$ivfSelect") { (s, d) =>
-      import graft.streaming.{EventsStream, ScreenStream}
-      val e = t(s, d, "embeddings")
-      val idx = Similarity.writeIvfIndex(e, "vec_id", "embedding",
-        "ivf_idx_" + graft.sources.BucketedLake.layoutSuffix(d + "#ivf", 16))
-      val cents = Similarity.loadCentroids(s, idx)
-      val probes = Similarity.assignToCentroids(
-        ScreenStream.readEmbeddings(s, d).filter(col("vec_id") < 10),
-        "vec_id", "embedding", cents)
-        .select(col("id").as("query_id"), col("v").as("qv"),
-          col("v_norm").as("q_norm"), col("cid"))
-      val inverted = s.table(idx.cells)
-        .select(col("cid"), col("id").as("neighbor_id"), col("v").as("nv"),
-          col("norm").as("n_norm"))
-      val cand = probes.join(inverted, Seq("cid"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          (Similarity.dot(col("qv"), col("nv")) /
-            (col("q_norm") * col("n_norm"))).as("cosine"))
-      val topk = udaf(new Similarity.TopKAggregator(5),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Similarity.Scored]())
-      val agg = cand.groupBy("query_id")
-        .agg(topk(col("neighbor_id"), col("cosine")).as("neighbors"))
-      val sinkName = s"stream_ivf_serve_${sinkCounter.incrementAndGet()}"
-      EventsStream.runAvailableNow(agg, sinkName, outputMode = "complete")
-      s.table(sinkName)
-        .select(col("query_id"), posexplode(col("neighbors")).as(Seq("rank0", "n")))
-        .select(col("query_id"), (col("rank0") + 1).as("rank"),
-          col("n.id").as("neighbor_id"), col("n.score").as("cosine"))
-        .orderBy("query_id", "rank")
+      ivfServe(s, d, nProbe = 1)
     },
 
     // Standing IVF-PQ index (s19): the s17 treatment for the compressed
@@ -6140,46 +6131,13 @@ object ExtensionQueries {
     },
 
     // Streaming retrieval serve at nProbe=2 (e34): e28's recall gap closed
-    // — in-stream TOP-2 cell selection needs no window because the
-    // centroid table rides as literals and a per-row
-    // slice(array_sort(structs)) ranks them ((−cos, cid) = the batch
-    // walk's (cos DESC, cid)); everything downstream is e28's shape
-    // (stream-static candidate join before the ONE stateful bounded-heap
-    // top-k, state O(queries × k)). Candidates stay provably distinct —
-    // cells partition the corpus, so two probes never surface the same
-    // neighbor twice. Oracle = the batch IVF walk at crn <= 2, the same
-    // SQL that grades the s17 standing index.
+    // — the per-row cell ranking keeps the TOP-2 cells in the batch walk's
+    // (cos DESC, cid) order; everything downstream is e28's shape.
+    // Oracle = the batch IVF walk at crn <= 2, the same SQL that grades
+    // the s17 standing index.
     "e34_stream_ivf_serve_probe2" -> of(
       s"WITH ${ivfCtesFrom("s04_centroids", 2)}\n$ivfSelect") { (s, d) =>
-      import graft.streaming.{EventsStream, ScreenStream}
-      val e = t(s, d, "embeddings")
-      val idx = Similarity.writeIvfIndex(e, "vec_id", "embedding",
-        "ivf_idx_" + graft.sources.BucketedLake.layoutSuffix(d + "#ivf", 16))
-      val cents = Similarity.loadCentroids(s, idx)
-      val probes = Similarity.probeCells(
-        ScreenStream.readEmbeddings(s, d).filter(col("vec_id") < 10),
-        "vec_id", "embedding", cents, nProbe = 2)
-        .select(col("id").as("query_id"), col("v").as("qv"),
-          col("v_norm").as("q_norm"), col("cid"))
-      val inverted = s.table(idx.cells)
-        .select(col("cid"), col("id").as("neighbor_id"), col("v").as("nv"),
-          col("norm").as("n_norm"))
-      val cand = probes.join(inverted, Seq("cid"))
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          (Similarity.dot(col("qv"), col("nv")) /
-            (col("q_norm") * col("n_norm"))).as("cosine"))
-      val topk = udaf(new Similarity.TopKAggregator(5),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Similarity.Scored]())
-      val agg = cand.groupBy("query_id")
-        .agg(topk(col("neighbor_id"), col("cosine")).as("neighbors"))
-      val sinkName = s"stream_ivf_serve2_${sinkCounter.incrementAndGet()}"
-      EventsStream.runAvailableNow(agg, sinkName, outputMode = "complete")
-      s.table(sinkName)
-        .select(col("query_id"), posexplode(col("neighbors")).as(Seq("rank0", "n")))
-        .select(col("query_id"), (col("rank0") + 1).as("rank"),
-          col("n.id").as("neighbor_id"), col("n.score").as("cosine"))
-        .orderBy("query_id", "rank")
+      ivfServe(s, d, nProbe = 2)
     },
 
     // Streaming decontamination screen (e35): corpus docs ARRIVE as a

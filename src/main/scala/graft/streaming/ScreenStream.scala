@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions.tokens
-import graft.operators.{Caching, EdJoin, SetOverlap}
+import graft.operators.{Caching, EdJoin, Ivf, SetOverlap}
 
 /** The fresh-vs-corpus near-dup screen as a Structured Streaming query —
   * the d11 "daily ingest" story made literal: fresh documents ARRIVE as a
@@ -379,6 +379,29 @@ object ScreenStream {
       distinctPairFold("ScreenStream.screenMih", idleTtlMillis))
       .select(col("fresh_id"), col("corpus_id"),
         col("metric").cast("long").as("hamming"))
+  }
+
+  /** The live IVF serve (e28, e34): query vectors ARRIVE as a stream and
+    * take their top `k` from a standing
+    * [[graft.operators.Similarity.IvfIndex]] — the serving twin of
+    * [[graft.operators.Similarity.ivfSearchIndexed]]. Each arriving vector
+    * probes its `nProbe` best cells in its own row under the frozen
+    * quantizer ([[Ivf.probe]] — no window, so no state), the stream-static
+    * candidate join reads the bucketed cells table, and the one stateful
+    * operator is a complete-mode bounded-heap top-k
+    * ([[graft.operators.Similarity.topKLists]]) whose state is
+    * O(queries × k). Cells partition the corpus, so two probes never
+    * surface the same neighbor twice. Emits (query_id, neighbors); an
+    * AvailableNow run's rows ([[graft.operators.Similarity.topKRows]])
+    * equal the batch walk at the same `nProbe`, which grades it.
+    */
+  def serveIvf(queryVecs: DataFrame, index: graft.operators.Similarity.IvfIndex,
+               idCol: String, vecCol: String, k: Int, nProbe: Int): DataFrame = {
+    val spark = queryVecs.sparkSession
+    graft.operators.Similarity.topKLists(Ivf.candidates(
+      Ivf.probe(queryVecs, idCol, vecCol,
+        graft.operators.Similarity.loadCentroids(spark, index), nProbe),
+      spark.table(index.cells)), k)
   }
 
   /** One fresh-gram row entering the edit-distance fold. `g == null` marks

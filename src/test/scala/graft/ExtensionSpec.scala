@@ -629,9 +629,7 @@ class ExtensionSpec extends SparkSpec {
     // the cells table must equal assigning the WHOLE corpus under the
     // quantizer trained on half1 — appends froze the cell boundaries
     val cents = Similarity.kmeansCentroids(half1, "vec_id", "embedding")
-    val expect = graft.operators.Similarity
-      .assignToCentroids(embs, "vec_id", "embedding", cents)
-      .select(col("cid"), col("id"), col("v"), col("v_norm").as("norm"))
+    val expect = graft.operators.Ivf.cellRows(embs, "vec_id", "embedding", cents)
     // project the data columns: the stored layout also carries the
     // exactly-once `epoch` ledger column (build=0, append fold=N)
     val stored = spark.table(idx.cells).select("cid", "id", "v", "norm")
@@ -697,7 +695,7 @@ class ExtensionSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         (col("vec_id") % k).cast("int").as("cid"))
       .repartition(nPart)
-    val partials = Similarity.centroidPartials(assigned.select(col("cid"), col("v")))
+    val partials = graft.operators.Ivf.centroidPartials(assigned.select(col("cid"), col("v")))
     val perPartition = partials.rdd
       .mapPartitions(it => Iterator.single(it.size)).collect()
     assert(perPartition.length === nPart)

@@ -132,9 +132,12 @@ class GraftExtensionsSpec extends SparkSpec {
       ("pq_codes", () => { NativeFunctions.pqCodes(s, col("v"), Seq(Array(Array(0.0)))); () },
         Seq(vec, vec, one, one), _.isInstanceOf[PqCodes]),
       ("nearest_centroid_cos", nearest(true), Seq(vec, vec, vec),
-        { case NearestCentroid(_, _, _, u) => u; case _ => false }),
+        { case NearestCentroid(_, _, _, u, None) => u; case _ => false }),
       ("nearest_centroid_dot", nearest(false), Seq(vec, vec, vec),
-        { case NearestCentroid(_, _, _, u) => !u; case _ => false }),
+        { case NearestCentroid(_, _, _, u, None) => !u; case _ => false }),
+      ("nearest_centroids",
+        () => { NativeFunctions.nearestCentroids(s, col("v"), Array(0.0), Array(1.0), 2); () },
+        Seq(vec, vec, vec, one), { case NearestCentroid(_, _, _, u, Some(1)) => u; case _ => false }),
       ("hyperplane_signatures",
         () => { NativeFunctions.hyperplaneSignatures(s, col("v"), Array(0.0), 1, 1); () },
         Seq(vec, vec, one, one), _.isInstanceOf[HyperplaneSignatures]),

@@ -92,7 +92,7 @@ class NativeFunctionsSpec extends SparkSpec {
       val norms = cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
       val structs = cents.indices.map { ci =>
         val sim =
-          if (!useVnorm && norms(ci) == 0.0) lit(Double.NegativeInfinity)
+          if (norms(ci) == 0.0) lit(null).cast("double")
           else if (useVnorm)
             Similarity.dot(col("v"), lit(cents(ci))) / (col("v_norm") * lit(norms(ci)))
           else Similarity.dot(col("v"), lit(cents(ci))) / lit(norms(ci))
@@ -102,9 +102,9 @@ class NativeFunctionsSpec extends SparkSpec {
     }
     val real = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("v"))
-    // adversarial fixtures: a zero vector (cosine sims all NaN — NaN ranks
-    // above all doubles in Spark's ordering), exact ties via duplicated
-    // centroids (→ lowest ci), and a ragged-dim vector (null sims → ci 0)
+    // adversarial fixtures: a zero vector (cosine sims all NULL → ci 0),
+    // exact ties via duplicated centroids (→ lowest ci), and a ragged-dim
+    // vector (null sims → ci 0)
     val weird = Seq(
       (9001L, Seq(0.0, 0.0, 0.0, 0.0)),
       (9002L, Seq(1.0, 2.0, 3.0, 4.0)),
@@ -118,12 +118,11 @@ class NativeFunctionsSpec extends SparkSpec {
       Array(1.0, 0.0, 0.0, 0.0), // duplicate of ci 0 → tie
       Array(0.0, 1.0, 0.0, 0.0))
     // reference-comparable cases: the real corpus (both modes — no
-    // degenerate norms) and the weird fixture in iteration mode (its
-    // zero-norm guard predates the division). The weird fixture in cosine
-    // mode is NOT reference-comparable: under Spark 4's default ANSI mode
-    // the struct form THROWS DIVIDE_BY_ZERO on a zero norm, while the
-    // fused loop keeps IEEE semantics (NaN/∞) — which is what the DuckDB
-    // oracle computes too. Those cases are pinned explicitly below.
+    // degenerate norms) and the weird fixture in iteration mode (a
+    // zero-norm centroid's sim is NULL before any division). The weird
+    // fixture in cosine mode is NOT reference-comparable: under Spark 4's
+    // default ANSI mode the struct form THROWS DIVIDE_BY_ZERO on a zero
+    // vector norm. Those cases are pinned explicitly below.
     for ((df, cents, useVnorm) <- Seq(
       (real, centsReal, true), (real, centsReal, false), (weird, centsWeird, false))) {
       val norms = cents.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
@@ -136,18 +135,18 @@ class NativeFunctionsSpec extends SparkSpec {
           col("fused").isNull =!= col("ref").isNull)
       assert(diff.count() === 0, s"argmax drift (useVnorm=$useVnorm)")
     }
-    // degenerate cosine semantics, pinned: IEEE division like the oracle —
-    // a zero vnorm makes every sim NaN (ties → ci 0); an un-guarded
-    // zero-norm CENTROID yields 0/0 = NaN which ranks above every real sim
-    // (the documented degenerate-seed hazard — training goes through the
-    // guarded iteration form, so this arises only from a genuinely
-    // zero-mean cluster); a ragged vector nulls every sim → ci 0.
+    // degenerate cosine semantics, pinned to the DuckDB oracle's values
+    // (`x / 0.0` is NULL there, and NULL sorts last under DESC): a zero
+    // vnorm makes every sim NULL (ties → ci 0); a zero-norm CENTROID's sim
+    // is NULL and ranks below every real sim (9002 → 3, 9003 → 0). A
+    // ragged vector nulls every sim → ci 0 (a dim mismatch is a null dot;
+    // IVF inputs share one dimension).
     val normsW = centsWeird.map(c => math.sqrt(c.foldLeft(0.0)((a, x) => a + x * x)))
     val got = weird.select(col("id"),
       NativeFunctions.nearestCentroid(spark, col("v"), centsWeird.flatten,
         normsW, useVnorm = true).as("cid"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(9001L -> 0L, 9002L -> 1L, 9003L -> 1L, 9004L -> 0L))
+    assert(got === Map(9001L -> 0L, 9002L -> 3L, 9003L -> 0L, 9004L -> 0L))
   }
 
   test("nearest_centroid nulls a centroid's sim on null norm/component, never unboxes 0.0") {
@@ -410,7 +409,7 @@ class NativeFunctionsSpec extends SparkSpec {
   }
 
   test("pq_codes: fused loop bit-matches the struct-argmax forest incl. edges") {
-    // the forest form pqCodeCols replaced (optimization r21): per subspace
+    // the forest form pq_codes replaced (optimization r21): per subspace
     // argmax of plain dot with ties to the lowest cid, null/short windows
     // ranking below every value, all-null -> code 0, null vector -> all
     // zero codes
