@@ -141,17 +141,19 @@ private[graft] object Ivf {
                cents: Centroids): DataFrame =
     assign(df, idCol, vecCol, cents).select("cid", "id", "v", "norm")
 
-  /** A standing index's frozen quantizer, read back on the driver (`n`
-    * rows in one task, ordered there — a plan-side sort would add a
-    * sampling job and a shuffle) and validated.
+  /** A standing index's frozen quantizer, read back on the driver (at most
+    * `n` rows in one task, ordered there — a plan-side sort would add a
+    * sampling job and a shuffle) and validated: [[train]] keeps min(`n`,
+    * corpus rows) seeds, so a small corpus stores fewer cells and an empty
+    * one none, always cids 0, 1, ….
     */
   def frozen(spark: SparkSession, table: String, n: Int): Centroids = {
-    val cents = spark.table(table).select("cid", "cvec").coalesce(1).collect()
+    val rows = spark.table(table).select("cid", "cvec").coalesce(1).collect()
       .sortBy(_.getLong(0))
-      .map(_.getSeq[Double](1).toArray)
-    require(cents.length == n,
-      s"centroid table $table holds ${cents.length} rows, expected $n")
-    cents
+    require(rows.length <= n && rows.indices.forall(i => rows(i).getLong(0) == i),
+      s"centroid table $table holds cids ${rows.map(_.getLong(0)).mkString(",")}, " +
+        s"expected 0 until at most $n")
+    rows.map(_.getSeq[Double](1).toArray)
   }
 
   /** One task's exact per-cluster partial: scale-18 decimal component sums
@@ -314,12 +316,16 @@ private[graft] object Ivf {
 
   /** The PQ codes of vector column `v` under `cbs`, melted to one
     * (`keep`…, sub, cid) row per subspace — the compressed-domain scan
-    * relation.
+    * relation. An empty corpus trains no codewords, so it has no code rows
+    * (degrade-not-throw).
     */
   def codeRows(df: DataFrame, v: Column, cbs: Seq[Centroids], keep: Column*): DataFrame =
-    df.select(keep :+ posexplode(NativeFunctions.pqCodes(df.sparkSession, v, cbs))
-        .as(Seq("sub", "cid")): _*)
-      .withColumn("sub", col("sub").cast("long"))
+    if (cbs.exists(_.isEmpty))
+      df.limit(0).select(keep :+ lit(0L).as("sub") :+ lit(0L).as("cid"): _*)
+    else
+      df.select(keep :+ posexplode(NativeFunctions.pqCodes(df.sparkSession, v, cbs))
+          .as(Seq("sub", "cid")): _*)
+        .withColumn("sub", col("sub").cast("long"))
 
   /** An IVF-PQ corpus's code rows (neighbor_id, cell, sub, cid): each
     * vector's cell and the codes of the vector or of its cell residual, in

@@ -336,8 +336,9 @@ object Similarity {
   }
 
   /** Read the frozen quantizer back from a standing [[IvfIndex]] — a
-    * bounded driver-side collect (nCentroids rows, the k-means-seed
-    * shape), validated against the handle's k.
+    * bounded driver-side collect (at most nCentroids rows, the k-means-seed
+    * shape; fewer when the corpus had fewer rows), validated against the
+    * handle's k.
     */
   def loadCentroids(spark: org.apache.spark.sql.SparkSession,
                     index: IvfIndex): Array[Array[Double]] =
@@ -378,7 +379,7 @@ object Similarity {
     * the same corpus (spec-pinned), but per-query-batch cost excludes the
     * k-means training and the corpus assignment scan: the query batch
     * probes its nProbe best cells under the frozen quantizer (read back on
-    * the driver, nCentroids rows) and meets their members through the
+    * the driver, at most nCentroids rows) and meets their members through the
     * bucketed inverted file. The s04 oracle grades this path verbatim.
     */
   def ivfSearchIndexed(queries: DataFrame, index: IvfIndex, idCol: String,
@@ -1062,8 +1063,8 @@ object Similarity {
   /** [[ivfPqSearch]] against a standing [[IvfPqIndex]] — identical results
     * when the index was built from the same corpus (spec-pinned; the s10
     * oracle grades this path verbatim), but the per-query-batch plan
-    * touches only the frozen quantizer (read back on the driver, nCells
-    * rows), the broadcast codebook table, the probed cells' CODE rows
+    * touches only the frozen quantizer (read back on the driver, at most
+    * nCells rows), the broadcast codebook table, the probed cells' CODE rows
     * (read through the bucket layout, no index-side exchange), and a
     * coarseM-bounded slice of the vector table.
     */

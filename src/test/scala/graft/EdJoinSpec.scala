@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -116,23 +114,11 @@ class EdJoinSpec extends SparkSpec {
     assert(out.map(_.corpus_id).toSet === expected)
   }
 
-  /** The files under src/main/scala/graft/{operators,streaming} whose text
-    * holds `s`.
-    */
-  private def operatorSourcesNaming(s: String): Vector[String] =
-    Seq("operators", "streaming").toVector.flatMap { d =>
-      val walk = Files.walk(Paths.get("src", "main", "scala", "graft", d))
-      val scala: Vector[Path] =
-        try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
-        finally walk.close()
-      scala.filter(p => Files.readString(p).contains(s)).map(_.getFileName.toString)
-    }
-
   test("one Ed-Join owner: only EdJoin explodes grams, verifies and guards candidates") {
     // "exceeds maxCandidates" is the message only the candidate guard's
     // raise_error carries
     Seq("charQgramsFused", "levenshtein(", "exceeds maxCandidates").foreach { s =>
-      assert(operatorSourcesNaming(s) === Vector("EdJoin.scala"), s)
+      assert(sourcesNaming(s, "operators", "streaming") === Vector("EdJoin.scala"), s)
     }
   }
 }

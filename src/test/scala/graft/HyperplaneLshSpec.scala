@@ -1,9 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, HyperplaneLsh, Similarity}
@@ -97,15 +93,6 @@ class HyperplaneLshSpec extends SparkSpec {
       .map(sortedRows)
     broadcast.foreach(r => assert(r.nonEmpty))
     assert(shuffled === broadcast)
-  }
-
-  /** The src/main files whose text names `s`. */
-  private def sourcesNaming(s: String): Vector[String] = {
-    val walk = Files.walk(Paths.get("src", "main"))
-    val scala =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
-      finally walk.close()
-    scala.filter(p => Files.readString(p).contains(s)).map(_.getFileName.toString)
   }
 
   test("one signature guard: only the kernel names \"LSH signatures\"") {

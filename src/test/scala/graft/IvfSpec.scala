@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -128,6 +126,46 @@ class IvfSpec extends SparkSpec {
       iters = 0)))
   }
 
+  test("a corpus under the default k trains fewer cells and an empty one none: " +
+    "direct and indexed searches agree, the empty corpus yields no rows, nothing throws") {
+    val small = embs.filter(col("vec_id") < 10)
+    val empty = embs.filter(lit(false))
+    val ivf = Similarity.writeIvfIndex(small, "vec_id", "embedding", "ivf_small")
+    val pq = Similarity.writeIvfPqIndex(small, "vec_id", "embedding", "ivfpq_small",
+      residual = true)
+    val direct = Similarity.ivfNeighborsTrained(q, small, "vec_id", "embedding", 5)
+    assert(direct.count() > 0)
+    assert(sortedRows(Similarity.ivfSearchIndexed(q, ivf, "vec_id", "embedding", 5)) ===
+      sortedRows(direct))
+    val pqDirect = Similarity.ivfPqSearch(q, small, "vec_id", "embedding", k = 5,
+      residual = true)
+    assert(pqDirect.count() > 0)
+    assert(sortedRows(Similarity.ivfPqSearchIndexed(q, pq, "vec_id", "embedding", k = 5)) ===
+      sortedRows(pqDirect))
+    // a 10-row quantizer still takes appends
+    val grown = Similarity.appendIvfIndex(embs.filter(col("vec_id").between(10, 19)), ivf,
+      "vec_id", "embedding", epoch = 1L)
+    assert(grown.corpusRows === 20L)
+
+    val emptyIvf = Similarity.writeIvfIndex(empty, "vec_id", "embedding", "ivf_empty")
+    val emptyPq = Similarity.writeIvfPqIndex(empty, "vec_id", "embedding", "ivfpq_empty")
+    Seq(
+      "ivfNeighborsTrained" -> Similarity.ivfNeighborsTrained(q, empty, "vec_id",
+        "embedding", 5),
+      "ivfSearchIndexed" -> Similarity.ivfSearchIndexed(q, emptyIvf, "vec_id",
+        "embedding", 5),
+      "ivfPqSearch" -> Similarity.ivfPqSearch(q, empty, "vec_id", "embedding", k = 5),
+      "ivfPqSearchIndexed" -> Similarity.ivfPqSearchIndexed(q, emptyPq, "vec_id",
+        "embedding", k = 5),
+      "hardNegatives" -> Similarity.hardNegatives(q, empty, "vec_id", "embedding",
+        "label", k = 5),
+      "clusterBalancedSample" -> Similarity.clusterBalancedSample(empty, "vec_id",
+        "embedding", perCluster = 2),
+      "semanticDupPairs" -> Similarity.semanticDupPairs(empty, "vec_id", "embedding",
+        threshold = 0.9)
+    ).foreach { case (name, df) => assert(df.count() === 0L, name) }
+  }
+
   test("the probe ranks cells in the window walk's (cosine DESC, cid) order") {
     val cents = Similarity.kmeansCentroids(embs, "vec_id", "embedding")
     val v = col("embedding").cast("array<double>")
@@ -143,19 +181,10 @@ class IvfSpec extends SparkSpec {
     assert(sortedRows(probed) === sortedRows(walk))
   }
 
-  /** The src/main files under graft/{operators,streaming,queries} naming `s`. */
-  private def sourcesNaming(s: String): Vector[String] =
-    Seq("operators", "streaming", "queries").toVector.flatMap { d =>
-      val walk = Files.walk(Paths.get("src", "main", "scala", "graft", d))
-      val scala: Vector[Path] =
-        try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
-        finally walk.close()
-      scala.filter(p => Files.readString(p).contains(s)).map(_.getFileName.toString)
-    }
-
   test("one IVF owner: only Ivf ranks cells and sums centroid partials") {
     Seq("nearestCentroid(", "c_sim", "centroidPartials(").foreach { s =>
-      assert(sourcesNaming(s).filterNot(_ == "Ivf.scala") === Vector(), s)
+      assert(sourcesNaming(s, "operators", "streaming", "queries")
+        .filterNot(_ == "Ivf.scala") === Vector(), s)
     }
   }
 }

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -40,6 +44,23 @@ abstract class SparkSpec extends AnyFunSuite {
         }
       }
     } finally spark.catalog.clearCache()
+
+  /** The names of the .scala files whose text holds `s`: under
+    * src/main/scala/graft/`d` for each of `dirs`, or anywhere under
+    * src/main when none are given. The kernel specs' single-owner scans.
+    */
+  def sourcesNaming(s: String, dirs: String*): Vector[String] = {
+    val roots =
+      if (dirs.isEmpty) Vector(Paths.get("src", "main"))
+      else dirs.toVector.map(d => Paths.get("src", "main", "scala", "graft", d))
+    roots.flatMap { root =>
+      val walk = Files.walk(root)
+      val scala: Vector[Path] =
+        try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+        finally walk.close()
+      scala.filter(p => Files.readString(p).contains(s)).map(_.getFileName.toString)
+    }
+  }
 
   /** Whether one message in `e`'s cause chain contains every one of `parts`. */
   def causeMentions(e: Throwable, parts: String*): Boolean =
